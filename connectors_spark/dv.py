@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .log.snapshot import canonical_path, canonical_path_col
+
 DV_DIR = "_deletion_vectors"
 DV_TAG = "deletionVector"
 DV_CARD_TAG = "dvCardinality"
@@ -67,10 +69,8 @@ def _read_sidecars(spark: SparkSession, table_path: str,
                    sidecars: Sequence[str]) -> DataFrame:
     """All rows of the given sidecar rel paths, tagged with the
     normalized absolute path of the sidecar each row came from."""
-    from .log.snapshot import canonical_path_col
     dv = (spark.read.schema(_DV_SCHEMA)
-          .parquet(*[os.path.join(table_path, urllib.parse.unquote(rel))
-                     for rel in sidecars])
+          .parquet(*[canonical_path(rel, table_path) for rel in sidecars])
           .withColumn("__fn", F.input_file_name()))
     # input_file_name is a file:// URI with %-escaping; normalize it the
     # same way log paths are normalized so equality joins are exact
@@ -91,8 +91,7 @@ def dv_relation(spark: SparkSession, table_path: str,
     from .localrel import local_rows_df
     auth = local_rows_df(
         spark,
-        [(p, os.path.join(table_path, urllib.parse.unquote(rel)))
-         for p, rel in pairs],
+        [(p, canonical_path(rel, table_path)) for p, rel in pairs],
         "file_path: string, __auth: string")
     return (dv.join(F.broadcast(auth),
                     (dv["file_path"] == auth["file_path"])
@@ -115,8 +114,7 @@ def dv_relation_keyed(spark: SparkSession, table_path: str,
     from .localrel import local_rows_df
     auth = local_rows_df(
         spark,
-        [(p, os.path.join(table_path, urllib.parse.unquote(rel)), k)
-         for p, rel, k in triples],
+        [(p, canonical_path(rel, table_path), k) for p, rel, k in triples],
         "file_path: string, __auth: string, __dvkey: long")
     return (dv.join(F.broadcast(auth),
                     (dv["file_path"] == auth["file_path"])
@@ -166,8 +164,7 @@ def stage_dv(spark: SparkSession, table_path: str,
     assert rel is not None, "deletion-vector staging produced no parquet"
     counts = {r["file_path"]: r["n"] for r in
               (spark.read.schema(_DV_SCHEMA)
-               .parquet(os.path.join(table_path,
-                                     urllib.parse.unquote(rel)))
+               .parquet(canonical_path(rel, table_path))
                .groupBy("file_path").agg(F.count("*").alias("n"))
                .collect())}
     return rel, counts

@@ -365,7 +365,8 @@ def to_json_line(action: Action) -> str:
     return json.dumps(action.wrap(), separators=(",", ":"))
 
 
-def _parse_one(key: str, d: Dict[str, Any]) -> Optional[Action]:
+def parse_action(key: str, d: Dict[str, Any]) -> Optional[Action]:
+    """One action from its single-key envelope's key and field dict."""
     if key == "add":
         return AddFile(
             path=d["path"], partitionValues=d.get("partitionValues") or {},
@@ -436,7 +437,7 @@ def from_json_line(line: str) -> Optional[Action]:
     for key, d in obj.items():
         if d is None:
             continue
-        a = _parse_one(key, d)
+        a = parse_action(key, d)
         if a is not None:
             return a
     return None

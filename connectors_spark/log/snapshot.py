@@ -1,187 +1,330 @@
-"""Snapshot: the state of a Delta table at one version, as DataFrames.
+"""Snapshot: the state of a Delta table at one version.
 
-Spark-first re-expression of the reference's snapshot machinery:
+Path domain. A ``path`` read from the log (add, remove and cdc actions,
+a deletion-vector tag, and the URI Spark reports as
+``_metadata.file_path``) is a URI: percent-encoded, relative to the
+table root or absolute. :func:`canonical_path` and its Column twin
+:func:`canonical_path_col` turn it into a physical absolute path, with
+the semantics of the reference's ``SnapshotImpl.canonicalizePath``
+(``new Path(new URI(p))``). They run exactly once, where a path enters
+from the log. Everything downstream carries physical paths and never
+decodes them again: the file and tombstone planes, scans, DML candidate
+sets and the path sets of conflict checks. A Hive-escaped directory
+name holds literal ``%XX`` bytes, which a second decode corrupts.
+``txn.relativize`` is the way back: it encodes a physical path for the
+log.
 
-- protocol & metadata: reverse replay with short-circuit
-  (``SnapshotImpl.loadTableProtocolAndMetadata``, SnapshotImpl.scala:164-246)
-  -- done driver-side over the bounded post-checkpoint tail (a checkpoint
-  caps it at ``checkpointInterval`` small JSON files) plus a column-pruned
-  pyarrow read of the checkpoint for the rare fallback.
-- state reconstruction (``InMemoryLogReplay.append``,
-  InMemoryLogReplay.scala:51-84) -- done as ONE distributed pass: a window
-  dedup over (add ∪ remove) keyed by canonical path, newest version wins.
-  This scales to checkpoints with millions of AddFiles because the shuffle
-  is on ``path`` (unique, unskewed) and Parquet/JSON parsing happens on
-  executors.
-- table data read (``SnapshotImpl.open`` + CloseableParquetDataIterator,
-  SnapshotImpl.scala:107-116) -- ``spark.read.parquet`` over the active
-  files; partition values are reassembled from ``AddFile.partitionValues``
-  (never parsed from paths: DeltaInputFormat.scala:33-53), via Spark's own
-  partition-dir discovery when the layout provably agrees with the log, else
-  via a broadcast path->values join.
+State. Table state is one replay of checkpoint plus commits, keyed by
+canonical path: the newest action wins, and within one version an add
+beats a remove (InMemoryLogReplay.scala:64-81). The replay yields two
+planes: active files (latest action an add) and tombstones (latest
+action a remove). It has two implementations, pinned equal by tests:
+
+- the window plan (``_latest_actions_df``): one distributed window over
+  add ∪ remove. It is the scale path, taken for v2 or multi-part
+  checkpoints, non-POSIX stores and checkpoints larger than
+  ``DRIVER_REPLAY_MAX_CHECKPOINT_BYTES``;
+- the driver fold (:func:`fold_file_actions`), everywhere else. A cold
+  Snapshot reads the checkpoint's ``add`` and ``remove`` columns once
+  and folds the commits after it on top; ``DeltaLog.update`` folds the
+  new commits over the previous Snapshot's planes. The streaming
+  source, which has no SparkSession, folds every checkpoint shape.
+
+Protocol, metadata, SetTransactions and domain metadata
+(:class:`LogState`) come from the same parsed commits plus one
+column-pruned read of the checkpoint, and advance the same incremental
+way. A Snapshot parses each of its commit files once (``_deltas``).
+
+Table data is read with ``spark.read.parquet`` over the active files.
+Partition values come from ``AddFile.partitionValues``, never from
+paths (DeltaInputFormat.scala:33-53): through Spark's partition-dir
+discovery when the layout provably agrees with the log, else through a
+broadcast path->values join.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import time
 import urllib.parse
+from dataclasses import dataclass, field
 from functools import cached_property
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import filenames as fn
-from .actions import (SINGLE_ACTION_SCHEMA, AddFile, Metadata, Protocol,
-                      from_json_line)
+from .actions import (SINGLE_ACTION_SCHEMA, AddFile, DomainMetadata,
+                      Metadata, Protocol, RemoveFile, SetTransaction,
+                      from_json_line, parse_action)
+from .features import assert_readable
 from .logstore import LogStore, strip_scheme
 from .segment import LogSegment
 
-MAX_READER_VERSION = 1
+# The driver fold replays a segment only when its checkpoint is one
+# classic parquet of at most this size; larger state takes the window
+# plan, whose parsing and dedup run on executors.
+DRIVER_REPLAY_MAX_CHECKPOINT_BYTES = 64 * 1024 * 1024
 
-
-def _decode_path(p: str) -> str:
-    return urllib.parse.unquote(p)
+_SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
+_SCHEME_AUTHORITY = _SCHEME + r"[^/]*"
+_BAD_ESCAPE = re.compile(r"%(?![0-9a-fA-F]{2})")
 
 
 def canonical_path(p: str, table_path: str) -> str:
-    """Absolute posix path for a log ``path`` entry (URI-decoded; relative
-    paths resolve against the table root). Mirrors
-    SnapshotImpl.canonicalizePath (SnapshotImpl.scala:349-362).
-
-    IDEMPOTENT on its own output (r15 correctness fix): a bare
-    ``/``-absolute input is already canonical/PHYSICAL and is returned
-    as-is — Spark's Hive dir escaping puts literal ``%XX`` bytes into
-    directory names (partition values containing ``=``, ``/``, ``%``…),
-    so decoding a physical path a second time corrupts it. Before the
-    fix, re-canonicalizing inventory-derived paths made DML removes and
-    rewrite subsets silently miss every file in such partitions (the
-    logged REMOVE path no longer matched its ADD). Our writer never
-    emits bare-absolute paths into the log (relativize produces
-    relative or ``file://``-quoted), so log-domain inputs are
-    unaffected."""
-    if p.startswith("/"):
-        return p
-    d = _decode_path(p)
-    if "://" in d:
-        rest = d.split("://", 1)[1]
-        slash = rest.find("/")
-        return rest[slash:] if slash >= 0 else "/"
-    if d.startswith("file:"):
-        return d[len("file:"):]
+    """Physical absolute path for a log ``path`` value: URI-decoded,
+    scheme and authority dropped, a relative path resolved against the
+    table root (SnapshotImpl.canonicalizePath, SnapshotImpl.scala:349-362).
+    A value that is not valid percent-encoding is left undecoded, as
+    Spark's ``try_url_decode`` leaves it in :func:`canonical_path_col`."""
+    d = p
+    if "%" in p and not _BAD_ESCAPE.search(p):
+        d = urllib.parse.unquote(p)
+    if ":" in d:
+        if re.match(_SCHEME, d):
+            return re.sub(_SCHEME_AUTHORITY, "", d, count=1)
+        if d.startswith("file:"):
+            return d[len("file:"):]
     if d.startswith("/"):
         return d
     return table_path.rstrip("/") + "/" + d
 
 
-def _files_row_factory():
-    """Row factory matching files_df's column order exactly —
-    incremental snapshot updates build rows through this so a seeded
-    inventory is field-compatible with a replayed one (named access +
-    ``__fields__``)."""
-    from pyspark.sql import Row
-    return Row("path", "partitionValues", "size", "modificationTime",
-               "dataChange", "stats", "tags", "baseRowId",
-               "defaultRowCommitVersion", "version")
+def canonical_path_col(col, table_path: str):
+    """Column-expression twin of :func:`canonical_path`, equal to it on
+    every input.
+
+    Spark's ``url_decode`` follows application/x-www-form-urlencoded
+    and turns ``+`` into a space — but log paths are URIs, where ``+``
+    is a literal (a delta-spark table partitioned on a value containing
+    ``+`` is the interop case). Shield literal plus as %2B first so the
+    decode round-trips it."""
+    shielded = f"replace({col}, '+', '%2B')"
+    d = F.coalesce(F.expr(f"try_url_decode({shielded})"), F.col(col))
+    # Every branch must stay NON-NULL for a non-null input: a nullable
+    # output makes every join keyed on the canonical path re-evaluate
+    # this whole expression a second time inside the join's inserted
+    # isnotnull() null-filter (one extra per-row regex+decode pass on
+    # each DML target scan). The file: branch therefore strips from the
+    # coalesced decode.
+    return (
+        F.when(d.rlike(_SCHEME), F.regexp_replace(d, _SCHEME_AUTHORITY, ""))
+        .when(d.startswith("file:"), F.substring(d, 6, 2147483647))
+        .when(d.startswith("/"), d)
+        .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), d))
+    )
 
 
-def apply_tail_to_files_rows(prev_rows: Sequence, tail, table_path: str
-                             ) -> List:
-    """Incremental state update (delta-spark's InMemoryLogReplay
-    incremental path, r14): apply the tail commits' add/remove actions
-    over a previous Snapshot's materialized inventory, driver-side —
-    O(tail actions), no Spark job, no checkpoint re-read.
-
-    ``tail`` is an iterable of (version, actions) in ascending version
-    order. Equivalence with the distributed window dedup: the previous
-    rows ARE latest-active-per-path at the previous version, and within
-    one version an add beats a remove of the same path (the window's
-    is_add tiebreak), so sequential remove-then-add per version yields
-    the identical final state."""
-    from .actions import RemoveFile
-    row = _files_row_factory()
-    state = {r["path"]: r for r in prev_rows}
-    for v, actions in tail:
-        adds = {}
-        removes = set()
-        for a in actions:
-            if isinstance(a, AddFile):
-                adds[canonical_path(a.path, table_path)] = a
-            elif isinstance(a, RemoveFile):
-                removes.add(canonical_path(a.path, table_path))
-        for p in removes:
-            if p not in adds:
-                state.pop(p, None)
-        for p, a in adds.items():
-            state[p] = row(p, dict(a.partitionValues)
-                           if a.partitionValues is not None else None,
-                           a.size, a.modificationTime,
-                           a.dataChange, a.stats,
-                           dict(a.tags) if a.tags is not None else None,
-                           a.baseRowId, a.defaultRowCommitVersion,
-                           int(v))
-    return list(state.values())
-
-
-def _tombstone_row_factory():
-    """Row factory matching ``_all_tombstones_df``'s column order —
-    the tombstone-plane twin of :func:`_files_row_factory`."""
-    from pyspark.sql import Row
-    return Row("path", "deletionTimestamp", "tags",
-               "extendedFileMetadata", "partitionValues", "size",
-               "version")
-
-
-# Explicit schema for tombstone rows re-entering Spark as a local
-# relation (retained_tombstones' materialized path) — field-for-field
-# the distributed window plan's output.
-_TOMBSTONE_SCHEMA = T.StructType([
+# The two planes' row shapes. Driver-side rows and the window plan's
+# output share them field for field, so the two replays are
+# interchangeable and rows re-enter Spark as local relations.
+_STR_MAP = T.MapType(T.StringType(), T.StringType())
+FILES_SCHEMA = T.StructType([
+    T.StructField("path", T.StringType()),
+    T.StructField("partitionValues", _STR_MAP),
+    T.StructField("size", T.LongType()),
+    T.StructField("modificationTime", T.LongType()),
+    T.StructField("dataChange", T.BooleanType()),
+    T.StructField("stats", T.StringType()),
+    T.StructField("tags", _STR_MAP),
+    T.StructField("baseRowId", T.LongType()),
+    T.StructField("defaultRowCommitVersion", T.LongType()),
+    T.StructField("version", T.LongType()),
+])
+TOMBSTONES_SCHEMA = T.StructType([
     T.StructField("path", T.StringType(), False),
     T.StructField("deletionTimestamp", T.LongType()),
-    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+    T.StructField("tags", _STR_MAP),
     T.StructField("extendedFileMetadata", T.BooleanType()),
-    T.StructField("partitionValues",
-                  T.MapType(T.StringType(), T.StringType())),
+    T.StructField("partitionValues", _STR_MAP),
     T.StructField("size", T.LongType()),
     T.StructField("version", T.LongType()),
 ])
+_FILE_ROW = Row(*FILES_SCHEMA.names)
+_TOMBSTONE_ROW = Row(*TOMBSTONES_SCHEMA.names)
 
 
-def apply_tail_to_tombstone_rows(prev_rows: Sequence, tail,
-                                 table_path: str) -> List:
-    """Incremental twin of :func:`apply_tail_to_files_rows` for the
-    tombstone plane: a RemoveFile upserts its path's tombstone, an
-    AddFile clears it (a re-added path is active again, so its latest
-    action is no longer a remove). Within one version an add beats a
-    remove of the same path — the window's ``is_add`` tiebreak — so
-    removes are applied first and skipped when the same version re-adds
-    the path."""
-    from .actions import RemoveFile
-    row = _tombstone_row_factory()
-    state = {r["path"]: r for r in prev_rows}
-    for v, actions in tail:
-        adds = set()
-        removes = {}
-        for a in actions:
-            if isinstance(a, AddFile):
-                adds.add(canonical_path(a.path, table_path))
-            elif isinstance(a, RemoveFile):
-                removes[canonical_path(a.path, table_path)] = a
-        for p, a in removes.items():
-            if p not in adds:
-                state[p] = row(
-                    p, a.deletionTimestamp,
-                    dict(a.tags) if a.tags is not None else None,
-                    a.extendedFileMetadata,
-                    dict(a.partitionValues)
-                    if a.partitionValues is not None else None,
-                    a.size, int(v))
-        for p in adds:
-            state.pop(p, None)
-    return list(state.values())
+def _map(m):
+    # pyarrow reads a map column as a list of pairs; JSON gives a dict
+    return dict(m) if m is not None else None
+
+
+def fold_file_actions(files: Dict[str, Row], tombstones: Dict[str, Row],
+                      version: int, adds: Iterable[Mapping],
+                      removes: Iterable[Mapping], table_path: str) -> None:
+    """Apply one version's add and remove actions to both planes, in
+    place — the driver fold. ``files`` and ``tombstones`` map canonical
+    path to row; ``adds`` and ``removes`` are field mappings
+    (checkpoint column dicts, or ``vars()`` of parsed actions). Within
+    one version an add beats a remove of the same path (the window
+    plan's ``is_add`` tiebreak), so a remove applies only to paths the
+    version does not re-add."""
+    added = {canonical_path(a["path"], table_path): a for a in adds}
+    for r in removes:
+        p = canonical_path(r["path"], table_path)
+        if p in added:
+            continue
+        files.pop(p, None)
+        tombstones[p] = _TOMBSTONE_ROW(
+            p, r.get("deletionTimestamp"), _map(r.get("tags")),
+            r.get("extendedFileMetadata"), _map(r.get("partitionValues")),
+            r.get("size"), version)
+    for p, a in added.items():
+        tombstones.pop(p, None)
+        files[p] = _FILE_ROW(
+            p, _map(a.get("partitionValues")), a.get("size"),
+            a.get("modificationTime"), a.get("dataChange"), a.get("stats"),
+            _map(a.get("tags")), a.get("baseRowId"),
+            a.get("defaultRowCommitVersion"), version)
+
+
+def fold_commit(files: Dict[str, Row], tombstones: Dict[str, Row],
+                version: int, actions: Sequence, table_path: str) -> None:
+    """:func:`fold_file_actions` over one commit's parsed actions."""
+    fold_file_actions(
+        files, tombstones, version,
+        [vars(a) for a in actions if isinstance(a, AddFile)],
+        [vars(a) for a in actions if isinstance(a, RemoveFile)],
+        table_path)
+
+
+def read_commit(store: LogStore, path: str) -> List:
+    """The parsed actions of one commit file (unknown kinds dropped)."""
+    return [a for a in map(from_json_line, store.read(path))
+            if a is not None]
+
+
+def _commit_version(path: str) -> int:
+    # A compacted range carries at most one net action per path, so its
+    # actions replay as one commit at the range's end version.
+    if fn.is_compacted_file(path):
+        return fn.compacted_range(path)[1]
+    return fn.delta_version(os.path.basename(path))
+
+
+def _read_checkpoint(path: str, columns: Sequence[str]) -> Dict[str, list]:
+    """Non-null values of the named action columns of one checkpoint
+    parquet, column-pruned to those it has — one pyarrow read."""
+    import pyarrow.parquet as pq
+    pf = pq.ParquetFile(path)
+    cols = [c for c in columns if c in pf.schema_arrow.names]
+    tbl = pf.read(columns=cols) if cols else None
+    return {c: tbl.column(c).drop_null().to_pylist() if c in cols else []
+            for c in columns}
+
+
+# Checkpoint action column -> the field a real action of that kind has.
+_STATE_COLUMNS = {"protocol": "minReaderVersion", "metaData": "id",
+                  "txn": "appId", "domainMetadata": "domain"}
+
+
+@dataclass
+class LogState:
+    """Protocol, metadata, last SetTransaction version per appId
+    (InMemoryLogReplay.scala:56-57) and active metadata domains (Delta
+    protocol 'Domain Metadata': latest action per domain wins, a
+    ``removed`` action hides the domain) at one version."""
+    protocol: Optional[Protocol] = None
+    metadata: Optional[Metadata] = None
+    txns: Dict[str, int] = field(default_factory=dict)
+    domains: Dict[str, str] = field(default_factory=dict)
+
+    def advanced(self, commits: Iterable[Tuple[int, Sequence]]
+                 ) -> "LogState":
+        """A copy advanced over ``commits``: (version, actions) pairs in
+        ascending version order."""
+        st = LogState(self.protocol, self.metadata, dict(self.txns),
+                      dict(self.domains))
+        for _v, actions in commits:
+            for a in actions:
+                if isinstance(a, Protocol):
+                    st.protocol = a
+                elif isinstance(a, Metadata):
+                    st.metadata = a
+                elif isinstance(a, SetTransaction):
+                    st.txns[a.appId] = a.version
+                elif isinstance(a, DomainMetadata):
+                    if a.removed:
+                        st.domains.pop(a.domain, None)
+                    else:
+                        st.domains[a.domain] = a.configuration
+        return st
+
+    def checked(self, table_path: str, version: int) -> "LogState":
+        if self.protocol is None or self.metadata is None:
+            raise ValueError(
+                f"Delta log at {table_path} has no protocol/metadata "
+                f"(version {version})")
+        # W9 extended: the reference gates read <= 1 (assertProtocolRead);
+        # this engine additionally implements reader 2 (column mapping)
+        # and reader 3 with features {columnMapping, deletionVectors}
+        # (log/features.py) so its own opt-in protocol upgrades stay
+        # readable. Anything beyond still fails loudly.
+        assert_readable(self.protocol, table_path)
+        return self
+
+
+def parse_deltas(store: LogStore, segment: LogSegment
+                 ) -> List[Tuple[int, List]]:
+    """(version, actions) of every commit file in ``segment``."""
+    return [(_commit_version(p), read_commit(store, p))
+            for p in segment.deltas]
+
+
+def _v2_sidecar_paths(segment: LogSegment, manifest: str) -> List[str]:
+    """Absolute paths of a v2 manifest's sidecar parquets (driver-
+    side column-pruned read — the manifest is O(sidecars) rows)."""
+    return [fn.sidecar_file(segment.log_path, sc["path"])
+            for sc in _read_checkpoint(manifest, ("sidecar",))["sidecar"]
+            if sc.get("path")]
+
+
+def replay_log_state(segment: LogSegment, deltas, table_path: str
+                     ) -> LogState:
+    """P&M, txns and domains at ``segment.version``: one pass over the
+    checkpoint's small columns (one pruned read per checkpoint file),
+    then over the parsed commits ``deltas``."""
+    ckpt = []
+    for cf in segment.checkpoint_files:
+        for key, rows in _read_checkpoint(cf, _STATE_COLUMNS).items():
+            for d in rows:
+                if d.get(_STATE_COLUMNS[key]) is None:
+                    continue
+                if key == "metaData":
+                    fmt = d.get("format") or {}
+                    d = dict(d, configuration=_map(d.get("configuration")),
+                             format=dict(fmt,
+                                         options=_map(fmt.get("options"))))
+                ckpt.append(parse_action(key, d))
+    return (LogState().advanced([(segment.checkpoint_version, ckpt)]
+                                + list(deltas))
+            .checked(table_path, segment.version))
+
+
+def replay_planes(segment: LogSegment, deltas, table_path: str
+                  ) -> Tuple[List[Row], List[Row]]:
+    """(file rows, tombstone rows) at ``segment.version`` by the driver
+    fold: the checkpoint's ``add`` and ``remove`` columns (v2 sidecars
+    included) in one pyarrow read per file, then the parsed commits
+    ``deltas``. Needs no SparkSession."""
+    cfiles = list(segment.checkpoint_files)
+    if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
+        cfiles += _v2_sidecar_paths(segment, cfiles[0])
+    files: Dict[str, Row] = {}
+    tombs: Dict[str, Row] = {}
+    for cf in cfiles:
+        cols = _read_checkpoint(cf, ("add", "remove"))
+        fold_file_actions(
+            files, tombs, segment.checkpoint_version,
+            [d for d in cols["add"] if d.get("path") is not None],
+            [d for d in cols["remove"] if d.get("path") is not None],
+            table_path)
+    for v, actions in deltas:
+        fold_commit(files, tombs, v, actions, table_path)
+    return list(files.values()), list(tombs.values())
 
 
 def addfiles_from_rows(rows: Sequence) -> List[AddFile]:
@@ -240,36 +383,12 @@ def _with_rt_fields(schema: T.StructType, rid: str,
            T.StructField(rcv, T.LongType())])
 
 
-def canonical_path_col(col, table_path: str):
-    """Column-expression twin of :func:`canonical_path` (used in the
-    distributed state reconstruction).
-
-    Spark's ``url_decode`` follows application/x-www-form-urlencoded
-    and turns ``+`` into a space — but log paths are URIs, where ``+``
-    is a literal (Python's ``unquote`` in :func:`canonical_path` gets
-    this right; a delta-spark table partitioned on a value containing
-    ``+`` is the interop case). Shield literal plus as %2B first so the
-    decode round-trips it."""
-    shielded = f"replace({col}, '+', '%2B')"
-    d = F.coalesce(F.expr(f"try_url_decode({shielded})"), F.col(col))
-    # Every branch must stay NON-NULL for a non-null input: a nullable
-    # output makes every join keyed on the canonical path re-evaluate
-    # this whole expression a second time inside the join's inserted
-    # isnotnull() null-filter (one extra per-row regex+decode pass on
-    # each DML target scan, measured r14). The file: branch therefore
-    # strips from the coalesced decode — which is also what the Python
-    # twin does (unquote never fails; it falls back to the raw string).
-    return (
-        F.when(d.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"),
-               F.regexp_replace(d, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""))
-        .when(d.startswith("file:"), F.substring(d, 6, 2147483647))
-        .when(d.startswith("/"), d)
-        .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), d))
-    )
-
 
 class Snapshot:
     """Immutable view of the table at ``segment.version``."""
+
+    # the driver state ``seed_from`` carries from one Snapshot to the next
+    SEEDED = ("_log_state", "_files_rows", "_tombstone_rows")
 
     def __init__(self, spark: SparkSession, table_path: str,
                  segment: LogSegment, store: LogStore,
@@ -279,139 +398,72 @@ class Snapshot:
         self.segment = segment
         self.store = store
         self._min_file_retention_ts = min_file_retention_ts
-        self._pm: Optional[Tuple[Protocol, Metadata]] = None
-        self._set_txns: Optional[Dict[str, int]] = None
 
     @property
     def version(self) -> int:
         return self.segment.version
 
     # ------------------------------------------------------------------
-    # Protocol & metadata (driver-side reverse replay, A2)
+    # The parsed log and its small state
     # ------------------------------------------------------------------
 
-    def _replay_driver_side(self):
-        """Scan post-checkpoint deltas newest->oldest for P&M and txns;
-        fall back to a column-pruned checkpoint read. The tail is bounded
-        by the checkpoint interval, so this is O(interval) small files."""
-        protocol: Optional[Protocol] = None
-        metadata: Optional[Metadata] = None
-        txns: Dict[str, int] = {}
-        for path in reversed(self.segment.deltas):
-            for line in self.store.read(path):
-                a = from_json_line(line)
-                if isinstance(a, Protocol) and protocol is None:
-                    protocol = a
-                elif isinstance(a, Metadata) and metadata is None:
-                    metadata = a
-                else:
-                    app = getattr(a, "appId", None)
-                    if app is not None and app not in txns:
-                        txns[app] = a.version
-        # The checkpoint must ALWAYS be read for SetTransactions: the
-        # post-checkpoint tail only proves which appIds committed since
-        # the checkpoint — older appIds' watermarks live solely in the
-        # checkpoint's txn column. P&M columns are pruned from the read
-        # when the tail already supplied them.
-        if self.segment.checkpoint_files:
-            need_pm = protocol is None or metadata is None
-            wanted = ("protocol", "metaData", "txn") if need_pm else ("txn",)
-            import pyarrow.parquet as pq
-            for cf in self.segment.checkpoint_files:
-                tbl = pq.read_table(cf, columns=[
-                    c for c in wanted
-                    if c in pq.read_schema(cf).names])
-                for row in tbl.to_pylist():
-                    p, m, x = row.get("protocol"), row.get("metaData"), row.get("txn")
-                    if p and p.get("minReaderVersion") is not None and protocol is None:
-                        protocol = Protocol(
-                            p["minReaderVersion"], p["minWriterVersion"],
-                            readerFeatures=(list(p["readerFeatures"])
-                                            if p.get("readerFeatures")
-                                            is not None else None),
-                            writerFeatures=(list(p["writerFeatures"])
-                                            if p.get("writerFeatures")
-                                            is not None else None))
-                    if m and m.get("id") and metadata is None:
-                        from .actions import Format
-                        fmt = m.get("format") or {}
-                        metadata = Metadata(
-                            id=m.get("id", ""), name=m.get("name"),
-                            description=m.get("description"),
-                            format=Format(fmt.get("provider", "parquet"),
-                                          fmt.get("options") or {}),
-                            schemaString=m.get("schemaString", ""),
-                            partitionColumns=list(m.get("partitionColumns") or []),
-                            configuration=dict(m.get("configuration") or {}),
-                            createdTime=m.get("createdTime"))
-                    if x and x.get("appId") and x["appId"] not in txns:
-                        txns[x["appId"]] = x["version"]
-        if protocol is None or metadata is None:
-            raise ValueError(
-                f"Delta log at {self.table_path} has no protocol/metadata "
-                f"(version {self.version})")
-        # W9 extended: the reference gates read <= 1 (assertProtocolRead);
-        # this engine additionally implements reader 2 (column mapping)
-        # and reader 3 with features {columnMapping, deletionVectors}
-        # (log/features.py) so its own opt-in protocol upgrades stay
-        # readable. Anything beyond still fails loudly.
-        from .features import assert_readable
-        assert_readable(protocol, self.table_path)
-        self._pm = (protocol, metadata)
-        self._set_txns = txns
+    @cached_property
+    def _deltas(self) -> List[Tuple[int, List]]:
+        """The segment's parsed commits, shared by every driver-side
+        consumer."""
+        return parse_deltas(self.store, self.segment)
+
+    @cached_property
+    def _log_state(self) -> LogState:
+        return replay_log_state(self.segment, self._deltas, self.table_path)
 
     @property
     def protocol(self) -> Protocol:
-        if self._pm is None:
-            self._replay_driver_side()
-        return self._pm[0]
+        return self._log_state.protocol
 
     @property
     def metadata(self) -> Metadata:
-        if self._pm is None:
-            self._replay_driver_side()
-        return self._pm[1]
+        return self._log_state.metadata
 
     @property
     def set_transactions(self) -> Dict[str, int]:
         """Last SetTransaction version per appId (InMemoryLogReplay.scala:56-57)."""
-        if self._set_txns is None:
-            self._replay_driver_side()
-        return dict(self._set_txns)
+        return dict(self._log_state.txns)
 
     def txn_version(self, app_id: str) -> int:
-        return self.set_transactions.get(app_id, -1)
+        return self._log_state.txns.get(app_id, -1)
 
-    @cached_property
+    @property
     def domain_metadata(self) -> Dict[str, str]:
-        """Active metadata domains: ``domain -> configuration`` (Delta
-        protocol 'Domain Metadata' replay: latest action per domain
-        wins; a removed=True tombstone hides the domain — including one
-        an older checkpoint still carries). Driver-side reverse walk of
-        the post-checkpoint tail (compacted substitutes carry the net
-        action per domain), then the checkpoint's domainMetadata column
-        for domains the tail didn't touch — the same bounded budget as
-        the P&M replay."""
-        from .actions import DomainMetadata
-        seen: Dict[str, Optional[str]] = {}
-        for path in reversed(self.segment.deltas):
-            for line in self.store.read(path):
-                a = from_json_line(line)
-                if isinstance(a, DomainMetadata) and a.domain not in seen:
-                    seen[a.domain] = None if a.removed else a.configuration
-        if self.segment.checkpoint_files:
-            import pyarrow.parquet as pq
-            for cf in self.segment.checkpoint_files:
-                if "domainMetadata" not in pq.read_schema(cf).names:
-                    continue
-                tbl = pq.read_table(cf, columns=["domainMetadata"])
-                for row in tbl.to_pylist():
-                    dm = row.get("domainMetadata")
-                    if dm and dm.get("domain") and dm["domain"] not in seen:
-                        seen[dm["domain"]] = (None if dm.get("removed")
-                                              else dm.get("configuration")
-                                              or "")
-        return {d: c for d, c in seen.items() if c is not None}
+        """Active metadata domains: ``domain -> configuration``."""
+        return dict(self._log_state.domains)
+
+    def seed_from(self, prev: "Snapshot",
+                  tail: Sequence[Tuple[int, List]]) -> None:
+        """Incremental state update (delta-spark's incremental
+        InMemoryLogReplay): carry forward the driver state ``prev``
+        already holds — log state and file planes — advanced over
+        ``tail``, the commits (version, actions) after ``prev`` up to
+        this Snapshot. No checkpoint read, no Spark job. Valid across a
+        checkpoint boundary: commits are immutable, so ``prev``'s state
+        plus the commits after it IS the state here."""
+        have = prev.__dict__
+        if "_log_state" in have:
+            self.__dict__["_log_state"] = (have["_log_state"].advanced(tail)
+                                           .checked(self.table_path,
+                                                    self.version))
+        planes = [k for k in ("_files_rows", "_tombstone_rows") if k in have]
+        if not (planes and tail):
+            for k in planes:
+                self.__dict__[k] = have[k]
+            return
+        state = {k: {r["path"]: r for r in have.get(k, ())}
+                 for k in ("_files_rows", "_tombstone_rows")}
+        for v, actions in tail:
+            fold_commit(state["_files_rows"], state["_tombstone_rows"], v,
+                        actions, self.table_path)
+        for k in planes:
+            self.__dict__[k] = list(state[k].values())
 
     # ------------------------------------------------------------------
     # Actions DataFrame (S2: checkpoint + delta load)
@@ -442,21 +494,6 @@ class Snapshot:
         extra = [c for c in ("version", "is_checkpoint") if c in df.columns]
         return df.select(*cols, *extra)
 
-    def _v2_sidecar_paths(self, manifest: str) -> List[str]:
-        """Absolute paths of a v2 manifest's sidecar parquets (driver-
-        side column-pruned read — the manifest is O(sidecars) rows)."""
-        import pyarrow.parquet as pq
-        if "sidecar" not in pq.read_schema(manifest).names:
-            return []
-        out = []
-        for row in pq.read_table(manifest,
-                                 columns=["sidecar"]).to_pylist():
-            sc = row.get("sidecar")
-            if sc and sc.get("path"):
-                out.append(fn.sidecar_file(self.segment.log_path,
-                                           sc["path"]))
-        return out
-
     def actions_df(self) -> DataFrame:
         """All actions of the segment with ``version`` and ``is_checkpoint``
         columns. Executors parse the files in parallel (the reference's
@@ -486,7 +523,7 @@ class Snapshot:
                 # sidecar parquets. One explicit-schema read over
                 # manifest + sidecars (per-file missing columns scan as
                 # NULL) reconstructs the classic action set.
-                cfiles = cfiles + self._v2_sidecar_paths(cfiles[0])
+                cfiles = cfiles + _v2_sidecar_paths(self.segment, cfiles[0])
                 c = (self.spark.read.schema(SINGLE_ACTION_SCHEMA)
                      .parquet(*cfiles)
                      .withColumn("version",
@@ -506,51 +543,50 @@ class Snapshot:
         return out
 
     # ------------------------------------------------------------------
-    # State reconstruction (S3/J1: one distributed window-dedup pass)
+    # State reconstruction: the window plan and the driver fold
     # ------------------------------------------------------------------
 
     @cached_property
-    def files_df(self) -> DataFrame:
-        """Active AddFiles as a DataFrame:
-        ``path`` (canonical absolute), ``partitionValues``, ``size``,
-        ``modificationTime``, ``dataChange``, ``stats``, ``tags``, ``version``.
-
-        Last action per path wins (version desc; an add beats a remove at
-        the same version, matching sequential replay order of
-        InMemoryLogReplay.scala:64-81)."""
+    def _latest_actions_df(self) -> DataFrame:
+        """The window plan: the latest add or remove per canonical path
+        (version desc, an add before a remove at one version). Its
+        ``is_add`` rows are the file plane, the rest the tombstone
+        plane. Scales to checkpoints with millions of AddFiles: the
+        shuffle is on ``path`` (unique, unskewed) and Parquet/JSON
+        parsing happens on executors."""
         acts = self.actions_df()
-        adds = acts.where(F.col("add.path").isNotNull()).select(
-            canonical_path_col("add.path", self.table_path).alias("path"),
-            F.col("add.partitionValues").alias("partitionValues"),
-            F.col("add.size").alias("size"),
-            F.col("add.modificationTime").alias("modificationTime"),
-            F.col("add.dataChange").alias("dataChange"),
-            F.col("add.stats").alias("stats"),
-            F.col("add.tags").alias("tags"),
-            F.col("add.baseRowId").alias("baseRowId"),
-            F.col("add.defaultRowCommitVersion")
-            .alias("defaultRowCommitVersion"),
-            F.col("version"),
-            F.lit(1).alias("is_add"),
-        )
-        removes = acts.where(F.col("remove.path").isNotNull()).select(
-            canonical_path_col("remove.path", self.table_path).alias("path"),
-            F.col("remove.partitionValues").alias("partitionValues"),
-            F.lit(None).cast("long").alias("size"),
-            F.lit(None).cast("long").alias("modificationTime"),
-            F.col("remove.dataChange").alias("dataChange"),
-            F.lit(None).cast("string").alias("stats"),
-            F.col("remove.tags").alias("tags"),
-            F.lit(None).cast("long").alias("baseRowId"),
-            F.lit(None).cast("long").alias("defaultRowCommitVersion"),
-            F.col("version"),
-            F.lit(0).alias("is_add"),
-        )
-        w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-        return (adds.unionByName(removes)
+        fields = [f for f in FILES_SCHEMA.fields + TOMBSTONES_SCHEMA.fields
+                  if f.name not in ("path", "version")]
+        fields = list({f.name: f for f in fields}.values())
+
+        def leg(kind):
+            names = SINGLE_ACTION_SCHEMA[kind].dataType.names
+            return acts.where(F.col(f"{kind}.path").isNotNull()).select(
+                canonical_path_col(f"{kind}.path", self.table_path)
+                .alias("path"),
+                *[(F.col(f"{kind}.{f.name}") if f.name in names
+                   else F.lit(None).cast(f.dataType)).alias(f.name)
+                  for f in fields],
+                "version", F.lit(kind == "add").alias("is_add"))
+
+        w = Window.partitionBy("path").orderBy(F.desc("version"),
+                                               F.desc("is_add"))
+        return (leg("add").unionByName(leg("remove"))
                 .withColumn("__rn", F.row_number().over(w))
-                .where((F.col("__rn") == 1) & (F.col("is_add") == 1))
-                .drop("__rn", "is_add"))
+                .where(F.col("__rn") == 1).drop("__rn"))
+
+    @cached_property
+    def files_df(self) -> DataFrame:
+        """Active AddFiles as a distributed DataFrame (``FILES_SCHEMA``,
+        ``path`` physical) — the window plan's file plane."""
+        return (self._latest_actions_df.where(F.col("is_add"))
+                .select(*FILES_SCHEMA.names))
+
+    def _tombstones_window_df(self) -> DataFrame:
+        """All latest-per-path tombstones, unfiltered — the window
+        plan's tombstone plane."""
+        return (self._latest_actions_df.where(~F.col("is_add"))
+                .select(*TOMBSTONES_SCHEMA.names))
 
     @cached_property
     def tombstones_df(self) -> DataFrame:
@@ -569,215 +605,59 @@ class Snapshot:
         retention window passes (InMemoryLogReplay.scala:90-92;
         delta-spark's VACUUM protects by deletionTimestamp, not mtime).
 
-        When the tombstone plane is already materialized (a prior
-        checkpoint write, or the incremental post-commit seed), the
-        horizon filter runs driver-side over the cached rows and the
-        result is a local relation — no log replay (r14, guide §1.2);
-        cold snapshots keep the distributed window plan."""
+        When the tombstone plane is already materialized, the horizon
+        filter runs driver-side over the cached rows and the result is
+        a local relation; otherwise the window plan runs."""
         if "_tombstone_rows" in self.__dict__:
             from ..localrel import local_rows_df
             rows = [r for r in self._tombstone_rows
                     if (r["deletionTimestamp"] or 0) > min_ts]
-            return local_rows_df(self.spark, rows, _TOMBSTONE_SCHEMA)
-        return (self._all_tombstones_df()
+            return local_rows_df(self.spark, rows, TOMBSTONES_SCHEMA)
+        return (self._tombstones_window_df()
                 .where(F.coalesce(F.col("deletionTimestamp"),
                                   F.lit(0)) > min_ts))
 
+    def _driver_replayable(self) -> bool:
+        """True when the driver fold may replay this segment: a POSIX
+        store and at most one classic checkpoint of at most
+        ``DRIVER_REPLAY_MAX_CHECKPOINT_BYTES``."""
+        cfiles = self.segment.checkpoint_files
+        if type(self.store) is not LogStore or len(cfiles) > 1:
+            return False
+        if not cfiles:
+            return True
+        if fn.is_v2_checkpoint_file(cfiles[0]):
+            return False
+        try:
+            return (os.path.getsize(cfiles[0])
+                    <= DRIVER_REPLAY_MAX_CHECKPOINT_BYTES)
+        except OSError:
+            return False
+
     @cached_property
-    def _tombstone_rows(self) -> List:
-        """ALL latest-per-path tombstones (no horizon), materialized
-        once per Snapshot — the tombstone-plane twin of
-        ``_files_rows``. Bounded by the paths removed-and-not-yet-
-        readded, the same order of driver state as the active
-        inventory."""
-        rows = self._tombstone_rows_driver_side()
-        if rows is not None:
-            return rows
-        return self._all_tombstones_df().collect()
-
-    def _tombstone_rows_driver_side(self) -> Optional[List]:
-        """Cold tombstone materialization WITHOUT a Spark job, when the
-        segment shape allows (r14): a classic checkpoint re-emits its
-        retained tombstones, so one driver-side pyarrow read of its
-        ``remove`` column plus the raw JSON tail replayed through
-        :func:`apply_tail_to_tombstone_rows` IS the tombstone plane —
-        ~0.1 s where the distributed window job costs 1.5-2 s at bench
-        scale. Returns None for every shape that needs the distributed
-        plan (v2/multi-part/compacted segments, non-POSIX stores, a
-        checkpoint too big to read single-process)."""
-        from . import filenames as fn
-        from .actions import from_json_line
-        from .logstore import LogStore
-        if type(self.store) is not LogStore:
-            return None
-        seg = self.segment
-        cfiles = list(seg.checkpoint_files)
-        if len(cfiles) > 1:
-            return None
-        if cfiles and fn.is_v2_checkpoint_file(cfiles[0]):
-            return None
-        if cfiles:
-            try:
-                if os.path.getsize(cfiles[0]) > 64 * 1024 * 1024:
-                    return None
-            except OSError:
-                return None
-        row = _tombstone_row_factory()
-        state: Dict[str, object] = {}
-        if cfiles:
-            import pyarrow.parquet as pq
-            try:
-                col = pq.read_table(
-                    cfiles[0], columns=["remove"]).column("remove")
-            except Exception:   # noqa: BLE001 — e.g. schema w/o remove
-                return None
-            for d in col.to_pylist():
-                if not d or d.get("path") is None:
-                    continue
-                p = canonical_path(d["path"], self.table_path)
-                state[p] = row(
-                    p, d.get("deletionTimestamp"),
-                    dict(d["tags"]) if d.get("tags") is not None
-                    else None,
-                    d.get("extendedFileMetadata"),
-                    dict(d["partitionValues"])
-                    if d.get("partitionValues") is not None else None,
-                    d.get("size"), int(seg.checkpoint_version))
-        tail = []
-        for pth in seg.deltas:
-            name = os.path.basename(pth)
-            if "compacted" in name:
-                return None     # net-folded ranges: window plan only
-            lines = self.store.read(pth)
-            tail.append((fn.delta_version(name),
-                         [a for a in (from_json_line(ln)
-                                      for ln in lines) if a is not None]))
-        return apply_tail_to_tombstone_rows(list(state.values()), tail,
-                                            self.table_path)
-
-    def _all_tombstones_df(self) -> DataFrame:
-        """Latest-per-path RemoveFile tombstones, unfiltered — the
-        distributed window-dedup plan shared by the horizon-filtered
-        consumer and the per-Snapshot materialization."""
-        acts = self.actions_df()
-        removes = acts.where(F.col("remove.path").isNotNull()).select(
-            canonical_path_col("remove.path", self.table_path).alias("path"),
-            F.col("remove.deletionTimestamp").alias("deletionTimestamp"),
-            F.col("remove.tags").alias("tags"),
-            # extended file metadata rides along so a checkpoint can
-            # re-emit the tombstone WITH its partitionValues/size and a
-            # truthful extendedFileMetadata flag (ADVICE r13: writing
-            # the flag false makes conforming readers drop the tags —
-            # losing the DV-sidecar reference VACUUM protection needs)
-            F.col("remove.extendedFileMetadata")
-            .alias("extendedFileMetadata"),
-            F.col("remove.partitionValues").alias("partitionValues"),
-            F.col("remove.size").alias("size"),
-            F.col("version"),
-        )
-        adds = acts.where(F.col("add.path").isNotNull()).select(
-            canonical_path_col("add.path", self.table_path).alias("path"),
-            F.lit(None).cast("long").alias("deletionTimestamp"),
-            F.col("add.tags").alias("tags"),
-            F.lit(None).cast("boolean").alias("extendedFileMetadata"),
-            F.col("add.partitionValues").alias("partitionValues"),
-            F.col("add.size").alias("size"),
-            F.col("version"),
-        ).withColumn("is_add", F.lit(1))
-        removes = removes.withColumn("is_add", F.lit(0))
-        w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-        return (adds.unionByName(removes)
-                .withColumn("__rn", F.row_number().over(w))
-                .where((F.col("__rn") == 1) & (F.col("is_add") == 0))
-                .drop("__rn", "is_add"))
+    def _fold(self) -> Tuple[List, List]:
+        """(file rows, tombstone rows) by the driver fold, computed once
+        for both planes."""
+        return replay_planes(self.segment, self._deltas, self.table_path)
 
     @cached_property
     def _files_rows(self) -> List:
-        """The active-file inventory, materialized ONCE per Snapshot.
+        """The active-file plane, materialized once per Snapshot and
+        shared by every metadata consumer (``to_df``, DML file scoping,
+        scans, ``all_files``). Driver memory is O(active files), like
+        the reference's in-memory state; a new version gets a new
+        Snapshot and the old rows are freed with it."""
+        if not self._driver_replayable():
+            return self.files_df.collect()
+        return self._fold[0]
 
-        The reconstruction itself (``files_df`` — checkpoint read +
-        delta JSON parse + distributed window dedup) still runs as a
-        Spark job; this caches its RESULT. Every metadata consumer
-        (``to_df``'s per-file row collect, DML touched-file scoping,
-        scans, ``all_files``) previously re-ran the whole replay as its
-        own Spark job — a MERGE paid it 4-5 times per commit (measured
-        r14: 0.14-1.8 s per replay at bench scale, pure metadata-plane
-        overhead). Driver memory is O(active files), which every one of
-        those consumers already paid per call (``to_df`` collects the
-        inventory by design, like the reference's driver-side
-        in-memory state, DeltaLogImpl/SnapshotImpl); caching is
-        strictly fewer copies. Bounded by the Snapshot's lifetime —
-        a new version produces a new Snapshot and the old cache is
-        GC'd with it."""
-        rows = self._files_rows_driver_side()
-        if rows is not None:
-            return rows
-        return self.files_df.collect()
-
-    def _files_rows_driver_side(self) -> Optional[List]:
-        """Cold active-file materialization WITHOUT a Spark job, when
-        the segment shape allows (r15) — the files-plane twin of
-        ``_tombstone_rows_driver_side``: seed the state from one
-        driver-side pyarrow read of the checkpoint's ``add`` column,
-        then replay the raw JSON tail through
-        :func:`apply_tail_to_files_rows` (the r14-pinned incremental
-        path). The result is what ``files_df.collect()`` returns minus
-        the Spark job (~0.3-0.6 s per cold Snapshot at bench scale —
-        paid per invocation by every query that creates fresh tables or
-        time-travel snapshots). Returns None for every shape that needs
-        the distributed plan: v2/multi-part checkpoints, compacted
-        ranges, non-POSIX stores, or a checkpoint too big to parse
-        single-process (at 100 TB the inventory is millions of rows —
-        the executor-parallel replay stays the scale path)."""
-        if type(self.store) is not LogStore:
-            return None
-        seg = self.segment
-        cfiles = list(seg.checkpoint_files)
-        if len(cfiles) > 1:
-            return None
-        if cfiles and fn.is_v2_checkpoint_file(cfiles[0]):
-            return None
-        if cfiles:
-            try:
-                if os.path.getsize(cfiles[0]) > 64 * 1024 * 1024:
-                    return None
-            except OSError:
-                return None
-        row = _files_row_factory()
-        state: Dict[str, object] = {}
-        if cfiles:
-            import pyarrow.parquet as pq
-            try:
-                col = pq.read_table(
-                    cfiles[0], columns=["add"]).column("add")
-            except Exception:   # noqa: BLE001 — e.g. schema w/o add
-                return None
-            for d in col.to_pylist():
-                if not d or d.get("path") is None:
-                    continue
-                p = canonical_path(d["path"], self.table_path)
-                state[p] = row(
-                    p,
-                    dict(d["partitionValues"])
-                    if d.get("partitionValues") is not None else None,
-                    d.get("size"), d.get("modificationTime"),
-                    d.get("dataChange"), d.get("stats"),
-                    dict(d["tags"]) if d.get("tags") is not None
-                    else None,
-                    d.get("baseRowId"),
-                    d.get("defaultRowCommitVersion"),
-                    int(seg.checkpoint_version))
-        tail = []
-        for pth in seg.deltas:
-            name = os.path.basename(pth)
-            if "compacted" in name:
-                return None     # net-folded ranges: window plan only
-            lines = self.store.read(pth)
-            tail.append((fn.delta_version(name),
-                         [a for a in (from_json_line(ln)
-                                      for ln in lines) if a is not None]))
-        return apply_tail_to_files_rows(list(state.values()), tail,
-                                        self.table_path)
+    @cached_property
+    def _tombstone_rows(self) -> List:
+        """All latest-per-path tombstones (no horizon), materialized
+        once per Snapshot — the tombstone twin of ``_files_rows``."""
+        if not self._driver_replayable():
+            return self._tombstones_window_df().collect()
+        return self._fold[1]
 
     @cached_property
     def files_local_df(self) -> DataFrame:
@@ -794,8 +674,7 @@ class Snapshot:
         consumer job scans plain JVM rows. Freed by the ContextCleaner
         with the Snapshot."""
         from ..localrel import local_rows_df
-        return (local_rows_df(self.spark, self._files_rows,
-                              self.files_df.schema)
+        return (local_rows_df(self.spark, self._files_rows, FILES_SCHEMA)
                 .localCheckpoint(eager=True))
 
     def all_files(self) -> List[AddFile]:

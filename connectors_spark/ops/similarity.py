@@ -380,11 +380,15 @@ def _exact_verify(cand: DataFrame, df: DataFrame, threshold: float,
     vb = withn.select(F.col(id_col).alias("b_id"),
                       F.col(vec_col).alias("_bv"),
                       F.col("_n").alias("_nb"))
+    na, nb = F.col("_na"), F.col("_nb")
+    # A zero norm makes the cosine 0/0: NaN, the IEEE quotient (ANSI
+    # division would raise instead). Spark orders NaN above every
+    # value, so such a pair passes any threshold.
+    cos = (F.when((na == 0) | (nb == 0), F.lit(float("nan")))
+           .otherwise(dot_d("_av", "_bv") / na / nb))
     return (cand.join(F.broadcast(va), "a_id")
             .join(F.broadcast(vb), "b_id")
-            .select("a_id", "b_id",
-                    F.round(dot_d("_av", "_bv") / F.col("_na") /
-                            F.col("_nb"), 6).alias("sim"))
+            .select("a_id", "b_id", F.round(cos, 6).alias("sim"))
             .filter(F.col("sim") >= threshold))
 
 
@@ -405,8 +409,8 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
     candidates within _PREFILTER_MARGIN of the threshold; survivors are
     re-verified by the EXACT JVM expression (dot/na/nb operation
     order + F.round half-up), so output is bit-identical to a
-    double-precision SQL oracle. IEEE division semantics (zero norms →
-    inf/nan) match the exact path: numpy and the JVM agree on both.
+    double-precision SQL oracle. A zero-norm vector's cosine is NaN on
+    both sides, and both keep the pair.
     """
     from pyspark.sql.types import LongType, StructField, StructType
     ids, mat, _ = _corpus_closure(df, id_col, vec_col)
@@ -424,7 +428,9 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
             anorm = np.sqrt((amat * amat).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (amat @ mat.T) / anorm[:, None] / norms[None, :]
-                keep = (sims >= cut) & (ids[None, :] > aids[:, None])
+                # NaN (a zero-norm vector) passes the exact filter
+                keep = (((sims >= cut) | np.isnan(sims))
+                        & (ids[None, :] > aids[:, None]))
             ai, bi = np.nonzero(keep)
             yield pd.DataFrame({"a_id": aids[ai].astype(np.int64),
                                 "b_id": ids[bi]})

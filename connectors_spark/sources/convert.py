@@ -114,7 +114,8 @@ def convert_to_delta(spark: SparkSession, path: str,
     for r in stat_rows:
         rel = os.path.relpath(r["path"], root)
         adds.append(AddFile(
-            path="/".join(rel.split(os.sep)),
+            # physical path; the commit encodes it for the log
+            path=table.log.table_path + "/" + "/".join(rel.split(os.sep)),
             partitionValues=_partition_values_from_path(rel, pcols),
             size=int(r["size"]), modificationTime=now, dataChange=True,
             stats=r["stats"]))

@@ -43,14 +43,11 @@ _FileRow = Tuple[str, int, Optional[dict], Optional[str],
 
 
 def _v2_change_type(path: str) -> Optional[str]:
-    """Change type of an r15 folded-write CDC file, parsed from its
-    ``_change_data/_change_type=<t>/...`` directory — None for legacy
-    flat cdc files (which carry _change_type as an in-file column).
-    Accepts both the log's percent-quoted form (`_change_type%3D<t>`)
-    and the decoded canonical form."""
-    import urllib.parse
-    for raw in path.split("/"):
-        seg = urllib.parse.unquote(raw)
+    """Change type of a folded-write CDC file, parsed from the
+    ``_change_data/_change_type=<t>/...`` directory of its canonical
+    path — None for legacy flat cdc files (which carry _change_type as
+    an in-file column)."""
+    for seg in path.split("/"):
         if seg.startswith("_change_type="):
             return seg.split("=", 1)[1]
     return None

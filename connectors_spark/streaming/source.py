@@ -42,8 +42,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 from ..dv import DV_TAG
 from ..errors import DeltaError
 from ..log import filenames as fn
-from ..log.actions import (AddCDCFile, AddFile, Format, Metadata,
-                           Protocol, RemoveFile, from_json_line)
+from ..log.actions import (AddCDCFile, AddFile, Metadata, Protocol,
+                           RemoveFile)
 # Module-scope imports only (no lazy `from ..x import` inside methods
 # that workers execute): this module ships to data-source workers by
 # value (shipping.py), which covers objects referenced at pickle time
@@ -51,7 +51,8 @@ from ..log.actions import (AddCDCFile, AddFile, Format, Metadata,
 from ..log import history as hist
 from ..log.logstore import default_log_store, strip_scheme
 from ..log.segment import get_log_segment
-from ..log.snapshot import canonical_path
+from ..log.snapshot import (canonical_path, parse_deltas, read_commit,
+                            replay_log_state, replay_planes)
 from ..partition_values import decode as decode_partition_value
 
 
@@ -60,8 +61,18 @@ def _log_path(table_path: str) -> str:
 
 
 def _read_version_actions(store, log_path: str, version: int) -> list:
-    lines = store.read(fn.delta_file(log_path, version))
-    return [a for a in (from_json_line(ln) for ln in lines) if a is not None]
+    return read_commit(store, fn.delta_file(log_path, version))
+
+
+def _segment(store, table_path: str, version: Optional[int] = None):
+    return get_log_segment(store, _log_path(table_path),
+                           version_to_load=version)
+
+
+def _latest_metadata(store, table_path: str) -> Metadata:
+    seg = _segment(store, table_path)
+    return replay_log_state(seg, parse_deltas(store, seg),
+                            strip_scheme(table_path)).metadata
 
 
 def _list_versions(store, log_path: str, after: int) -> List[int]:
@@ -71,96 +82,16 @@ def _list_versions(store, log_path: str, after: int) -> List[int]:
                   if v > after)
 
 
-def _meta_from_dict(m: dict) -> Metadata:
-    fmt = m.get("format") or {}
-    return Metadata(
-        id=m.get("id", ""), name=m.get("name"),
-        description=m.get("description"),
-        format=Format(fmt.get("provider", "parquet"),
-                      fmt.get("options") or {}),
-        schemaString=m.get("schemaString", ""),
-        partitionColumns=list(m.get("partitionColumns") or []),
-        configuration=dict(m.get("configuration") or {}),
-        createdTime=m.get("createdTime"))
-
-
-def _latest_metadata(store, log_path: str) -> Metadata:
-    """Latest Metadata action by reverse delta-file scan (A2 shape,
-    Spark-free), falling back to the checkpoint's metaData column for
-    logs whose early versions were cleaned (W8) — the Metadata may
-    survive only in the checkpoint."""
-    names = [n for n in store.list_from(log_path) if fn.is_delta_file(n)]
-    for name in sorted(names, reverse=True):
-        for a in _read_version_actions(store, log_path,
-                                       fn.delta_version(name)):
-            if isinstance(a, Metadata):
-                return a
-    try:
-        seg = get_log_segment(store, log_path)
-    except (FileNotFoundError, ValueError):
-        seg = None
-    if seg is not None and seg.checkpoint_files:
-        import pyarrow.parquet as pq
-        for cf in seg.checkpoint_files:
-            if "metaData" not in pq.read_schema(cf).names:
-                continue
-            for row in pq.read_table(cf, columns=["metaData"]).to_pylist():
-                m = row.get("metaData")
-                if m and m.get("id"):
-                    return _meta_from_dict(m)
-    raise DeltaError(f"no Metadata found in {log_path}")
-
-
-def _snapshot_adds(store, log_path: str,
-                   version: Optional[int] = None
-                   ) -> Tuple[int, List[AddFile]]:
-    """Active AddFiles at ``version`` (None = latest), replayed
-    Spark-free: checkpoint Parquet (pyarrow) + post-checkpoint delta
-    tail, last action per path wins (S3 semantics,
-    InMemoryLogReplay.scala:51-84). This is the ST4 initial-snapshot
-    planner — it works even when W8 cleanup deleted the early deltas,
-    because the state it needs lives in the checkpoint."""
-    seg = get_log_segment(store, log_path, version_to_load=version)
-    active: dict = {}
-    cfiles = list(seg.checkpoint_files)
-    if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
-        # V2 checkpoint: the manifest carries NO add/remove rows —
-        # the file state lives in its sidecar parquets. Without this
-        # resolution the initial snapshot would silently plan ZERO
-        # files for a v2-checkpointed table.
-        import pyarrow.parquet as pq
-        if "sidecar" in pq.read_schema(cfiles[0]).names:
-            for row in pq.read_table(cfiles[0],
-                                     columns=["sidecar"]).to_pylist():
-                sc = row.get("sidecar")
-                if sc and sc.get("path"):
-                    cfiles.append(
-                        fn.sidecar_file(seg.log_path, sc["path"]))
-    for cf in cfiles:
-        import pyarrow.parquet as pq
-        names = pq.read_schema(cf).names
-        cols = [c for c in ("add", "remove") if c in names]
-        for row in pq.read_table(cf, columns=cols).to_pylist():
-            a = row.get("add")
-            if a and a.get("path"):
-                active[a["path"]] = AddFile(
-                    path=a["path"],
-                    partitionValues=dict(a.get("partitionValues") or {}),
-                    size=a.get("size") or 0,
-                    modificationTime=a.get("modificationTime") or 0,
-                    dataChange=True, stats=a.get("stats"),
-                    tags=dict(a["tags"]) if a.get("tags") else None)
-            r = row.get("remove") if "remove" in row else None
-            if r and r.get("path"):
-                active.pop(r["path"], None)
-    for path in seg.deltas:
-        for line in store.read(path):
-            a = from_json_line(line)
-            if isinstance(a, AddFile):
-                active[a.path] = a
-            elif isinstance(a, RemoveFile):
-                active.pop(a.path, None)
-    return seg.version, list(active.values())
+def _snapshot_adds(store, table_path: str,
+                   version: Optional[int] = None) -> Tuple[int, List]:
+    """(version, active file rows) at ``version`` (None = latest): the
+    Snapshot's driver fold, Spark-free, paths physical. This is the ST4
+    initial-snapshot planner — it works even when W8 cleanup deleted the
+    early deltas, because the state it needs lives in the checkpoint."""
+    seg = _segment(store, table_path, version)
+    files, _ = replay_planes(seg, parse_deltas(store, seg),
+                             strip_scheme(table_path).rstrip("/"))
+    return seg.version, files
 
 
 class DeltaFilePartition(InputPartition):
@@ -232,6 +163,7 @@ def _positive_option(options: dict, key: str, name: str,
 class DeltaVersionStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self.table_path = options["path"]
+        self.root = strip_scheme(self.table_path).rstrip("/")
         self.log_path = _log_path(self.table_path)
         self.store = default_log_store(self.table_path)
         self.ignore_deletes = str(options.get("ignoredeletes",
@@ -288,7 +220,8 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             # ST3 on historical metadata changes/deletes. Explicit
             # startingVersion=0 restores full-history replay.
             try:
-                latest, _ = _snapshot_adds(self.store, self.log_path)
+                latest = get_log_segment(self.store,
+                                         self.log_path).version
                 self.snapshot_first = True
                 self.start_after = latest
             except (FileNotFoundError, ValueError):
@@ -315,7 +248,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
         # consumers can key on stable row identity across microbatches.
         self.with_row_ids = str(options.get("withrowids",
                                             "false")).lower() == "true"
-        meta = _latest_metadata(self.store, self.log_path)
+        meta = _latest_metadata(self.store, self.table_path)
         if self.with_row_ids:
             from ..config import TableConfig
             if not TableConfig(meta.configuration).enable_row_tracking:
@@ -376,7 +309,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
         offsets."""
         cached = getattr(self, "_snap_cache", None)
         if cached is None or cached[0] != v0:
-            _, adds = _snapshot_adds(self.store, self.log_path, v0)
+            _, adds = _snapshot_adds(self.store, self.table_path, v0)
             cached = (v0, sorted(adds, key=lambda a: a.path))
             self._snap_cache = cached
         return cached[1]
@@ -508,7 +441,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
                 # deleted rows in the snapshot); CDF mode tags the
                 # snapshot rows as inserts (delta-spark semantics).
                 out.append(DeltaFilePartition(
-                    self._fs_path(a.path), v0,
+                    a.path, v0,
                     dict(a.partitionValues or {}),
                     kind="insert" if self.cdf else "data",
                     dv_rel=(a.tags or {}).get(DV_TAG),
@@ -547,7 +480,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             else:
                 for a in self._validated_adds(v):
                     out.append(DeltaFilePartition(
-                        self._fs_path(a.path), v,
+                        canonical_path(a.path, self.root), v,
                         dict(a.partitionValues or {}),
                         dv_rel=(a.tags or {}).get(DV_TAG),
                         base_row_id=a.baseRowId,
@@ -574,77 +507,53 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             from .cdf import _v2_change_type
             out = []
             for a in cdcs:
-                ct = _v2_change_type(a.path)
+                p = canonical_path(a.path, self.root)
+                ct = _v2_change_type(p)
                 if ct is not None:
                     # r15 folded-write change file: data columns only
                     # in-file; partition values ride the action, the
                     # change type the path
                     out.append(DeltaFilePartition(
-                        self._fs_path(a.path), version,
-                        dict(a.partitionValues or {}), kind="cdc2",
-                        change_type=ct))
+                        p, version, dict(a.partitionValues or {}),
+                        kind="cdc2", change_type=ct))
                 else:
-                    out.append(DeltaFilePartition(
-                        self._fs_path(a.path), version, {}, kind="cdc"))
+                    out.append(DeltaFilePartition(p, version, {},
+                                                  kind="cdc"))
             return out
         out: List[DeltaFilePartition] = []
         for a in actions:
             if isinstance(a, AddFile) and a.dataChange:
                 out.append(DeltaFilePartition(
-                    self._fs_path(a.path), version,
+                    canonical_path(a.path, self.root), version,
                     dict(a.partitionValues or {}), kind="insert",
                     dv_rel=(a.tags or {}).get(DV_TAG),
                     base_row_id=a.baseRowId,
                     default_rcv=a.defaultRowCommitVersion))
             elif isinstance(a, RemoveFile) and a.dataChange:
                 out.append(DeltaFilePartition(
-                    self._fs_path(a.path), version,
+                    canonical_path(a.path, self.root), version,
                     dict(a.partitionValues or {}), kind="delete",
                     dv_rel=(a.tags or {}).get(DV_TAG),
                     base_row_id=a.baseRowId,
                     default_rcv=a.defaultRowCommitVersion))
         return out
 
-    def _fs_path(self, log_path_value: str) -> str:
-        """Log AddFile.path (URI-encoded, table-relative) → readable
-        filesystem path (decoded segments, absolute)."""
-        import urllib.parse
-        p = "/".join(urllib.parse.unquote(s)
-                     for s in log_path_value.split("/"))
-        if "://" not in p and not p.startswith("/"):
-            p = os.path.join(strip_scheme(self.table_path), p)
-        return p
-
     # ------------------------------------------------------------ reading
 
     def _dv_mask(self, partition: DeltaFilePartition, n: int):
         """Boolean keep-mask (numpy, length n) for the partition's
         deletion vector: True = live row. The sidecar is a small
-        (file_path, row_index) parquet; only this file's rows apply.
-        Paths are compared canonically (shared canonical_path helper,
-        the SnapshotImpl.canonicalizePath rule). The column filter is
-        vectorized Arrow compute: Python canonicalization touches only
-        the DISTINCT sidecar paths (bounded by the files a commit
-        touched), never the per-deleted-row values."""
-        import urllib.parse
-
+        (file_path, row_index) parquet of physical paths; only this
+        file's rows apply (vectorized Arrow compute)."""
         import numpy as np
-        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        root = strip_scheme(self.table_path)
-        side = os.path.join(root, urllib.parse.unquote(partition.dv_rel))
+        side = canonical_path(partition.dv_rel, self.root)
         tbl = pq.read_table(side, columns=["file_path", "row_index"])
-        me = canonical_path(partition.file_path, root)
-        uniq = pc.unique(tbl.column("file_path"))
-        mine = pa.array([v for v in uniq.to_pylist()
-                         if v is not None
-                         and canonical_path(v, root) == me],
-                        pa.string())
         idx = pc.filter(tbl.column("row_index"),
-                        pc.is_in(tbl.column("file_path"),
-                                 value_set=mine))
+                        pc.equal(tbl.column("file_path"),
+                                 partition.file_path))
         ri = idx.to_numpy(zero_copy_only=False).astype(np.int64)
         ri = ri[(ri >= 0) & (ri < n)]
         keep = np.ones(n, dtype=bool)
@@ -777,7 +686,7 @@ class DeltaStreamDataSource(DataSource):
 
     def schema(self) -> StructType:
         store = default_log_store(self.options["path"])
-        meta = _latest_metadata(store, _log_path(self.options["path"]))
+        meta = _latest_metadata(store, self.options["path"])
         extra = [StructField("_commit_version", LongType())]
         if str(self.options.get("readchangefeed",
                                 "false")).lower() == "true":

@@ -23,7 +23,6 @@ import json
 import os
 import time
 import threading
-import urllib.parse
 import uuid
 from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple
 
@@ -36,10 +35,10 @@ from .errors import DeltaError, DeltaProtocolError
 from .expressions import Expression
 from .log import filenames as fn
 from .log.actions import (AddFile, CommitInfo, Metadata, Protocol, RemoveFile,
-                          SetTransaction, from_json_line)
+                          SetTransaction)
 from .log.logstore import LogStore, default_log_store, strip_scheme
 from .log.segment import LogSegment, get_log_segment
-from .log.snapshot import Snapshot, canonical_path
+from .log.snapshot import Snapshot, canonical_path, read_commit
 from .log import history as hist
 from .scan import DeltaScan
 from .txn import OptimisticTransaction
@@ -141,67 +140,22 @@ class DeltaLog:
             if cur is not None and cur.segment == seg:
                 return cur
             new = Snapshot(self.spark, self.table_path, seg, self.store)
-            # Incremental state update (r14, delta-spark's incremental
-            # InMemoryLogReplay): when the previous snapshot already
-            # materialized its inventory and the new segment merely
-            # extends it by tail commits on the same checkpoint, seed
-            # the new inventory by applying the tail's add/remove
-            # actions driver-side — O(tail), no Spark job, and at
-            # large scale no re-read of a million-file checkpoint per
-            # commit. Any surprise (missing delta file, parse error)
-            # falls back to the full distributed replay.
-            # The seed is valid across a checkpoint boundary too (r14):
-            # the materialized state at cur.version plus the raw delta
-            # files (cur.version, seg.version] IS the state at
-            # seg.version no matter which checkpoint the new segment
-            # prefers — commits are immutable once written, and a
-            # missing/cleaned delta file surfaces as FileNotFoundError
-            # in tail() and falls back to the full replay.
-            if cur is not None and seg.version == cur.segment.version:
-                # Same version, different segment composition (a new
-                # checkpoint or compaction appeared): the STATE is
-                # identical by definition, so the materialized planes
-                # carry over as-is instead of going cold.
-                for k in ("_files_rows", "_tombstone_rows"):
-                    if k in cur.__dict__:
-                        new.__dict__[k] = cur.__dict__[k]
-            if (cur is not None
-                    and ("_files_rows" in cur.__dict__
-                         or "_tombstone_rows" in cur.__dict__)
-                    and seg.version > cur.segment.version):
+            # Incremental state update: the new Snapshot starts from the
+            # driver state the previous one holds, advanced over the
+            # commits between them (Snapshot.seed_from). Any surprise (a
+            # cleaned-up delta file, a parse error, an unreadable
+            # protocol) leaves the new Snapshot cold.
+            if (cur is not None and seg.version >= cur.segment.version
+                    and any(k in cur.__dict__ for k in Snapshot.SEEDED)):
                 try:
-                    from .log.actions import from_json_line
-                    from .log.snapshot import (
-                        apply_tail_to_files_rows,
-                        apply_tail_to_tombstone_rows)
-
-                    def tail():
+                    new.seed_from(cur, [
+                        (v, read_commit(self.store,
+                                        fn.delta_file(self.log_path, v)))
                         for v in range(cur.segment.version + 1,
-                                       seg.version + 1):
-                            lines = self.store.read(
-                                fn.delta_file(self.log_path, v))
-                            yield v, [a for a in
-                                      (from_json_line(ln)
-                                       for ln in lines)
-                                      if a is not None]
-
-                    tail_actions = list(tail())
-                    if "_files_rows" in cur.__dict__:
-                        new.__dict__["_files_rows"] = \
-                            apply_tail_to_files_rows(
-                                cur._files_rows, tail_actions,
-                                self.table_path)
-                    # tombstone plane seeds the same way (r14): a
-                    # checkpoint write or vacuum that materialized the
-                    # tombstones keeps them warm across commits
-                    if "_tombstone_rows" in cur.__dict__:
-                        new.__dict__["_tombstone_rows"] = \
-                            apply_tail_to_tombstone_rows(
-                                cur._tombstone_rows, tail_actions,
-                                self.table_path)
+                                       seg.version + 1)])
                 except Exception:  # noqa: BLE001 — seed is best-effort
-                    new.__dict__.pop("_files_rows", None)
-                    new.__dict__.pop("_tombstone_rows", None)
+                    for k in Snapshot.SEEDED:
+                        new.__dict__.pop(k, None)
             self._snapshot = new
             return self._snapshot
 
@@ -286,9 +240,7 @@ class DeltaLog:
             if fail_on_data_loss and last is not None and v != last + 1:
                 raise DeltaError(f"version gap between {last} and {v}")
             last = v
-            lines = self.store.read(fn.delta_file(self.log_path, v))
-            yield v, [a for a in (from_json_line(l) for l in lines)
-                      if a is not None]
+            yield v, read_commit(self.store, fn.delta_file(self.log_path, v))
 
     # ------------------------------------------------------ transactions
 
@@ -1205,8 +1157,7 @@ class DeltaTable:
             # predicate fully file-resolvable: drop candidates whole
             actions += [f.remove(now) for f in candidates]
         else:
-            cand_paths = {canonical_path(f.path, snap.table_path)
-                          for f in candidates}
+            cand_paths = {f.path for f in candidates}
             files_subset = [r for r in snap._files_rows
                             if r["path"] in cand_paths]
             rt = TableConfig(meta.configuration).enable_row_tracking
@@ -1272,8 +1223,7 @@ class DeltaTable:
             # metadata-only (streaming/cdf.py).
             actions += [f.remove(now) for f in candidates]
         else:
-            cand_paths = {canonical_path(f.path, snap.table_path)
-                          for f in candidates}
+            cand_paths = {f.path for f in candidates}
             files_subset = [r for r in snap._files_rows
                             if r["path"] in cand_paths]
             rt = TableConfig(
@@ -1333,8 +1283,7 @@ class DeltaTable:
         if not candidates:
             return txn.commit([], "DELETE", params)
         meta = snap.metadata
-        cand = {canonical_path(f.path, snap.table_path): f
-                for f in candidates}
+        cand = {f.path: f for f in candidates}
         paths = sorted(cand)
         pvs = [dict(cand[p].partitionValues or {}) for p in paths]
         rt = TableConfig(meta.configuration).enable_row_tracking
@@ -1452,8 +1401,7 @@ class DeltaTable:
         candidates = txn.mark_files_as_read(predicate)
         if not candidates:
             return txn.commit([], "UPDATE", {})
-        cand_paths = {canonical_path(f.path, snap.table_path)
-                      for f in candidates}
+        cand_paths = {f.path for f in candidates}
         files_subset = [r for r in snap._files_rows
                         if r["path"] in cand_paths]
         rt = TableConfig(snap.metadata.configuration).enable_row_tracking
@@ -2015,17 +1963,12 @@ class DeltaTable:
             # streamed off the file-set DataFrame: the driver holds ONE
             # action at a time (VERDICT r10 #8), the commit JSON is
             # written incrementally through the LogStore. Paths are
-            # yielded CANONICAL-ABSOLUTE (physical) and encoded exactly
-            # once by the commit's relativize — pre-quoting here
-            # double-encoded shallow-clone refs once canonical_path
-            # became idempotent (r15), and for Hive-escaped partition
-            # dirs the old decode+requote round trip corrupted them.
+            # physical; the commit's relativize encodes them.
             from .log.snapshot import addfiles_from_rows
             for r in src.files_df.toLocalIterator():
                 f = addfiles_from_rows([r])[0]
-                absolute = _canonical(f.path, src_root)
-                new_path = (os.path.join(tgt_root, _dest_rel(absolute))
-                            if deep else absolute)
+                new_path = (os.path.join(tgt_root, _dest_rel(f.path))
+                            if deep else f.path)
                 yield dataclasses.replace(
                     f, path=new_path, dataChange=True,
                     modificationTime=now)
@@ -2040,10 +1983,8 @@ class DeltaTable:
                 for pdf in batches:
                     n = 0
                     for p in pdf["path"]:
-                        absolute = _canonical(p, src_root)
                         store.copy_file(
-                            absolute,
-                            os.path.join(tgt_root, _dest_rel(absolute)))
+                            p, os.path.join(tgt_root, _dest_rel(p)))
                         n += 1
                     yield pd.DataFrame({"n": [n]})
 
@@ -2092,11 +2033,6 @@ def _parse_dtype(ddl: str):
 def _n_indexed(configuration) -> int:
     """delta.dataSkippingNumIndexedCols for a metadata configuration."""
     return TableConfig(configuration or {}).data_skipping_num_indexed_cols
-
-
-def _canonical(path: str, table_path: str) -> str:
-    from .log.snapshot import canonical_path
-    return canonical_path(path, table_path)
 
 
 def _semi_by_paths(df: DataFrame, paths: Sequence[str],
@@ -2728,8 +2664,7 @@ class TableMaintenance:
                 # the current state like an independent OPTIMIZE
                 txn = t.log.start_transaction()
                 snap = txn.snapshot
-            cand_paths = {_canonical(f.path, snap.table_path)
-                          for f in victims}
+            cand_paths = {f.path for f in victims}
             subset = [r for r in snap._files_rows
                       if r["path"] in cand_paths]
             if bi > 0:
@@ -2742,8 +2677,7 @@ class TableMaintenance:
                 # snapshot's live files — `subset` rows ARE that
                 # intersection, bounded by the batch width.
                 live = {r["path"] for r in subset}
-                victims = [f for f in victims
-                           if _canonical(f.path, snap.table_path) in live]
+                victims = [f for f in victims if f.path in live]
                 if not victims:
                     continue
             rt = TableConfig(
@@ -2830,8 +2764,7 @@ class TableMaintenance:
         if not victims:
             return {"filesPurged": 0, "filesAdded": 0,
                     "version": snap.version}
-        cand_paths = {_canonical(f.path, snap.table_path)
-                      for f in victims}
+        cand_paths = {f.path for f in victims}
         subset = [r for r in snap._files_rows
                   if r["path"] in cand_paths]
         df = snap.to_df(files=subset)  # DV anti-join applied here
@@ -2982,37 +2915,29 @@ class TableMaintenance:
         snap = txn.snapshot
         if snap is None:
             raise FileNotFoundError("table does not exist")
-        root = t.path
-        local_root = root[len("file:"):] if root.startswith("file:") else root
         missing = [f for f in snap.all_files() if not f.stats]
         if not missing:
             return {"filesUpdated": 0, "version": -1}
         ensure_shipped_by_value()
 
         def footer_pass(batches):
-            import urllib.parse
             for pdf in batches:
                 rows = []
-                for rel in pdf["rel"]:
-                    # AddFile.path is URL-quoted in the log (partition
-                    # dirs like 'st%3DF'); decode before touching the
-                    # filesystem.
-                    full = os.path.join(local_root,
-                                        urllib.parse.unquote(rel))
-                    stats, _n = file_stats_json(full)
-                    rows.append((rel, stats, os.path.getsize(full)))
+                for path in pdf["path"]:
+                    stats, _n = file_stats_json(path)
+                    rows.append((path, stats, os.path.getsize(path)))
                 yield pd.DataFrame(rows,
-                                   columns=["rel", "stats", "size"])
+                                   columns=["path", "stats", "size"])
 
         from .localrel import local_rows_df
         par = min(len(missing),
                   spark.sparkContext.defaultParallelism) or 1
-        stat_rows = {r["rel"]: r for r in
+        stat_rows = {r["path"]: r for r in
                      (local_rows_df(
                          spark, [(f.path,) for f in missing],
-                         "rel string", parts=par)
+                         "path string", parts=par)
                       .mapInPandas(footer_pass,
-                                   "rel string, stats string, size long")
+                                   "path string, stats string, size long")
                       .collect())}
         import dataclasses
         now = int(time.time() * 1000)
@@ -3171,18 +3096,15 @@ class TableMaintenance:
         snap = txn.snapshot
         if snap is None:
             raise FileNotFoundError("table does not exist")
-        files = [(f.path,
-                  canonical_path(f.path, snap.table_path))
-                 for f in snap.all_files()]
+        files = [(f.path,) for f in snap.all_files()]
         if not files:
             return []
         ensure_shipped_by_value()
 
         def probe(batches):
             for pdf in batches:
-                missing = [(p,) for p, fs in
-                           zip(pdf["path"], pdf["fs"])
-                           if not store.exists(fs)]
+                missing = [(p,) for p in pdf["path"]
+                           if not store.exists(p)]
                 yield pd.DataFrame(missing or None,
                                    columns=["path"])
 
@@ -3190,7 +3112,7 @@ class TableMaintenance:
         n_parts = min(len(files),
                       spark.sparkContext.defaultParallelism) or 1
         missing = [r["path"] for r in
-                   local_rows_df(spark, files, "path string, fs string",
+                   local_rows_df(spark, files, "path string",
                                  parts=n_parts)
                    .mapInPandas(probe, T2.StructType(
                        [T2.StructField("path", T2.StringType())]))

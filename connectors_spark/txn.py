@@ -40,7 +40,7 @@ from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
 # table-wide row-id high watermark.
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
 from .log.logstore import FileAlreadyExistsError
-from .log.snapshot import canonical_path
+from .log.snapshot import canonical_path, read_commit
 from .partition_values import decode_row
 
 MAX_RETRIES = 10_000_000  # OptimisticTransactionImpl.scala:44
@@ -52,24 +52,18 @@ ENGINE_INFO = "connectors-spark/0.1"
 
 
 def relativize(path: str, table_path: str) -> str:
-    """Store paths relative to the table root when possible, URI-encoded
-    (DeltaFileOperations.tryRelativizePath, FileNames.absolutePath:100-107).
-
-    The r15 double-decode bug lived here and in canonical_path: a
-    candidate file's already-canonical PHYSICAL path was decoded a
-    second time, corrupting Hive-escaped dir names whose literal bytes
-    contain ``%XX`` (partition values with ``=``, ``/``, ``%``…) — the
-    REMOVE was logged as ``part%3Dx%3Dy`` while its ADD said
-    ``part%3Dx%253Dy``, replay never cancelled the add, and DML
-    silently skipped those partitions. canonical_path is now
-    idempotent (bare-absolute inputs pass through), which fixes every
-    consumer at once."""
+    """Log spelling of a file path (DeltaFileOperations.tryRelativizePath,
+    FileNames.absolutePath:100-107). A physical absolute path is
+    URI-encoded, relative to the table root when it lies under it; any
+    other value is already a log path (the writer stages table-relative,
+    encoded paths) and passes through unchanged."""
+    if not path.startswith("/"):
+        return path
     root = table_path.rstrip("/") + "/"
-    c = canonical_path(path, table_path)
-    if c.startswith(root):
-        rel = c[len(root):]
-        return "/".join(urllib.parse.quote(seg) for seg in rel.split("/"))
-    return "file://" + urllib.parse.quote(c)
+    if path.startswith(root):
+        return "/".join(urllib.parse.quote(seg)
+                        for seg in path[len(root):].split("/"))
+    return "file://" + urllib.parse.quote(path)
 
 
 class OptimisticTransaction:
@@ -104,8 +98,7 @@ class OptimisticTransaction:
             self.read_predicates.append(predicate)
         else:
             self._read_whole_table = True
-        self.read_files.update(
-            canonical_path(f.path, self.snapshot.table_path) for f in files)
+        self.read_files.update(f.path for f in files)
         return files
 
     def read_whole_table(self) -> None:
@@ -183,9 +176,12 @@ class OptimisticTransaction:
                 and not TableConfig(self.snapshot.metadata.configuration)
                 .enable_row_tracking):
             import dataclasses
-            already = {a.path for a in acts if isinstance(a, AddFile)}
+            tp = self.log.table_path
+            already = {canonical_path(a.path, tp)
+                       for a in acts if isinstance(a, AddFile)}
             backfill = [
-                dataclasses.replace(a, dataChange=False, baseRowId=None,
+                dataclasses.replace(a, path=relativize(a.path, tp),
+                                    dataChange=False, baseRowId=None,
                                     defaultRowCommitVersion=None)
                 for a in self.snapshot.all_files()
                 if a.path not in already]
@@ -865,10 +861,9 @@ class OptimisticTransaction:
         """Replay one winning commit through J2-J5
         (ConflictChecker.scala:88-232). Raises if this txn must abort;
         returning means we may retry at the next version."""
-        lines = self.log.store.read(
-            fn.delta_file(self.log.log_path, winning_version))
-        winning = [from_json_line(l) for l in lines]
-        winning = [a for a in winning if a is not None]
+        winning = read_commit(self.log.store,
+                              fn.delta_file(self.log.log_path,
+                                            winning_version))
 
         commit_info = next((a for a in winning if isinstance(a, CommitInfo)), None)
         blind_append = bool(commit_info.isBlindAppend) if commit_info else False

@@ -459,21 +459,17 @@ def stage_and_collect(df: DataFrame, table_path: str,
         from pyspark.sql import functions as F
 
         from .log.snapshot import canonical_path, canonical_path_col
-        abs_by_canon = {}
-        for i, a in enumerate(adds):
-            rel = "/".join(urllib.parse.unquote(s)
-                           for s in a.path.split("/"))
-            ap = os.path.join(table_path, rel)
-            abs_by_canon[canonical_path(a.path, table_path)] = (i, ap)
+        index_of = {canonical_path(a.path, table_path): i
+                    for i, a in enumerate(adds)}
         counts = (df.sparkSession.read
-                  .parquet(*[p for _, p in abs_by_canon.values()])
+                  .parquet(*index_of)
                   .select(F.col("_metadata.file_path").alias("__fn"))
                   .select(canonical_path_col("__fn", table_path)
                           .alias("__f"))
                   .groupBy("__f").count().collect())
         for r in counts:
-            hit = abs_by_canon.get(r["__f"])
-            if hit is None:
+            i = index_of.get(r["__f"])
+            if i is None:
                 # A counted file that maps back to none of the staged
                 # AddFiles means the canonicalization domains diverged;
                 # silently skipping would leave a rowful file committed
@@ -485,7 +481,6 @@ def stage_and_collect(df: DataFrame, table_path: str,
                     f"{r['__f']!r} matches no staged AddFile path — "
                     f"canonicalization mismatch would corrupt row-id "
                     f"allocation")
-            i, _ = hit
             adds[i] = dataclasses.replace(
                 adds[i], stats=json.dumps(
                     {"numRecords": int(r["count"]), "minValues": {},

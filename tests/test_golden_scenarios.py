@@ -606,6 +606,79 @@ def test_user_commit_info_rejected(spark, tmp_path):
                                operationParameters={})], "WRITE", {})
 
 
+@pytest.mark.pin
+def test_foreign_path_spellings_replay_once(spark, tmp_path):
+    """A foreign writer's log spells its files five ways. Each log path
+    is decoded exactly once, like the reference's canonicalizePath:
+    both replays agree, every file reads, the engine's own (canonical)
+    remove spelling cancels each foreign add, and the streaming source
+    reads the ``file:`` URI."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from connectors_spark.log import filenames as fn
+    from connectors_spark.log.actions import AddFile, to_json_line
+    from connectors_spark.log.snapshot import Snapshot
+    from connectors_spark.streaming import register_stream_source
+
+    t = _t(spark, tmp_path)
+    t.write(spark.createDataFrame([(100,)], "k long"))
+    root = t.log.table_path
+    outside = str(tmp_path / "outside")
+    spellings = {                              # log path -> physical
+        "sub%20dir/a.parquet": f"{root}/sub dir/a.parquet",
+        "p%3Dx%253Dy/b.parquet": f"{root}/p=x%3Dy/b.parquet",
+        f"file:{outside}/c.parquet": f"{outside}/c.parquet",
+        f"file://{root}/d.parquet": f"{root}/d.parquet",
+        f"{root}/e%20f.parquet": f"{root}/e f.parquet",
+    }
+    adds = []
+    for i, (log_path, phys) in enumerate(spellings.items()):
+        os.makedirs(os.path.dirname(phys), exist_ok=True)
+        pq.write_table(pa.table({"k": pa.array(
+            [10 * i, 10 * i + 1, 10 * i + 2], pa.int64())}), phys)
+        adds.append(AddFile(path=log_path, partitionValues={},
+                            size=os.path.getsize(phys),
+                            modificationTime=1, dataChange=True))
+    t.log.store.write(fn.delta_file(t.log.log_path, 1),
+                      [to_json_line(a) for a in adds], overwrite=False)
+    physical = set(spellings.values())
+    assert physical <= {f.path for f in t.log.snapshot().all_files()}
+    assert t.to_df().count() == 16
+
+    register_stream_source(spark)
+    name = "foreign_" + os.path.basename(str(tmp_path)).replace("-", "_")
+    q = (spark.readStream.format("delta_stream")
+         .option("path", root).option("startingVersion", "1").load()
+         .writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert spark.table(name).count() == 15
+
+    t.delete(Col("k") == Lit(11))
+    snap = t.log.snapshot()
+    assert sorted(r.k for r in t.to_df().collect()) == sorted(
+        [100] + [10 * i + j for i in range(5) for j in range(3)
+                 if 10 * i + j != 11])
+    assert not physical & {f.path for f in snap.all_files()}
+    assert physical <= {r["path"] for r in snap._tombstone_rows}
+
+    cold = Snapshot(spark, snap.table_path, snap.segment, snap.store)
+    files, tombs = cold._fold
+
+    def key(r):
+        return tuple((k, tuple(sorted(v.items())) if isinstance(v, dict)
+                      else v) for k, v in r.asDict().items())
+    assert sorted(map(key, files)) \
+        == sorted(map(key, cold.files_df.collect()))
+    assert sorted(map(key, tombs)) \
+        == sorted(map(key, cold._tombstones_window_df().collect()))
+
+
+@pytest.mark.pin
 def test_canonical_path_col_twin_parity_and_nonnull(spark):
     """canonical_path_col must (1) agree with its Python twin
     canonical_path on every path form — INCLUDING a file: URI whose
@@ -628,6 +701,9 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
         "file:/abs/literal+plus.parquet",          # literal + shield
         "s3a://bucket/key/p.parquet",              # scheme://authority
         "file:/abs/bad%zz.parquet",                # INVALID encoding
+        "/abs/sp%20ace.parquet",                   # encoded bare-absolute
+        "/abs/part%3Dx%253Dy/f.parquet",           # Hive-escaped, encoded
+        "s3a://b/k%20x.parquet",                   # scheme, encoded
     ]
     import pyspark.sql.types as T
     df = spark.createDataFrame(
@@ -641,3 +717,9 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
         assert got[p] == canonical_path(p, tp), \
             f"column/twin divergence for {p!r}: " \
             f"{got[p]!r} != {canonical_path(p, tp)!r}"
+    # decoded exactly once, with the reference's URI semantics
+    assert canonical_path("/abs/sp%20ace.parquet", tp) \
+        == "/abs/sp ace.parquet"
+    assert canonical_path("/abs/part%3Dx%253Dy/f.parquet", tp) \
+        == "/abs/part=x%3Dy/f.parquet"
+    assert canonical_path("s3a://b/k%20x.parquet", tp) == "/k x.parquet"

@@ -427,6 +427,30 @@ def test_cosine_neardup_exact_and_lsh_subset(spark, sf_dir):
     assert len(approx) / len(exact) >= 0.5, "LSH near-dup recall too low"
 
 
+@pytest.mark.pin
+def test_cosine_neardup_keeps_zero_norm_pairs(spark):
+    """A zero-norm vector's cosine is 0/0 = NaN, which Spark orders
+    above every threshold: the numpy prefilter must hand such pairs to
+    the exact re-verify, so the result equals the exact filter over all
+    pairs."""
+    import math
+    rows = [(1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
+            (3, [0.9, 0.1, 0.0]), (4, [0.0, 0.0, 0.0]),
+            (5, [0.0, 1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {(r.a_id, r.b_id): r.sim
+           for r in sim.cosine_neardup_pairs(emb, threshold=0.45).collect()}
+    every_pair = (emb.select(F.col("vec_id").alias("a_id"))
+                  .crossJoin(emb.select(F.col("vec_id").alias("b_id")))
+                  .where("a_id < b_id"))
+    exact = {(r.a_id, r.b_id): r.sim for r in sim._exact_verify(
+        every_pair, emb, 0.45, "vec_id", "embedding").collect()}
+    zero = {(1, 2), (1, 3), (1, 4), (1, 5), (2, 4), (3, 4), (4, 5)}
+    assert set(got) == set(exact) == zero | {(2, 3)}
+    assert all(math.isnan(got[p]) for p in zero)
+    assert got[(2, 3)] == exact[(2, 3)]
+
+
 def test_ann_indexed_matches_unindexed(spark, sf_dir, tmp_path):
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit

@@ -175,6 +175,26 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
         .count()
     assert n == exp
 
+    # A tail commit that changes metadata, plus a SetTransaction and a
+    # new domain: the seeded log state equals a cold replay's.
+    from connectors_spark.log.actions import DomainMetadata
+    t.set_properties({"delta.logRetentionDuration": "interval 60 days"})
+    t.write(orders.limit(5), mode="append", txn_app_id="app-1",
+            txn_version=3)
+    t.log.start_transaction().commit([DomainMetadata("my.domain", "{}")],
+                                     operation="SET DOMAIN")
+    snap = t.log.snapshot()
+    assert "_log_state" in snap.__dict__      # seeded, not replayed
+    cold = Snapshot(spark, snap.table_path, snap.segment, snap.store)
+    assert snap.metadata.configuration["delta.logRetentionDuration"] \
+        == "interval 60 days"
+    assert (snap.protocol, snap.metadata, snap.set_transactions,
+            snap.domain_metadata) \
+        == (cold.protocol, cold.metadata, cold.set_transactions,
+            cold.domain_metadata)
+    assert snap.set_transactions == {"app-1": 3}
+    assert snap.domain_metadata["my.domain"] == "{}"
+
 
 def test_scan_reuses_materialized_inventory(spark, tmp_path):
     # r14: a Snapshot materializes its active-file inventory once; a
@@ -761,7 +781,7 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
 
     fresh = Snapshot(spark, snap.table_path, snap.segment, snap.store)
     assert sorted(map(tkey, snap._tombstone_rows)) \
-        == sorted(map(tkey, fresh._all_tombstones_df().collect()))
+        == sorted(map(tkey, fresh._tombstones_window_df().collect()))
     assert len(snap._tombstone_rows) > 0
     assert sorted(map(fkey, snap._files_rows)) \
         == sorted(map(fkey, fresh.files_df.collect()))
@@ -770,58 +790,20 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
         == sorted(map(tkey, fresh.retained_tombstones(0).collect()))
 
 
-def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # r14: cold tombstone materialization reads the classic checkpoint's
-    # remove column driver-side and replays the JSON tail through
-    # apply_tail_to_tombstone_rows. Must be field-identical (version
-    # stamp included — both attribute checkpoint rows to the checkpoint
-    # version) to the distributed window plan, across checkpointed
-    # tombstones, DV-delete tags, a re-added path, and tail removes.
+def test_driver_fold_matches_window_plan(spark, tmp_path):
+    # The two implementations of the replay: the driver fold (classic
+    # checkpoint's add+remove columns, then the parsed commit tail) and
+    # the distributed window plan must yield field-identical file and
+    # tombstone planes — version stamp included, both attribute
+    # checkpoint rows to the checkpoint version — across checkpointed
+    # adds and tombstones, DV-delete tags, partition values, a re-added
+    # path, and tail adds and removes.
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.log.snapshot import Snapshot
     from tests.conftest import read_table
 
-    t = DeltaTable.for_path(spark, str(tmp_path / "tds"))
-    orders = read_table(spark, "orders")
-    first = orders.limit(300)
-    t.write(first, partition_by=["o_orderstatus"],
-            configuration={"delta.checkpointInterval": "2"})
-    t.delete(Col("o_orderkey") < Lit(100), deletion_vectors=True)  # v1
-    t.delete(Col("o_orderkey") < Lit(150))     # v2 -> checkpoint
-    t.write(orders.limit(400), mode="append")  # v3 (tail add)
-    t.delete(Col("o_orderstatus") == Lit("P"))  # v4 -> checkpoint
-    t.delete(Col("o_orderkey") < Lit(200))     # v5 (tail remove)
-    snap = Snapshot(spark, t.path, t.log.snapshot().segment,
-                    t.log.store)
-    drows = snap._tombstone_rows_driver_side()
-    assert drows is not None                   # shape was eligible
-    assert len(drows) > 0
-
-    def k(r):
-        return (r["path"], r["deletionTimestamp"],
-                tuple(sorted((r["tags"] or {}).items())),
-                bool(r["extendedFileMetadata"]),
-                tuple(sorted((r["partitionValues"] or {}).items())),
-                r["size"], r["version"])
-
-    wrows = snap._all_tombstones_df().collect()
-    assert sorted(map(k, drows)) == sorted(map(k, wrows))
-
-
-def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # r15: cold ACTIVE-FILE materialization seeds from the classic
-    # checkpoint's add column driver-side and replays the JSON tail
-    # through apply_tail_to_files_rows (the files-plane twin of the r14
-    # tombstone pin above). Must be field-identical — version stamp
-    # included — to the distributed window plan, across checkpointed
-    # adds, DV tags, partition values, a delete, and tail adds/removes.
-    from connectors_spark import DeltaTable
-    from connectors_spark.expressions import Col, Lit
-    from connectors_spark.log.snapshot import Snapshot
-    from tests.conftest import read_table
-
-    t = DeltaTable.for_path(spark, str(tmp_path / "fds"))
+    t = DeltaTable.for_path(spark, str(tmp_path / "fold"))
     orders = read_table(spark, "orders")
     t.write(orders.limit(300), partition_by=["o_orderstatus"],
             configuration={"delta.checkpointInterval": "2"})
@@ -830,13 +812,16 @@ def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
     t.write(orders.limit(400), mode="append")  # v3 (tail add)
     t.delete(Col("o_orderstatus") == Lit("P"))  # v4 -> checkpoint
     t.write(orders.limit(50), mode="append")   # v5 (tail add)
+    t.delete(Col("o_orderkey") < Lit(200))     # v6 -> checkpoint
+    t.delete(Col("o_orderkey") < Lit(220))     # v7 (tail remove)
     snap = Snapshot(spark, t.path, t.log.snapshot().segment,
                     t.log.store)
-    drows = snap._files_rows_driver_side()
-    assert drows is not None                   # shape was eligible
-    assert len(drows) > 0
+    assert snap.segment.checkpoint_files and snap.segment.deltas
+    assert snap._driver_replayable()
+    files, tombs = snap._fold
+    assert files and tombs
 
-    def k(r):
+    def fkey(r):
         return (r["path"],
                 tuple(sorted((r["partitionValues"] or {}).items())),
                 r["size"], r["modificationTime"], r["dataChange"],
@@ -844,5 +829,14 @@ def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
                 r["baseRowId"], r["defaultRowCommitVersion"],
                 r["version"])
 
-    wrows = snap.files_df.collect()
-    assert sorted(map(k, drows)) == sorted(map(k, wrows))
+    def tkey(r):
+        return (r["path"], r["deletionTimestamp"],
+                tuple(sorted((r["tags"] or {}).items())),
+                bool(r["extendedFileMetadata"]),
+                tuple(sorted((r["partitionValues"] or {}).items())),
+                r["size"], r["version"])
+
+    assert sorted(map(fkey, files)) \
+        == sorted(map(fkey, snap.files_df.collect()))
+    assert sorted(map(tkey, tombs)) \
+        == sorted(map(tkey, snap._tombstones_window_df().collect()))

@@ -905,7 +905,7 @@ def test_dv_mask_vectorized_multi_file_sidecar(spark, tmp_path):
     """_dv_mask unit check (ADVICE r8 rewrite to vectorized Arrow
     compute): a sidecar shared by several files must apply only THIS
     file's deleted positions, out-of-range indices are ignored, and
-    path comparison goes through the shared canonical_path rule."""
+    the partition's physical path matches the sidecar's."""
     from pyspark.sql import Row
     from pyspark.sql.types import StructType
     from connectors_spark.expressions import Col, Lit
@@ -929,7 +929,7 @@ def test_dv_mask_vectorized_multi_file_sidecar(spark, tmp_path):
     masks = {}
     for f in dv_files:
         part = DeltaFilePartition(
-            r._fs_path(f.path), 0, {}, kind="insert",
+            f.path, 0, {}, kind="insert",
             dv_rel=(f.tags or {}).get("deletionVector"))
         masks[f.path] = r._dv_mask(part, 6)
     # exactly one row masked per file (not both files' rows)

@@ -515,6 +515,7 @@ def test_dml_cdc_single_write_fold(spark, tmp_path, monkeypatch):
     assert (0, 1, "update_postimage", 1) in feed
 
 
+@pytest.mark.pin
 def test_dml_on_hive_escaped_partition_values(spark, tmp_path):
     """r15 regression (pre-existing double-decode bug): partition VALUES
     containing '=', '/', '%' or unicode produce Hive-escaped directory
@@ -522,7 +523,8 @@ def test_dml_on_hive_escaped_partition_values(spark, tmp_path):
     already-canonical physical path decoded them a second time, so a
     DML's REMOVE no longer matched its ADD at replay and whole
     partitions were silently skipped (rows neither deleted, updated,
-    rewritten, nor fed to CDC). canonical_path is now idempotent."""
+    rewritten, nor fed to CDC). Inventory paths are physical and never
+    decoded again."""
     from connectors_spark.expressions import Col, Lit
     rows = [(1, "a b", 10.0), (2, "x=y", 20.0), (3, None, 30.0),
             (4, "ünï/50%", 40.0), (5, "a b", 50.0), (6, "x=y", 60.0),

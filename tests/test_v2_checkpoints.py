@@ -92,7 +92,7 @@ def test_v2_preferred_over_classic_at_same_version(spark, tmp_path):
         snap.metadata,
         configuration=dict(snap.metadata.configuration,
                            **{"delta.checkpointPolicy": "classic"}))
-    snap._pm = (snap.protocol, meta)
+    snap._log_state = dataclasses.replace(snap._log_state, metadata=meta)
     write_checkpoint(snap)
     log_dir = str(tmp_path / "t" / "_delta_log")
     names = os.listdir(log_dir)
