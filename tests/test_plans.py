@@ -790,20 +790,18 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
         == sorted(map(tkey, fresh.retained_tombstones(0).collect()))
 
 
-def test_driver_fold_matches_window_plan(spark, tmp_path):
+def _folded_snapshot(spark, path):
     # The two implementations of the replay: the driver fold (classic
     # checkpoint's add+remove columns, then the parsed commit tail) and
-    # the distributed window plan must yield field-identical file and
-    # tombstone planes — version stamp included, both attribute
-    # checkpoint rows to the checkpoint version — across checkpointed
-    # adds and tombstones, DV-delete tags, partition values, a re-added
-    # path, and tail adds and removes.
+    # the distributed window plan. The fixture spans checkpointed adds
+    # and tombstones, DV-delete tags, partition values, a re-added path,
+    # and tail adds and removes. Returns a cold Snapshot and its fold.
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.log.snapshot import Snapshot
     from tests.conftest import read_table
 
-    t = DeltaTable.for_path(spark, str(tmp_path / "fold"))
+    t = DeltaTable.for_path(spark, path)
     orders = read_table(spark, "orders")
     t.write(orders.limit(300), partition_by=["o_orderstatus"],
             configuration={"delta.checkpointInterval": "2"})
@@ -818,10 +816,17 @@ def test_driver_fold_matches_window_plan(spark, tmp_path):
                     t.log.store)
     assert snap.segment.checkpoint_files and snap.segment.deltas
     assert snap._driver_replayable()
-    files, tombs = snap._fold
-    assert files and tombs
+    return snap, snap._fold
 
-    def fkey(r):
+
+def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
+    # The fold's file plane is field-identical to files_df (the window
+    # plan's add rows) — version stamp included: both attribute
+    # checkpoint rows to the checkpoint version.
+    snap, (files, _) = _folded_snapshot(spark, str(tmp_path / "fds"))
+    assert len(files) > 0
+
+    def k(r):
         return (r["path"],
                 tuple(sorted((r["partitionValues"] or {}).items())),
                 r["size"], r["modificationTime"], r["dataChange"],
@@ -829,14 +834,22 @@ def test_driver_fold_matches_window_plan(spark, tmp_path):
                 r["baseRowId"], r["defaultRowCommitVersion"],
                 r["version"])
 
-    def tkey(r):
+    assert sorted(map(k, files)) \
+        == sorted(map(k, snap.files_df.collect()))
+
+
+def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
+    # The fold's tombstone plane is field-identical to the window plan's
+    # remove rows — version stamp included.
+    snap, (_, tombs) = _folded_snapshot(spark, str(tmp_path / "tds"))
+    assert len(tombs) > 0
+
+    def k(r):
         return (r["path"], r["deletionTimestamp"],
                 tuple(sorted((r["tags"] or {}).items())),
                 bool(r["extendedFileMetadata"]),
                 tuple(sorted((r["partitionValues"] or {}).items())),
                 r["size"], r["version"])
 
-    assert sorted(map(fkey, files)) \
-        == sorted(map(fkey, snap.files_df.collect()))
-    assert sorted(map(tkey, tombs)) \
-        == sorted(map(tkey, snap._tombstones_window_df().collect()))
+    assert sorted(map(k, tombs)) \
+        == sorted(map(k, snap._tombstones_window_df().collect()))
