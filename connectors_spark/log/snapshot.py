@@ -840,7 +840,8 @@ class Snapshot:
 
     def to_df(self, files=None,
               residual=None, with_file_col: bool = False,
-              with_row_ids: bool = False) -> DataFrame:
+              with_row_ids: bool = False,
+              with_row_index: bool = False) -> DataFrame:
         """DataFrame of table rows for the active (optionally pruned) files.
 
         Partition values come from the log. Fast path: when the on-disk
@@ -856,10 +857,13 @@ class Snapshot:
         file-discovery needs it, and computing it here (from
         ``_metadata.file_path`` inside each single-source scan) is the
         only placement that stays legal once DV anti-joins make the
-        plan multi-source."""
+        plan multi-source. ``with_row_index=True`` keeps each row's
+        physical index in its file as ``__ri`` (a DV delete records
+        it)."""
         from ..dv import DV_TAG
         meta = self.metadata
         want_rid = with_row_ids
+        keep_ri = with_row_ids or with_row_index
         keep_file = with_file_col or want_rid
         if files is None:
             # whole-table read: reuse the per-Snapshot materialized
@@ -884,22 +888,26 @@ class Snapshot:
                 df = (df.withColumn("_row_id", F.lit(None).cast("long"))
                       .withColumn("_row_commit_version",
                                   F.lit(None).cast("long")))
+            if with_row_index:
+                df = df.withColumn("__ri", F.lit(None).cast("long"))
             return df.where(residual) if residual is not None else df
         plain = [r for r in rows if not ((r["tags"] or {}).get(DV_TAG))]
         dvd = [r for r in rows if (r["tags"] or {}).get(DV_TAG)]
         parts = [self._read_plain(plain, keep_file=keep_file,
-                                  keep_row_index=want_rid)] \
+                                  keep_row_index=keep_ri)] \
             if plain else []
         if dvd:
             parts.append(self._read_with_dv(dvd, keep_file=keep_file,
-                                            keep_row_index=want_rid))
+                                            keep_row_index=keep_ri))
         # Schema-order projection: Spark's file source appends partition
         # columns after data columns; the table contract is metadata
         # schema order (Snapshot.open ≍ SnapshotImpl.scala:107-116).
         extra = [F.col("__file")] if keep_file else []
         rid_c, rcv_c = materialized_rt_cols(meta)
+        if keep_ri:
+            extra.append(F.col("__ri"))
         if want_rid:
-            extra += [F.col("__ri"), F.col(rid_c), F.col(rcv_c)]
+            extra += [F.col(rid_c), F.col(rcv_c)]
         # physical -> logical rename happens HERE, the one boundary
         # between the file plane and the table contract (identity when
         # column mapping is off)
@@ -929,7 +937,9 @@ class Snapshot:
                   .withColumn(
                       "_row_commit_version",
                       F.coalesce(F.col(rcv_c), F.col("__dcv")))
-                  .drop("__ri", "__base", "__dcv", rid_c, rcv_c))
+                  .drop("__base", "__dcv", rid_c, rcv_c))
+            if not with_row_index:
+                df = df.drop("__ri")
             if not with_file_col:
                 df = df.drop("__file")
         if residual is not None:

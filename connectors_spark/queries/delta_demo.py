@@ -28,7 +28,7 @@ _MARKER = "_DEMO_BUILT"
 # Bump when the table format / writer output changes: stale /tmp
 # fixtures built by an older engine version then rebuild instead of
 # poisoning reads across driver rounds.
-_FIXTURE_VERSION = "3"
+_FIXTURE_VERSION = "4"
 
 
 def _built(sf_dir: str, case: str, builder: Callable[[str], None]) -> str:

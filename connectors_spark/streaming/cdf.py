@@ -14,11 +14,17 @@ built on the Delta CDF protocol rules:
 - ``dataChange=false`` commits (OPTIMIZE / Z-order) change no rows and
   emit nothing.
 
+Change files follow delta-spark's layout: each carries the table's data
+columns plus ``_change_type`` and lives at
+``_change_data/<partition dirs>/cdc-*.parquet``; partition columns come
+from the ``AddCDCFile``'s ``partitionValues``, exactly as for the
+synthesized legs' data files.
+
 The result is ONE DataFrame regardless of version count: up to three
 distributed Parquet scans (cdc files / insert files / delete files), each
-with ``_commit_version`` attached via a broadcast path-keyed join -- the
-same mechanism as changes_df, so a multi-version feed reads every file
-exactly once and stays fully JVM-side.
+with ``_commit_version`` and partition columns attached via a broadcast
+path-keyed join -- the same mechanism as changes_df, so a multi-version
+feed reads every file exactly once and stays fully JVM-side.
 """
 
 from __future__ import annotations
@@ -42,23 +48,12 @@ _FileRow = Tuple[str, int, Optional[dict], Optional[str],
                  Optional[int], Optional[int]]
 
 
-def _v2_change_type(path: str) -> Optional[str]:
-    """Change type of a folded-write CDC file, parsed from the
-    ``_change_data/_change_type=<t>/...`` directory of its canonical
-    path — None for legacy flat cdc files (which carry _change_type as
-    an in-file column)."""
-    for seg in path.split("/"):
-        if seg.startswith("_change_type="):
-            return seg.split("=", 1)[1]
-    return None
-
-
 def _scan_tagged(table, snap, file_rows: List[_FileRow],
-                 schema: T.StructType, with_partition_cols: bool,
-                 change_type: Optional[str],
+                 schema: T.StructType, change_type: Optional[str],
                  with_row_ids: bool = False) -> DataFrame:
-    """Scan ``file_rows`` with ``schema``, attach ``_commit_version`` (and
-    partition columns decoded from the log when the files lack them).
+    """Scan ``file_rows`` with ``schema``, attach ``_commit_version`` and
+    the partition columns decoded from the log's ``partitionValues``.
+    ``change_type`` None reads it from the files' own column.
     Files carrying a deletion vector contribute only their live rows:
     an added file applies its new DV, a removed file the DV it had when
     removed — so a synthesized DV-delete version nets out to exactly
@@ -78,8 +73,7 @@ def _scan_tagged(table, snap, file_rows: List[_FileRow],
         "__file", canonical_path_col("__fn", snap.table_path)).drop("__fn")
     # partitionValues keys and decoded columns live in the PHYSICAL
     # name domain; the final projection aliases back to logical
-    pcols = meta.physical_partition_columns if with_partition_cols \
-        else []
+    pcols = meta.physical_partition_columns
     map_schema = T.StructType(
         [T.StructField("__file", T.StringType()),
          T.StructField("_commit_version", T.LongType()),
@@ -176,14 +170,6 @@ def table_changes(table, start_version: int = 0,
                 "not set on this table")
 
     cdc_rows: List[_FileRow] = []
-    # v2 CDC files (r15 folded DML write): partition columns and the
-    # change type live in the file's DIRECTORY layout
-    # (_change_data/_change_type=<t>/<pdirs>/cdc2-*) and on the action
-    # (partitionValues), not as in-file columns — grouped per change
-    # type so each group reads through the same partition-attach path
-    # as synthesized legs. Legacy flat cdc files keep the in-file
-    # format and the original leg.
-    cdc2_rows: dict = {}
     ins_rows: List[_FileRow] = []
     del_rows: List[_FileRow] = []
     for version, actions in table.log.get_changes(start_version):
@@ -191,16 +177,9 @@ def table_changes(table, start_version: int = 0,
             break
         cdcs = [a for a in actions if isinstance(a, AddCDCFile)]
         if cdcs:
-            for a in cdcs:
-                cp = canonical_path(a.path, snap.table_path)
-                ct = _v2_change_type(cp)
-                if ct is not None:
-                    cdc2_rows.setdefault(ct, []).append(
-                        (cp, version, a.partitionValues or {},
-                         None, None, None))
-                else:
-                    cdc_rows.append((cp, version, None, None,
-                                     None, None))
+            cdc_rows += [(canonical_path(a.path, snap.table_path), version,
+                          a.partitionValues, None, None, None)
+                         for a in cdcs]
             continue
         ins_rows += [(canonical_path(a.path, snap.table_path),
                       version, a.partitionValues,
@@ -230,35 +209,20 @@ def table_changes(table, start_version: int = 0,
            if with_row_ids else []))
     parts: List[DataFrame] = []
     if cdc_rows:
-        # Legacy CDC files carry every table column (partition cols
-        # included) plus the physical _change_type column.
         cdc_schema = T.StructType(
-            list(meta.physical_schema.fields)
+            list(meta.physical_data_schema.fields)
             + [T.StructField(CHANGE_TYPE_COL, T.StringType())])
         parts.append(_scan_tagged(table, snap, cdc_rows, rt(cdc_schema),
-                                  with_partition_cols=False,
                                   change_type=None,
-                                  with_row_ids=with_row_ids))
-    for ct in sorted(cdc2_rows):
-        # v2 CDC files carry only data columns (plus materialized row
-        # ids); partition columns come from the action's
-        # partitionValues, the change type from the path — the exact
-        # attach path the synthesized insert/delete legs already use.
-        parts.append(_scan_tagged(table, snap, cdc2_rows[ct],
-                                  rt(meta.physical_data_schema),
-                                  with_partition_cols=True,
-                                  change_type=ct,
                                   with_row_ids=with_row_ids))
     if ins_rows:
         parts.append(_scan_tagged(table, snap, ins_rows,
                                   rt(meta.physical_data_schema),
-                                  with_partition_cols=True,
                                   change_type="insert",
                                   with_row_ids=with_row_ids))
     if del_rows:
         parts.append(_scan_tagged(table, snap, del_rows,
                                   rt(meta.physical_data_schema),
-                                  with_partition_cols=True,
                                   change_type="delete",
                                   with_row_ids=with_row_ids))
     if not parts:

@@ -98,11 +98,10 @@ class DeltaFilePartition(InputPartition):
     """One input file of one microbatch.
 
     ``kind``: "data" (plain row feed), or the CDF kinds — "cdc" (a
-    legacy physical change file carrying its own ``_change_type``
-    column), "cdc2" (an r15 folded-write change file: partition
-    columns come from ``partition_values`` and the change type from
-    ``change_type`` — both recovered from the action/path),
-    "insert"/"delete" (a data file synthesized to that change type).
+    change file carrying its own ``_change_type`` column; layout in
+    streaming/cdf.py), "insert"/"delete" (a data file synthesized to
+    that change type). Partition columns always come from
+    ``partition_values``.
     ``dv_rel``: deletion-vector sidecar rel path to apply — only the
     file's LIVE rows under that DV are emitted."""
 
@@ -110,8 +109,7 @@ class DeltaFilePartition(InputPartition):
                  partition_values: dict, kind: str = "data",
                  dv_rel: Optional[str] = None,
                  base_row_id: Optional[int] = None,
-                 default_rcv: Optional[int] = None,
-                 change_type: Optional[str] = None):
+                 default_rcv: Optional[int] = None):
         self.file_path = file_path
         self.version = version
         self.partition_values = partition_values
@@ -121,7 +119,6 @@ class DeltaFilePartition(InputPartition):
         # version from the log action (None on untracked tables)
         self.base_row_id = base_row_id
         self.default_rcv = default_rcv
-        self.change_type = change_type
 
 
 def _parse_bytes(v, option: str) -> int:
@@ -504,22 +501,10 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
                 f"mid-stream")
         cdcs = [a for a in actions if isinstance(a, AddCDCFile)]
         if cdcs:
-            from .cdf import _v2_change_type
-            out = []
-            for a in cdcs:
-                p = canonical_path(a.path, self.root)
-                ct = _v2_change_type(p)
-                if ct is not None:
-                    # r15 folded-write change file: data columns only
-                    # in-file; partition values ride the action, the
-                    # change type the path
-                    out.append(DeltaFilePartition(
-                        p, version, dict(a.partitionValues or {}),
-                        kind="cdc2", change_type=ct))
-                else:
-                    out.append(DeltaFilePartition(p, version, {},
-                                                  kind="cdc"))
-            return out
+            return [DeltaFilePartition(
+                canonical_path(a.path, self.root), version,
+                dict(a.partitionValues or {}), kind="cdc")
+                for a in cdcs]
         out: List[DeltaFilePartition] = []
         for a in actions:
             if isinstance(a, AddFile) and a.dataChange:
@@ -571,20 +556,13 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
         pcols = set(self.partition_columns)
         kind = getattr(partition, "kind", "data")
         phys = getattr(self, "phys", {})
+        # files store only data columns (change files add their
+        # _change_type); partition columns attach from the partition's
+        # values below
+        file_cols = [phys.get(f.name, f.name) for f in meta.fields
+                     if f.name not in pcols]
         if kind == "cdc":
-            # a legacy physical change file: every table column
-            # (partition cols included, stored as ordinary data
-            # columns) plus the _change_type column — nothing
-            # synthesized but the version
-            file_cols = [phys.get(f.name, f.name)
-                         for f in meta.fields] + ["_change_type"]
-            pcols = set()
-        else:
-            # data files and v2 (folded-write) change files both store
-            # only data columns; partition columns attach from the
-            # partition's values below
-            file_cols = [phys.get(f.name, f.name) for f in meta.fields
-                         if f.name not in pcols]
+            file_cols.append("_change_type")
         want_rid = getattr(self, "with_row_ids", False)
         rid_extra = []
         if want_rid:
@@ -624,10 +602,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
                 arrays.append(pa.array([partition.version] * n,
                                        type=pa.int64()))
             elif f.name == "_change_type" and kind != "cdc":
-                if kind == "cdc2":
-                    ct = getattr(partition, "change_type", None)
-                else:
-                    ct = "delete" if kind == "delete" else "insert"
+                ct = "delete" if kind == "delete" else "insert"
                 arrays.append(pa.array([ct] * n, type=pa.string()))
             elif f.name == "_row_id" and want_rid:
                 base = getattr(partition, "base_row_id", None)

@@ -18,6 +18,7 @@ Reference entry points re-expressed: DeltaLog.forTable
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -38,7 +39,8 @@ from .log.actions import (AddFile, CommitInfo, Metadata, Protocol, RemoveFile,
                           SetTransaction)
 from .log.logstore import LogStore, default_log_store, strip_scheme
 from .log.segment import LogSegment, get_log_segment
-from .log.snapshot import Snapshot, canonical_path, read_commit
+from .log.snapshot import (Snapshot, canonical_path, materialized_rt_cols,
+                            read_commit)
 from .log import history as hist
 from .scan import DeltaScan
 from .txn import OptimisticTransaction
@@ -49,17 +51,25 @@ _log_cache: Dict[str, "DeltaLog"] = {}
 _log_cache_lock = threading.Lock()
 
 
-# Materialization budget for DML intermediate relations (r15, VERDICT
-# r14 #5): localCheckpoint of the matched/hit relation is the r14
-# single-scan optimization, but it stores O(matched rows) on executor
-# local disk — a whole-table MERGE/UPDATE at 100 TB would checkpoint
-# roughly the table. Above this row bound the DML keeps the LAZY plan
-# instead (each consumer re-derives the join/filter — the pre-r14
-# distributed shape: more scans, no materialized state). Row-
-# denominated because the bound comes from file stats numRecords and
-# source counts. Env-overridable for deployments.
+# Materialization budget for DML intermediate relations: localCheckpoint
+# of a relation several legs read (UPDATE's hit rows, MERGE's matched
+# pairs) stores O(rows) on executor local disk — a whole-table MERGE at
+# 100 TB would checkpoint roughly the table. Above this row bound the
+# DML keeps the LAZY plan instead (each consumer re-derives it: more
+# scans, no materialized state). Row-denominated because the bound
+# comes from file stats numRecords and source counts. Env-overridable
+# for deployments.
 _DML_MATERIALIZE_MAX_ROWS = int(os.environ.get(
     "CONNECTORS_SPARK_DML_MATERIALIZE_MAX_ROWS", 10_000_000))
+
+
+def _materialize(df: DataFrame, rows: Optional[int]) -> DataFrame:
+    """``df`` checkpointed once for its several consumers when ``rows``
+    (an upper bound on its size; None = unknown) fits
+    ``_DML_MATERIALIZE_MAX_ROWS``; otherwise the lazy plan."""
+    if rows is not None and rows <= _DML_MATERIALIZE_MAX_ROWS:
+        return df.localCheckpoint(eager=True)
+    return df
 
 
 def _stats_numrecords_bound(files) -> Optional[int]:
@@ -81,6 +91,24 @@ def _stats_numrecords_bound(files) -> Optional[int]:
             return None
         total += int(n)
     return total
+
+
+def _scan_rows(snap: Snapshot, files, **kw) -> DataFrame:
+    """Rows of ``files`` (the AddFiles a DML rewrites), read from the
+    Snapshot's materialized inventory rows for their paths — never an
+    ``isin`` plan — with ``_row_id``/``_row_commit_version`` under row
+    tracking."""
+    paths = {f.path for f in files}
+    return snap.to_df(
+        files=[r for r in snap._files_rows if r["path"] in paths],
+        with_row_ids=TableConfig(
+            snap.metadata.configuration).enable_row_tracking, **kw)
+
+
+def _as_col(v) -> F.Column:
+    """A DML SET value: SQL strings parse, Columns pass through
+    (str(Column) is not valid SQL)."""
+    return F.expr(v) if isinstance(v, str) else v
 
 
 def _canonical_table_path(table_path: str) -> str:
@@ -1117,6 +1145,8 @@ class DeltaTable:
                 "auto-compact after committed write failed (write "
                 "itself succeeded): %s", exc)
 
+    # --------------------------------------------------------------- DML
+
     def _replace_where(self, df: DataFrame, predicate: Expression,
                        configuration: Optional[Dict[str, str]]) -> int:
         """replaceWhere body: validate-in, predicate-scoped remove (or
@@ -1140,57 +1170,118 @@ class DeltaTable:
             raise DeltaError(
                 "replaceWhere: incoming schema does not match table "
                 f"schema (table {sorted(want)}, data {sorted(got)})")
-        pred_col = predicate.to_column(F.col)
-        n_bad = df.where(~F.coalesce(pred_col, F.lit(False))) \
-            .limit(1).count()
-        if n_bad:
+        hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
+        if df.where(~hit).limit(1).count():
             raise DeltaError(
                 "replaceWhere: incoming data contains rows that do not "
                 f"match the predicate {predicate}")
-        _enforce_constraints(df, meta.configuration, "written")
-        _enforce_invariants(df, meta, "written")
-        now = int(time.time() * 1000)
         candidates = txn.mark_files_as_read(predicate)
-        scan = DeltaScan(snap, predicate)
-        actions: List[Any] = []
-        if scan.residual is None:
+        params = {"mode": "overwrite", "predicate": str(predicate)}
+        if DeltaScan(snap, predicate).residual is None:
             # predicate fully file-resolvable: drop candidates whole
-            actions += [f.remove(now) for f in candidates]
-        else:
-            cand_paths = {f.path for f in candidates}
-            files_subset = [r for r in snap._files_rows
-                            if r["path"] in cand_paths]
-            rt = TableConfig(meta.configuration).enable_row_tracking
-            old = snap.to_df(files=files_subset, with_row_ids=rt)
-            hit = F.coalesce(pred_col, F.lit(False))
-            keep = old.where(~hit)
-            if rt:
-                # KEPT rows of partially-covered files survive the
-                # replace logically — materialize their ids through the
-                # rewrite (replaced rows are new data and draw fresh
-                # ids from the staged files' baseRowIds)
-                from .log.snapshot import materialized_rt_cols
-                rid_c, rcv_c = materialized_rt_cols(meta)
-                keep = (keep
-                        .withColumnRenamed("_row_id", rid_c)
-                        .withColumnRenamed("_row_commit_version", rcv_c))
-            actions += stage_and_collect(
-                keep, self.log.table_path, meta.partitionColumns,
+            return self._commit_rewrite(txn, "WRITE", params, candidates,
+                                        inserted=df)
+        old = _scan_rows(snap, candidates)
+        return self._commit_rewrite(txn, "WRITE", params, candidates,
+                                    kept=old.where(~hit),
+                                    deleted=old.where(hit), inserted=df)
+
+    def _commit_rewrite(self, txn, operation: str, params: Dict[str, str],
+                        removes: Sequence[AddFile], *,
+                        kept: Optional[DataFrame] = None,
+                        updated: Optional[Tuple[DataFrame, DataFrame]]
+                        = None,
+                        deleted: Optional[DataFrame] = None,
+                        inserted: Optional[DataFrame] = None,
+                        actions: Sequence[Any] = (),
+                        metrics: Optional[Dict[str, str]] = None) -> int:
+        """Commit one DML from its row legs, each a frame over the
+        table's logical columns: ``kept`` rows of the rewritten files,
+        ``updated`` (pre-image, post-image) frames, ``deleted`` and
+        ``inserted`` rows. Under row tracking every leg but
+        ``inserted`` carries ``_row_id``/``_row_commit_version`` as
+        ``Snapshot.to_df(with_row_ids=True)`` yields them. ``removes``
+        are the files the rewrite replaces; ``actions`` join the same
+        commit (a DV delete's re-adds).
+
+        Every rewrite shares these steps:
+        - post-images and inserted rows pass the CHECK constraints,
+          invariants and generated-column expressions;
+        - row tracking: rows keep their id unless inserted, and their
+          commit version unless this commit changes them — a NULL
+          falls back to the new file's defaultRowCommitVersion (or, in
+          the change feed, to ``_commit_version``);
+        - with CDF on, the change rows (pre/post images, deleted and
+          inserted rows) are derived from the legs and staged in the
+          data write's own job (writer.py's CDC layout). A commit that
+          only drops whole files and adds new ones writes none: the
+          change reader synthesizes it exactly from its actions;
+        - one staging call, then one commit."""
+        meta = txn.snapshot.metadata
+        conf = TableConfig(meta.configuration)
+        tcols = [f.name for f in meta.schema.fields]
+        rt_cols = materialized_rt_cols(meta) if conf.enable_row_tracking \
+            else None
+
+        def leg(df, row_id: bool, commit_version: bool,
+                change_type: Optional[str] = None) -> DataFrame:
+            cols = [F.col(c) for c in tcols]
+            if rt_cols is not None:
+                null = F.lit(None).cast("long")
+                cols += [(F.col("_row_id") if row_id else null)
+                         .alias(rt_cols[0]),
+                         (F.col("_row_commit_version") if commit_version
+                          else null).alias(rt_cols[1])]
+            if change_type is not None:
+                cols.append(F.lit(change_type).alias(CHANGE_TYPE_COL))
+            return df.select(*cols)
+
+        what = {"UPDATE": "updated", "MERGE": "merged"}.get(operation,
+                                                             "written")
+        data: List[DataFrame] = []
+        changes: List[DataFrame] = []
+        new_rows: List[DataFrame] = []
+        if kept is not None:
+            data.append(leg(kept, True, True))
+        if updated is not None:
+            pre, post = updated
+            new_rows.append(post)
+            data.append(leg(post, True, False))
+            changes += [leg(pre, True, True, "update_preimage"),
+                        leg(post, True, False, "update_postimage")]
+        if deleted is not None:
+            changes.append(leg(deleted, True, True, "delete"))
+        if inserted is not None:
+            new_rows.append(inserted)
+            data.append(leg(inserted, False, False))
+            changes.append(leg(inserted, False, False, "insert"))
+        for df in new_rows:
+            _enforce_constraints(df, meta.configuration, what)
+            _enforce_invariants(df, meta, what)
+            _fill_and_check_generated(df, meta, what)
+        cdc = None
+        if conf.enable_change_data_feed and changes \
+                and (kept is not None or updated is not None
+                     or deleted is not None):
+            cdc = functools.reduce(DataFrame.unionByName, changes)
+        adds: List[AddFile] = []
+        cdcs: List[Any] = []
+        if data:
+            staged = stage_and_collect(
+                functools.reduce(DataFrame.unionByName, data),
+                self.log.table_path, meta.partitionColumns,
                 num_indexed_cols=_n_indexed(meta.configuration),
                 bloom_cfg=_bloom(meta.configuration),
-                physical_meta=meta)
-            actions += [f.remove(now) for f in candidates]
-        actions += stage_and_collect(
-            df, self.log.table_path, meta.partitionColumns,
-            num_indexed_cols=_n_indexed(meta.configuration),
-            bloom_cfg=_bloom(meta.configuration),
-            physical_meta=meta)
+                physical_meta=meta, cdc_df=cdc)
+            adds, cdcs = staged if cdc is not None else (staged, [])
+        elif cdc is not None:
+            cdcs = stage_cdc_and_collect(cdc, self.log.table_path,
+                                         meta.partitionColumns,
+                                         physical_meta=meta)
+        now = int(time.time() * 1000)
         return txn.commit(
-            actions, "WRITE",
-            operation_parameters={"mode": "overwrite",
-                                  "predicate": str(predicate)})
-
-    # --------------------------------------------------------------- DML
+            list(adds) + [f.remove(now) for f in removes] + list(actions)
+            + list(cdcs), operation, params, operation_metrics=metrics)
 
     def delete(self, predicate: Optional[Expression] = None,
                deletion_vectors: bool = False) -> int:
@@ -1204,72 +1295,25 @@ class DeltaTable:
         snap = txn.snapshot
         if snap is None:
             raise FileNotFoundError("table does not exist")
-        now = int(time.time() * 1000)
         if predicate is None:
             txn.read_whole_table()
-            actions: List[Any] = [f.remove(now) for f in snap.all_files()]
-            return txn.commit(actions, "DELETE",
-                              {"predicate": "true"})
+            return self._commit_rewrite(txn, "DELETE",
+                                        {"predicate": "true"},
+                                        snap.all_files())
         candidates = txn.mark_files_as_read(predicate)
-        scan = DeltaScan(snap, predicate)
-        actions = []
-        if scan.residual is not None and deletion_vectors:
-            return self._delete_with_dv(txn, snap, predicate, candidates,
-                                        now)
-        if scan.residual is None:
-            # Whole-file delete: no CDC files needed even with CDF on --
-            # the change reader synthesizes delete rows from the removed
-            # (still readable) Parquet, so file-granular deletes stay
-            # metadata-only (streaming/cdf.py).
-            actions += [f.remove(now) for f in candidates]
-        else:
-            cand_paths = {f.path for f in candidates}
-            files_subset = [r for r in snap._files_rows
-                            if r["path"] in cand_paths]
-            rt = TableConfig(
-                snap.metadata.configuration).enable_row_tracking
-            df = snap.to_df(files=files_subset, with_row_ids=rt)
-            hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
-            keep = df.where(~hit)
-            if rt:
-                # surviving rows keep their ids through the rewrite:
-                # materialize id + commit version into the new files
-                from .log.snapshot import materialized_rt_cols
-                rid_c, rcv_c = materialized_rt_cols(snap.metadata)
-                keep = (keep
-                        .withColumnRenamed("_row_id", rid_c)
-                        .withColumnRenamed("_row_commit_version", rcv_c))
-            cdc = None
-            if TableConfig(snap.metadata.configuration) \
-                    .enable_change_data_feed:
-                cdc = df.where(hit).withColumn(
-                    CHANGE_TYPE_COL, F.lit("delete"))
-                if rt:
-                    # deleted rows keep their ids in the change feed:
-                    # materialize them into the CDC parquet under the
-                    # per-table spec names so the CDF reader's coalesce
-                    # (streaming/cdf.py) finds them — AddCDCFile rows
-                    # have no baseRowId to fall back on
-                    cdc = (cdc.withColumnRenamed("_row_id", rid_c)
-                           .withColumnRenamed("_row_commit_version",
-                                              rcv_c))
-            # rewrite + change rows in ONE write job (r15, __is_cdc
-            # staging split — see stage_and_collect)
-            staged = stage_and_collect(
-                keep, self.log.table_path,
-                snap.metadata.partitionColumns,
-                num_indexed_cols=_n_indexed(
-                    snap.metadata.configuration),
-                bloom_cfg=_bloom(snap.metadata.configuration),
-                physical_meta=snap.metadata, cdc_df=cdc)
-            adds, cdcs = staged if cdc is not None else (staged, [])
-            actions += adds
-            actions += [f.remove(now) for f in candidates]
-            actions += cdcs
-        return txn.commit(actions, "DELETE", {})
+        residual = DeltaScan(snap, predicate).residual
+        if residual is not None and deletion_vectors:
+            return self._delete_with_dv(txn, snap, predicate, candidates)
+        if residual is None:
+            # whole-file delete: metadata-only even with CDF on
+            return self._commit_rewrite(txn, "DELETE", {}, candidates)
+        df = _scan_rows(snap, candidates)
+        hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
+        return self._commit_rewrite(txn, "DELETE", {}, candidates,
+                                    kept=df.where(~hit),
+                                    deleted=df.where(hit))
 
-    def _delete_with_dv(self, txn, snap, predicate, candidates,
-                        now: int) -> int:
+    def _delete_with_dv(self, txn, snap, predicate, candidates) -> int:
         """Row-level delete via deletion vectors: the touched files stay
         physically untouched; their deleted positions (old DV ∪ new
         hits) land in one new sidecar and each file is re-added with its
@@ -1277,64 +1321,35 @@ class DeltaTable:
         optional CDC), never by the file sizes being deleted from."""
         import dataclasses
 
-        from .dv import DV_CARD_TAG, DV_TAG, apply_dv, dv_relation, stage_dv
-        from .log.snapshot import canonical_path_col
+        from .dv import DV_CARD_TAG, DV_TAG, dv_relation, stage_dv
         params = {"deletionVectors": "true"}
         if not candidates:
             return txn.commit([], "DELETE", params)
-        meta = snap.metadata
-        cand = {f.path: f for f in candidates}
-        paths = sorted(cand)
-        pvs = [dict(cand[p].partitionValues or {}) for p in paths]
-        rt = TableConfig(meta.configuration).enable_row_tracking
-        rid_extra: List[str] = []
-        read_schema = meta.physical_data_schema
-        if rt:
-            # carry materialized row ids through the scan so the CDC
-            # pre-images below can record which rows died
-            from .log.snapshot import _with_rt_fields, materialized_rt_cols
-            rid_c, rcv_c = materialized_rt_cols(meta)
-            read_schema = _with_rt_fields(read_schema, rid_c, rcv_c)
-            rid_extra = [rid_c, rcv_c]
-        # files (and partitionValues) live in the PHYSICAL name domain;
-        # alias back to logical right after assembly so the predicate
-        # and CDC projection below work on table names
-        data = (self.spark.read.schema(read_schema)
-                .parquet(*paths)
-                .withColumn("__fn", F.col("_metadata.file_path"))
-                .withColumn("__ri", F.col("_metadata.row_index")))
-        data = data.withColumn(
-            "__file",
-            canonical_path_col("__fn", snap.table_path)).drop("__fn")
-        if meta.partitionColumns:
-            data = snap._attach_partition_values(data, paths, pvs,
-                                                 keep_file=True)
-        nmap = meta.name_map()
-        data = data.select(
-            *[F.col(nmap[f.name]).alias(f.name)
-              for f in meta.schema.fields], "__file", "__ri", *rid_extra)
-        prior_pairs = [(p, (f.tags or {})[DV_TAG]) for p, f in cand.items()
-                       if (f.tags or {}).get(DV_TAG)]
-        prior = dv_relation(self.spark, snap.table_path, prior_pairs)
-        live = apply_dv(data, prior)
         hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
         # Materialized once: reused for the sidecar write, the touched-
-        # file counts, and the CDC pre-images.
-        hits = live.where(hit).localCheckpoint(eager=True)
-        touched = {r["__file"] for r in
-                   hits.select("__file").distinct().collect()}
+        # file counts, and the change rows. __ri is each row's physical
+        # index, which a DV delete never renumbers.
+        hits = (_scan_rows(snap, candidates, with_file_col=True,
+                           with_row_index=True)
+                .where(hit).localCheckpoint(eager=True))
+        touched = sorted({r["__file"] for r in
+                          hits.select("__file").distinct().collect()})
         if not touched:
             return txn.commit([], "DELETE", params)
+        cand = {f.path: f for f in candidates}
+        prior = dv_relation(
+            self.spark, snap.table_path,
+            [(p, (f.tags or {})[DV_TAG]) for p, f in cand.items()
+             if (f.tags or {}).get(DV_TAG)])
         new_dv = hits.select(F.col("__file").alias("file_path"),
                              F.col("__ri").alias("row_index"))
         if prior is not None:
             new_dv = new_dv.unionByName(
-                _semi_by_paths(prior, sorted(touched), col="file_path"))
+                _semi_by_paths(prior, touched, col="file_path"))
         rel, counts = stage_dv(self.spark, snap.table_path, new_dv)
-        actions: List[Any] = []
-        for p in sorted(touched):
+        readds: List[AddFile] = []
+        for p in touched:
             f = cand[p]
-            actions.append(f.remove(now))
             # A DV that covers every physical row means the file is
             # fully dead: drop it outright instead of re-adding a
             # zero-live-row file (delta-spark removes fully-deleted
@@ -1352,39 +1367,13 @@ class DeltaTable:
             tags = dict(f.tags or {})
             tags[DV_TAG] = rel
             tags[DV_CARD_TAG] = str(counts.get(p, 0))
-            actions.append(dataclasses.replace(
+            readds.append(dataclasses.replace(
                 f, tags=tags, dataChange=True))
-        n_deleted = hits.count()
-        if TableConfig(meta.configuration).enable_change_data_feed:
-            cdc = hits
-            if rt:
-                # resolve each dying row's id exactly as a reader would
-                # have: materialized column, else the file's baseRowId +
-                # physical row index (the file itself is untouched by a
-                # DV delete, so both are still authoritative)
-                from .localrel import local_rows_df
-                bmap = local_rows_df(
-                    self.spark,
-                    [(p, cand[p].baseRowId,
-                      cand[p].defaultRowCommitVersion) for p in paths],
-                    "__file string, __b long, __d long")
-                cdc = (cdc.join(F.broadcast(bmap), "__file", "left")
-                       .withColumn(rid_c, F.coalesce(
-                           F.col(rid_c), F.col("__b") + F.col("__ri")))
-                       .withColumn(rcv_c, F.coalesce(
-                           F.col(rcv_c), F.col("__d")))
-                       .drop("__b", "__d"))
-            cdc = (cdc.drop("__file", "__ri")
-                   .select(*[F.col(fd.name) for fd in meta.schema.fields],
-                           *rid_extra)
-                   .withColumn(CHANGE_TYPE_COL, F.lit("delete")))
-            actions += stage_cdc_and_collect(cdc, self.log.table_path,
-                                             physical_meta=snap.metadata)
-        return txn.commit(
-            actions, "DELETE", params,
-            operation_metrics={"numDeletedRows": str(n_deleted),
-                               "numDeletionVectorsAdded":
-                               str(len(touched))})
+        return self._commit_rewrite(
+            txn, "DELETE", params, [cand[p] for p in touched],
+            deleted=hits, actions=readds,
+            metrics={"numDeletedRows": str(hits.count()),
+                     "numDeletionVectorsAdded": str(len(touched))})
 
     def update(self, set_exprs: Dict[str, Any],
                predicate: Optional[Expression] = None) -> int:
@@ -1401,121 +1390,29 @@ class DeltaTable:
         candidates = txn.mark_files_as_read(predicate)
         if not candidates:
             return txn.commit([], "UPDATE", {})
-        cand_paths = {f.path for f in candidates}
-        files_subset = [r for r in snap._files_rows
-                        if r["path"] in cand_paths]
-        rt = TableConfig(snap.metadata.configuration).enable_row_tracking
-        df = snap.to_df(files=files_subset, with_row_ids=rt)
-        cond = predicate.to_column(F.col) if predicate is not None else F.lit(True)
-        cond = F.coalesce(cond, F.lit(False))
+        cond = predicate.to_column(F.col) if predicate is not None \
+            else F.lit(True)
         # Mark matched rows ONCE against pre-update values: set_exprs may
-        # rewrite columns the predicate reads, so re-evaluating cond after
-        # the rewrite would mis-tag rows (and lose CDF postimages).
-        marked = df.withColumn("__hit", cond)
-        tcols = [f.name for f in snap.metadata.schema.fields]
-        cdf_on = TableConfig(
-            snap.metadata.configuration).enable_change_data_feed
-        if cdf_on:
-            # Carry pre-update values alongside through the rewrite
-            # pipeline so BOTH CDC images later derive from ONE
-            # materialized hit relation (r14, same single-scan shape
-            # as merge) instead of each re-scanning the candidate
-            # files.
-            marked = marked.select(
-                "*", *[F.col(c).alias(f"__pre_{c}") for c in tcols])
-        out = marked
-        for col, expr in set_exprs.items():
-            val = expr if not isinstance(expr, str) else F.expr(expr)
-            out = out.withColumn(
-                col, F.when(F.col("__hit"), val).otherwise(F.col(col)))
-        # Recompute generated columns the SET list doesn't assign:
-        # updating a generated column's source must refresh the
-        # generated value (delta-spark recomputes in this path rather
-        # than failing the stale value against the expression).
-        # Explicitly-assigned generated columns still get validated by
-        # _fill_and_check_generated below.
+        # rewrite columns the predicate reads.
+        marked = _scan_rows(snap, candidates).withColumn(
+            "__hit", F.coalesce(cond, F.lit(False)))
+        hits = marked.where("__hit")
+        if TableConfig(snap.metadata.configuration).enable_change_data_feed:
+            # three legs read the hit rows: post-image data, and both
+            # change images
+            hits = _materialize(hits, _stats_numrecords_bound(candidates))
+        post = hits.select(*[
+            (_as_col(set_exprs[c]) if c in set_exprs else F.col(c)).alias(c)
+            for c in hits.columns])
+        # Recompute generated columns the SET list doesn't assign
+        # (delta-spark recomputes in this path rather than failing the
+        # stale value against the expression).
         for g, (gdt, gexpr) in _generated_exprs(snap.metadata).items():
             if g not in set_exprs:
-                out = out.withColumn(
-                    g, F.when(F.col("__hit"),
-                              F.expr(gexpr).cast(gdt))
-                    .otherwise(F.col(g)))
-        _enforce_constraints(out.where("__hit").drop("__hit"),
-                             snap.metadata.configuration, "updated")
-        _enforce_invariants(out.where("__hit").drop("__hit"),
-                            snap.metadata, "updated")
-        _fill_and_check_generated(out.where("__hit").drop("__hit"),
-                                  snap.metadata, "updated")
-        pre_names = [f"__pre_{c}" for c in tcols] if cdf_on else []
-        staged = out.drop("__hit", *pre_names)
-        if rt:
-            # Updated rows KEEP their row id; their materialized commit
-            # version is NULLed so the reader falls back to the new
-            # file's defaultRowCommitVersion (= this UPDATE's commit) —
-            # exactly the spec's fresh/materialized split. Untouched
-            # rows in the rewritten file keep both.
-            from .log.snapshot import materialized_rt_cols
-            rid_c, rcv_c = materialized_rt_cols(snap.metadata)
-            staged = (out.withColumn(rid_c, F.col("_row_id"))
-                .withColumn(
-                    rcv_c,
-                    F.when(F.col("__hit"),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.col("_row_commit_version")))
-                .drop("__hit", "_row_id", "_row_commit_version",
-                      *pre_names))
-        cdc = None
-        if cdf_on:
-            # ONE scan for both CDC images (r14): the hit rows — with
-            # pre values riding alongside post values — are
-            # materialized once; the pre/post projections read the
-            # small checkpointed relation instead of each re-scanning
-            # the candidate files. GUARDED (r15, VERDICT r14 #5): a
-            # non-selective UPDATE would checkpoint O(table) rows onto
-            # executor local disk — when the candidate files' stats
-            # bound the hit volume above the materialization threshold,
-            # keep the lazy plan (the distributed derivation re-scans
-            # the candidates per image; correct at any scale).
-            hits = out.where("__hit")
-            bound = _stats_numrecords_bound(files_subset)
-            if bound is not None and bound <= _DML_MATERIALIZE_MAX_ROWS:
-                hits = hits.localCheckpoint(eager=True)
-            pre = hits.select(
-                *[F.col(f"__pre_{c}").alias(c) for c in tcols],
-                *([F.col("_row_id"), F.col("_row_commit_version")]
-                  if rt else []))
-            post = hits.select(
-                *tcols,
-                *([F.col("_row_id"), F.col("_row_commit_version")]
-                  if rt else []))
-            if rt:
-                # Both images carry the row's id in the CDC parquet
-                # (the CDF join key row tracking exists for). The
-                # preimage keeps its commit version; the postimage's is
-                # this commit, unknown pre-commit — written NULL, the
-                # reader falls back to _commit_version.
-                pre = (pre.withColumnRenamed("_row_id", rid_c)
-                       .withColumnRenamed("_row_commit_version", rcv_c))
-                post = (post.withColumnRenamed("_row_id", rid_c)
-                        .drop("_row_commit_version")
-                        .withColumn(rcv_c, F.lit(None).cast("long")))
-            pre = pre.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-            post = post.withColumn(CHANGE_TYPE_COL,
-                                   F.lit("update_postimage"))
-            cdc = pre.unionByName(post)
-        # rewrite + change rows in ONE write job (r15, __is_cdc staging
-        # split — see stage_and_collect)
-        staged_out = stage_and_collect(
-            staged, self.log.table_path,
-            snap.metadata.partitionColumns,
-            num_indexed_cols=_n_indexed(snap.metadata.configuration),
-            bloom_cfg=_bloom(snap.metadata.configuration),
-            physical_meta=snap.metadata, cdc_df=cdc)
-        adds, cdcs = staged_out if cdc is not None else (staged_out, [])
-        now = int(time.time() * 1000)
-        actions: List[Any] = list(adds) + [f.remove(now) for f in candidates]
-        actions += cdcs
-        return txn.commit(actions, "UPDATE", {})
+                post = post.withColumn(g, F.expr(gexpr).cast(gdt))
+        return self._commit_rewrite(txn, "UPDATE", {}, candidates,
+                                    kept=marked.where(~F.col("__hit")),
+                                    updated=(hits, post))
 
     def merge(self, source: DataFrame, condition,
               when_matched_update: Optional[Dict[str, Any]] = None,
@@ -1555,7 +1452,6 @@ class DeltaTable:
                     f"merge predicate may only reference partition columns "
                     f"{sorted(part_cols)}; got non-partition column(s) "
                     f"{sorted(extra)}")
-            from .scan import DeltaScan
             txn.mark_files_as_read(predicate)
             scoped_files = DeltaScan(snap, predicate).files()
         target = snap.to_df(files=scoped_files).alias("t")
@@ -1568,38 +1464,25 @@ class DeltaTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
 
         meta = snap.metadata
-        # __file comes from to_df itself (_metadata.file_path inside
-        # each single-source scan): input_file_name() on the returned
-        # plan is illegal once a DV anti-join makes it multi-source —
-        # a merge on a DV-carrying table would fail analysis
         from .log.snapshot import addfiles_from_rows
         rt = TableConfig(meta.configuration).enable_row_tracking
+        rid = ["_row_id", "_row_commit_version"] if rt else []
         tcols = [f.name for f in meta.schema.fields]
         gens = _generated_exprs(meta)
 
-        # ONE full scan answers BOTH merge questions — which files are
-        # touched AND what the matched (target, source) row pairs are.
-        # (r14, guide §1.2/§2.4: the previous shape ran the inner join
-        # against the target FOUR times — touched-file discovery, the
-        # rewrite's matched leg, and the two CDC images — plus the
-        # kept-rows anti-join, five target scans per MERGE.) The join
-        # output is projected to collision-free names, matched-update
-        # expressions are evaluated HERE while t/s alias resolution is
-        # still alive (aliases do not survive a checkpoint), and the
-        # result is materialized: it is O(matched rows), the small
-        # relation of the merge by construction. Everything downstream
-        # (pre/post images, rewrite values, touched paths) derives from
-        # it without rescanning the target.
+        # ONE scan of the target answers both merge questions — which
+        # files are touched AND what the matched (target, source) row
+        # pairs are. The join output is projected to collision-free
+        # names, matched-update expressions are evaluated HERE while
+        # t/s alias resolution is still alive (aliases do not survive a
+        # checkpoint), and the result is materialized: it is O(matched
+        # rows), the small relation of the merge by construction. The
+        # pre/post images and touched paths derive from it without
+        # rescanning the target. __file comes from to_df itself
+        # (_metadata.file_path inside each single-source scan), which
+        # stays legal once a DV anti-join makes the plan multi-source.
         with_all = snap.to_df(files=scoped_files, with_file_col=True,
                               with_row_ids=rt)
-        joined = with_all.alias("t").join(src, cond, "inner")
-
-        def _set(v):
-            # SQL strings or Columns, same contract as update()'s
-            # set_exprs — str(Column) is NOT valid SQL, so Columns must
-            # pass through unstringified
-            return F.expr(v) if isinstance(v, str) else v
-
         proj = [F.col(f"t.{c}").alias(f"__t_{c}") for c in tcols]
         if when_matched_update is not None:
             bad_id = set(when_matched_update) & set(_identity_cols(meta))
@@ -1607,110 +1490,57 @@ class DeltaTable:
                 raise DeltaError(
                     f"columns {sorted(bad_id)} are GENERATED ALWAYS AS "
                     f"IDENTITY and cannot be updated")
-            proj += [_set(when_matched_update[c]).alias(f"__u_{c}")
+            proj += [_as_col(when_matched_update[c]).alias(f"__u_{c}")
                      for c in when_matched_update if c in set(tcols)]
-        proj.append(F.col("__file"))
-        if rt:
-            proj += [F.col("t._row_id").alias("__rid"),
-                     F.col("t._row_commit_version").alias("__rcv")]
-        matched_m = joined.select(*proj)
-        # GUARD (r15, VERDICT r14 #5): the matched-pair checkpoint is
-        # O(matched rows) on executor local disk — fine for the
-        # selective-merge contract, catastrophic for a whole-table
-        # match at 100 TB. Estimate matched volume driver-side: the
-        # scoped target's stats numRecords bound it outright when
-        # small; otherwise one count of the already-checkpointed
-        # source (matched ≈ source rows under the usual key-equi
-        # condition; a pathological many-to-many fanout can exceed the
-        # estimate — the budget is a heuristic guard, not a hard cap).
-        # Over budget, the lazy plan re-derives the join per consumer
-        # (touched-path collect + rewrite legs) — the distributed
-        # shape, more scans but no materialized state.
-        # scoped_files is a (driver-local) DataFrame plan, not rows —
-        # partition-scoped merges skip the stats bound and go straight
-        # to the source count.
+        proj += [F.col("__file")] + [F.col(f"t.{c}").alias(c) for c in rid]
+        # The matched rows are estimated driver-side: the scoped
+        # target's stats numRecords bound them outright when small;
+        # otherwise the (checkpointed) source count stands in (matched
+        # ≈ source rows under the usual key-equi condition; a
+        # many-to-many fanout can exceed it — the budget is a heuristic
+        # guard, not a hard cap). A partition-scoped merge has its
+        # scoped files as a plan, not rows, so it uses the count.
         tgt_bound = (_stats_numrecords_bound(snap._files_rows)
                      if scoped_files is None else None)
         est = tgt_bound if (tgt_bound is not None
                             and tgt_bound <= _DML_MATERIALIZE_MAX_ROWS) \
             else source.count()
-        if est <= _DML_MATERIALIZE_MAX_ROWS:
-            matched_m = matched_m.localCheckpoint(eager=True)
+        matched = _materialize(
+            with_all.alias("t").join(src, cond, "inner").select(*proj), est)
 
-        # Touched files: the distinct __file set of the materialized
-        # matched relation (no second discovery scan), intersected with
-        # the Snapshot's materialized inventory DRIVER-side — no isin
-        # literal in any plan, no log-replay job. The touched subset is
-        # inherently driver-bound: it becomes the commit's RemoveFile
-        # list.
+        # Touched files: the distinct __file set of the matched
+        # relation, intersected with the Snapshot's inventory
+        # driver-side; they become the commit's RemoveFile list.
         touched_paths = {r["__file"] for r in
-                         matched_m.select("__file").distinct().collect()}
-        touched_rows = [r for r in snap._files_rows
-                        if r["path"] in touched_paths]
-        touched_adds = addfiles_from_rows(touched_rows)
-        touched_df = snap.to_df(files=touched_rows,
-                                with_row_ids=rt).alias("t")
-
-        if rt:
-            # Row tracking through the rewrite: kept rows materialize
-            # id + commit version; UPDATED rows keep their id but fall
-            # back to the new file's defaultRowCommitVersion (NULL
-            # materialized value); INSERTED rows get fresh ids from the
-            # new file's baseRowId + row_index (NULL for both).
-            from .log.snapshot import materialized_rt_cols
-            rid_c, rcv_c = materialized_rt_cols(meta)
-            rid_keep = [
-                F.col("t._row_id").alias(rid_c),
-                F.col("t._row_commit_version").alias(rcv_c)]
-            rid_keep_m = [
-                F.col("__rid").alias(rid_c),
-                F.col("__rcv").alias(rcv_c)]
-            rid_upd_m = [
-                F.col("__rid").alias(rid_c),
-                F.lit(None).cast("long").alias(rcv_c)]
-            rid_ins = [
-                F.lit(None).cast("long").alias(rid_c),
-                F.lit(None).cast("long").alias(rcv_c)]
-        else:
-            rid_keep = rid_keep_m = rid_upd_m = rid_ins = []
-        cdc_parts: List[DataFrame] = []
-        parts = []
-        # target rows in touched files with no source match: keep as-is
-        # (the one remaining join against target data — bounded to the
-        # touched-file subset)
-        parts.append(touched_df.join(src, cond, "left_anti")
-                     .select(*[F.col(f"t.{c}").alias(c) for c in tcols],
-                             *rid_keep))
-        matched_t = matched_m.select(
-            *[F.col(f"__t_{c}").alias(c) for c in tcols], *rid_keep_m)
+                         matched.select("__file").distinct().collect()}
+        touched = addfiles_from_rows([r for r in snap._files_rows
+                                      if r["path"] in touched_paths])
+        # target rows in touched files with no source match stay as-is
+        kept = _scan_rows(snap, touched).alias("t").join(
+            src, cond, "left_anti")
+        pre = matched.select(*[F.col(f"__t_{c}").alias(c) for c in tcols],
+                             *rid)
+        updated = deleted = inserted = None
         if when_matched_update is not None:
-            upd = matched_m.select(*[
-                (F.col(f"__u_{c}")
-                 if c in when_matched_update else F.col(f"__t_{c}"))
-                .alias(c) for c in tcols], *rid_upd_m)
+            post = matched.select(*[
+                F.col(f"__u_{c}" if c in when_matched_update
+                      else f"__t_{c}").alias(c) for c in tcols], *rid)
             # Recompute generated columns the SET list doesn't assign
-            # (delta-spark recomputes on update; validating the stale
-            # pre-update value against the expression would always
-            # fail when a source column changed).
+            # (delta-spark recomputes on update).
             for g, (gdt, gexpr) in gens.items():
                 if g not in when_matched_update:
-                    upd = upd.withColumn(g, F.expr(gexpr).cast(gdt))
-            parts.append(upd)
-            cdc_parts.append(matched_t.withColumn(
-                CHANGE_TYPE_COL, F.lit("update_preimage")))
-            cdc_parts.append(upd.withColumn(
-                CHANGE_TYPE_COL, F.lit("update_postimage")))
+                    post = post.withColumn(g, F.expr(gexpr).cast(gdt))
+            updated = (pre, post)
         elif when_matched_delete:
-            cdc_parts.append(matched_t.withColumn(
-                CHANGE_TYPE_COL, F.lit("delete")))
+            deleted = pre
         else:
-            parts.append(matched_t)
+            kept = kept.unionByName(pre)
         if when_not_matched_insert:
             scols = set(source.columns)
-            ins = (src.join(target, cond, "left_anti")
-                   .select(*[(F.col(f"s.{c}") if c in scols
-                              else F.lit(None)).alias(c) for c in tcols],
-                           *rid_ins))
+            inserted = (src.join(target, cond, "left_anti")
+                        .select(*[(F.col(f"s.{c}") if c in scols
+                                   else F.lit(None)).alias(c)
+                                  for c in tcols]))
             # Compute generated columns the source doesn't carry —
             # the NULL placeholder injected above is not a user-
             # supplied value and must not be validated against the
@@ -1718,7 +1548,8 @@ class DeltaTable:
             # the insert path).
             for g, (gdt, gexpr) in gens.items():
                 if g not in scols:
-                    ins = ins.withColumn(g, F.expr(gexpr).cast(gdt))
+                    inserted = inserted.withColumn(
+                        g, F.expr(gexpr).cast(gdt))
             # Identity columns: allocate fresh values for inserted rows
             # (GENERATED ALWAYS AS IDENTITY can never come from the
             # source) and stage the advanced high-water mark on this
@@ -1730,49 +1561,11 @@ class DeltaTable:
                         f"columns {sorted(set(idcols) & scols)} are "
                         f"GENERATED ALWAYS AS IDENTITY and cannot be "
                         f"supplied by the merge source")
-                ins = _apply_identity(
-                    txn, ins.drop(*idcols), txn.new_metadata or meta)
-            parts.append(ins)
-            cdc_parts.append(ins.withColumn(
-                CHANGE_TYPE_COL, F.lit("insert")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-
-        # parts[0] is always the kept (unchanged) rows; everything after
-        # carries new or rewritten values that can violate a constraint.
-        for p in parts[1:]:
-            _enforce_constraints(p, meta.configuration, "merged")
-            _enforce_invariants(p, meta, "merged")
-            _fill_and_check_generated(p, meta, "merged")
-        cdc = None
-        if cdc_parts and TableConfig(snap.metadata.configuration) \
-                .enable_change_data_feed:
-            # cdc_parts already carry the materialized id/commit-version
-            # columns (rid_keep/rid_upd/rid_ins): delete and pre/post
-            # images keep the row's id; inserted rows are NULL — their
-            # fresh ids are assigned commit-side from the new file's
-            # baseRowId, which no pre-commit CDC write can know
-            # (disclosed in streaming/cdf.py).
-            cdc = cdc_parts[0]
-            for p in cdc_parts[1:]:
-                cdc = cdc.unionByName(p)
-        # rewrite + change rows in ONE write job (r15, __is_cdc staging
-        # split — see stage_and_collect). The insert leg appears in
-        # both the data and cdc legs of that one plan; its anti-join
-        # subtrees are identical, so the exchange is reused rather
-        # than re-scanned.
-        staged = stage_and_collect(
-            out, self.log.table_path, meta.partitionColumns,
-            num_indexed_cols=_n_indexed(meta.configuration),
-            bloom_cfg=_bloom(meta.configuration),
-            physical_meta=meta, cdc_df=cdc)
-        adds, cdcs = staged if cdc is not None else (staged, [])
-        now = int(time.time() * 1000)
-        actions: List[Any] = (list(adds)
-                              + [f.remove(now) for f in touched_adds]
-                              + list(cdcs))
-        return txn.commit(actions, "MERGE", {"predicate": str(condition)})
+                inserted = _apply_identity(
+                    txn, inserted.drop(*idcols), txn.new_metadata or meta)
+        return self._commit_rewrite(
+            txn, "MERGE", {"predicate": str(condition)}, touched,
+            kept=kept, updated=updated, deleted=deleted, inserted=inserted)
 
     # ----------------------------------------------------------- changes
 
@@ -2688,7 +2481,6 @@ class TableMaintenance:
                 # stable-row-id requirement — fresh baseRowId+index ids
                 # would renumber under compaction). The read side
                 # prefers these columns when present.
-                from .log.snapshot import materialized_rt_cols
                 rid_c, rcv_c = materialized_rt_cols(snap.metadata)
                 df = (snap.to_df(files=subset, with_row_ids=True)
                       .withColumnRenamed("_row_id", rid_c)

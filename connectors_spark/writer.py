@@ -19,6 +19,16 @@ DeltaWriterBucket.java, S8).
 Task-retry safety: the per-file move is idempotent (a retried task that
 finds its source gone but the destination present treats the move as
 already done), so a lost executor cannot duplicate or orphan a file.
+
+Change-data (CDC) layout, delta-spark's (``performCDCPartition``): a
+CDF-enabled DML stages its rewritten rows and its change rows in ONE
+write job, partitioned by the synthetic ``__is_cdc`` column plus the
+table's partition columns. ``__is_cdc`` exists only as a staging
+directory. Change files carry the data columns plus a ``_change_type``
+column, land at ``_change_data/<partition dirs>/cdc-*.parquet`` and
+record their partition values on the ``AddCDCFile``. Data files of such
+a write carry an all-NULL ``_change_type`` column; every read of data
+files projects an explicit schema, and AddFile stats never record it.
 """
 
 from __future__ import annotations
@@ -44,9 +54,7 @@ CDC_DIR = "_change_data"
 CHANGE_TYPE_COL = "_change_type"
 # Synthetic partition column steering rows of a SINGLE DML write job
 # into either the table layout or _change_data (delta-spark's
-# CDC_PARTITION_COL; TransactionalWrite.performCDCPartition). Never
-# lands in any parquet file or in partitionValues — it exists only in
-# the staging directory layout.
+# CDC_PARTITION_COL).
 CDC_PART_COL = "__is_cdc"
 
 _STATS_TYPES = ("int8", "int16", "int32", "int64", "float", "double",
@@ -80,7 +88,9 @@ def file_stats_json(path: str) -> Tuple[str, int]:
         for ci in range(g.num_columns):
             c = g.column(ci)
             name = c.path_in_schema
-            if "." in name:  # nested: skip (top-level columns only)
+            # nested: skip (top-level columns only); the change type a
+            # CDC-folded data file carries is not table data
+            if "." in name or name == CHANGE_TYPE_COL:
                 continue
             st = c.statistics
             if st is None:
@@ -159,9 +169,9 @@ def _publish_one(store, staging: str, table_path: str, rel_path: str,
     the already-published file. Returns (size, mtime_ms, stats_json,
     bloom_tags_json). ``dest_rel`` overrides the destination path
     relative to the table root (defaults to ``rel_path`` — identity
-    layout); folded CDC writes use it to strip the synthetic
-    ``__is_cdc``/``_change_type`` staging dirs and to land change files
-    under ``_change_data/``."""
+    layout); CDC-folded writes use it to strip the synthetic
+    ``__is_cdc`` staging dir and to land change files under
+    ``_change_data/``."""
     src = os.path.join(staging, rel_path)
     dest = os.path.join(table_path, dest_rel or rel_path)
     stats = tags = None
@@ -253,6 +263,8 @@ def publish_plan(spark, staging: str, table_path: str,
     return src.mapInPandas(_publish, out_schema)
 
 
+
+
 def stage_and_collect(df: DataFrame, table_path: str,
                       partition_by: Optional[List[str]] = None,
                       data_change: bool = True,
@@ -288,32 +300,57 @@ def stage_and_collect(df: DataFrame, table_path: str,
     physical domain the read path maps back from. Identity when the
     table has no mapping.
 
-    ``cdc_df`` (r15, VERDICT r14 #4 — delta-spark's single-pass DML
-    write): change rows (same columns as ``df`` plus ``_change_type``)
-    ride the SAME Spark write job as the rewrite, partitioned by the
-    synthetic ``__is_cdc`` + ``_change_type`` columns on top of the
-    table partitioning. Data files land byte-identical to the unfolded
-    path (the synthetic columns exist only as staging dirs); change
-    files land under ``_change_data/_change_type=<t>/<pdirs>/cdc2-*``
-    with the table's partitionValues recorded on the AddCDCFile (the
-    v2 CDC layout — readers recover partition columns and the change
-    type from the action + path instead of in-file columns; legacy
-    flat cdc files keep reading unchanged). One staging write + one
-    publish job replaces the previous two write jobs per CDC-enabled
-    DML commit. Returns ``(adds, cdcs)`` instead of ``adds``."""
+    ``cdc_df``: change rows (the columns of ``df`` plus
+    ``_change_type``) staged in the SAME write job, in the CDC layout
+    of the module docstring. Returns ``(adds, cdcs)`` instead of
+    ``adds``."""
+    adds, cdcs = _stage(df, cdc_df, table_path, partition_by,
+                        data_change=data_change,
+                        collect_stats=collect_stats,
+                        num_indexed_cols=num_indexed_cols,
+                        schema_cols=schema_cols, bloom_cfg=bloom_cfg,
+                        physical_meta=physical_meta)
+    return (adds, cdcs) if cdc_df is not None else adds
+
+
+def stage_cdc_and_collect(df: DataFrame, table_path: str,
+                          partition_by: Optional[List[str]] = None,
+                          physical_meta=None) -> List[AddCDCFile]:
+    """Stage change rows only (``df`` carries ``_change_type``) for a
+    DML that rewrites no data file (a deletion-vector DELETE), and
+    return the ``AddCDCFile`` actions. Same layout and write job as the
+    change leg of ``stage_and_collect``.
+
+    CDC files are invisible to snapshot reads (SnapshotImpl ignores the
+    ``cdc`` action; actions.scala:164-172) -- only the row-level change
+    readers (streaming/cdf.py, streaming/source.py) open them."""
+    return _stage(None, df, table_path, partition_by,
+                  physical_meta=physical_meta)[1]
+
+
+def _stage(df: Optional[DataFrame], cdc_df: Optional[DataFrame],
+           table_path: str, partition_by: Optional[List[str]],
+           data_change: bool = True, collect_stats: bool = True,
+           num_indexed_cols: Optional[int] = None,
+           schema_cols: Optional[List[str]] = None,
+           bloom_cfg=None, physical_meta=None
+           ) -> Tuple[List[AddFile], List[AddCDCFile]]:
+    """One staging write + one publish job for data rows (``df``),
+    change rows (``cdc_df``) or both."""
     from pyspark.sql import functions as F
     partition_by = list(partition_by or [])
     if physical_meta is not None \
             and physical_meta.column_mapping_mode != "none":
         nmap = physical_meta.name_map()
-        df = df.select(*[F.col(c).alias(nmap.get(c, c))
-                         for c in df.columns])
-        if cdc_df is not None:
-            # same physical domain as the data leg (_change_type and
-            # the materialized row-id columns have no mapping entry
-            # and pass through)
-            cdc_df = cdc_df.select(*[F.col(c).alias(nmap.get(c, c))
-                                     for c in cdc_df.columns])
+
+        def physical(frame):
+            # _change_type and the materialized row-id columns have no
+            # mapping entry and pass through
+            return frame.select(*[F.col(c).alias(nmap.get(c, c))
+                                  for c in frame.columns])
+
+        df = physical(df) if df is not None else None
+        cdc_df = physical(cdc_df) if cdc_df is not None else None
         partition_by = [nmap.get(c, c) for c in partition_by]
         if schema_cols is not None:
             schema_cols = [nmap.get(c, c) for c in schema_cols]
@@ -321,7 +358,8 @@ def stage_and_collect(df: DataFrame, table_path: str,
             bcols, bm, bk = bloom_cfg
             bloom_cfg = ([nmap.get(c, c) for c in bcols], bm, bk)
     keep_cols = None
-    if num_indexed_cols is not None and num_indexed_cols >= 0:
+    if df is not None and num_indexed_cols is not None \
+            and num_indexed_cols >= 0:
         order = schema_cols if schema_cols is not None \
             else df.schema.fieldNames()
         data_order = [c for c in order if c not in set(partition_by)]
@@ -334,25 +372,22 @@ def stage_and_collect(df: DataFrame, table_path: str,
     # the spec; other columns' stats are forfeited on such tables —
     # environment ceiling, the seam heals with pyarrow >= 21).
     from .log.features import _has_variant
-    has_variant = any(_has_variant(f.dataType) for f in df.schema.fields)
+    schema = (df if df is not None else cdc_df).schema
+    has_variant = any(_has_variant(f.dataType) for f in schema.fields)
     collect_stats_eff = collect_stats and not has_variant
     if has_variant:
         bloom_cfg = None
     staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
     if cdc_df is None:
-        out = df
-        write_partition_by = partition_by
+        out, write_partition_by = df, partition_by
     else:
-        # ONE write job for rewrite + change rows: the synthetic
-        # partition columns split the staging layout; unionByName
-        # tolerates column-order differences between the legs.
-        out = (df.withColumn(CHANGE_TYPE_COL,
-                             F.lit(None).cast("string"))
-               .withColumn(CDC_PART_COL, F.lit("false"))
-               .unionByName(cdc_df.withColumn(CDC_PART_COL,
-                                              F.lit("true"))))
-        write_partition_by = [CDC_PART_COL, CHANGE_TYPE_COL] \
-            + partition_by
+        out = cdc_df.withColumn(CDC_PART_COL, F.lit("true"))
+        if df is not None:
+            out = (df.withColumn(CHANGE_TYPE_COL,
+                                 F.lit(None).cast("string"))
+                   .withColumn(CDC_PART_COL, F.lit("false"))
+                   .unionByName(out))
+        write_partition_by = [CDC_PART_COL] + partition_by
     writer = out.write.mode("overwrite")
     if write_partition_by:
         writer = writer.partitionBy(*write_partition_by)
@@ -360,59 +395,60 @@ def stage_and_collect(df: DataFrame, table_path: str,
 
     from .log.logstore import default_log_store
     store = default_log_store(table_path)
+    cdc_top = f"{CDC_PART_COL}=true"
     adds: List[AddFile] = []
     cdcs: List[AddCDCFile] = []
+
+    def staged():
+        return [p for p in store.list_files_recursive(staging)
+                if p.endswith(".parquet")]
+
     try:
-        rel_paths = [p for p in store.list_files_recursive(staging)
-                     if p.endswith(".parquet")]
-        if cdc_df is None:
-            data_rels, cdc_rels = rel_paths, []
-        else:
-            data_rels = [p for p in rel_paths
-                         if p.startswith(f"{CDC_PART_COL}=false/")]
-            cdc_rels = [p for p in rel_paths
-                        if p.startswith(f"{CDC_PART_COL}=true/")]
+        rel_paths = staged()
+        if cdc_df is not None \
+                and not any(p.startswith(cdc_top + "/") for p in rel_paths):
+            # Zero change rows still commit one (empty) AddCDCFile: a
+            # commit with cdc files is read EXACTLY from them, while a
+            # cdc-less commit synthesizes changes from its dataChange
+            # add/remove actions — a rewrite with no hits must not
+            # synthesize phantom insert+delete rows. A partitioned
+            # write materializes no file for an empty leg; an
+            # unpartitioned empty write does.
+            (cdc_df.drop(*partition_by).limit(0).write
+             .parquet(os.path.join(staging, cdc_top)))
+            rel_paths = staged()
+        # destinations: the staging path minus the __is_cdc dir; change
+        # files move under _change_data/ and skip footer stats
+        dests: List[Optional[str]] = []
+        stats_flags: List[bool] = []
+        for p in rel_paths:
+            top, _, rest = p.partition("/")
+            is_cdc = cdc_df is not None and top == cdc_top
+            if is_cdc:
+                pdirs, _, name = rest.rpartition("/")
+                name = name[len("part-"):] if name.startswith("part-") \
+                    else name
+                dests.append(os.path.join(CDC_DIR, pdirs, f"cdc-{name}"))
+            else:
+                dests.append(rest if cdc_df is not None else None)
+            stats_flags.append(not is_cdc)
         if rel_paths:
-            # data files: strip the two synthetic staging dirs so the
-            # final layout (and bytes) match the unfolded write; cdc
-            # files: keep _change_type=<t> + partition dirs under
-            # _change_data/, unique-prefixed per publish.
-            srcs: List[str] = list(data_rels)
-            dests: List[Optional[str]] = [
-                ("/".join(p.split("/")[2:]) if cdc_df is not None
-                 else None) for p in data_rels]
-            stats_flags: List[bool] = [True] * len(data_rels)
-            for p in cdc_rels:
-                segs = p.split("/")
-                srcs.append(p)
-                dests.append("/".join(
-                    [CDC_DIR] + segs[1:-1]
-                    + [f"cdc2-{uuid.uuid4().hex}-{segs[-1]}"]))
-                stats_flags.append(False)
-            pub = publish_plan(df.sparkSession, staging, table_path,
-                               srcs, collect_stats_eff, store=store,
+            pub = publish_plan(out.sparkSession, staging, table_path,
+                               rel_paths, collect_stats_eff, store=store,
                                bloom_cfg=bloom_cfg, dest_rels=dests,
                                want_stats=stats_flags).collect()
             for r in pub:
                 rel_path = r["dest_rel"]
                 quoted = "/".join(urllib.parse.quote(s)
                                   for s in rel_path.split("/"))
-                if rel_path.startswith(f"{CDC_DIR}/"):
-                    # dirs after _change_data: _change_type=<t> then
-                    # the table partition dirs; _change_type never
-                    # enters partitionValues (it is recovered from the
-                    # path at read)
-                    rel_dir = os.path.dirname(rel_path)
-                    segs = [s for s in rel_dir.split("/")[1:] if s]
-                    pv = _parse_partition_dirs(
-                        "/".join(segs), [CHANGE_TYPE_COL] + partition_by)
-                    pv.pop(CHANGE_TYPE_COL, None)
+                rel_dir = os.path.dirname(rel_path)
+                if rel_path.startswith(CDC_DIR + "/"):
                     cdcs.append(AddCDCFile(
-                        path=quoted, partitionValues=pv,
+                        path=quoted,
+                        partitionValues=_parse_partition_dirs(
+                            rel_dir[len(CDC_DIR):], partition_by),
                         size=r["size"]))
                     continue
-                rel_dir = os.path.dirname(rel_path)
-                pv = _parse_partition_dirs(rel_dir, partition_by)
                 stats = r["stats"]
                 if keep_cols is not None and stats:
                     d = json.loads(stats)
@@ -422,7 +458,8 @@ def stage_and_collect(df: DataFrame, table_path: str,
                     stats = json.dumps(d, separators=(",", ":"))
                 adds.append(AddFile(
                     path=quoted,
-                    partitionValues=pv,
+                    partitionValues=_parse_partition_dirs(rel_dir,
+                                                          partition_by),
                     size=r["size"],
                     modificationTime=r["mtime"],
                     dataChange=data_change,
@@ -430,18 +467,6 @@ def stage_and_collect(df: DataFrame, table_path: str,
                     tags=json.loads(r["tags"]) if r["tags"] else None))
     finally:
         store.remove_tree(staging)
-    if cdc_df is not None and not cdc_rels:
-        # Zero change rows still must commit an (empty) AddCDCFile:
-        # the CDF protocol reads a cdc-carrying commit EXACTLY from
-        # its cdc files, while a cdc-less commit SYNTHESIZES changes
-        # from its dataChange add/remove actions — an identity rewrite
-        # with no hits must not synthesize phantom insert+delete rows.
-        # The partitioned staging write materializes no file for an
-        # empty leg (unlike the old unpartitioned cdc write), so stage
-        # the empty file the old way — rare corner, one small job.
-        cdcs = stage_cdc_and_collect(cdc_df, table_path)
-    if not rel_paths and cdc_df is None:
-        return []
     if has_variant and collect_stats and adds:
         # numRecords via Spark (it reads its own variant files fine):
         # one count per file over exactly the published paths.
@@ -456,12 +481,10 @@ def stage_and_collect(df: DataFrame, table_path: str,
         adds = [dataclasses.replace(a, stats=zero)
                 if a.stats is None else a for a in adds]
 
-        from pyspark.sql import functions as F
-
         from .log.snapshot import canonical_path, canonical_path_col
         index_of = {canonical_path(a.path, table_path): i
                     for i, a in enumerate(adds)}
-        counts = (df.sparkSession.read
+        counts = (out.sparkSession.read
                   .parquet(*index_of)
                   .select(F.col("_metadata.file_path").alias("__fn"))
                   .select(canonical_path_col("__fn", table_path)
@@ -488,50 +511,5 @@ def stage_and_collect(df: DataFrame, table_path: str,
                     separators=(",", ":")))
     # collect() order is partition-arbitrary; sort for reproducible logs.
     adds.sort(key=lambda a: a.path)
-    if cdc_df is not None:
-        cdcs.sort(key=lambda c: c.path)
-        return adds, cdcs
-    return adds
-
-
-def stage_cdc_and_collect(df: DataFrame, table_path: str,
-                          physical_meta=None) -> List[AddCDCFile]:
-    """Write change rows (``df`` must carry a ``_change_type`` column) as
-    Parquet under ``<table>/_change_data/`` and return the ``AddCDCFile``
-    actions to commit alongside the DML's add/remove actions.
-
-    CDC files are invisible to snapshot reads (SnapshotImpl ignores the
-    ``cdc`` action; actions.scala:164-172) -- only the row-level change
-    reader (streaming/cdf.py) opens them. Files are written unpartitioned
-    with partition columns as ordinary data columns: change batches are
-    small relative to the table and a per-version scan never prunes them.
-    """
-    from .log.logstore import default_log_store
-    if physical_meta is not None \
-            and physical_meta.column_mapping_mode != "none":
-        # CDC files live in the same PHYSICAL name domain as data
-        # files (_change_type has no mapping entry and passes through)
-        from pyspark.sql import functions as F
-        nmap = physical_meta.name_map()
-        df = df.select(*[F.col(c).alias(nmap.get(c, c))
-                         for c in df.columns])
-    store = default_log_store(table_path)
-    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    dest_dir = os.path.join(table_path, CDC_DIR)
-    cdcs: List[AddCDCFile] = []
-    try:
-        for name in store.list_dir(staging):
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(staging, name)
-            dest = os.path.join(dest_dir, f"cdc-{uuid.uuid4().hex}-{name}")
-            store.rename(src, dest)
-            size, _mtime = store.stat(dest)
-            rel = os.path.relpath(dest, table_path)
-            cdcs.append(AddCDCFile(
-                path="/".join(urllib.parse.quote(s) for s in rel.split("/")),
-                partitionValues={}, size=size))
-    finally:
-        store.remove_tree(staging)
-    return cdcs
+    cdcs.sort(key=lambda c: c.path)
+    return adds, cdcs

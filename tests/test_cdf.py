@@ -126,17 +126,81 @@ def test_partitioned_update_cdc_carries_partition_columns(spark, tmp_path):
 def test_reorg_purge_emits_nothing_and_dv_deletes_survive(spark, tmp_path):
     """REORG PURGE is dataChange=False end to end: the change feed
     shows the DV delete at its own version and NOTHING for the purge,
-    and post-purge reads equal pre-purge reads."""
+    and post-purge reads equal pre-purge reads. The rows are one file,
+    so the DV delete leaves it partly live and REORG must purge it."""
     rows = [Row(k=i, v=chr(97 + i % 3)) for i in range(20)]
-    t = _mk(spark, tmp_path, rows)
+    t = DeltaTable.for_path(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame(rows).coalesce(1), configuration=CDF)
     t.delete(Col("k") < Lit(5), deletion_vectors=True)
     before = {(r["k"], r["v"]) for r in t.to_df().collect()}
     res = TableMaintenance(t).reorg_purge()
+    assert res["filesPurged"] == 1
     pv = res["version"]
     assert t.table_changes(pv, pv).count() == 0
     assert _changes(t, 1, 1) == {(i, chr(97 + i % 3), "delete", 1)
                                  for i in range(5)}
     assert {(r["k"], r["v"]) for r in t.to_df().collect()} == before
+
+
+@pytest.mark.pin
+def test_foreign_cdc_layout_reads_partition_values(spark, tmp_path):
+    """A change file in delta-spark's layout on a partitioned table —
+    data columns plus ``_change_type`` at
+    ``_change_data/part=a/cdc-*.parquet``, the partition value on the
+    AddCDCFile only — reads back with its partition column, in the
+    batch feed and in the streaming CDF source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from connectors_spark.streaming import register_stream_source
+
+    t = _mk(spark, tmp_path, [Row(k=1, v="x", part="a"),
+                              Row(k=2, v="y", part="b")],
+            partition_by=["part"])
+    rel = "_change_data/part=a/cdc-00000-foreign.c000.snappy.parquet"
+    full = os.path.join(t.path, rel)
+    os.makedirs(os.path.dirname(full), exist_ok=True)
+    pq.write_table(pa.table({
+        "k": pa.array([1, 1], pa.int64()),
+        "v": pa.array(["x", "X"]),
+        "_change_type": pa.array(["update_preimage",
+                                  "update_postimage"])}), full)
+    txn = t.log.start_transaction()
+    txn.read_whole_table()
+    v = txn.commit([AddCDCFile(rel, {"part": "a"}, os.path.getsize(full))],
+                   "UPDATE", {})
+    want = {(1, "x", "a", "update_preimage", v),
+            (1, "X", "a", "update_postimage", v)}
+    assert {(r.k, r.v, r.part, r._change_type, r._commit_version)
+            for r in t.table_changes(v, v).collect()} == want
+    register_stream_source(spark)
+    q = (spark.readStream.format("delta_stream")
+         .option("path", t.path)
+         .option("readChangeFeed", "true")
+         .option("startingVersion", str(v)).load()
+         .writeStream.format("memory").queryName("t_cdf_foreign")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert {(r.k, r.v, r.part, r._change_type, r._commit_version)
+            for r in spark.sql("select * from t_cdf_foreign").collect()} \
+        == want
+
+
+def test_zero_hit_dml_commits_empty_change_file(spark, tmp_path):
+    """An UPDATE or DELETE whose predicate survives stats pruning but
+    matches no row rewrites its candidate files unchanged. With CDF on
+    it still commits an (empty) AddCDCFile, so the feed reads nothing
+    rather than synthesizing delete+insert pairs from the rewrite."""
+    t = DeltaTable.for_path(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([Row(k=i, v=str(i)) for i in (0, 2, 4)])
+            .coalesce(1), configuration=CDF)
+    for dml in (lambda: t.update({"v": "'u'"}, Col("k") == Lit(1)),
+                lambda: t.delete(Col("k") == Lit(3))):
+        v = dml()
+        acts = dict(t.log.get_changes(v))[v]
+        assert any(isinstance(a, AddCDCFile) for a in acts)
+        assert t.table_changes(v, v).count() == 0
 
 
 def test_table_changes_by_timestamp(spark, tmp_path):

@@ -471,16 +471,23 @@ def test_merge_update_guarded_unmaterialized_path(spark, tmp_path,
 
 
 def test_dml_cdc_single_write_fold(spark, tmp_path, monkeypatch):
-    """r15 (VERDICT r14 #4): a CDC-enabled MERGE/UPDATE/DELETE stages
-    its change rows in the SAME write job as the rewrite (__is_cdc
-    staging split) — the separate stage_cdc_and_collect job runs only
-    for DV-only commits and the empty-change corner. Pin: no separate
-    CDC staging call on a matching DML, v2 AddCDCFile paths carry the
-    _change_type directory, and the feed reads back exactly."""
+    """A CDC-enabled DML stages its change rows in the rewrite's own
+    write job, in delta-spark's layout: every change file carries
+    ``_change_type`` as a column, lives at
+    ``_change_data/<partition dirs>/cdc-*`` and records those
+    partition values on its AddCDCFile; AddFile stats never mention
+    ``_change_type``. Pin on a partitioned, row-tracked table through
+    DELETE-rewrite, DV-DELETE, UPDATE and MERGE: only the DV delete
+    (which rewrites no data file) makes a separate CDC staging call,
+    and the feed reads back exactly."""
+    import urllib.parse
+
+    import pyarrow.parquet as pq
+
     import connectors_spark.table as TB
     import connectors_spark.writer as W
     from connectors_spark.expressions import Col, Lit
-    from connectors_spark.log.actions import AddCDCFile
+    from connectors_spark.log.actions import AddCDCFile, AddFile
 
     calls = []
     orig = W.stage_cdc_and_collect
@@ -493,26 +500,45 @@ def test_dml_cdc_single_write_fold(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(TB, "stage_cdc_and_collect", spy)
 
     t = DeltaTable.for_path(spark, str(tmp_path / "t"))
-    t.write(spark.createDataFrame([(i, i * 10) for i in range(10)],
-                                  "id long, val long"),
-            configuration={"delta.enableChangeDataFeed": "true"})
+    t.write(spark.createDataFrame(
+        [(i, "a" if i % 2 == 0 else "b", i * 10) for i in range(10)],
+        "id long, part string, val long"),
+        partition_by=["part"],
+        configuration={"delta.enableChangeDataFeed": "true",
+                       "delta.enableRowTracking": "true",
+                       "delta.protocol.autoUpgrade": "true"})
     t.update({"val": "val + 1"}, Col("id") < Lit(4))
-    t.merge(spark.createDataFrame([(2, 0), (99, 990)],
-                                  "id long, val long"),
+    t.merge(spark.createDataFrame([(2, "a", 0), (99, "b", 990)],
+                                  "id long, part string, val long"),
             "t.id = s.id", when_matched_update={"val": "s.val"},
             when_not_matched_insert=True)
     t.delete(Col("id") == Lit(0))
     assert not calls, "CDC rows must ride the rewrite's write job"
-    cdc_acts = [a for _, acts in t.log.get_changes(1) for a in acts
-                if isinstance(a, AddCDCFile)]
-    assert cdc_acts and all("_change_type" in a.path for a in cdc_acts)
-    feed = {(r.id, r.val, r._change_type, r._commit_version)
+    t.delete(Col("id") == Lit(5), deletion_vectors=True)
+    assert len(calls) == 1
+    acts = [a for _, va in t.log.get_changes(1) for a in va]
+    cdc_acts = [a for a in acts if isinstance(a, AddCDCFile)]
+    assert len({a.path.split("/")[1] for a in cdc_acts}) == 2
+    for a in cdc_acts:
+        segs = [urllib.parse.unquote(s) for s in a.path.split("/")]
+        assert segs[0] == "_change_data" and segs[-1].startswith("cdc-")
+        assert dict(s.split("=", 1) for s in segs[1:-1]) \
+            == a.partitionValues
+        names = pq.read_schema(os.path.join(t.path, *segs)).names
+        assert "_change_type" in names and "part" not in names
+    adds = [a for a in acts if isinstance(a, AddFile) and a.stats]
+    assert adds and not any("_change_type" in a.stats for a in adds)
+    feed = {(r.id, r.part, r.val, r._change_type, r._commit_version)
             for r in t.table_changes(1).collect()}
-    assert (2, 21, "update_preimage", 2) in feed
-    assert (2, 0, "update_postimage", 2) in feed
-    assert (99, 990, "insert", 2) in feed
-    assert (0, 1, "delete", 3) in feed
-    assert (0, 1, "update_postimage", 1) in feed
+    assert feed == {
+        (i, "a" if i % 2 == 0 else "b", i * 10 + d, ct, 1)
+        for i in range(4) for d, ct in ((0, "update_preimage"),
+                                        (1, "update_postimage"))} | {
+        (2, "a", 21, "update_preimage", 2),
+        (2, "a", 0, "update_postimage", 2),
+        (99, "b", 990, "insert", 2),
+        (0, "a", 1, "delete", 3),
+        (5, "b", 50, "delete", 4)}
 
 
 @pytest.mark.pin
