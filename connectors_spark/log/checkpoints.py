@@ -2,52 +2,48 @@
 ``Checkpoints.scala:221-312``; multi-part naming FileNames.scala:61-64).
 
 A checkpoint is the full snapshot state as SingleAction-shaped Parquet:
-all active AddFiles (paths re-relativized), retained RemoveFile tombstones,
-latest Protocol + Metadata, and the last SetTransaction per appId. The
-state rows are produced DISTRIBUTED (from ``snapshot.files_df``) and the
-output can be split into N parts for tables whose state no longer fits one
-file -- readers glob the parts back together (segment._complete_checkpoints).
+all active AddFiles (paths re-relativized), RemoveFile tombstones younger
+than the table's ``delta.deletedFileRetentionDuration``, latest Protocol +
+Metadata, the last SetTransaction per appId and the active metadata
+domains.
 
-Spark can't name its output files, so parts are written to a temp dir and
-renamed into the checkpoint name(s) -- the same temp-file+rename dance the
-reference does for stores with visible partial writes
-(Checkpoints.scala:267-288).
+One rule picks the writer, the rule the Snapshot already follows for
+replay. With no explicit ``parts``, a classic (non-v2) policy and a
+snapshot the driver fold may replay (``Snapshot._driver_replayable``),
+the fold's two planes are written as one parquet by pyarrow, in this
+process — the way the reference Standalone writes checkpoints. Every
+other case is the distributed write: ``files_df`` and ``tombstones_df``
+through Spark, split into N parts (or v2 sidecars) for state
+that no longer fits one file; readers glob the parts back together
+(segment._complete_checkpoints).
+
+Both writers publish through the snapshot's LogStore: write a temp file
+(Spark can't name its output files), then rename it into the checkpoint
+name(s) — the temp-file+rename dance the reference does for stores with
+visible partial writes (Checkpoints.scala:267-288).
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
-import urllib.parse
 import uuid
-from typing import Optional
+from typing import Callable, List, Optional
 
 from pyspark.sql import functions as F
 
+from ..config import TableConfig
 from . import filenames as fn
-from .actions import (SINGLE_ACTION_SCHEMA, CheckpointMetadata, Metadata,
-                      Protocol, SetTransaction, SidecarFile, to_json_line)
+from .actions import (SINGLE_ACTION_SCHEMA, CheckpointMetadata,
+                      DomainMetadata, SetTransaction, SidecarFile,
+                      to_json_line)
 from .segment import write_last_checkpoint
-from .snapshot import Snapshot
+from .snapshot import Snapshot, relativize, relativize_col
 
 # Target actions per checkpoint part; ~500k AddFile rows keeps a part well
 # under typical 128MB row-group targets.
 ACTIONS_PER_PART = 500_000
-
-
-def _encode_seg(s):
-    # url_encode encodes ' ' as '+': fix to %20 for URI-style paths.
-    return F.replace(F.call_function("url_encode", s),
-                     F.lit("+"), F.lit("%20"))
-
-
-def _relativize_col(table_path: str):
-    """Canonical absolute path -> log-relative, URI-encoded per segment."""
-    root = table_path.rstrip("/") + "/"
-    p = F.col("path")
-    rel = F.when(p.startswith(root),
-                 F.expr(f"substring(path, {len(root) + 1})")).otherwise(p)
-    return F.array_join(F.transform(F.split(rel, "/"), _encode_seg), "/")
 
 
 def _json_lines_df(spark, lines):
@@ -62,100 +58,62 @@ def _json_lines_df(spark, lines):
             .select("__a.*"))
 
 
-# Driver-side checkpoint writes are bounded: past this many actions the
-# state is fleet-sized and the distributed write (with multi-part
-# splitting) is the right machinery.
-DRIVER_WRITE_MAX_ACTIONS = 50_000
-
-
-def _encode_seg_py(seg: str) -> str:
-    """Python twin of ``_encode_seg`` (Spark ``url_encode`` with the
-    '+'→%20 fix). URLEncoder keeps ``*`` raw and encodes ``~``; quote()
-    does the opposite — align both deltas so driver- and Spark-written
-    checkpoints encode identically."""
-    return urllib.parse.quote(seg, safe="*").replace("~", "%7E")
-
-
-def _relativize_py(path: str, table_path: str) -> str:
-    root = table_path.rstrip("/") + "/"
-    rel = path[len(root):] if path.startswith(root) else path
-    return "/".join(_encode_seg_py(s) for s in rel.split("/"))
+def _as_action(df, kind: str, struct):
+    """``df`` projected onto SINGLE_ACTION_SCHEMA: ``struct`` as the
+    ``kind`` column, every other action column null."""
+    return df.select(*[(struct if f.name == kind
+                        else F.lit(None).cast(f.dataType)).alias(f.name)
+                       for f in SINGLE_ACTION_SCHEMA.fields])
 
 
 def _driver_state_rows(snapshot: Snapshot, pm_lines) -> list:
     """SINGLE_ACTION_SCHEMA rows (python dicts) for a driver-side
     checkpoint write — field-for-field what the distributed plan
-    produces: adds from the materialized inventory, retained tombstones
+    produces: adds from the fold's file plane, retained tombstones
     (each remove's own extendedFileMetadata gating partitionValues/
     size), and the P&M/txn/domain lines."""
-    import json
-    import time as _time
     tp = snapshot.table_path
     rows = []
     for r in snapshot._files_rows:
         rows.append({"add": {
-            "path": _relativize_py(r["path"], tp),
-            "partitionValues": dict(r["partitionValues"])
-            if r["partitionValues"] is not None else None,
+            "path": relativize(r["path"], tp),
+            "partitionValues": r["partitionValues"],
             "size": r["size"],
             "modificationTime": r["modificationTime"],
-            "dataChange": bool(r["dataChange"])
-            if r["dataChange"] is not None else False,
+            "dataChange": bool(r["dataChange"]),
             "stats": r["stats"],
-            "tags": dict(r["tags"]) if r["tags"] is not None else None,
+            "tags": r["tags"],
             "baseRowId": r["baseRowId"],
             "defaultRowCommitVersion": r["defaultRowCommitVersion"],
         }})
-    min_ts = snapshot._min_file_retention_ts
-    if min_ts is None:
-        min_ts = int(_time.time() * 1000) - 7 * 24 * 3600 * 1000
-    for r in snapshot._tombstone_rows:
-        if (r["deletionTimestamp"] or 0) <= min_ts:
-            continue
-        ext = bool(r["extendedFileMetadata"]) \
-            if r["extendedFileMetadata"] is not None else False
+    for r in snapshot.retained_tombstone_rows(snapshot.tombstone_horizon()):
+        ext = bool(r["extendedFileMetadata"])
         rows.append({"remove": {
-            "path": _relativize_py(r["path"], tp),
+            "path": relativize(r["path"], tp),
             "deletionTimestamp": r["deletionTimestamp"],
             "dataChange": False,
             "extendedFileMetadata": ext,
-            "partitionValues": (dict(r["partitionValues"])
-                                if r["partitionValues"] is not None
-                                else None) if ext else None,
+            "partitionValues": r["partitionValues"] if ext else None,
             "size": r["size"] if ext else None,
-            "tags": dict(r["tags"]) if r["tags"] is not None else None,
-            "baseRowId": None,
-            "defaultRowCommitVersion": None,
+            "tags": r["tags"],
         }})
     rows += [json.loads(ln) for ln in pm_lines]
     return rows
 
 
-def _write_checkpoint_driver(snapshot: Snapshot,
-                             pm_lines) -> Optional[int]:
-    """Single-part classic checkpoint written driver-side via pyarrow.
-    Returns n_actions, or None when ineligible. Caller guarantees the
-    inventory is materialized and the policy is classic single-part."""
-    from .logstore import LogStore
-    store = snapshot.store
-    if type(store) is not LogStore:     # POSIX only: pyarrow writes a
-        return None                     # local tmp the store renames
-    _ = snapshot._tombstone_rows        # collect once; seeded forward
-    n_files = len(snapshot._files_rows)
-    if n_files + len(snapshot._tombstone_rows) > DRIVER_WRITE_MAX_ACTIONS:
-        return None
+def _write_checkpoint_driver(snapshot: Snapshot, pm_lines) -> int:
+    """Single-part classic checkpoint of a driver-replayable snapshot,
+    written in this process by pyarrow. Returns n_actions."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
+    store = snapshot.store
     log_path = snapshot.segment.log_path
-    rows = _driver_state_rows(snapshot, pm_lines)
-    tbl = pa.Table.from_pylist(rows,
+    tbl = pa.Table.from_pylist(_driver_state_rows(snapshot, pm_lines),
                                schema=to_arrow_schema(SINGLE_ACTION_SCHEMA))
     tmp = os.path.join(log_path, f".tmp_ckpt_{uuid.uuid4().hex}.parquet")
-    # Any failure between creating tmp and the rename must delete it
-    # (ADVICE r14): the caller's best-effort wrapper falls back to the
-    # distributed write, so a partially-written .tmp_ckpt_* would
-    # otherwise accumulate silently in _delta_log across failures.
+    # Any failure between creating tmp and the rename deletes it, so a
+    # partially written .tmp_ckpt_* never accumulates in _delta_log.
     try:
         pq.write_table(tbl, tmp, compression="snappy")
         store.rename(tmp, fn.checkpoint_file_single(log_path,
@@ -166,73 +124,46 @@ def _write_checkpoint_driver(snapshot: Snapshot,
         except FileNotFoundError:
             pass
         raise
-    n_actions = n_files + 2
-    write_last_checkpoint(snapshot.store, log_path, snapshot.version,
-                          n_actions, None)
+    n_actions = len(snapshot._files_rows) + 2
+    write_last_checkpoint(store, log_path, snapshot.version, n_actions, None)
     return n_actions
+
+
+def _spark_write(store, df, tmp: str,
+                 names: Callable[[int], List[str]]) -> List[str]:
+    """Write ``df`` as parquet into the temp dir ``tmp`` and rename its
+    N part files to ``names(N)``; returns those names. The temp dir is
+    removed either way."""
+    df.write.mode("overwrite").option("compression", "snappy").parquet(tmp)
+    try:
+        srcs = sorted(f for f in store.list_dir(tmp) if f.endswith(".parquet"))
+        dsts = names(len(srcs))
+        for src, dst in zip(srcs, dsts):
+            store.rename(os.path.join(tmp, src), dst)
+        return dsts
+    finally:
+        store.remove_tree(tmp)
 
 
 def write_checkpoint(snapshot: Snapshot, parts: Optional[int] = None) -> int:
     """Write the checkpoint for ``snapshot`` + update ``_last_checkpoint``.
     Returns the number of actions checkpointed."""
-    spark = snapshot.spark
-    log_path = snapshot.segment.log_path
-    table_path = snapshot.table_path
-
-    # P&M + txns: a handful of rows, created on the driver.
     pm_lines = [to_json_line(snapshot.protocol).strip(),
                 to_json_line(snapshot.metadata).strip()]
     pm_lines += [to_json_line(SetTransaction(app, v))
                  for app, v in sorted(snapshot.set_transactions.items())]
-    from .actions import DomainMetadata
     pm_lines += [to_json_line(DomainMetadata(d, c))
                  for d, c in sorted(snapshot.domain_metadata.items())]
-
-    from ..config import TableConfig
     is_v2 = TableConfig(snapshot.metadata.configuration) \
         .checkpoint_policy == "v2"
+    if parts is None and not is_v2 and snapshot._driver_replayable():
+        return _write_checkpoint_driver(snapshot, pm_lines)
 
-    # Small-state fast path (r14): when the snapshot already holds its
-    # state driver-side, write the single-part checkpoint parquet with
-    # pyarrow directly — the reference Standalone writes checkpoints
-    # exactly this single-process way (Checkpoints.scala ParquetWriter),
-    # and a Spark write job over a few thousand driver-held rows costs
-    # more than writing them (measured: ~3-5 s of job/plan machinery per
-    # 10-commit boundary at bench scale vs ~0.1 s direct). Ineligible
-    # cases (big state, explicit multi-part, v2 policy, non-POSIX store,
-    # cold snapshot) — and any unexpected failure — take the
-    # distributed path below unchanged.
-    if (parts is None and not is_v2
-            and "_files_rows" in snapshot.__dict__):
-        try:
-            n = _write_checkpoint_driver(snapshot, pm_lines)
-        except Exception:  # noqa: BLE001 — fast path is best-effort
-            n = None
-        if n is not None:
-            return n
-
-    # Reuse the Snapshot's materialized inventory when a prior consumer
-    # (any DML path, or the incremental post-commit seed) already paid
-    # for it: the distributed replay would otherwise run TWICE here —
-    # once for count(), once under the state write (measured r14: a
-    # warm post-MERGE checkpoint write cost 6.3 s, almost all of it
-    # re-replaying state the snapshot already held; guide §1.2). Cold
-    # snapshots (nothing materialized) keep the fully distributed
-    # plan — the 100 TB first-build path is unchanged.
-    if "_files_rows" in snapshot.__dict__:
-        files = snapshot.files_local_df
-        n_files = len(snapshot._files_rows)
-        # Materialize the tombstone plane too: collecting it here costs
-        # the same one window job tombstones_df would run below, and
-        # the post-commit seed then carries the rows forward so the
-        # NEXT checkpoint write (and any vacuum) skips the replay.
-        _ = snapshot._tombstone_rows
-    else:
-        files = snapshot.files_df
-        n_files = files.count()
-
-    add_struct = F.struct(
-        _relativize_col(table_path).alias("path"),
+    table_path = snapshot.table_path
+    files = snapshot.files_df
+    n_files = files.count()
+    adds_df = _as_action(files, "add", F.struct(
+        relativize_col("path", table_path).alias("path"),
         F.col("partitionValues"),
         F.col("size"),
         F.col("modificationTime"),
@@ -241,16 +172,9 @@ def write_checkpoint(snapshot: Snapshot, parts: Optional[int] = None) -> int:
         F.col("tags"),
         F.col("baseRowId"),
         F.col("defaultRowCommitVersion"),
-    )
-    adds_df = files.select(add_struct.alias("add"))
-    for f in SINGLE_ACTION_SCHEMA.fields:
-        if f.name != "add":
-            adds_df = adds_df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    adds_df = adds_df.select(*[f.name for f in SINGLE_ACTION_SCHEMA.fields])
-
+    ))
     # Tombstones still inside the retention window ride along so readers of
     # the checkpoint alone see them (InMemoryLogReplay.getTombstones).
-    tomb = snapshot.tombstones_df
     # extendedFileMetadata carries each tombstone's OWN flag (ADVICE
     # r13): the protocol says partitionValues/size/tags are only valid
     # when it is true, so writing a blanket false made conforming
@@ -259,8 +183,8 @@ def write_checkpoint(snapshot: Snapshot, parts: Optional[int] = None) -> int:
     # Engine-written removes (AddFile.remove) always set it true;
     # foreign-writer tombstones keep whatever they declared.
     ext = F.coalesce(F.col("extendedFileMetadata"), F.lit(False))
-    remove_struct = F.struct(
-        _relativize_col(table_path).alias("path"),
+    tomb_df = _as_action(snapshot.tombstones_df, "remove", F.struct(
+        relativize_col("path", table_path).alias("path"),
         F.col("deletionTimestamp"),
         F.lit(False).alias("dataChange"),
         ext.alias("extendedFileMetadata"),
@@ -269,57 +193,30 @@ def write_checkpoint(snapshot: Snapshot, parts: Optional[int] = None) -> int:
         F.col("tags"),
         F.lit(None).cast("long").alias("baseRowId"),
         F.lit(None).cast("long").alias("defaultRowCommitVersion"),
-    )
-    tomb_df = tomb.select(remove_struct.alias("remove"))
-    for f in SINGLE_ACTION_SCHEMA.fields:
-        if f.name != "remove":
-            tomb_df = tomb_df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    tomb_df = tomb_df.select(*[f.name for f in SINGLE_ACTION_SCHEMA.fields])
-
-    pm_df = _json_lines_df(spark, pm_lines)
-
-    if is_v2:
-        return _write_checkpoint_v2(snapshot, adds_df, tomb_df,
-                                    pm_lines, n_files, parts)
-
-    state = adds_df.unionByName(tomb_df).unionByName(pm_df)
-    n_actions = n_files + 2  # approximation for _last_checkpoint "size"
-
+    ))
     if parts is None:
         parts = max(1, math.ceil(n_files / ACTIONS_PER_PART))
-    state = state.repartition(parts)
+    if is_v2:
+        return _write_checkpoint_v2(snapshot, adds_df.unionByName(tomb_df),
+                                    pm_lines, n_files, parts)
 
-    # Publication goes through the snapshot's LogStore (never raw os
-    # calls): the POSIX store renames; an object-store store implements
-    # rename as its own copy/put. Same temp+publish dance as
-    # Checkpoints.scala:267-288.
-    store = snapshot.store
-    tmp = os.path.join(log_path, f".tmp_ckpt_{uuid.uuid4().hex}")
-    state.write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-    try:
-        part_files = sorted(f for f in store.list_dir(tmp)
-                            if f.endswith(".parquet"))
-        if len(part_files) == 1:
-            store.rename(os.path.join(tmp, part_files[0]),
-                         fn.checkpoint_file_single(log_path, snapshot.version))
-            written_parts = None
-        else:
-            names = fn.checkpoint_file_parts(log_path, snapshot.version,
-                                             len(part_files))
-            for src, dst in zip(part_files, names):
-                store.rename(os.path.join(tmp, src), dst)
-            written_parts = len(part_files)
-    finally:
-        store.remove_tree(tmp)
-
-    write_last_checkpoint(snapshot.store, log_path, snapshot.version,
-                          n_actions, written_parts)
+    state = (adds_df.unionByName(tomb_df)
+             .unionByName(_json_lines_df(snapshot.spark, pm_lines))
+             .repartition(parts))
+    log_path, v = snapshot.segment.log_path, snapshot.version
+    written = _spark_write(
+        snapshot.store, state,
+        os.path.join(log_path, f".tmp_ckpt_{uuid.uuid4().hex}"),
+        lambda n: ([fn.checkpoint_file_single(log_path, v)] if n == 1
+                   else fn.checkpoint_file_parts(log_path, v, n)))
+    n_actions = n_files + 2  # approximation for _last_checkpoint "size"
+    write_last_checkpoint(snapshot.store, log_path, v, n_actions,
+                          len(written) if len(written) > 1 else None)
     return n_actions
 
 
-def _write_checkpoint_v2(snapshot: Snapshot, adds_df, tomb_df,
-                         pm_lines, n_files: int,
-                         parts: Optional[int]) -> int:
+def _write_checkpoint_v2(snapshot: Snapshot, state, pm_lines,
+                         n_files: int, parts: int) -> int:
     """V2 (uuid-named) checkpoint — Delta protocol 'V2 Checkpoint
     Table Feature': the add/remove state lands in SIDECAR parquets
     under ``_delta_log/_sidecars/``; the manifest
@@ -333,46 +230,25 @@ def _write_checkpoint_v2(snapshot: Snapshot, adds_df, tomb_df,
     Publication is the same temp-dir + LogStore-rename dance as
     classic; racing writers produce distinct uuids, and the segment
     picker treats any complete manifest as authoritative."""
-    spark = snapshot.spark
     store = snapshot.store
     log_path = snapshot.segment.log_path
     uid = uuid.uuid4().hex
-
-    state = adds_df.unionByName(tomb_df)
-    if parts is None:
-        parts = max(1, math.ceil(n_files / ACTIONS_PER_PART))
-    state = state.repartition(parts)
-    tmp = os.path.join(log_path, f".tmp_ckpt_{uid}")
-    state.write.mode("overwrite").option("compression",
-                                         "snappy").parquet(tmp)
-    sidecars = []
-    try:
-        part_files = sorted(f for f in store.list_dir(tmp)
-                            if f.endswith(".parquet"))
-        for i, src in enumerate(part_files):
-            name = f"{uid}-{i:05d}.parquet"
-            dst = fn.sidecar_file(log_path, name)
-            store.rename(os.path.join(tmp, src), dst)
-            size, mtime = store.stat(dst)
-            sidecars.append(SidecarFile(name, size, mtime))
-    finally:
-        store.remove_tree(tmp)
+    written = _spark_write(
+        store, state.repartition(parts),
+        os.path.join(log_path, f".tmp_ckpt_{uid}"),
+        lambda n: [fn.sidecar_file(log_path, f"{uid}-{i:05d}.parquet")
+                   for i in range(n)])
+    sidecars = [SidecarFile(os.path.basename(dst), *store.stat(dst))
+                for dst in written]
 
     manifest_lines = list(pm_lines)
     manifest_lines.append(to_json_line(
         CheckpointMetadata(snapshot.version)))
     manifest_lines += [to_json_line(s) for s in sidecars]
-    mdf = _json_lines_df(spark, manifest_lines).coalesce(1)
-    tmp2 = os.path.join(log_path, f".tmp_ckpt_m_{uid}")
-    mdf.write.mode("overwrite").parquet(tmp2)
-    try:
-        mfile = next(f for f in sorted(store.list_dir(tmp2))
-                     if f.endswith(".parquet"))
-        store.rename(os.path.join(tmp2, mfile),
-                     fn.checkpoint_file_v2(log_path, snapshot.version,
-                                           uid))
-    finally:
-        store.remove_tree(tmp2)
+    _spark_write(
+        store, _json_lines_df(snapshot.spark, manifest_lines).coalesce(1),
+        os.path.join(log_path, f".tmp_ckpt_m_{uid}"),
+        lambda n: [fn.checkpoint_file_v2(log_path, snapshot.version, uid)])
 
     n_actions = n_files + 2
     write_last_checkpoint(store, log_path, snapshot.version, n_actions)

@@ -11,8 +11,9 @@ from the log. Everything downstream carries physical paths and never
 decodes them again: the file and tombstone planes, scans, DML candidate
 sets and the path sets of conflict checks. A Hive-escaped directory
 name holds literal ``%XX`` bytes, which a second decode corrupts.
-``txn.relativize`` is the way back: it encodes a physical path for the
-log.
+:func:`relativize` and its Column twin :func:`relativize_col` are the
+way back: they encode a physical path for the log (commits and both
+checkpoint writers).
 
 State. Table state is one replay of checkpoint plus commits, keyed by
 canonical path: the newest action wins, and within one version an add
@@ -56,6 +57,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import TableConfig
 from . import filenames as fn
 from .actions import (SINGLE_ACTION_SCHEMA, AddFile, DomainMetadata,
                       Metadata, Protocol, RemoveFile, SetTransaction,
@@ -116,6 +118,47 @@ def canonical_path_col(col, table_path: str):
         .when(d.startswith("/"), d)
         .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), d))
     )
+
+
+def relativize(path: str, table_path: str) -> str:
+    """Log spelling of a physical path, the inverse of
+    :func:`canonical_path` (DeltaFileOperations.tryRelativizePath,
+    FileNames.absolutePath:100-107). Under the table root it is
+    root-relative with each segment URI-encoded (``urllib.parse.quote``);
+    another absolute path becomes an encoded ``file://`` URI; any other
+    value is already a log path (the writer stages table-relative,
+    encoded paths) and passes through unchanged."""
+    if not path.startswith("/"):
+        return path
+    root = table_path.rstrip("/") + "/"
+    if path.startswith(root):
+        return urllib.parse.quote(path[len(root):])
+    return "file://" + urllib.parse.quote(path)
+
+
+def _quote_col(c):
+    # Spark's url_encode is Java's URLEncoder, which differs from quote()
+    # in three places: it writes ' ' as '+' (a literal '+' is %2B), keeps
+    # '*' and encodes '~'. It also encodes '/', so it runs per segment.
+    def seg(s):
+        for a, b in (("+", "%20"), ("*", "%2A"), ("%7E", "~")):
+            s = F.replace(s, F.lit(a), F.lit(b))
+        return s
+    return F.array_join(
+        F.transform(F.split(c, "/"),
+                    lambda s: seg(F.call_function("url_encode", s))), "/")
+
+
+def relativize_col(col: str, table_path: str):
+    """Column-expression twin of :func:`relativize`, equal to it on
+    every input."""
+    root = table_path.rstrip("/") + "/"
+    p = F.col(col)
+    return (F.when(p.startswith(root),
+                   _quote_col(F.substring(p, len(root) + 1, 2147483647)))
+            .when(p.startswith("/"),
+                  F.concat(F.lit("file://"), _quote_col(p)))
+            .otherwise(p))
 
 
 # The two planes' row shapes. Driver-side rows and the window plan's
@@ -391,13 +434,11 @@ class Snapshot:
     SEEDED = ("_log_state", "_files_rows", "_tombstone_rows")
 
     def __init__(self, spark: SparkSession, table_path: str,
-                 segment: LogSegment, store: LogStore,
-                 min_file_retention_ts: Optional[int] = None):
+                 segment: LogSegment, store: LogStore):
         self.spark = spark
         self.table_path = strip_scheme(table_path).rstrip("/")
         self.segment = segment
         self.store = store
-        self._min_file_retention_ts = min_file_retention_ts
 
     @property
     def version(self) -> int:
@@ -588,14 +629,19 @@ class Snapshot:
         return (self._latest_actions_df.where(~F.col("is_add"))
                 .select(*TOMBSTONES_SCHEMA.names))
 
+    def tombstone_horizon(self) -> int:
+        """Epoch ms at or before which a tombstone has expired: now minus
+        the table's ``delta.deletedFileRetentionDuration``
+        (DeltaLogImpl.scala:64-72)."""
+        return (int(time.time() * 1000)
+                - TableConfig(self.metadata.configuration)
+                .tombstone_retention_ms)
+
     @cached_property
     def tombstones_df(self) -> DataFrame:
         """RemoveFile tombstones younger than the retention window
         (InMemoryLogReplay.getTombstones, InMemoryLogReplay.scala:90-92)."""
-        min_ts = self._min_file_retention_ts
-        if min_ts is None:
-            min_ts = int(time.time() * 1000) - 7 * 24 * 3600 * 1000
-        return self.retained_tombstones(min_ts)
+        return self.retained_tombstones(self.tombstone_horizon())
 
     def retained_tombstones(self, min_ts: int) -> DataFrame:
         """Latest-per-path RemoveFile tombstones with
@@ -605,17 +651,22 @@ class Snapshot:
         retention window passes (InMemoryLogReplay.scala:90-92;
         delta-spark's VACUUM protects by deletionTimestamp, not mtime).
 
-        When the tombstone plane is already materialized, the horizon
-        filter runs driver-side over the cached rows and the result is
-        a local relation; otherwise the window plan runs."""
-        if "_tombstone_rows" in self.__dict__:
+        Same rule as replay: a driver-replayable Snapshot filters its
+        tombstone plane on the driver and returns a local relation;
+        otherwise the window plan runs."""
+        if self._driver_replayable():
             from ..localrel import local_rows_df
-            rows = [r for r in self._tombstone_rows
-                    if (r["deletionTimestamp"] or 0) > min_ts]
-            return local_rows_df(self.spark, rows, TOMBSTONES_SCHEMA)
+            return local_rows_df(self.spark,
+                                 self.retained_tombstone_rows(min_ts),
+                                 TOMBSTONES_SCHEMA)
         return (self._tombstones_window_df()
                 .where(F.coalesce(F.col("deletionTimestamp"),
                                   F.lit(0)) > min_ts))
+
+    def retained_tombstone_rows(self, min_ts: int) -> List:
+        """The tombstone plane's rows with ``deletionTimestamp > min_ts``."""
+        return [r for r in self._tombstone_rows
+                if (r["deletionTimestamp"] or 0) > min_ts]
 
     def _driver_replayable(self) -> bool:
         """True when the driver fold may replay this segment: a POSIX

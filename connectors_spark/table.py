@@ -39,8 +39,8 @@ from .log.actions import (AddFile, CommitInfo, Metadata, Protocol, RemoveFile,
                           SetTransaction)
 from .log.logstore import LogStore, default_log_store, strip_scheme
 from .log.segment import LogSegment, get_log_segment
-from .log.snapshot import (Snapshot, canonical_path, materialized_rt_cols,
-                            read_commit)
+from .log.snapshot import (Snapshot, canonical_path, canonical_path_col,
+                            materialized_rt_cols, read_commit)
 from .log import history as hist
 from .scan import DeltaScan
 from .txn import OptimisticTransaction
@@ -2255,6 +2255,28 @@ def _hilbert_code(df: DataFrame, cols: List[str]) -> F.Column:
     return hidx(*_bucket_ids(df, cols, bits))
 
 
+def _protected_paths(snap: Snapshot, horizon: int) -> DataFrame:
+    """The paths VACUUM must keep, as one ``__p`` column: active files,
+    their deletion-vector sidecars, and the tombstones still inside the
+    retention window with their sidecars. The tombstone legs are the
+    contract VACUUM must honour (InMemoryLogReplay.scala:90-92,
+    DeltaConfig.scala:219-225): a file DELETE'd yesterday has an OLD
+    mtime but its tombstone is young — reclaiming it would strand time
+    travel to every version of the retention window. Protection keys on
+    deletionTimestamp, never mtime."""
+    from .dv import DV_TAG
+
+    def with_dvs(df):
+        dv = (df.select(F.col("tags").getItem(DV_TAG).alias("__t"))
+              .where(F.col("__t").isNotNull())
+              .select(canonical_path_col("__t", snap.table_path)
+                      .alias("__p")))
+        return df.select(F.col("path").alias("__p")).unionByName(dv)
+    return (with_dvs(snap.files_df)
+            .unionByName(with_dvs(snap.retained_tombstones(horizon)))
+            .distinct())
+
+
 def _compact_log_range(log, table_path: str, start: int,
                        end: int) -> Dict[str, int]:
     """Net-fold the delta range [start, end] into
@@ -2602,7 +2624,7 @@ class TableMaintenance:
         txn.read_whole_table()
 
         from .dv import DV_TAG
-        from .log.snapshot import addfiles_from_rows, canonical_path_col
+        from .log.snapshot import addfiles_from_rows
         # The file-set diff runs as DataFrame joins on files_df (paths
         # are canonical there) — only the DIFF rows, which the commit
         # must enumerate anyway, ever reach the driver. A path present
@@ -2967,7 +2989,6 @@ class TableMaintenance:
         # of all files), and deletes run on executors. The driver holds
         # only the doomed list — the report the API returns.
         import pandas as pd
-        from .log.snapshot import canonical_path_col
         from .shipping import ensure_shipped_by_value
         ensure_shipped_by_value()
 
@@ -3022,30 +3043,7 @@ class TableMaintenance:
                                  "seed string", parts=n_seed_parts)
                    .mapInPandas(list_subtree, "rel string, mtime long"))
 
-        # Protective set: active files ∪ referenced deletion-vector
-        # sidecars ∪ tombstones still inside the retention window.
-        # The last leg is the contract VACUUM must honour
-        # (InMemoryLogReplay.scala:90-92, DeltaConfig.scala:219-225):
-        # a file DELETE'd yesterday has an OLD mtime but its tombstone
-        # is young — reclaiming it would strand time travel to every
-        # version of the past week. Protection keys on
-        # deletionTimestamp, never mtime.
-        from .dv import DV_TAG
-        active = snap.files_df.select(F.col("path").alias("__p"))
-        dv = (snap.files_df
-              .select(F.col("tags").getItem(DV_TAG).alias("__t"))
-              .where(F.col("__t").isNotNull())
-              .select(canonical_path_col("__t", snap.table_path)
-                      .alias("__p")))
-        young = snap.retained_tombstones(horizon)
-        young_paths = young.select(F.col("path").alias("__p"))
-        young_dv = (young
-                    .select(F.col("tags").getItem(DV_TAG).alias("__t"))
-                    .where(F.col("__t").isNotNull())
-                    .select(canonical_path_col("__t", snap.table_path)
-                            .alias("__p")))
-        active = (active.unionByName(dv).unionByName(young_paths)
-                  .unionByName(young_dv).distinct())
+        active = _protected_paths(snap, horizon)
 
         # No broadcast hint on the anti-join: the active inventory is
         # usually tiny (→ auto-broadcast) but a forced hint would pin a
@@ -3103,7 +3101,6 @@ class TableMaintenance:
 
         from .log import filenames as fn2
         from .log.actions import SINGLE_ACTION_SCHEMA
-        from .log.snapshot import canonical_path_col
         from .shipping import ensure_shipped_by_value
         ensure_shipped_by_value()
         t = self.table
@@ -3166,27 +3163,10 @@ class TableMaintenance:
                .select(canonical_path_col("__dv", snap.table_path)
                        .alias("__p")))
         cand = doomed_paths.unionByName(dvs).distinct()
-        # Protective anti-join: active files ∪ their DV sidecars ∪
-        # snapshot-level in-retention tombstones (+ their sidecars).
-        # The last leg is belt-and-braces vs a young tombstone living
-        # OUTSIDE the window (e.g. a marker written by an engine with
-        # a different advance rule).
-        active = snap.files_df.select(F.col("path").alias("__p"))
-        adv = (snap.files_df
-               .select(F.col("tags").getItem(DV_TAG).alias("__t"))
-               .where(F.col("__t").isNotNull())
-               .select(canonical_path_col("__t", snap.table_path)
-                       .alias("__p")))
-        young = snap.retained_tombstones(horizon)
-        young_paths = young.select(F.col("path").alias("__p"))
-        young_dv = (young
-                    .select(F.col("tags").getItem(DV_TAG).alias("__t"))
-                    .where(F.col("__t").isNotNull())
-                    .select(canonical_path_col("__t", snap.table_path)
-                            .alias("__p")))
-        protect = (active.unionByName(adv).unionByName(young_paths)
-                   .unionByName(young_dv).distinct())
-        cand = cand.join(protect, "__p", "left_anti")
+        # The snapshot's in-retention tombstones are belt-and-braces
+        # here vs a young tombstone living OUTSIDE the window (e.g. a
+        # marker written by an engine with a different advance rule).
+        cand = cand.join(_protected_paths(snap, horizon), "__p", "left_anti")
         # Marker advance: a version whose tombstones are all past the
         # horizon is fully handled; the FIRST version still carrying an
         # in-retention tombstone (and everything after it) must stay in

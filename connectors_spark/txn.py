@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import json
 import time
-import urllib.parse
 from typing import Any, Dict, List, Optional, Sequence, Set
 
 from .config import TableConfig
@@ -40,7 +39,7 @@ from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
 # table-wide row-id high watermark.
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
 from .log.logstore import FileAlreadyExistsError
-from .log.snapshot import canonical_path, read_commit
+from .log.snapshot import canonical_path, read_commit, relativize
 from .partition_values import decode_row
 
 MAX_RETRIES = 10_000_000  # OptimisticTransactionImpl.scala:44
@@ -49,21 +48,6 @@ SERIALIZABLE = "Serializable"
 SNAPSHOT_ISOLATION = "SnapshotIsolation"
 
 ENGINE_INFO = "connectors-spark/0.1"
-
-
-def relativize(path: str, table_path: str) -> str:
-    """Log spelling of a file path (DeltaFileOperations.tryRelativizePath,
-    FileNames.absolutePath:100-107). A physical absolute path is
-    URI-encoded, relative to the table root when it lies under it; any
-    other value is already a log path (the writer stages table-relative,
-    encoded paths) and passes through unchanged."""
-    if not path.startswith("/"):
-        return path
-    root = table_path.rstrip("/") + "/"
-    if path.startswith(root):
-        return "/".join(urllib.parse.quote(seg)
-                        for seg in path[len(root):].split("/"))
-    return "file://" + urllib.parse.quote(path)
 
 
 class OptimisticTransaction:

@@ -254,63 +254,96 @@ def test_checkpoint_crash_fallbacks_on_s3_store(tmp_path):
                 for p in seg.deltas] == [11, 12]
 
 
+@pytest.mark.pin
 def test_checkpoint_from_materialized_inventory_matches_cold(spark, tmp_path):
-    """r14: write_checkpoint reuses the Snapshot's materialized file
-    inventory when present (skipping the double distributed replay).
-    The checkpoint it writes must be row-identical to one produced by a
-    cold snapshot's fully distributed plan — adds (stats/tags/row-id
-    fields included), retained tombstones, and P&M/txn rows alike."""
+    """The two checkpoint writers produce the same rows: the driver
+    write (pyarrow over the driver fold's planes) and the distributed
+    write (``files_df`` and ``tombstones_df`` through Spark, forced by
+    ``parts=1`` on a cold snapshot). The log covers every field either
+    writer encodes: a partition value holding every character where
+    Spark's url_encode and quote() differ, an add outside the table
+    root, a deletion-vector tag, row ids, and a foreign tombstone with
+    ``extendedFileMetadata=false`` whose size and partition values the
+    checkpoint must drop."""
     import glob
+    import json
+    import time
 
+    import connectors_spark.log.checkpoints as CK
+    from connectors_spark.dv import DV_TAG
     from connectors_spark.expressions import Lit
-    from connectors_spark.log.checkpoints import write_checkpoint
+    from connectors_spark.log import filenames as fn
 
-    orders = read_table(spark, "orders")
+    odd = "a b%c=d~e*f+g"
+    df = spark.range(40).select(
+        F.col("id"), F.when(F.col("id") % 2 == 0, F.lit(odd))
+        .otherwise(F.lit("plain")).alias("p"))
     t = DeltaTable.for_path(spark, str(tmp_path / "ckm"))
-    t.write(orders.limit(500), partition_by=["o_orderstatus"],
+    t.write(df.repartition(2, "p"), partition_by=["p"],
             configuration={"delta.enableRowTracking": "true",
                            "delta.protocol.autoUpgrade": "true"})
-    t.delete(Col("o_orderkey") < Lit(50))      # tombstones ride along
-    v = t.log.snapshot().version
+    t.delete(Col("id") >= Lit(36))                        # tombstones
+    t.delete(Col("id") < Lit(4), deletion_vectors=True)   # DV tags
+    outside = str(tmp_path / "outside dir" / "f.parquet")
+    os.makedirs(os.path.dirname(outside))
+    spark.range(40, 43).select("id").toPandas().to_parquet(outside)
     log_dir = os.path.join(t.path, "_delta_log")
+    now = int(time.time() * 1000)
+    v = t.log.snapshot().version + 1
+    t.log.store.write(fn.delta_file(log_dir, v), [json.dumps(a) for a in [
+        {"add": {"path": "file://" + outside.replace(" ", "%20"),
+                 "partitionValues": {"p": "plain"},
+                 "size": os.path.getsize(outside), "modificationTime": now,
+                 "dataChange": True}},
+        {"remove": {"path": "foreign-gone.parquet", "deletionTimestamp": now,
+                    "dataChange": True, "extendedFileMetadata": False,
+                    "partitionValues": {"p": "plain"}, "size": 7}}]])
+    assert t.to_df().count() == 35
 
-    def ckpt_rows():
-        files = glob.glob(os.path.join(log_dir, "*checkpoint*.parquet"))
-        return sorted(spark.read.parquet(*files).toJSON().collect())
-
-    def clear_ckpt():
+    def checkpoint_rows(snap, **kw):
         for f in glob.glob(os.path.join(log_dir, "*checkpoint*.parquet")):
             os.remove(f)
-        lc = os.path.join(log_dir, "_last_checkpoint")
-        if os.path.exists(lc):
-            os.remove(lc)
+        taken = []
+        orig = CK._write_checkpoint_driver
 
-    snap_cold = t.log.snapshot_for_version(v)
-    assert "_files_rows" not in snap_cold.__dict__
-    write_checkpoint(snap_cold)
-    rows_cold = ckpt_rows()
-    clear_ckpt()
+        def spy(snap, pm):
+            taken.append(snap.version)
+            return orig(snap, pm)
+        CK._write_checkpoint_driver = spy
+        try:
+            CK.write_checkpoint(snap, **kw)
+        finally:
+            CK._write_checkpoint_driver = orig
+        files = glob.glob(os.path.join(log_dir, "*checkpoint*.parquet"))
+        return bool(taken), sorted(spark.read.parquet(*files)
+                                   .toJSON().collect())
 
-    snap_warm = t.log.snapshot_for_version(v)
-    _ = snap_warm._files_rows                  # force materialization
-    assert "_files_rows" in snap_warm.__dict__
-    # the warm write must take the driver-side pyarrow fast path (not a
-    # silent fallback) — record what it returns
-    import connectors_spark.log.checkpoints as CK
-    taken = []
-    orig = CK._write_checkpoint_driver
+    warm, cold = t.log.snapshot(), t.log.snapshot_for_version(v)
+    assert warm.version == v and "_files_rows" in warm.__dict__
+    driver, rows_driver = checkpoint_rows(warm)
+    spark_write, rows_spark = checkpoint_rows(cold, parts=1)
+    assert driver and not spark_write
+    assert "_files_rows" not in cold.__dict__
+    assert rows_driver == rows_spark
 
-    def spy(snap, pm):
-        n = orig(snap, pm)
-        taken.append(n)
-        return n
-    CK._write_checkpoint_driver = spy
-    try:
-        write_checkpoint(snap_warm)
-    finally:
-        CK._write_checkpoint_driver = orig
-    assert taken and taken[0] is not None, taken
-    rows_warm = ckpt_rows()
-
-    assert len(rows_cold) > 2
-    assert rows_warm == rows_cold
+    acts = [json.loads(r) for r in rows_driver]
+    adds = [a["add"] for a in acts if a.get("add")]
+    removes = {a["remove"]["path"]: a["remove"]
+               for a in acts if a.get("remove")}
+    # the Hive-escaped directory p=a b%25c%3Dd~e%2Af+g, URI-encoded
+    assert any(a["path"].startswith("p%3Da%20b%2525c%253Dd~e%252Af%2Bg/")
+               for a in adds)
+    assert "file://" + outside.replace(" ", "%20") in \
+        {a["path"] for a in adds}
+    assert any(DV_TAG in (a.get("tags") or {}) for a in adds)
+    assert all(a.get("baseRowId") is not None for a in adds
+               if not a["path"].startswith("file:"))
+    foreign = removes["foreign-gone.parquet"]
+    assert foreign["extendedFileMetadata"] is False
+    assert "size" not in foreign and "partitionValues" not in foreign
+    assert len(removes) > 1
+    # a reader of the checkpoint alone sees the same table
+    fresh = t.log.snapshot_for_version(v)
+    assert fresh.segment.checkpoint_version == v
+    assert sorted(r.id for r in fresh.to_df().collect()) \
+        == sorted(r.id for r in cold.to_df().collect())

@@ -678,6 +678,24 @@ def test_foreign_path_spellings_replay_once(spark, tmp_path):
         == sorted(map(key, cold._tombstones_window_df().collect()))
 
 
+_PATH_ROOT = "/tbl/root"
+_LOG_PATHS = [
+    "part-00000.parquet",                      # table-relative
+    "a%20b/part-0001.parquet",                 # encoded relative
+    "/abs/part.parquet",                       # absolute posix
+    "file:/abs/via-uri.parquet",               # file: URI
+    "file:/abs/sp%20ace.parquet",              # file: URI, encoded
+    "file:/abs/literal+plus.parquet",          # literal + shield
+    "s3a://bucket/key/p.parquet",              # scheme://authority
+    "file:/abs/bad%zz.parquet",                # INVALID encoding
+    "/abs/sp%20ace.parquet",                   # encoded bare-absolute
+    "/abs/part%3Dx%253Dy/f.parquet",           # Hive-escaped, encoded
+    "s3a://b/k%20x.parquet",                   # scheme, encoded
+    "p=a%20b%25c%3Dd~e*f+g/x.parquet",         # every quote() difference
+    "caf%C3%A9/%E2%82%AC.parquet",             # non-ASCII, encoded
+]
+
+
 @pytest.mark.pin
 def test_canonical_path_col_twin_parity_and_nonnull(spark):
     """canonical_path_col must (1) agree with its Python twin
@@ -691,20 +709,7 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
     target scan (measured 2x on the merge matched scan)."""
     from connectors_spark.log.snapshot import (canonical_path,
                                                canonical_path_col)
-    tp = "/tbl/root"
-    paths = [
-        "part-00000.parquet",                      # table-relative
-        "a%20b/part-0001.parquet",                 # encoded relative
-        "/abs/part.parquet",                       # absolute posix
-        "file:/abs/via-uri.parquet",               # file: URI
-        "file:/abs/sp%20ace.parquet",              # file: URI, encoded
-        "file:/abs/literal+plus.parquet",          # literal + shield
-        "s3a://bucket/key/p.parquet",              # scheme://authority
-        "file:/abs/bad%zz.parquet",                # INVALID encoding
-        "/abs/sp%20ace.parquet",                   # encoded bare-absolute
-        "/abs/part%3Dx%253Dy/f.parquet",           # Hive-escaped, encoded
-        "s3a://b/k%20x.parquet",                   # scheme, encoded
-    ]
+    tp, paths = _PATH_ROOT, _LOG_PATHS
     import pyspark.sql.types as T
     df = spark.createDataFrame(
         [(p,) for p in paths],
@@ -723,3 +728,27 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
     assert canonical_path("/abs/part%3Dx%253Dy/f.parquet", tp) \
         == "/abs/part=x%3Dy/f.parquet"
     assert canonical_path("s3a://b/k%20x.parquet", tp) == "/k x.parquet"
+
+
+@pytest.mark.pin
+def test_relativize_col_twin_parity_and_roundtrip(spark):
+    """relativize_col must agree with its Python twin relativize on the
+    physical form of every log path above (under the root, outside it,
+    and every character where Spark's url_encode and quote() differ),
+    and canonical_path must undo relativize exactly."""
+    from connectors_spark.log.snapshot import (canonical_path, relativize,
+                                               relativize_col)
+    tp = _PATH_ROOT
+    phys = sorted({canonical_path(p, tp) for p in _LOG_PATHS})
+    df = spark.createDataFrame([(p,) for p in phys], "p string")
+    got = {r["p"]: r["r"] for r in
+           df.select("p", relativize_col("p", tp).alias("r")).collect()}
+    for p in phys:
+        rel = relativize(p, tp)
+        assert got[p] == rel, f"column/twin divergence for {p!r}: " \
+            f"{got[p]!r} != {rel!r}"
+        assert canonical_path(rel, tp) == p, (p, rel)
+    assert relativize(tp + "/p=a b%c=d~e*f+g/x.parquet", tp) \
+        == "p%3Da%20b%25c%3Dd~e%2Af%2Bg/x.parquet"
+    assert relativize("/abs/sp ace.parquet", tp) \
+        == "file:///abs/sp%20ace.parquet"

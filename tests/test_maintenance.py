@@ -1004,8 +1004,12 @@ def test_vacuum_lite_refuses_on_cleaned_window(spark, tmp_path):
 
 def _age_tombstones(log_path, version, new_ts):
     """Rewrite every RemoveFile's deletionTimestamp in one commit JSON —
-    simulates a tombstone written new_ts ms ago."""
+    simulates a tombstone written new_ts ms ago. Commits are immutable
+    to the engine, so every cached DeltaLog (whose snapshots may hold
+    the old tombstone plane) is dropped: the next ``for_path`` replays
+    the edited log."""
     import json
+    from connectors_spark import table as table_mod
     from connectors_spark.log import filenames as fn
     p = fn.delta_file(log_path, version)
     out = []
@@ -1017,6 +1021,7 @@ def _age_tombstones(log_path, version, new_ts):
             out.append(json.dumps(d))
     with open(p, "w") as fh:
         fh.write("\n".join(out) + "\n")
+    table_mod._log_cache.clear()
 
 
 def test_vacuum_protects_young_tombstone_despite_old_mtime(spark, tmp_path):
@@ -1043,6 +1048,45 @@ def test_vacuum_protects_young_tombstone_despite_old_mtime(spark, tmp_path):
     assert t.to_df(version=0).count() == 10   # time travel intact
     # once the tombstone itself ages out, the file is reclaimable
     assert len(maint.vacuum(retention_ms=0, dry_run=True)) == 1
+
+
+@pytest.mark.pin
+def test_checkpoint_keeps_tombstones_inside_table_retention(spark, tmp_path):
+    """A checkpoint keeps every tombstone younger than the table's own
+    delta.deletedFileRetentionDuration (DeltaLogImpl.scala:64-72), not a
+    fixed week: with a 30-day retention and a 10-day-old DELETE, a fresh
+    process replaying from the checkpoint still protects both removed
+    files from VACUUM."""
+    import glob
+    import time as _time
+
+    import pyarrow.parquet as pq
+
+    from connectors_spark import table as table_mod
+    from connectors_spark.log.checkpoints import write_checkpoint
+    path = str(tmp_path / "t")
+    t = DeltaTable.for_path(spark, path)
+    t.write(spark.range(10).repartition(2).select(F.col("id")),
+            configuration={"delta.deletedFileRetentionDuration":
+                           "interval 30 days"})
+    old = _time.time() - 40 * 24 * 3600
+    data = glob.glob(os.path.join(path, "*.parquet"))
+    assert len(data) == 2
+    for f in data:
+        os.utime(f, (old, old))
+    t.delete()                                              # v1
+    _age_tombstones(t.log.log_path, 1,
+                    int(_time.time() * 1000) - 10 * 24 * 3600 * 1000)
+    write_checkpoint(t.log.snapshot_for_version(1))
+    ckpt = glob.glob(os.path.join(t.log.log_path, "*.checkpoint.parquet"))
+    removes = [r for r in pq.read_table(ckpt[0]).column("remove")
+               .to_pylist() if r]
+    assert len(removes) == 2
+
+    table_mod._log_cache.clear()
+    fresh = DeltaTable.for_path(spark, path)
+    assert fresh.log.snapshot().segment.checkpoint_version == 1
+    assert TableMaintenance(fresh).vacuum(dry_run=True) == []
 
 
 def test_vacuum_lite_protects_restore_readded_path(spark, tmp_path):

@@ -117,6 +117,40 @@ def test_sink_exactly_once(spark, tmp_path):
     assert t.to_df().count() == 11
 
 
+@pytest.mark.pin
+def test_sink_checkpoint_is_driver_write_without_spark_jobs(
+        spark, tmp_path, monkeypatch):
+    """A log only the sink has written reaches its checkpoint interval
+    with no file plane cached. Its snapshot is driver-replayable, so the
+    checkpoint is the driver write and starts no Spark job."""
+    import connectors_spark.log.checkpoints as CK
+    sink = DeltaStreamSink(str(tmp_path / "tgt"), app_id="pin",
+                           configuration={"delta.checkpointInterval": "3"})
+    tracker = spark.sparkContext.statusTracker()
+    driver, new_jobs = [], []
+    write, write_driver = CK.write_checkpoint, CK._write_checkpoint_driver
+
+    def spy_write(snap, *args, **kwargs):
+        before = set(tracker.getJobIdsForGroup())
+        n = write(snap, *args, **kwargs)
+        new_jobs.append(set(tracker.getJobIdsForGroup()) - before)
+        return n
+
+    def spy_driver(snap, pm_lines):
+        driver.append(snap.version)
+        return write_driver(snap, pm_lines)
+    monkeypatch.setattr(CK, "write_checkpoint", spy_write)
+    monkeypatch.setattr(CK, "_write_checkpoint_driver", spy_driver)
+    for b in range(4):
+        sink.write_batch(spark.range(10 * b, 10 * b + 10), b)
+    assert driver == [3]
+    assert new_jobs == [set()]
+    assert tracker.getJobIdsForGroup()       # the sink's own jobs count
+    t = DeltaTable.for_path(spark, str(tmp_path / "tgt"))
+    assert t.log.snapshot().segment.checkpoint_version == 3
+    assert t.to_df().count() == 40
+
+
 def test_end_to_end_delta_to_delta(spark, tmp_path):
     src, tgt = tmp_path / "src", tmp_path / "tgt"
     _mk_table(spark, src, versions=2, rows_per=4)
