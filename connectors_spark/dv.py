@@ -35,7 +35,7 @@ import os
 import shutil
 import urllib.parse
 import uuid
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,18 +53,6 @@ _DV_SCHEMA = T.StructType([
 ])
 
 
-def dv_pairs(files: Sequence) -> List[Tuple[str, str]]:
-    """(canonical file path, sidecar rel path) for files carrying a DV.
-    ``files`` yields objects/Rows with ``path`` and ``tags``."""
-    out = []
-    for f in files:
-        tags = (f.tags if not hasattr(f, "asDict") else f["tags"]) or {}
-        if tags.get(DV_TAG):
-            out.append((f.path if not hasattr(f, "asDict") else f["path"],
-                        tags[DV_TAG]))
-    return out
-
-
 def _read_sidecars(spark: SparkSession, table_path: str,
                    sidecars: Sequence[str]) -> DataFrame:
     """All rows of the given sidecar rel paths, tagged with the
@@ -80,41 +68,19 @@ def _read_sidecars(spark: SparkSession, table_path: str,
 
 
 def dv_relation(spark: SparkSession, table_path: str,
-                pairs: List[Tuple[str, str]]) -> Optional[DataFrame]:
-    """Deleted ``(file_path, row_index)`` rows for the given
-    (file, sidecar) assignments — only combinations the active tags
-    actually name, so rows for files whose DV was since replaced don't
-    leak in. Returns None when ``pairs`` is empty."""
-    if not pairs:
-        return None
-    dv = _read_sidecars(spark, table_path, sorted({r for _p, r in pairs}))
-    from .localrel import local_rows_df
-    auth = local_rows_df(
-        spark,
-        [(p, canonical_path(rel, table_path)) for p, rel in pairs],
-        "file_path: string, __auth: string")
-    return (dv.join(F.broadcast(auth),
-                    (dv["file_path"] == auth["file_path"])
-                    & (dv["__sidecar"] == auth["__auth"]), "left_semi")
-            .select("file_path", "row_index"))
-
-
-def dv_relation_keyed(spark: SparkSession, table_path: str,
-                      triples: List[Tuple[str, str, int]]
-                      ) -> Optional[DataFrame]:
-    """Like :func:`dv_relation` but each (file, sidecar) assignment
-    carries a caller key (e.g. a commit version), returned as
-    ``__dvkey`` — one output row per (assignment, deleted position), so
-    the same file can be filtered differently per key (the change-feed
-    case: a file re-added at several versions with growing DVs)."""
-    if not triples:
-        return None
+                entries: Sequence[Tuple[str, str, int]]) -> DataFrame:
+    """Deleted ``(file_path, row_index, __dvkey)`` rows for the given
+    (file, sidecar rel path, key) assignments. Only combinations an
+    assignment names pass, so rows for files whose DV was since
+    replaced don't leak in. The key tells apart the DVs one file
+    carries at different commit versions (a change feed); snapshot
+    reads pass a constant. ``entries`` must not be empty."""
     dv = _read_sidecars(spark, table_path,
-                        sorted({r for _p, r, _k in triples}))
+                        sorted({s for _p, s, _k in entries}))
     from .localrel import local_rows_df
     auth = local_rows_df(
         spark,
-        [(p, canonical_path(rel, table_path), k) for p, rel, k in triples],
+        [(p, canonical_path(s, table_path), k) for p, s, k in entries],
         "file_path: string, __auth: string, __dvkey: long")
     return (dv.join(F.broadcast(auth),
                     (dv["file_path"] == auth["file_path"])
@@ -122,15 +88,13 @@ def dv_relation_keyed(spark: SparkSession, table_path: str,
             .select(dv["file_path"], "row_index", "__dvkey"))
 
 
-def apply_dv(data: DataFrame, dv: Optional[DataFrame],
-             file_col: str = "__file",
-             index_col: str = "__ri") -> DataFrame:
-    """Filter out deleted positions: anti-join on (file, row index)."""
-    if dv is None:
-        return data
+def apply_dv(data: DataFrame, dv: DataFrame, key) -> DataFrame:
+    """Drop the deleted positions from ``data`` (which carries
+    ``__file`` and ``__ri``): one anti-join on (file, key, row index),
+    ``key`` being the Column that matches ``dv``'s ``__dvkey``."""
     return data.join(
-        dv, (data[file_col] == dv["file_path"])
-        & (data[index_col] == dv["row_index"]), "left_anti")
+        dv, (data["__file"] == dv["file_path"]) & (key == dv["__dvkey"])
+        & (data["__ri"] == dv["row_index"]), "left_anti")
 
 
 def stage_dv(spark: SparkSession, table_path: str,

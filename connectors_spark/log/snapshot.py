@@ -36,11 +36,13 @@ Protocol, metadata, SetTransactions and domain metadata
 column-pruned read of the checkpoint, and advance the same incremental
 way. A Snapshot parses each of its commit files once (``_deltas``).
 
-Table data is read with ``spark.read.parquet`` over the active files.
-Partition values come from ``AddFile.partitionValues``, never from
-paths (DeltaInputFormat.scala:33-53): through Spark's partition-dir
-discovery when the layout provably agrees with the log, else through a
-broadcast path->values join.
+Table data is read by one file-scan core, :meth:`Snapshot.read_files`,
+for snapshot reads (``to_df``) and both change feeds alike. Partition
+values come from ``AddFile.partitionValues``, never from paths
+(DeltaInputFormat.scala:33-53): through Spark's partition-dir
+discovery when the layout provably agrees with the log, else through
+the scan's one broadcast per-file map, which also carries commit
+versions and row-id bases.
 """
 
 from __future__ import annotations
@@ -415,18 +417,6 @@ def materialized_rt_cols(meta) -> tuple:
             conf.get(RT_RCV_NAME_KEY, MATERIALIZED_ROW_COMMIT_COL))
 
 
-def _with_rt_fields(schema: T.StructType, rid: str,
-                    rcv: str) -> T.StructType:
-    """Read schema + the two nullable materialized-row-id columns —
-    files that lack them scan as NULL (parquet schema evolution), which
-    is exactly the fresh-row-id fallback condition."""
-    return T.StructType(
-        list(schema.fields)
-        + [T.StructField(rid, T.LongType()),
-           T.StructField(rcv, T.LongType())])
-
-
-
 class Snapshot:
     """Immutable view of the table at ``segment.version``."""
 
@@ -784,138 +774,150 @@ class Snapshot:
                     return False
         return True
 
-    def _attach_partition_values(self, data: DataFrame,
-                                 paths: Sequence[str],
-                                 pvs: Sequence[Dict[str, Optional[str]]],
-                                 keep_file: bool = False) -> DataFrame:
-        """Broadcast-join ``path -> partitionValues`` onto ``data`` (which
-        carries a canonical ``__file`` column), decoding the log's string
-        values with the partition schema's types. Drops ``__file``
-        unless ``keep_file``."""
-        meta = self.metadata
-        pcols = meta.physical_partition_columns
-        pv_rows = [tuple([p] + [pv.get(c) for c in pcols])
-                   for p, pv in zip(paths, pvs)]
-        pv_schema = T.StructType(
-            [T.StructField("__file", T.StringType())]
-            + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols])
-        from ..localrel import local_rows_df
-        pv_df = local_rows_df(self.spark, pv_rows, pv_schema)
-        for f in meta.physical_partition_schema.fields:
-            pv_df = pv_df.withColumn(
-                f.name, F.col(f"__pv_{f.name}").cast(f.dataType))
-        pv_df = pv_df.drop(*[f"__pv_{c}" for c in pcols])
-        out = data.join(F.broadcast(pv_df), "__file")
-        return out if keep_file else out.drop("__file")
+    def read_files(self, files: Sequence,
+                   versions: Optional[Sequence[int]] = None,
+                   extra_fields: Sequence[T.StructField] = (),
+                   with_file: bool = False, with_row_index: bool = False,
+                   with_row_ids: bool = False) -> DataFrame:
+        """The one file-scan core: the rows of the Delta data files
+        ``files`` (inventory rows, or log actions whose ``path`` is
+        already physical), read by one rule for snapshot reads and both
+        change feeds. ``versions``, parallel to ``files``, tags each
+        file with a commit version; a change feed may list one file at
+        several versions.
 
-    def _read_plain(self, rows: Sequence, keep_file: bool = False,
-                    keep_row_index: bool = False) -> DataFrame:
-        """Scan for files with no deletion vector."""
-        meta = self.metadata
+        Columns: the logical columns in schema order, then
+        ``extra_fields`` (read from the files as written, e.g. a cdc
+        file's ``_change_type``), then on request ``__file`` (the
+        canonical path of the row's file), ``__ri`` (its physical index
+        in that file), ``_commit_version`` (iff ``versions``) and
+        ``_row_id``/``_row_commit_version``.
 
-        def ri(df):
-            # the physical per-file row position, the fresh-row-id
-            # offset — must be computed INSIDE the single-source scan,
-            # like __file
-            if keep_row_index:
-                return df.withColumn("__ri",
-                                     F.col("_metadata.row_index"))
-            return df
-
-        def sch(s):
-            return _with_rt_fields(s, *materialized_rt_cols(meta)) \
-                if keep_row_index else s
-
-        paths = [r["path"] for r in rows]
-        pcols = meta.partitionColumns
-        if not pcols:
-            df = ri(self.spark.read.schema(sch(meta.physical_schema))
-                    .parquet(*paths))
-            return self._with_file(df) if keep_file else df
-        pvs = [dict(r["partitionValues"] or {}) for r in rows]
-        if self._hive_layout_ok(paths, pvs):
-            df = ri(self.spark.read
-                    .option("basePath", self.table_path)
-                    .schema(sch(meta.physical_schema))
-                    .parquet(*paths))
-            return self._with_file(df) if keep_file else df
-        # the scan-time file path must be normalized the same way as
-        # log paths (canonical_path_col)
-        data = ri(self.spark.read
-                  .schema(sch(meta.physical_data_schema))
-                  .parquet(*paths))
-        return self._attach_partition_values(
-            self._with_file(data), paths, pvs, keep_file=keep_file)
-
-    def _with_file(self, data: DataFrame) -> DataFrame:
-        """Attach the canonical per-row ``__file`` column via the
-        Parquet source's ``_metadata.file_path`` — unlike
-        ``input_file_name()`` it stays legal when the plan later joins
-        other sources (the DV anti-join, merge's source join)."""
-        return (data.withColumn("__fn", F.col("_metadata.file_path"))
-                .withColumn("__file",
-                            canonical_path_col("__fn", self.table_path))
-                .drop("__fn"))
-
-    def _read_with_dv(self, rows: Sequence, keep_file: bool = False,
-                      keep_row_index: bool = False) -> DataFrame:
-        """Scan for files carrying a deletion vector: anti-join deleted
-        ``(file, row_index)`` positions via the Parquet source's hidden
-        ``_metadata`` columns — one extra hash join bounded by the
-        deleted-row count, no rewrite ever read. With
-        ``keep_row_index`` the PHYSICAL index survives the anti-join —
-        a DV delete never renumbers the remaining rows, which is what
-        keeps fresh row ids stable under it."""
+        - ``__file`` and ``__ri`` come from the scan's ``_metadata``
+          columns, which unlike ``input_file_name()`` stay legal once
+          the plan joins other sources.
+        - The log-side per-file columns (partition values,
+          ``_commit_version``, ``baseRowId``, ``defaultRowCommitVersion``)
+          come from ONE broadcast map per scan, keyed on ``__file``; a
+          file listed at several versions fans out to each. No map is
+          built when no such column is needed, or when only partition
+          values are and the on-disk layout provably agrees with the
+          log (``_hive_layout_ok``): Spark's partition discovery under
+          ``basePath`` reads them then, and prunes natively.
+        - Files carrying a deletion vector are scanned apart from plain
+          files and lose their deleted rows through one anti-join on
+          ``(file, key, row_index)`` (``dv.dv_relation``); the key is
+          the commit version, or a constant for snapshot reads. A DV
+          never renumbers the surviving rows' physical indexes.
+        - ``_row_id = coalesce(materialized, baseRowId + __ri)`` and
+          ``_row_commit_version = coalesce(materialized,
+          defaultRowCommitVersion)``; a rewrite under row tracking
+          writes the materialized columns, and files without them read
+          NULL there."""
         from ..dv import DV_TAG, apply_dv, dv_relation
+        from ..localrel import local_rows_df
         meta = self.metadata
-        paths = [r["path"] for r in rows]
-        pvs = [dict(r["partitionValues"] or {}) for r in rows]
-        pairs = [(r["path"], dict(r["tags"])[DV_TAG]) for r in rows]
-        dv = dv_relation(self.spark, self.table_path, pairs)
-        sch = _with_rt_fields(meta.physical_data_schema,
-                              *materialized_rt_cols(meta)) \
-            if keep_row_index else meta.physical_data_schema
-        data = (self.spark.read.schema(sch)
-                .parquet(*paths)
-                .withColumn("__fn", F.col("_metadata.file_path"))
-                .withColumn("__ri", F.col("_metadata.row_index")))
-        data = data.withColumn(
-            "__file", canonical_path_col("__fn", self.table_path)).drop("__fn")
-        data = apply_dv(data, dv)
-        if not keep_row_index:
-            data = data.drop("__ri")
-        if not meta.partitionColumns:
-            return data if keep_file else data.drop("__file")
-        return self._attach_partition_values(data, paths, pvs,
-                                             keep_file=keep_file)
+        tagged = versions is not None
+        tail = list(extra_fields) + [
+            T.StructField(name, dtype) for name, dtype, wanted in (
+                ("__file", T.StringType(), with_file),
+                ("__ri", T.LongType(), with_row_index),
+                ("_commit_version", T.LongType(), tagged),
+                ("_row_id", T.LongType(), with_row_ids),
+                ("_row_commit_version", T.LongType(), with_row_ids))
+            if wanted]
+        if not files:
+            return self.spark.createDataFrame(
+                [], T.StructType(meta.schema.fields + tail))
+        # physical -> logical rename happens HERE, the one boundary
+        # between the file plane and the table contract (identity when
+        # column mapping is off); the projection also restores schema
+        # order, since the file source appends partition columns
+        nmap = meta.name_map()
+        out_cols = ([F.col(nmap[f.name]).alias(f.name)
+                     for f in meta.schema.fields]
+                    + [F.col(f.name) for f in tail])
+        pcols = meta.physical_partition_columns
+        rid_c, rcv_c = materialized_rt_cols(meta)
+        map_schema = T.StructType(
+            [T.StructField("__file", T.StringType()),
+             T.StructField("_commit_version", T.LongType()),
+             T.StructField("__base", T.LongType()),
+             T.StructField("__dcv", T.LongType())]
+            + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols])
+        map_cols = ([F.col("__file")]
+                    + ([F.col("_commit_version")] if tagged else [])
+                    + ([F.col("__base"), F.col("__dcv")]
+                       if with_row_ids else [])
+                    + [F.col(f"__pv_{f.name}").cast(f.dataType).alias(f.name)
+                       for f in meta.physical_partition_schema.fields])
+
+        def dv_of(f):
+            return (getattr(f, "tags", None) or {}).get(DV_TAG)
+
+        entries = list(zip(files, versions if tagged else [0] * len(files)))
+        out = None
+        for has_dv in (False, True):
+            group = [(f, v) for f, v in entries if bool(dv_of(f)) == has_dv]
+            if not group:
+                continue
+            use_map = tagged or with_row_ids or (
+                bool(pcols) and not self._hive_layout_ok(
+                    [f.path for f, _ in group],
+                    [f.partitionValues for f, _ in group]))
+            base_path = bool(pcols) and not use_map
+            fields = list((meta.physical_schema if base_path
+                           else meta.physical_data_schema).fields)
+            fields += list(extra_fields)
+            if with_row_ids:
+                fields += [T.StructField(rid_c, T.LongType()),
+                           T.StructField(rcv_c, T.LongType())]
+            reader = self.spark.read.schema(T.StructType(fields))
+            if base_path:
+                reader = reader.option("basePath", self.table_path)
+            df = reader.parquet(*dict.fromkeys(f.path for f, _ in group))
+            if with_row_index or with_row_ids or has_dv:
+                df = df.withColumn("__ri", F.col("_metadata.row_index"))
+            if with_file or use_map or has_dv:
+                df = (df.withColumn("__fn", F.col("_metadata.file_path"))
+                      .withColumn("__file", canonical_path_col(
+                          "__fn", self.table_path))
+                      .drop("__fn"))
+            if use_map:
+                fmap = local_rows_df(
+                    self.spark,
+                    [(f.path, v, getattr(f, "baseRowId", None),
+                      getattr(f, "defaultRowCommitVersion", None),
+                      *[(f.partitionValues or {}).get(c) for c in pcols])
+                     for f, v in group], map_schema)
+                df = df.join(F.broadcast(fmap.select(*map_cols)), "__file")
+            if has_dv:
+                dv = dv_relation(self.spark, self.table_path, sorted(
+                    {(f.path, dv_of(f), v) for f, v in group}))
+                df = apply_dv(df, dv, F.col("_commit_version") if tagged
+                              else F.lit(0))
+            if with_row_ids:
+                df = (df.withColumn("_row_id", F.coalesce(
+                          F.col(rid_c), F.col("__base") + F.col("__ri")))
+                      .withColumn("_row_commit_version", F.coalesce(
+                          F.col(rcv_c), F.col("__dcv"))))
+            df = df.select(*out_cols)
+            out = df if out is None else out.unionByName(df)
+        return out
 
     def to_df(self, files=None,
               residual=None, with_file_col: bool = False,
               with_row_ids: bool = False,
               with_row_index: bool = False) -> DataFrame:
-        """DataFrame of table rows for the active (optionally pruned) files.
+        """DataFrame of table rows for the active files, or for
+        ``files`` (inventory rows or a ``files_df``-shaped DataFrame,
+        e.g. a pruned scan), filtered by ``residual``.
 
-        Partition values come from the log. Fast path: when the on-disk
-        layout is Hive-style and provably consistent with
-        ``partitionValues``, one ``spark.read`` with ``basePath`` lets the
-        Parquet source prune/prune-down natively. General path: scan with
-        the data schema and broadcast-join ``path -> partitionValues``
-        on ``input_file_name()`` (single scan, no per-partition plan
-        explosion at 100k+ partitions). Files carrying a deletion vector
-        are scanned separately with the deleted positions anti-joined
-        out (dv.py). ``with_file_col=True`` keeps a canonical
-        ``__file`` column per row (the file that produced it) — DML
-        file-discovery needs it, and computing it here (from
-        ``_metadata.file_path`` inside each single-source scan) is the
-        only placement that stays legal once DV anti-joins make the
-        plan multi-source. ``with_row_index=True`` keeps each row's
-        physical index in its file as ``__ri`` (a DV delete records
-        it)."""
-        from ..dv import DV_TAG
-        meta = self.metadata
-        want_rid = with_row_ids
-        keep_ri = with_row_ids or with_row_index
-        keep_file = with_file_col or want_rid
+        Reads through :meth:`read_files`, which states the rules:
+        partition values from the log, deletion vectors applied,
+        ``with_file_col`` keeps ``__file``, ``with_row_index`` keeps
+        ``__ri`` (a DV delete records it) and ``with_row_ids`` appends
+        ``_row_id``/``_row_commit_version``."""
         if files is None:
             # whole-table read: reuse the per-Snapshot materialized
             # inventory instead of re-running the log replay job
@@ -927,72 +929,10 @@ class Snapshot:
             rows = list(files)
         else:
             sel = ["path", "partitionValues", "tags"]
-            if want_rid:
+            if with_row_ids:
                 sel += ["baseRowId", "defaultRowCommitVersion"]
             rows = files.select(*sel).collect()
-        if not rows:
-            df = self.spark.createDataFrame([], meta.schema)
-            if with_file_col:
-                df = df.withColumn("__file",
-                                   F.lit(None).cast("string"))
-            if want_rid:
-                df = (df.withColumn("_row_id", F.lit(None).cast("long"))
-                      .withColumn("_row_commit_version",
-                                  F.lit(None).cast("long")))
-            if with_row_index:
-                df = df.withColumn("__ri", F.lit(None).cast("long"))
-            return df.where(residual) if residual is not None else df
-        plain = [r for r in rows if not ((r["tags"] or {}).get(DV_TAG))]
-        dvd = [r for r in rows if (r["tags"] or {}).get(DV_TAG)]
-        parts = [self._read_plain(plain, keep_file=keep_file,
-                                  keep_row_index=keep_ri)] \
-            if plain else []
-        if dvd:
-            parts.append(self._read_with_dv(dvd, keep_file=keep_file,
-                                            keep_row_index=keep_ri))
-        # Schema-order projection: Spark's file source appends partition
-        # columns after data columns; the table contract is metadata
-        # schema order (Snapshot.open ≍ SnapshotImpl.scala:107-116).
-        extra = [F.col("__file")] if keep_file else []
-        rid_c, rcv_c = materialized_rt_cols(meta)
-        if keep_ri:
-            extra.append(F.col("__ri"))
-        if want_rid:
-            extra += [F.col(rid_c), F.col(rcv_c)]
-        # physical -> logical rename happens HERE, the one boundary
-        # between the file plane and the table contract (identity when
-        # column mapping is off)
-        nmap = meta.name_map()
-        parts = [p.select(*[F.col(nmap[f.name]).alias(f.name)
-                            for f in meta.schema.fields],
-                          *extra)
-                 for p in parts]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if want_rid:
-            # per-file base map from the LOG (broadcast, O(files)):
-            # row id = materialized value when the file carries one
-            # (written by a rewrite), else baseRowId + physical index
-            from ..localrel import local_rows_df
-            bdf = local_rows_df(
-                self.spark,
-                [(r["path"], r["baseRowId"],
-                  r["defaultRowCommitVersion"]) for r in rows],
-                "__file string, __base long, __dcv long")
-            df = (df.join(F.broadcast(bdf), "__file")
-                  .withColumn(
-                      "_row_id",
-                      F.coalesce(F.col(rid_c),
-                                 F.col("__base") + F.col("__ri")))
-                  .withColumn(
-                      "_row_commit_version",
-                      F.coalesce(F.col(rcv_c), F.col("__dcv")))
-                  .drop("__base", "__dcv", rid_c, rcv_c))
-            if not with_row_index:
-                df = df.drop("__ri")
-            if not with_file_col:
-                df = df.drop("__file")
-        if residual is not None:
-            df = df.where(residual)
-        return df
+        df = self.read_files(rows, with_file=with_file_col,
+                             with_row_index=with_row_index,
+                             with_row_ids=with_row_ids)
+        return df.where(residual) if residual is not None else df

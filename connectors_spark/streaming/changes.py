@@ -4,28 +4,60 @@ The streaming unit of the reference is the table VERSION, not the row:
 ``getChanges`` yields each commit's actions in order
 (DeltaLogImpl.scala:106-130) and the Flink source validates them before
 handing rows downstream (ActionProcessor.processActions,
-flink/.../processor/ActionProcessor.java:56-110):
+flink/.../processor/ActionProcessor.java:56-110). :func:`validated_adds`
+is that validation, shared by ``changes_df`` and the ``delta_stream``
+source:
 
 - only dataChange AddFiles pass;
 - a RemoveFile raises unless ``ignoreDeletes``;
 - an add+remove mix raises unless ``ignoreChanges``;
 - a mid-stream Metadata/Protocol change raises.
 
-``changes_df`` turns the validated per-version AddFiles into ONE DataFrame
-with a ``_commit_version`` column -- a single distributed Parquet scan
-regardless of how many versions are read.
+``changes_df`` reads the validated AddFiles of every version through
+``Snapshot.read_files``, each tagged with its commit version: ONE
+DataFrame with a ``_commit_version`` column, partition values from the
+log and each file's deletion vector at that version applied — the rows
+the streaming source delivers for the same versions.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..errors import DeltaError
 from ..log.actions import AddFile, Metadata, Protocol, RemoveFile
-from ..log.snapshot import canonical_path, canonical_path_col
+from ..log.snapshot import canonical_path
+
+
+def validated_adds(version: int, actions, exempt: bool,
+                   ignore_deletes: bool = False,
+                   ignore_changes: bool = False) -> List[AddFile]:
+    """The dataChange AddFiles of one commit, after the ST3 rules.
+    ``exempt`` skips the rules for a version a stream may start AT (the
+    creation commit, or an initial remove/metadata commit;
+    ActionProcessor.java:45-52)."""
+    adds = [a for a in actions if isinstance(a, AddFile) and a.dataChange]
+    if exempt:
+        return adds
+    removes = any(isinstance(a, RemoveFile) and a.dataChange
+                  for a in actions)
+    if any(isinstance(a, (Metadata, Protocol)) for a in actions):
+        raise DeltaError(
+            f"table metadata/protocol changed at version {version} "
+            f"mid-stream")
+    if removes and adds and not ignore_changes:
+        raise DeltaError(
+            f"version {version} mixes adds and removes (an UPDATE/"
+            f"MERGE/overwrite); set ignoreChanges (ignore_changes) to "
+            f"stream its added rows anyway")
+    if removes and not adds and not ignore_deletes:
+        raise DeltaError(
+            f"version {version} deletes data; set ignoreDeletes "
+            f"(ignore_deletes) to skip delete-only versions")
+    return adds
 
 
 def validated_adds_per_version(
@@ -34,33 +66,16 @@ def validated_adds_per_version(
         allow_initial_changes: bool = True,
         fail_on_data_loss: bool = False) -> List[Tuple[int, List[AddFile]]]:
     """(version, dataChange AddFiles) per commit, with ST3 validation.
-    ``allow_initial_changes`` exempts ``start_version`` itself (a stream may
-    start AT a remove/metadata commit; ActionProcessor.java:45-52)."""
+    ``allow_initial_changes`` exempts ``start_version`` itself."""
     out: List[Tuple[int, List[AddFile]]] = []
     for version, actions in table.log.get_changes(start_version,
                                                   fail_on_data_loss):
         if end_version is not None and version > end_version:
             break
-        is_initial = version == start_version and allow_initial_changes
-        adds = [a for a in actions
-                if isinstance(a, AddFile) and a.dataChange]
-        removes = [a for a in actions
-                   if isinstance(a, RemoveFile) and a.dataChange]
-        if not is_initial:
-            if any(isinstance(a, (Metadata, Protocol)) for a in actions):
-                raise DeltaError(
-                    f"table metadata/protocol changed at version {version} "
-                    f"mid-stream")
-            if removes and adds and not ignore_changes:
-                raise DeltaError(
-                    f"version {version} mixes adds and removes (an UPDATE/"
-                    f"MERGE/overwrite); set ignore_changes=true to stream "
-                    f"its added rows anyway")
-            if removes and not adds and not ignore_deletes:
-                raise DeltaError(
-                    f"version {version} deletes data; set ignore_deletes=true "
-                    f"to skip delete-only versions")
-        out.append((version, adds))
+        out.append((version, validated_adds(
+            version, actions,
+            version == start_version and allow_initial_changes,
+            ignore_deletes, ignore_changes)))
     return out
 
 
@@ -75,50 +90,13 @@ def changes_df(table, start_version: int = 0,
     validation (needed when streaming from version 0: the creation
     commit necessarily carries Protocol+Metadata)."""
     snap = table.log.snapshot()
-    meta = snap.metadata
-    per_version = validated_adds_per_version(
-        table, start_version, end_version,
-        ignore_deletes=ignore_deletes, ignore_changes=ignore_changes,
-        allow_initial_changes=allow_initial_changes)
-
-    # One scan over all files; version and partition values attached via a
-    # broadcast path-keyed join (same mechanism as Snapshot.to_df).
-    file_rows = []
-    for version, adds in per_version:
+    files, versions = [], []
+    for version, adds in validated_adds_per_version(
+            table, start_version, end_version,
+            ignore_deletes=ignore_deletes, ignore_changes=ignore_changes,
+            allow_initial_changes=allow_initial_changes):
         for a in adds:
-            file_rows.append((canonical_path(a.path, snap.table_path),
-                              version, a.partitionValues))
-    if not file_rows:
-        from pyspark.sql import types as T
-        schema = T.StructType(meta.schema.fields
-                              + [T.StructField("_commit_version", T.LongType())])
-        return table.spark.createDataFrame([], schema)
-
-    spark = table.spark
-    paths = [r[0] for r in file_rows]
-    data = (spark.read.schema(meta.physical_data_schema).parquet(*paths)
-            .withColumn("__fn", F.input_file_name()))
-    data = data.withColumn(
-        "__file", canonical_path_col("__fn", snap.table_path)).drop("__fn")
-
-    from pyspark.sql import types as T
-    # physical name domain throughout; final select aliases to logical
-    pcols = meta.physical_partition_columns
-    map_schema = T.StructType(
-        [T.StructField("__file", T.StringType()),
-         T.StructField("_commit_version", T.LongType())]
-        + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols])
-    map_rows = [tuple([p, v] + [pv.get(c) for c in pcols])
-                for p, v, pv in file_rows]
-    from ..localrel import local_rows_df
-    pv_df = local_rows_df(spark, map_rows, map_schema)
-    for f in meta.physical_partition_schema.fields:
-        pv_df = pv_df.withColumn(f.name, F.col(f"__pv_{f.name}").cast(f.dataType))
-    pv_df = pv_df.drop(*[f"__pv_{c}" for c in pcols])
-
-    nmap = meta.name_map()
-    out = (data.join(F.broadcast(pv_df), "__file").drop("__file")
-           .select(*[F.col(nmap[f.name]).alias(f.name)
-                     for f in meta.schema.fields],
-                   F.col("_commit_version")))
-    return out
+            files.append(dataclasses.replace(
+                a, path=canonical_path(a.path, snap.table_path)))
+            versions.append(version)
+    return snap.read_files(files, versions)

@@ -54,6 +54,7 @@ from ..log.segment import get_log_segment
 from ..log.snapshot import (canonical_path, parse_deltas, read_commit,
                             replay_log_state, replay_planes)
 from ..partition_values import decode as decode_partition_value
+from .changes import validated_adds
 
 
 def _log_path(table_path: str) -> str:
@@ -372,27 +373,6 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
 
     # ---------------------------------------------------------- planning
 
-    def _validated_adds(self, version: int) -> List[AddFile]:
-        actions = _read_version_actions(self.store, self.log_path, version)
-        adds = [a for a in actions if isinstance(a, AddFile) and a.dataChange]
-        removes = [a for a in actions
-                   if isinstance(a, RemoveFile) and a.dataChange]
-        if version > 0:
-            # ST3 (ActionProcessor.java:56-110): creation commit exempt.
-            if any(isinstance(a, (Metadata, Protocol)) for a in actions):
-                raise DeltaError(
-                    f"metadata/protocol change at version {version} "
-                    f"mid-stream")
-            if removes and adds and not self.ignore_changes:
-                raise DeltaError(
-                    f"version {version} mixes adds and removes; set "
-                    f"ignoreChanges=true to stream its added rows")
-            if removes and not adds and not self.ignore_deletes:
-                raise DeltaError(
-                    f"version {version} deletes data; set "
-                    f"ignoreDeletes=true to skip it")
-        return adds
-
     def partitions(self, start: dict, end: dict
                    ) -> List[DeltaFilePartition]:
         # start/end are engine-persisted offsets: establish the
@@ -475,7 +455,11 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             if self.cdf:
                 out.extend(self._cdf_partitions(v))
             else:
-                for a in self._validated_adds(v):
+                # ST3, with the creation commit exempt
+                for a in validated_adds(
+                        v, _read_version_actions(self.store,
+                                                 self.log_path, v),
+                        v == 0, self.ignore_deletes, self.ignore_changes):
                     out.append(DeltaFilePartition(
                         canonical_path(a.path, self.root), v,
                         dict(a.partitionValues or {}),

@@ -1337,15 +1337,14 @@ class DeltaTable:
         if not touched:
             return txn.commit([], "DELETE", params)
         cand = {f.path: f for f in candidates}
-        prior = dv_relation(
-            self.spark, snap.table_path,
-            [(p, (f.tags or {})[DV_TAG]) for p, f in cand.items()
-             if (f.tags or {}).get(DV_TAG)])
         new_dv = hits.select(F.col("__file").alias("file_path"),
                              F.col("__ri").alias("row_index"))
-        if prior is not None:
+        prior = [(p, cand[p].tags[DV_TAG], 0) for p in touched
+                 if (cand[p].tags or {}).get(DV_TAG)]
+        if prior:
             new_dv = new_dv.unionByName(
-                _semi_by_paths(prior, touched, col="file_path"))
+                dv_relation(self.spark, snap.table_path, prior)
+                .drop("__dvkey"))
         rel, counts = stage_dv(self.spark, snap.table_path, new_dv)
         readds: List[AddFile] = []
         for p in touched:
@@ -1826,21 +1825,6 @@ def _parse_dtype(ddl: str):
 def _n_indexed(configuration) -> int:
     """delta.dataSkippingNumIndexedCols for a metadata configuration."""
     return TableConfig(configuration or {}).data_skipping_num_indexed_cols
-
-
-def _semi_by_paths(df: DataFrame, paths: Sequence[str],
-                   col: str = "path") -> DataFrame:
-    """Subset of ``df`` whose ``col`` is in ``paths``, via a left-semi
-    join against a paths DataFrame — never an ``isin`` literal. A wide
-    DML/OPTIMIZE over 100k files must not embed a 100k-element In() in
-    the plan (driver memory + plan-size blowup); the candidate list is
-    already driver-side (it becomes the commit's RemoveFile list), so
-    feeding it back as a local relation costs nothing extra. Same shape
-    as merge's touched-file scoping (see merge())."""
-    from .localrel import local_rows_df
-    pdf = local_rows_df(df.sparkSession, [(p,) for p in paths],
-                        f"{col}: string")
-    return df.join(pdf, col, "left_semi")
 
 
 def _enforce_constraints(df: DataFrame, configuration: Dict[str, str],

@@ -347,3 +347,40 @@ def test_checkpoint_from_materialized_inventory_matches_cold(spark, tmp_path):
     assert fresh.segment.checkpoint_version == v
     assert sorted(r.id for r in fresh.to_df().collect()) \
         == sorted(r.id for r in cold.to_df().collect())
+
+
+@pytest.mark.pin
+def test_changes_df_applies_deletion_vectors_like_the_stream(spark, tmp_path):
+    """``changes_df`` delivers a re-added file's LIVE rows under the
+    deletion vector it carries at that version, exactly as the
+    ``delta_stream`` source does for the same options: a DV-DELETE
+    re-adds the file with a grown DV, and the rows it deletes must not
+    come back through the batch feed."""
+    from pyspark.sql import Row
+
+    from connectors_spark.expressions import Lit
+    from connectors_spark.streaming import register_stream_source
+
+    src = tmp_path / "src"
+    t = DeltaTable.for_path(spark, str(src))
+    t.write(spark.createDataFrame(
+        [Row(k=i, v=i * 10) for i in range(100)]).coalesce(1))
+    t.delete(Col("k") < Lit(10), deletion_vectors=True)     # v1
+    t.delete(Col("k") < Lit(20), deletion_vectors=True)     # v2
+    batch = sorted(tuple(r) for r in
+                   t.changes_df(start_version=2, ignore_changes=True)
+                   .select("k", "v", "_commit_version").collect())
+    register_stream_source(spark)
+    q = (spark.readStream.format("delta_stream")
+         .option("path", str(src))
+         .option("startingVersion", "2")
+         .option("ignoreChanges", "true").load()
+         .writeStream.format("memory").queryName("t_dv_changes")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    stream = sorted(tuple(r) for r in spark.sql(
+        "select k, v, _commit_version from t_dv_changes").collect())
+    assert len(batch) == 80
+    assert batch == stream
+    assert sorted(k for k, _v, _cv in batch) == list(range(20, 100))

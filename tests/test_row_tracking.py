@@ -62,12 +62,39 @@ def test_fresh_row_ids_unique_and_dense(spark, tmp_path):
 
 
 def test_row_ids_stable_under_dv_delete(spark, tmp_path):
+    """Fresh ids survive a DV delete, on an unpartitioned table and on
+    a partitioned one whose layout fails ``_hive_layout_ok``: a
+    foreign-style commit adds a file at the table root whose partition
+    value holds ``%`` and a space. There the partition values, the
+    base row ids and the DV anti-join all ride one per-file map."""
+    import dataclasses
+
+    from connectors_spark.writer import stage_and_collect
     t = _mk(spark, tmp_path / "t")
-    before = _rids(t)
-    t.delete(Col("id") < Lit(30), deletion_vectors=True)
-    after = _rids(t)
-    assert len(after) == 70
-    assert all(before[k] == v for k, v in after.items())
+    p = DeltaTable.for_path(spark, str(tmp_path / "p"))
+    p.write(spark.range(0, 50).select(
+        F.col("id"), (F.col("id") * 2).alias("v"), F.lit("x").alias("p")),
+        configuration=CFG, partition_by=["p"])
+    adds = stage_and_collect(spark.range(50, 100).select(
+        F.col("id"), (F.col("id") * 2).alias("v")).coalesce(1),
+        p.log.table_path, [])
+    p.log.start_transaction().commit(
+        [dataclasses.replace(a, partitionValues={"p": "50% off"})
+         for a in adds], operation="WRITE")
+    rows = p.log.snapshot()._files_rows
+    assert not p.log.snapshot()._hive_layout_ok(
+        [r["path"] for r in rows], [r["partitionValues"] for r in rows])
+    for tbl, pred in ((t, Col("id") < Lit(30)),
+                      (p, (Col("id") >= Lit(35)) & (Col("id") < Lit(65)))):
+        before = _rids(tbl)
+        assert sorted(v[0] for v in before.values()) == list(range(100))
+        tbl.delete(pred, deletion_vectors=True)
+        after = _rids(tbl)
+        assert len(after) == 70
+        assert all(before[k] == v for k, v in after.items())
+    pv = {r["id"]: r["p"] for r in p.to_df(with_row_ids=True).collect()}
+    assert {pv[k] for k in pv if k < 50} == {"x"}
+    assert {pv[k] for k in pv if k >= 50} == {"50% off"}
 
 
 def test_row_ids_materialized_through_optimize(spark, tmp_path):
