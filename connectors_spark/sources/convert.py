@@ -79,8 +79,7 @@ def convert_to_delta(spark: SparkSession, path: str,
     schema = spark.read.option("basePath", root).parquet(root).schema
 
     txn = table.log.start_transaction()
-    txn.update_metadata(table._make_metadata(
-        spark.createDataFrame([], schema), pcols))
+    txn.update_metadata(table._make_metadata(schema, pcols))
     now = int(time.time() * 1000)
     # Footer stats are read DISTRIBUTED (one mapInPandas over the file
     # list, same shape as commit publication) — a 100k-file convert

@@ -8,23 +8,27 @@ flink/.../committer/DeltaGlobalCommitter.java:198-256; txnVersion
 OptimisticTransactionImpl.scala:221-224).
 
 Structured Streaming's twin: ``foreachBatch`` hands us (df, batch_id);
-we commit the staged files + ``SetTransaction(app_id, batch_id)``
-atomically and skip replayed batch ids — idempotent under every retry/
-restart combination because the watermark read and the data commit are
-the same optimistic transaction (a concurrent duplicate commit loses the
+we commit the batch + ``SetTransaction(app_id, batch_id)`` atomically
+and skip replayed batch ids — idempotent under every retry/restart
+combination because the watermark read and the data commit are the same
+optimistic transaction (a concurrent duplicate commit loses the
 put-if-absent race and re-checks the watermark on retry).
+
+The watermark skip, the ``merge_schema`` refusal and the commit's
+operation name and parameters are the sink's own. Everything else —
+table creation, schema evolution, identity and generated columns, CHECK
+constraints, invariants, staging and auto-compaction — is the append
+path ``DeltaTable.write`` takes (``DeltaTable._append``).
 """
 
 from __future__ import annotations
 
-import json
 import time
-from typing import Any, Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..log.actions import SetTransaction
-from ..writer import stage_and_collect
 
 
 class DeltaStreamSink:
@@ -52,69 +56,18 @@ class DeltaStreamSink:
 
         table = DeltaTable.for_path(df.sparkSession, self.table_path)
         txn = table.log.start_transaction()
-        exists = txn.snapshot is not None and txn.read_version >= 0
-        last = txn.txn_version(self.app_id) if exists else -1
-        if exists and batch_id <= last:
+        if txn.snapshot is not None and txn.read_version >= 0 \
+                and batch_id <= txn.txn_version(self.app_id):
             return None  # replayed checkpoint — already durable, skip
-
-        if exists:
-            meta = txn.snapshot.metadata
-            from ..table import _fill_and_check_generated
-            df = _fill_and_check_generated(df, meta, "streamed")
-            table_cols = {f.name for f in meta.schema.fields}
-            if set(df.schema.fieldNames()) != table_cols:
-                if not self.merge_schema:
-                    raise ValueError(
-                        f"stream schema {sorted(df.schema.fieldNames())} != "
-                        f"table schema {sorted(table_cols)} "
-                        f"(set merge_schema=True)")
-                if meta.column_mapping_mode != "none":
-                    raise ValueError(
-                        "schema merge is not supported on column-"
-                        "mapped tables — use add_column")
-                txn.update_metadata(table._make_metadata(
-                    df, meta.partitionColumns, self.configuration, meta))
-            pcols = meta.partitionColumns
-        else:
-            pcols = self.partition_by
-            txn.update_metadata(table._make_metadata(
-                df, pcols, self.configuration))
-
-        from ..config import TableConfig
-        conf = (txn.snapshot.metadata.configuration if exists
-                else self.configuration)
-        eff_meta = txn.new_metadata or (txn.snapshot.metadata if exists
-                                        else None)
-        from ..bloom import bloom_config
-        if eff_meta is not None:
-            from ..table import _enforce_invariants
-            _enforce_invariants(df, eff_meta, "streamed")
-        adds = stage_and_collect(
-            df, self.table_path, pcols,
-            num_indexed_cols=TableConfig(conf or {})
-            .data_skipping_num_indexed_cols,
-            schema_cols=[f.name for f in eff_meta.schema.fields]
-            if eff_meta is not None else None,
-            bloom_cfg=bloom_config(conf),
-            physical_meta=eff_meta)
-        n_rows = sum(json.loads(a.stats)["numRecords"] for a in adds
-                     if a.stats)
-        actions: List[Any] = list(adds) + [
-            SetTransaction(appId=self.app_id, version=batch_id,
-                           lastUpdated=int(time.time() * 1000))]
-        version = txn.commit(
-            actions, operation="STREAMING UPDATE",
-            operation_parameters={"outputMode": "Append",
-                                  "queryId": self.app_id,
-                                  "epochId": str(batch_id)},
-            operation_metrics={"numFiles": str(len(adds)),
-                               "numOutputRows": str(n_rows)})
-        # Micro-batches are where a file-per-commit layout accretes
-        # fastest; honor delta.autoOptimize.autoCompact here exactly
-        # like batch writes (follow-up dataChange=False OPTIMIZE, so
-        # downstream change readers skip it).
-        table._maybe_auto_compact(conf)
-        return version
+        return table._append(
+            txn, df, "STREAMING UPDATE",
+            {"outputMode": "Append", "queryId": self.app_id,
+             "epochId": str(batch_id)},
+            partition_by=self.partition_by or None,
+            configuration=self.configuration,
+            merge_schema=self.merge_schema,
+            actions=[SetTransaction(appId=self.app_id, version=batch_id,
+                                    lastUpdated=int(time.time() * 1000))])
 
     # foreachBatch wants a bare callable
     def foreach_batch(self, df: DataFrame, batch_id: int) -> None:

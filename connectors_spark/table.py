@@ -35,12 +35,14 @@ from .config import TableConfig
 from .errors import DeltaError, DeltaProtocolError
 from .expressions import Expression
 from .log import filenames as fn
-from .log.actions import (AddFile, CommitInfo, Metadata, Protocol, RemoveFile,
-                          SetTransaction)
+from .bloom import bloom_config
+from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
+                          Protocol, RemoveFile, SetTransaction)
 from .log.logstore import LogStore, default_log_store, strip_scheme
 from .log.segment import LogSegment, get_log_segment
-from .log.snapshot import (Snapshot, canonical_path, canonical_path_col,
-                            materialized_rt_cols, read_commit)
+from .log.snapshot import (Snapshot, addfiles_from_rows, canonical_path,
+                            canonical_path_col, materialized_rt_cols,
+                            read_commit)
 from .log import history as hist
 from .scan import DeltaScan
 from .txn import OptimisticTransaction
@@ -49,6 +51,10 @@ from .writer import (CHANGE_TYPE_COL, stage_and_collect,
 
 _log_cache: Dict[str, "DeltaLog"] = {}
 _log_cache_lock = threading.Lock()
+
+# ``removes`` of DeltaTable._commit_legs: every live file of the read
+# snapshot
+_WHOLE_TABLE = object()
 
 
 # Materialization budget for DML intermediate relations: localCheckpoint
@@ -878,20 +884,19 @@ class DeltaTable:
 
     # ------------------------------------------------------------ writes
 
-    def _make_metadata(self, df: DataFrame, partition_by: Sequence[str],
+    def _make_metadata(self, schema: T.StructType,
+                       partition_by: Sequence[str],
                        configuration: Optional[Dict[str, str]] = None,
                        existing: Optional[Metadata] = None) -> Metadata:
-        schema = df.schema
         if existing is not None:
             # Write-time schema evolution must not strip field metadata:
-            # df.schema carries none, so a naive schemaString=df.schema
-            # would silently drop delta.generationExpression and
-            # delta.identity.* from pre-existing columns — after one
-            # evolving append the generated-column invariant would stop
-            # being enforced and identity allocation would reset. Carry
-            # metadata over by name from the pre-evolution schema
-            # (which the caller passes as txn.new_metadata when an
-            # identity high-water-mark bump is already staged).
+            # an incoming frame's schema carries none, so a naive
+            # schemaString=schema would silently drop
+            # delta.generationExpression and delta.identity.* from
+            # pre-existing columns — after one evolving append the
+            # generated-column invariant would stop being enforced and
+            # identity allocation would reset. Carry metadata over by
+            # name from the pre-evolution schema.
             keep = {f.name: f.metadata for f in existing.schema.fields
                     if f.metadata}
             # nullability merges as OR: evolution may relax a column
@@ -962,151 +967,113 @@ class DeltaTable:
             return self._replace_where(df, replace_where, configuration)
         txn = self.log.start_transaction()
         exists = txn.snapshot is not None and txn.read_version >= 0
-        if generated_columns is not None or identity_columns is not None:
+        if exists and (generated_columns is not None
+                       or identity_columns is not None):
             # GENERATED ALWAYS AS [IDENTITY] is a create-time property
             # (delta-spark: DeltaTable.create builder only)
-            if exists:
-                raise DeltaError("generated_columns/identity_columns "
-                                 "can only be set when the table is "
-                                 "created")
+            raise DeltaError("generated_columns/identity_columns "
+                             "can only be set when the table is "
+                             "created")
+        actions: List[Any] = []
+        if txn_app_id is not None:
+            if exists and txn.txn_version(txn_app_id) >= txn_version:
+                return -1
+            actions.append(SetTransaction(
+                appId=txn_app_id, version=int(txn_version),
+                lastUpdated=int(time.time() * 1000)))
+        pcols = txn.snapshot.metadata.partitionColumns if exists \
+            else list(partition_by or [])
+        return self._append(
+            txn, df, "WRITE" if exists else "CREATE TABLE AS SELECT",
+            {"mode": mode, "partitionBy": json.dumps(pcols)},
+            overwrite=mode == "overwrite", partition_by=partition_by,
+            configuration=configuration, actions=actions,
+            generated_columns=generated_columns,
+            identity_columns=identity_columns, user_metadata=user_metadata)
+
+    def _append(self, txn, df: DataFrame, operation: str,
+                params: Dict[str, str], *, overwrite: bool = False,
+                partition_by: Optional[Sequence[str]] = None,
+                configuration: Optional[Dict[str, str]] = None,
+                merge_schema: bool = True,
+                generated_columns: Optional[Dict[str, Tuple[str, str]]]
+                = None,
+                identity_columns: Optional[Dict[str, Tuple[str, int, int]]]
+                = None,
+                actions: Sequence[Any] = (),
+                user_metadata: Optional[str] = None) -> int:
+        """The append entry ``write`` and the streaming sink share: it
+        decides the table's metadata, then commits ``df`` as the
+        inserted leg of :meth:`_commit_legs` (with ``overwrite``,
+        replacing every live file), then runs auto-compaction.
+
+        - Creation: a first write makes the metadata from ``df``, plus
+          the create-time ``generated_columns``/``identity_columns`` as
+          field metadata; the core's conformance then fills them.
+        - Partitioning: an existing table keeps its partition columns;
+          a ``partition_by`` that differs raises.
+        - Evolution: a generated or identity column ``df`` lacks counts
+          as present, since the core fills it. A nested field set that
+          differs from the table's raises. Any other field-set
+          difference evolves the schema, unless ``merge_schema`` is off
+          (ValueError) or the table is column-mapped."""
+        meta = txn.snapshot.metadata \
+            if txn.snapshot is not None and txn.read_version >= 0 else None
+        if meta is None:
+            fields = {f.name: f for f in df.schema.fields}
             for name, (ddl, expr) in (generated_columns or {}).items():
-                dtype = _parse_dtype(ddl)
-                df = df.withColumn(name, F.expr(expr).cast(dtype))
-        elif exists:
-            df = _fill_and_check_generated(
-                df, txn.snapshot.metadata, "written")
-            df = _apply_identity(txn, df, txn.snapshot.metadata)
-        if txn_app_id is not None and exists \
-                and txn.txn_version(txn_app_id) >= txn_version:
-            return -1
-        if exists:
-            meta = txn.snapshot.metadata
-            pcols = list(partition_by) if partition_by is not None \
-                else list(meta.partitionColumns)
-            if set(df.schema.fieldNames()) != {f.name for f in meta.schema.fields}:
+                fields[name] = T.StructField(name, _parse_dtype(ddl), True,
+                                             {_GEN_KEY: expr})
+            for name, (ddl, start, step) in (identity_columns or {}).items():
+                if step == 0:
+                    raise DeltaError("identity step must be nonzero")
+                fields[name] = T.StructField(
+                    name, _parse_dtype(ddl), True,
+                    {_ID_START: start, _ID_STEP: step})
+            txn.update_metadata(self._make_metadata(
+                T.StructType(list(fields.values())), partition_by or [],
+                configuration))
+        else:
+            if partition_by is not None \
+                    and list(partition_by) != meta.partitionColumns:
+                raise DeltaError(
+                    f"partition columns {list(partition_by)} do not match "
+                    f"the table's {meta.partitionColumns}")
+            table = {f.name: f for f in meta.schema.fields}
+            for f in df.schema.fields:
+                if f.name in table and _nested_fields(f.dataType) \
+                        != _nested_fields(table[f.name].dataType):
+                    raise DeltaError(
+                        f"schema mismatch: column {f.name!r} is "
+                        f"{f.dataType.simpleString()} in the data but "
+                        f"{table[f.name].dataType.simpleString()} in the "
+                        f"table")
+            fill = _filled_cols(meta)
+            if set(df.columns) | fill != set(table):
+                if not merge_schema:
+                    raise ValueError(
+                        f"incoming schema {sorted(df.columns)} != table "
+                        f"schema {sorted(table)} (set merge_schema=True)")
                 if meta.column_mapping_mode != "none":
                     raise DeltaError(
                         "write-time schema evolution is not supported "
                         "under column mapping — use add_column / "
                         "rename_column / drop_column")
-                # Base the merge on txn.new_metadata when set:
-                # _apply_identity above may have staged an advanced
-                # identity high-water mark that a rebuild from the
-                # snapshot metadata would discard. Refining the staged
-                # update keeps the ≤1-Metadata-action-per-commit rule —
-                # the two stagings collapse into one action.
-                new_meta = self._make_metadata(
-                    df, pcols, configuration, txn.new_metadata or meta)
-                txn.new_metadata = None
-                txn.update_metadata(new_meta)
-        else:
-            pcols = list(partition_by or [])
-            id_hwms: Dict[str, int] = {}
-            if identity_columns:
-                for name, spec in identity_columns.items():
-                    ddl, start, step = spec
-                    if name in df.columns:
-                        raise DeltaError(
-                            f"column {name!r} is GENERATED ALWAYS AS "
-                            f"IDENTITY and cannot be written to")
-                    if step == 0:
-                        raise DeltaError("identity step must be nonzero")
-                    df, hwm = _allocate_identity(
-                        df, name, _parse_dtype(ddl), step, start - step)
-                    id_hwms[name] = hwm
-            new_meta = self._make_metadata(df, pcols, configuration)
-            if identity_columns:
-                fields = []
-                for f in new_meta.schema.fields:
-                    if f.name in identity_columns:
-                        _ddl, start, step = identity_columns[f.name]
-                        md = dict(f.metadata or {})
-                        md[_ID_START] = start
-                        md[_ID_STEP] = step
-                        md[_ID_HWM] = id_hwms[f.name]
-                        f = T.StructField(f.name, f.dataType,
-                                          f.nullable, md)
-                    fields.append(f)
-                import dataclasses
-                new_meta = dataclasses.replace(
-                    new_meta, schemaString=json.dumps(
-                        T.StructType(fields).jsonValue()))
-            if generated_columns:
-                fields = []
-                for f in new_meta.schema.fields:
-                    if f.name in generated_columns:
-                        md = dict(f.metadata or {})
-                        md[_GEN_KEY] = generated_columns[f.name][1]
-                        f = T.StructField(f.name, f.dataType,
-                                          f.nullable, md)
-                    fields.append(f)
-                import dataclasses
-                new_meta = dataclasses.replace(
-                    new_meta, schemaString=json.dumps(
-                        T.StructType(fields).jsonValue()))
-            txn.update_metadata(new_meta)
-
-        eff_meta = txn.new_metadata or (txn.snapshot.metadata if exists
-                                        else None)
-        if eff_meta is not None:
-            _enforce_constraints(df, eff_meta.configuration, "written")
-            _enforce_invariants(df, eff_meta, "written")
-
-        op = "WRITE"
-        adds = stage_and_collect(
-            df, self.log.table_path, pcols,
-            num_indexed_cols=_n_indexed(
-                eff_meta.configuration if eff_meta else None),
-            schema_cols=[f.name for f in eff_meta.schema.fields]
-            if eff_meta is not None else None,
-            bloom_cfg=_bloom(
-                eff_meta.configuration if eff_meta else None),
-            physical_meta=eff_meta)
-        n_rows = sum(json.loads(a.stats)["numRecords"] for a in adds
-                     if a.stats)
-        op_params = {"mode": mode, "partitionBy": json.dumps(list(pcols))}
-        op_metrics = {"numFiles": str(len(adds)),
-                      "numOutputRows": str(n_rows)}
-        set_txn = None
-        if txn_app_id is not None:
-            from .log.actions import SetTransaction
-            set_txn = SetTransaction(
-                appId=txn_app_id, version=int(txn_version),
-                lastUpdated=int(time.time() * 1000))
-        if mode == "overwrite" and exists:
-            # Whole-table overwrite removes EVERY active file — an
-            # O(table-width) action set, so it streams through
-            # commit_stream off files_df.toLocalIterator() like
-            # CLONE/RESTORE (the adds are the write's own output,
-            # already O(new files) on the driver).
-            txn.read_whole_table()
-            now = int(time.time() * 1000)
-            from .log.snapshot import addfiles_from_rows
-            old_files_df = txn.snapshot.files_df
-
-            def files_factory():
-                for r in old_files_df.toLocalIterator():
-                    yield addfiles_from_rows([r])[0].remove(now)
-                yield from adds
-
-            version = txn.commit_stream(
-                [set_txn] if set_txn is not None else [],
-                files_factory, has_removes=True, data_change=True,
-                operation=op, operation_parameters=op_params,
-                operation_metrics=op_metrics,
-                user_metadata=user_metadata)
-        else:
-            actions: List[Any] = list(adds)
-            if set_txn is not None:
-                actions.append(set_txn)
-            version = txn.commit(
-                actions,
-                operation=op if exists else "CREATE TABLE AS SELECT",
-                operation_parameters=op_params,
-                operation_metrics=op_metrics,
-                user_metadata=user_metadata)
-        self._maybe_auto_compact(
-            (eff_meta.configuration if eff_meta else None))
+                schema = T.StructType(df.schema.fields + [
+                    f for name, f in table.items()
+                    if name in fill and name not in df.columns])
+                txn.update_metadata(self._make_metadata(
+                    schema, meta.partitionColumns, configuration, meta))
+        conf = (txn.new_metadata or meta).configuration
+        version = self._commit_legs(
+            txn, operation, params,
+            _WHOLE_TABLE if overwrite and meta is not None else [],
+            inserted=df, actions=actions, user_metadata=user_metadata,
+            metrics=lambda adds: {
+                "numFiles": str(len(adds)),
+                "numOutputRows": str(sum(json.loads(a.stats)["numRecords"]
+                                         for a in adds if a.stats))})
+        self._maybe_auto_compact(conf)
         return version
 
     def _maybe_auto_compact(self,
@@ -1158,20 +1125,28 @@ class DeltaTable:
             raise FileNotFoundError(
                 "replace_where requires an existing table")
         meta = snap.metadata
-        # generated columns may be omitted by the caller — compute them
-        # BEFORE the field-set validation
-        df = _fill_and_check_generated(df, meta, "written")
         # replaceWhere never evolves the schema: a frame whose field
         # set/types differ from table metadata would commit Parquet
-        # files silently diverging from the table schema.
-        want = {f.name: f.dataType for f in meta.schema.fields}
+        # files silently diverging from the table schema. Generated and
+        # identity columns may be absent: the commit fills them.
+        gens = _generated_exprs(meta)
+        fill = _filled_cols(meta)
         got = {f.name: f.dataType for f in df.schema.fields}
+        want = {f.name: f.dataType for f in meta.schema.fields
+                if f.name in got or f.name not in fill}
         if want != got:
             raise DeltaError(
                 "replaceWhere: incoming schema does not match table "
                 f"schema (table {sorted(want)}, data {sorted(got)})")
-        hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
-        if df.where(~hit).limit(1).count():
+
+        def incoming(c: str) -> F.Column:
+            # an absent generated column reads as its expression
+            if c in gens and c not in got:
+                return F.expr(gens[c][1]).cast(gens[c][0])
+            return F.col(c)
+
+        if df.where(~F.coalesce(predicate.to_column(incoming),
+                                F.lit(False))).limit(1).count():
             raise DeltaError(
                 "replaceWhere: incoming data contains rows that do not "
                 f"match the predicate {predicate}")
@@ -1179,99 +1154,134 @@ class DeltaTable:
         params = {"mode": "overwrite", "predicate": str(predicate)}
         if DeltaScan(snap, predicate).residual is None:
             # predicate fully file-resolvable: drop candidates whole
-            return self._commit_rewrite(txn, "WRITE", params, candidates,
-                                        inserted=df)
+            return self._commit_legs(txn, "WRITE", params, candidates,
+                                     inserted=df)
         old = _scan_rows(snap, candidates)
-        return self._commit_rewrite(txn, "WRITE", params, candidates,
-                                    kept=old.where(~hit),
-                                    deleted=old.where(hit), inserted=df)
+        hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
+        return self._commit_legs(txn, "WRITE", params, candidates,
+                                 kept=old.where(~hit),
+                                 deleted=old.where(hit), inserted=df)
 
-    def _commit_rewrite(self, txn, operation: str, params: Dict[str, str],
-                        removes: Sequence[AddFile], *,
-                        kept: Optional[DataFrame] = None,
-                        updated: Optional[Tuple[DataFrame, DataFrame]]
-                        = None,
-                        deleted: Optional[DataFrame] = None,
-                        inserted: Optional[DataFrame] = None,
-                        actions: Sequence[Any] = (),
-                        metrics: Optional[Dict[str, str]] = None) -> int:
-        """Commit one DML from its row legs, each a frame over the
-        table's logical columns: ``kept`` rows of the rewritten files,
-        ``updated`` (pre-image, post-image) frames, ``deleted`` and
-        ``inserted`` rows. Under row tracking every leg but
-        ``inserted`` carries ``_row_id``/``_row_commit_version`` as
+    def _commit_legs(self, txn, operation: str, params: Dict[str, str],
+                     removes, *,
+                     kept: Optional[DataFrame] = None,
+                     updated: Optional[Tuple[DataFrame, DataFrame]] = None,
+                     deleted: Optional[DataFrame] = None,
+                     inserted: Optional[DataFrame] = None,
+                     actions: Sequence[Any] = (),
+                     data_change: bool = True,
+                     metrics: Callable[[List[AddFile]],
+                                       Optional[Dict[str, str]]]
+                     = lambda adds: None,
+                     user_metadata: Optional[str] = None) -> int:
+        """The one commit of every change that adds data files: append,
+        overwrite, the streaming sink, DELETE, UPDATE, MERGE,
+        replaceWhere, OPTIMIZE and REORG.
+
+        Its inputs are row legs, each a frame over the table's logical
+        columns: ``kept`` rows of the replaced files, ``updated``
+        (pre-image, post-image) frames, ``deleted`` and ``inserted``
+        rows. Under row tracking every leg but ``inserted`` carries
+        ``_row_id``/``_row_commit_version`` as
         ``Snapshot.to_df(with_row_ids=True)`` yields them. ``removes``
-        are the files the rewrite replaces; ``actions`` join the same
-        commit (a DV delete's re-adds).
+        is the list of files the commit replaces, or ``_WHOLE_TABLE``.
+        ``actions`` join the same commit (SetTransaction,
+        DomainMetadata, a DV delete's re-adds). ``data_change=False``
+        marks a layout-only rewrite (OPTIMIZE, REORG: a kept leg).
+        ``metrics(adds)`` gives the commit's operationMetrics.
 
-        Every rewrite shares these steps:
-        - post-images and inserted rows pass the CHECK constraints,
-          invariants and generated-column expressions;
+        The rules, each stated here once:
+        - metadata: the effective one, ``txn.new_metadata`` or the
+          snapshot's, so creating and schema-evolving appends commit
+          here too;
+        - new rows (inserted rows and post-images) conform, in order:
+          identity values are allocated for inserted rows (a supplied
+          one is refused); an absent generated column is computed, a
+          present one checked; CHECK constraints; invariants;
         - row tracking: rows keep their id unless inserted, and their
           commit version unless this commit changes them — a NULL
           falls back to the new file's defaultRowCommitVersion (or, in
-          the change feed, to ``_commit_version``);
+          the change feed, to ``_commit_version``). A kept leg thus
+          materializes its ids into the rewritten files, so OPTIMIZE
+          and REORG never renumber rows (fresh baseRowId + row-index
+          ids would);
         - with CDF on, the change rows (pre/post images, deleted and
           inserted rows) are derived from the legs and staged in the
           data write's own job (writer.py's CDC layout). A commit that
           only drops whole files and adds new ones writes none: the
           change reader synthesizes it exactly from its actions;
-        - one staging call, then one commit."""
-        meta = txn.snapshot.metadata
+        - one staging call; partition columns, stats width, schema
+          order, bloom columns and physical names all come from the
+          effective metadata;
+        - one commit: whole-table removes stream off ``files_df``
+          through ``commit_stream``; every other commit goes through
+          ``txn.commit``."""
+        meta = txn.new_metadata or txn.snapshot.metadata
         conf = TableConfig(meta.configuration)
         tcols = [f.name for f in meta.schema.fields]
         rt_cols = materialized_rt_cols(meta) if conf.enable_row_tracking \
             else None
+        what = {"UPDATE": "updated", "MERGE": "merged",
+                "STREAMING UPDATE": "streamed"}.get(operation, "written")
 
-        def leg(df, row_id: bool, commit_version: bool,
+        def conform(df: DataFrame, insert: bool) -> DataFrame:
+            if insert:
+                df = _apply_identity(txn, df, meta)
+            df = _fill_and_check_generated(df, meta, what)
+            _enforce_constraints(df, meta.configuration, what)
+            _enforce_invariants(df, meta, what)
+            return df
+
+        def leg(df, keep_version: Optional[bool],
                 change_type: Optional[str] = None) -> DataFrame:
-            cols = [F.col(c) for c in tcols]
-            if rt_cols is not None:
-                null = F.lit(None).cast("long")
-                cols += [(F.col("_row_id") if row_id else null)
-                         .alias(rt_cols[0]),
-                         (F.col("_row_commit_version") if commit_version
-                          else null).alias(rt_cols[1])]
+            # keep_version None is an inserted frame: it already holds
+            # exactly the table's columns and no row ids, which the
+            # union fills with NULL (a pure append writes none)
+            cols: List[Any] = ["*"] if keep_version is None \
+                else [F.col(c) for c in tcols]
+            if rt_cols is not None and keep_version is not None:
+                cols += [F.col("_row_id").alias(rt_cols[0]),
+                         (F.col("_row_commit_version") if keep_version
+                          else F.lit(None).cast("long")).alias(rt_cols[1])]
             if change_type is not None:
                 cols.append(F.lit(change_type).alias(CHANGE_TYPE_COL))
             return df.select(*cols)
 
-        what = {"UPDATE": "updated", "MERGE": "merged"}.get(operation,
-                                                             "written")
+        def union(frames: List[DataFrame]) -> DataFrame:
+            return functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                frames)
+
         data: List[DataFrame] = []
-        changes: List[DataFrame] = []
-        new_rows: List[DataFrame] = []
+        changes: List[Tuple[DataFrame, Optional[bool], str]] = []
         if kept is not None:
-            data.append(leg(kept, True, True))
+            data.append(leg(kept, True))
         if updated is not None:
-            pre, post = updated
-            new_rows.append(post)
-            data.append(leg(post, True, False))
-            changes += [leg(pre, True, True, "update_preimage"),
-                        leg(post, True, False, "update_postimage")]
+            pre, post = updated[0], conform(updated[1], insert=False)
+            data.append(leg(post, False))
+            changes += [(pre, True, "update_preimage"),
+                        (post, False, "update_postimage")]
         if deleted is not None:
-            changes.append(leg(deleted, True, True, "delete"))
+            changes.append((deleted, True, "delete"))
         if inserted is not None:
-            new_rows.append(inserted)
-            data.append(leg(inserted, False, False))
-            changes.append(leg(inserted, False, False, "insert"))
-        for df in new_rows:
-            _enforce_constraints(df, meta.configuration, what)
-            _enforce_invariants(df, meta, what)
-            _fill_and_check_generated(df, meta, what)
+            inserted = conform(inserted, insert=True)
+            data.append(inserted)
+            changes.append((inserted, None, "insert"))
         cdc = None
         if conf.enable_change_data_feed and changes \
                 and (kept is not None or updated is not None
                      or deleted is not None):
-            cdc = functools.reduce(DataFrame.unionByName, changes)
+            cdc = union([leg(*c) for c in changes])
         adds: List[AddFile] = []
         cdcs: List[Any] = []
         if data:
             staged = stage_and_collect(
-                functools.reduce(DataFrame.unionByName, data),
+                union(data),
                 self.log.table_path, meta.partitionColumns,
-                num_indexed_cols=_n_indexed(meta.configuration),
-                bloom_cfg=_bloom(meta.configuration),
+                data_change=data_change,
+                num_indexed_cols=conf.data_skipping_num_indexed_cols,
+                schema_cols=tcols,
+                bloom_cfg=bloom_config(meta.configuration),
                 physical_meta=meta, cdc_df=cdc)
             adds, cdcs = staged if cdc is not None else (staged, [])
         elif cdc is not None:
@@ -1279,9 +1289,30 @@ class DeltaTable:
                                          meta.partitionColumns,
                                          physical_meta=meta)
         now = int(time.time() * 1000)
+        if removes is _WHOLE_TABLE:
+            # every live file: an O(table-width) action set, streamed
+            # like CLONE/RESTORE (the adds are this commit's own output,
+            # already O(new files) on the driver)
+            txn.read_whole_table()
+            files_df = txn.snapshot.files_df
+
+            def files():
+                for r in files_df.toLocalIterator():
+                    yield addfiles_from_rows([r])[0].remove(
+                        now, data_change=data_change)
+                yield from adds
+
+            return txn.commit_stream(
+                list(actions) + cdcs, files, has_removes=True,
+                data_change=data_change, operation=operation,
+                operation_parameters=params,
+                operation_metrics=metrics(adds),
+                user_metadata=user_metadata)
         return txn.commit(
-            list(adds) + [f.remove(now) for f in removes] + list(actions)
-            + list(cdcs), operation, params, operation_metrics=metrics)
+            list(adds) + [f.remove(now, data_change=data_change)
+                          for f in removes] + list(actions) + cdcs,
+            operation, params, operation_metrics=metrics(adds),
+            user_metadata=user_metadata)
 
     def delete(self, predicate: Optional[Expression] = None,
                deletion_vectors: bool = False) -> int:
@@ -1296,22 +1327,20 @@ class DeltaTable:
         if snap is None:
             raise FileNotFoundError("table does not exist")
         if predicate is None:
-            txn.read_whole_table()
-            return self._commit_rewrite(txn, "DELETE",
-                                        {"predicate": "true"},
-                                        snap.all_files())
+            return self._commit_legs(txn, "DELETE", {"predicate": "true"},
+                                     _WHOLE_TABLE)
         candidates = txn.mark_files_as_read(predicate)
         residual = DeltaScan(snap, predicate).residual
         if residual is not None and deletion_vectors:
             return self._delete_with_dv(txn, snap, predicate, candidates)
         if residual is None:
             # whole-file delete: metadata-only even with CDF on
-            return self._commit_rewrite(txn, "DELETE", {}, candidates)
+            return self._commit_legs(txn, "DELETE", {}, candidates)
         df = _scan_rows(snap, candidates)
         hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
-        return self._commit_rewrite(txn, "DELETE", {}, candidates,
-                                    kept=df.where(~hit),
-                                    deleted=df.where(hit))
+        return self._commit_legs(txn, "DELETE", {}, candidates,
+                                 kept=df.where(~hit),
+                                 deleted=df.where(hit))
 
     def _delete_with_dv(self, txn, snap, predicate, candidates) -> int:
         """Row-level delete via deletion vectors: the touched files stay
@@ -1368,11 +1397,11 @@ class DeltaTable:
             tags[DV_CARD_TAG] = str(counts.get(p, 0))
             readds.append(dataclasses.replace(
                 f, tags=tags, dataChange=True))
-        return self._commit_rewrite(
+        dv_metrics = {"numDeletedRows": str(hits.count()),
+                      "numDeletionVectorsAdded": str(len(touched))}
+        return self._commit_legs(
             txn, "DELETE", params, [cand[p] for p in touched],
-            deleted=hits, actions=readds,
-            metrics={"numDeletedRows": str(hits.count()),
-                     "numDeletionVectorsAdded": str(len(touched))})
+            deleted=hits, actions=readds, metrics=lambda adds: dv_metrics)
 
     def update(self, set_exprs: Dict[str, Any],
                predicate: Optional[Expression] = None) -> int:
@@ -1400,18 +1429,16 @@ class DeltaTable:
             # three legs read the hit rows: post-image data, and both
             # change images
             hits = _materialize(hits, _stats_numrecords_bound(candidates))
+        # A generated column the SET list doesn't assign is dropped, so
+        # the commit recomputes it (delta-spark recomputes in this path
+        # rather than failing the stale value against the expression).
+        gens = _generated_exprs(snap.metadata)
         post = hits.select(*[
             (_as_col(set_exprs[c]) if c in set_exprs else F.col(c)).alias(c)
-            for c in hits.columns])
-        # Recompute generated columns the SET list doesn't assign
-        # (delta-spark recomputes in this path rather than failing the
-        # stale value against the expression).
-        for g, (gdt, gexpr) in _generated_exprs(snap.metadata).items():
-            if g not in set_exprs:
-                post = post.withColumn(g, F.expr(gexpr).cast(gdt))
-        return self._commit_rewrite(txn, "UPDATE", {}, candidates,
-                                    kept=marked.where(~F.col("__hit")),
-                                    updated=(hits, post))
+            for c in hits.columns if c in set_exprs or c not in gens])
+        return self._commit_legs(txn, "UPDATE", {}, candidates,
+                                 kept=marked.where(~F.col("__hit")),
+                                 updated=(hits, post))
 
     def merge(self, source: DataFrame, condition,
               when_matched_update: Optional[Dict[str, Any]] = None,
@@ -1463,7 +1490,6 @@ class DeltaTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
 
         meta = snap.metadata
-        from .log.snapshot import addfiles_from_rows
         rt = TableConfig(meta.configuration).enable_row_tracking
         rid = ["_row_id", "_row_commit_version"] if rt else []
         tcols = [f.name for f in meta.schema.fields]
@@ -1521,48 +1547,28 @@ class DeltaTable:
                              *rid)
         updated = deleted = inserted = None
         if when_matched_update is not None:
+            # a generated column the SET list doesn't assign is dropped:
+            # the commit recomputes it
             post = matched.select(*[
                 F.col(f"__u_{c}" if c in when_matched_update
-                      else f"__t_{c}").alias(c) for c in tcols], *rid)
-            # Recompute generated columns the SET list doesn't assign
-            # (delta-spark recomputes on update).
-            for g, (gdt, gexpr) in gens.items():
-                if g not in when_matched_update:
-                    post = post.withColumn(g, F.expr(gexpr).cast(gdt))
+                      else f"__t_{c}").alias(c) for c in tcols
+                if c in when_matched_update or c not in gens], *rid)
             updated = (pre, post)
         elif when_matched_delete:
             deleted = pre
         else:
             kept = kept.unionByName(pre)
         if when_not_matched_insert:
+            # the commit fills the generated and identity columns the
+            # source lacks; other absent columns insert as NULL
             scols = set(source.columns)
+            fill = _filled_cols(meta)
             inserted = (src.join(target, cond, "left_anti")
                         .select(*[(F.col(f"s.{c}") if c in scols
                                    else F.lit(None)).alias(c)
-                                  for c in tcols]))
-            # Compute generated columns the source doesn't carry —
-            # the NULL placeholder injected above is not a user-
-            # supplied value and must not be validated against the
-            # expression (delta-spark computes generated columns in
-            # the insert path).
-            for g, (gdt, gexpr) in gens.items():
-                if g not in scols:
-                    inserted = inserted.withColumn(
-                        g, F.expr(gexpr).cast(gdt))
-            # Identity columns: allocate fresh values for inserted rows
-            # (GENERATED ALWAYS AS IDENTITY can never come from the
-            # source) and stage the advanced high-water mark on this
-            # txn — same commit as the data, like _apply_identity.
-            idcols = _identity_cols(meta)
-            if idcols:
-                if any(c in scols for c in idcols):
-                    raise DeltaError(
-                        f"columns {sorted(set(idcols) & scols)} are "
-                        f"GENERATED ALWAYS AS IDENTITY and cannot be "
-                        f"supplied by the merge source")
-                inserted = _apply_identity(
-                    txn, inserted.drop(*idcols), txn.new_metadata or meta)
-        return self._commit_rewrite(
+                                  for c in tcols
+                                  if c in scols or c not in fill]))
+        return self._commit_legs(
             txn, "MERGE", {"predicate": str(condition)}, touched,
             kept=kept, updated=updated, deleted=deleted, inserted=inserted)
 
@@ -1756,7 +1762,6 @@ class DeltaTable:
             # action at a time (VERDICT r10 #8), the commit JSON is
             # written incrementally through the LogStore. Paths are
             # physical; the commit's relativize encodes them.
-            from .log.snapshot import addfiles_from_rows
             for r in src.files_df.toLocalIterator():
                 f = addfiles_from_rows([r])[0]
                 new_path = (os.path.join(tgt_root, _dest_rel(f.path))
@@ -1807,11 +1812,18 @@ class DeltaTable:
                 "filesCloned": n_files, "bytesCloned": bytes_cloned}
 
 
-def _bloom(configuration):
-    """Bloom-skipping write config (columns, m, k) or None — see
-    connectors_spark/bloom.py."""
-    from .bloom import bloom_config
-    return bloom_config(configuration)
+def _nested_fields(dtype) -> Any:
+    """The nested field names of a data type, leaf types erased: two
+    columns whose values hold different field sets compare unequal."""
+    if isinstance(dtype, T.StructType):
+        return frozenset((f.name, _nested_fields(f.dataType))
+                         for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return ("array", _nested_fields(dtype.elementType))
+    if isinstance(dtype, T.MapType):
+        return ("map", _nested_fields(dtype.keyType),
+                _nested_fields(dtype.valueType))
+    return None
 
 
 def _parse_dtype(ddl: str):
@@ -1820,11 +1832,6 @@ def _parse_dtype(ddl: str):
         return T.DataType.fromDDL(ddl)
     except AttributeError:                      # older pyspark
         return T._parse_datatype_string(ddl)
-
-
-def _n_indexed(configuration) -> int:
-    """delta.dataSkippingNumIndexedCols for a metadata configuration."""
-    return TableConfig(configuration or {}).data_skipping_num_indexed_cols
 
 
 def _enforce_constraints(df: DataFrame, configuration: Dict[str, str],
@@ -2040,6 +2047,12 @@ def _apply_identity(txn, df: DataFrame, meta) -> DataFrame:
         txn.update_metadata(dataclasses.replace(
             base, schemaString=json.dumps(new_schema.jsonValue())))
     return df
+
+
+def _filled_cols(meta) -> set:
+    """Columns an incoming frame may omit: the commit's conformance
+    fills generated and identity columns."""
+    return set(_generated_exprs(meta)) | set(_identity_cols(meta))
 
 
 _ZORDER_BITS = 16
@@ -2326,6 +2339,26 @@ def _compact_log_range(log, table_path: str, start: int,
             "actionsOut": len(acts)}
 
 
+def _rewrite_files(table: DeltaTable, txn, operation: str,
+                   params: Dict[str, str], victims: List[AddFile],
+                   df: DataFrame, actions: Sequence[Any] = ()
+                   ) -> Tuple[int, int]:
+    """Commit ``df`` — the rows of ``victims``, with their row ids under
+    row tracking — in place of ``victims`` as a layout-only
+    (dataChange=false) rewrite. Returns (version, files added)."""
+    recorded: Dict[str, str] = {}
+
+    def metrics(adds):
+        recorded.update(numRemovedFiles=str(len(victims)),
+                        numAddedFiles=str(len(adds)))
+        return recorded
+
+    version = table._commit_legs(txn, operation, params, victims, kept=df,
+                                 actions=actions, data_change=False,
+                                 metrics=metrics)
+    return version, int(recorded["numAddedFiles"])
+
+
 class TableMaintenance:
     """OPTIMIZE (small-file bin-packing) and VACUUM (physical removal of
     unreferenced files) — the operational pair that keeps a 100 TB table
@@ -2397,7 +2430,6 @@ class TableMaintenance:
         # Pre-filter candidates IN the DataFrame: only bin-packable
         # files (or, for Z-order, the full rewrite set — inherent) are
         # collected; a mostly-compacted table collects near-nothing.
-        from .log.snapshot import addfiles_from_rows
         cand_df = snap.files_local_df if cluster_by is not None \
             else snap.files_local_df.where(F.col("size") < target_file_size)
         if where is not None:
@@ -2481,18 +2513,7 @@ class TableMaintenance:
                     continue
             rt = TableConfig(
                 snap.metadata.configuration).enable_row_tracking
-            if rt:
-                # Row tracking: a rewrite MATERIALIZES each row's id and
-                # commit version into the written files (the spec's
-                # stable-row-id requirement — fresh baseRowId+index ids
-                # would renumber under compaction). The read side
-                # prefers these columns when present.
-                rid_c, rcv_c = materialized_rt_cols(snap.metadata)
-                df = (snap.to_df(files=subset, with_row_ids=True)
-                      .withColumnRenamed("_row_id", rid_c)
-                      .withColumnRenamed("_row_commit_version", rcv_c))
-            else:
-                df = snap.to_df(files=subset)
+            df = snap.to_df(files=subset, with_row_ids=rt)
             total = sum(f.size for f in victims)
             n_out = max(1, -(-total // target_file_size))
             if cluster_by:
@@ -2503,36 +2524,23 @@ class TableMaintenance:
                       .sortWithinPartitions("_z").drop("_z"))
             else:
                 df = df.repartition(n_out)
-            adds = stage_and_collect(
-                df, t.path, pcols, data_change=False,
-                num_indexed_cols=_n_indexed(snap.metadata.configuration),
-                bloom_cfg=_bloom(snap.metadata.configuration),
-                physical_meta=snap.metadata)
-            now = int(time.time() * 1000)
-            actions: List[Any] = list(adds) + [
-                f.remove(now, data_change=False) for f in victims]
-            if cluster_by:
-                # record the clustering layout as table state (the
-                # delta.clustering metadata domain delta-spark's liquid
-                # clustering writes): readers and later OPTIMIZE runs
-                # can discover WHICH columns the files are clustered on
-                # without scanning history
-                from .log.actions import DomainMetadata
-                actions.append(DomainMetadata(
-                    "delta.clustering",
-                    json.dumps({"clusteringColumns": list(cluster_by),
-                                "curve": "hilbert" if hilbert_by
-                                else "zorder"},
-                               separators=(",", ":"))))
-            version = txn.commit(
-                actions, operation="OPTIMIZE",
-                operation_parameters=dict(
-                    params, batch=f"{bi + 1}/{len(batches)}")
-                if len(batches) > 1 else params,
-                operation_metrics={"numRemovedFiles": str(len(victims)),
-                                   "numAddedFiles": str(len(adds))})
+            # record the clustering layout as table state (the
+            # delta.clustering metadata domain delta-spark's liquid
+            # clustering writes): readers and later OPTIMIZE runs can
+            # discover WHICH columns the files are clustered on without
+            # scanning history
+            layout = [DomainMetadata(
+                "delta.clustering",
+                json.dumps({"clusteringColumns": list(cluster_by),
+                            "curve": "hilbert" if hilbert_by
+                            else "zorder"}, separators=(",", ":")))] \
+                if cluster_by else []
+            version, added = _rewrite_files(
+                t, txn, "OPTIMIZE",
+                dict(params, batch=f"{bi + 1}/{len(batches)}")
+                if len(batches) > 1 else params, victims, df, layout)
             n_removed += len(victims)
-            n_added += len(adds)
+            n_added += added
         return {"filesRemoved": n_removed, "filesAdded": n_added,
                 "version": version}
 
@@ -2565,22 +2573,12 @@ class TableMaintenance:
         cand_paths = {f.path for f in victims}
         subset = [r for r in snap._files_rows
                   if r["path"] in cand_paths]
-        df = snap.to_df(files=subset)  # DV anti-join applied here
-        adds = stage_and_collect(
-            df, t.path, snap.metadata.partitionColumns,
-            data_change=False,
-            num_indexed_cols=_n_indexed(snap.metadata.configuration),
-            bloom_cfg=_bloom(snap.metadata.configuration),
-            physical_meta=snap.metadata)
-        now = int(time.time() * 1000)
-        actions: List[Any] = list(adds) + [
-            f.remove(now, data_change=False) for f in victims]
-        version = txn.commit(
-            actions, operation="REORG",
-            operation_parameters={"applyPurge": "true"},
-            operation_metrics={"numRemovedFiles": str(len(victims)),
-                               "numAddedFiles": str(len(adds))})
-        return {"filesPurged": len(victims), "filesAdded": len(adds),
+        # the DV anti-join applies here
+        df = snap.to_df(files=subset, with_row_ids=TableConfig(
+            snap.metadata.configuration).enable_row_tracking)
+        version, added = _rewrite_files(
+            t, txn, "REORG", {"applyPurge": "true"}, victims, df)
+        return {"filesPurged": len(victims), "filesAdded": added,
                 "version": version}
 
     def restore(self, version: Optional[int] = None,
@@ -2608,7 +2606,6 @@ class TableMaintenance:
         txn.read_whole_table()
 
         from .dv import DV_TAG
-        from .log.snapshot import addfiles_from_rows
         # The file-set diff runs as DataFrame joins on files_df (paths
         # are canonical there) — only the DIFF rows, which the commit
         # must enumerate anyway, ever reach the driver. A path present
@@ -2803,7 +2800,6 @@ class TableMaintenance:
                .agg(F.count(F.lit(1)).alias("n"),
                     F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"))
                .first())
-        from .log.actions import DomainMetadata
         crc = cks.VersionChecksum(
             tableSizeBytes=int(row["bytes"]), numFiles=int(row["n"]),
             protocol=snap.protocol, metadata=snap.metadata,

@@ -160,3 +160,53 @@ def test_set_nullable_alter(spark, tmp_path):
                 mode="append")
     with pytest.raises(DeltaError, match="no such column"):
         t.set_nullable("zz", True)
+
+
+def _commit_as(writer, t, df):
+    """Commit ``df`` (keys k >= 100, new to the table) through one of
+    the data-adding writers."""
+    from connectors_spark.streaming.sink import DeltaStreamSink
+    if writer == "append":
+        t.write(df)
+    elif writer == "sink":
+        DeltaStreamSink(t.path, app_id="pin").write_batch(
+            df, t.log.update().version)
+    elif writer == "replace_where":
+        t.write(df, mode="overwrite", replace_where=Col("k") >= Lit(100))
+    else:
+        t.merge(df, "t.k = s.k")
+
+
+@pytest.mark.pin
+@pytest.mark.parametrize("writer", ["append", "sink", "replace_where",
+                                    "merge_insert"])
+def test_writer_contract(spark, tmp_path, writer):
+    """Every writer that adds rows keeps the same contract: CHECK
+    constraints hold, identity values continue from the high-water mark
+    and cannot be supplied, and (for appends) a nested field set that
+    differs from the table's raises instead of being dropped."""
+    def refused(t, df, match):
+        v = t.log.update().version
+        with pytest.raises(DeltaError, match=match):
+            _commit_as(writer, t, df)
+        assert t.log.update().version == v
+
+    t = DeltaTable.for_path(spark, str(tmp_path / "chk"))
+    t.write(spark.createDataFrame([Row(k=1, x=1)]))
+    t.add_constraint("pos", "x > 0")
+    refused(t, spark.createDataFrame([Row(k=100, x=-7)]),
+            "CHECK constraint pos")
+    assert [r.x for r in t.to_df().collect()] == [1]
+
+    t = DeltaTable.for_path(spark, str(tmp_path / "ident"))
+    t.write(spark.createDataFrame([Row(k=1)]),
+            identity_columns={"id": ("bigint", 1, 1)})
+    _commit_as(writer, t, spark.createDataFrame([Row(k=100), Row(k=101)]))
+    assert sorted(r.id for r in t.to_df().collect()) == [1, 2, 3]
+    refused(t, spark.createDataFrame([Row(k=102, id=50)]), "IDENTITY")
+
+    if writer in ("append", "sink"):
+        t = DeltaTable.for_path(spark, str(tmp_path / "nested"))
+        t.write(spark.createDataFrame([Row(k=1, s=Row(a=1))]))
+        refused(t, spark.createDataFrame([Row(k=100, s=Row(a=2, b=3))]),
+                "schema mismatch")

@@ -104,6 +104,12 @@ def test_row_ids_materialized_through_optimize(spark, tmp_path):
     assert res["filesRemoved"] >= 2
     after = _rids(t)
     assert after == before  # ids AND commit versions survive the rewrite
+    # REORG's purge rewrite keeps them too
+    t.delete(Col("id") < Lit(10), deletion_vectors=True)
+    before = _rids(t)
+    assert len(before) == 90
+    assert TableMaintenance(t).reorg_purge()["filesPurged"] >= 1
+    assert _rids(t) == before
 
 
 def test_row_ids_stable_under_rewrite_delete_and_update(spark, tmp_path):
