@@ -6,23 +6,18 @@ the clustering key (every file's [min, max] spans the probe). A
 per-file Bloom filter over the column's distinct values answers
 ``col = literal`` / ``col IN (...)`` probabilistically: a clean miss
 PROVES the file cannot contain the value, so the scan skips it; a hit
-keeps the file (false positives only cost I/O, never correctness —
-the same never-skip-on-missing-evidence stance as stats skipping).
+keeps the file (false positives only cost I/O, never correctness).
 
-This is the Delta bloom-filter index re-expressed through the action
-model the reference already carries: the filter rides ``AddFile.tags``
-(``bloom.<col>`` → ``"<m>:<k>:<hex>"``), the file-level annotation
-channel the reference reserves for exactly this kind of metadata
-(actions.scala:109-132). Writers build filters during the SAME
-distributed publish pass that footer-reads stats (writer.publish_plan);
-the scan-side test is a pure Column expression over ``files_df`` —
-at 100 TB the file inventory is a DataFrame, so skipping must never
-collect it.
-
-Self-describing tags: m and k are stored per file, so a config change
-between writes never mis-tests old files — the probe recomputes each
-file's bit positions from ITS m (Column arithmetic), and files without
-a tag are kept.
+The filter rides ``AddFile.tags`` (``bloom.<col>`` → ``"<m>:<k>:<hex>"``),
+the file-level annotation channel the reference reserves for exactly
+this kind of metadata (actions.scala:109-132). Writers build filters in
+the SAME distributed publish pass that footer-reads stats
+(writer.publish_plan). The pruner (scan.py, which states when it probes)
+hashes its values once per scan with :func:`bloom_hashes` and tests them
+against each file's tag with :func:`bloom_may_contain`. Tags are
+self-describing: the probe computes a file's bit positions from ITS m
+and k, so a config change between writes never mis-tests old files, and
+files without a tag are kept.
 
 Sizing: with n distinct values per file, fpp ≈ (1 - e^(-kn/m))^k.
 By default m is AUTO-SIZED per file (~10 bits per distinct value →
@@ -45,7 +40,7 @@ from __future__ import annotations
 import hashlib
 from typing import Dict, Iterable, List, Optional, Tuple
 
-from pyspark.sql import functions as F
+import numpy as np
 
 BLOOM_COLUMNS_KEY = "delta.dataSkipping.bloomFilter.columns"
 BLOOM_BITS_KEY = "delta.dataSkipping.bloomFilter.numBits"
@@ -54,7 +49,7 @@ TAG_PREFIX = "bloom."
 
 DEFAULT_BITS = 16384
 DEFAULT_HASHES = 7
-_MAX_HASHES = 16        # scan-side unroll bound (k per file may vary)
+_MAX_HASHES = 16        # config bound on k (k per file may vary)
 
 
 def bloom_config(configuration: Optional[Dict[str, str]]
@@ -113,17 +108,15 @@ def _hashes64(key: str) -> Tuple[int, int]:
 
 def build_bloom_hex(values: Iterable, m: int, k: int) -> Optional[str]:
     """Hex filter over the values' canonical keys. Bit p lives in hex
-    char p//4 at bit p%4 (nibble-wise layout so the Column-side test
-    is one substr + conv per probe position). Returns None when no
-    value was hashable (no tag — the file is always kept).
+    char p//4 at bit p%4 (nibble-wise layout: the probe reads one hex
+    char per position). Returns None when no value was hashable (no
+    tag — the file is always kept).
 
     The md5 per distinct value is irreducible Python, but the k
     position computations and bit sets are vectorized numpy over the
     whole (h1, h2) array — at ~60k distinct values/file the scalar
-    loop dominated the publish pass. Positions use the same
-    mod-m-before-scaling reduction as the Column-side probe, so every
-    intermediate fits in int64."""
-    import numpy as np
+    loop dominated the publish pass. Positions reduce mod m before
+    scaling, as the probe does, so every intermediate fits in int64."""
     h1s, h2s = [], []
     for v in values:
         key = bloom_key(v)
@@ -149,86 +142,34 @@ def bloom_tag_value(hex_filter: str, m: int, k: int) -> str:
     return f"{m}:{k}:{hex_filter}"
 
 
-def bloom_keep_column(tag_col, value) -> Optional[F.Column]:
-    """Keep-file Column testing ``value`` against a file's
-    self-describing bloom tag (``m:k:hex``). NULL tag → keep. The
-    file's own m and k drive the positions, so filters written under
-    older configs stay sound.
-
-    Built as ONE higher-order ``forall`` over the k probe positions
-    (lambda-bound index), not an unrolled when-chain: an IN list can
-    put dozens of these on a single scan, and unrolled trees made
-    ANALYSIS — not execution — the bottleneck (~1 s/probe). The
-    60-bit hashes are reduced mod the FILE's m before scaling by i
-    ((h1 + i*h2) % m == ((h1%m) + i*(h2%m)) % m), keeping every
-    intermediate far under long range in ANSI mode."""
-    key = bloom_key(value)
-    if key is None:
-        return None
-    h1, h2 = _hashes64(key)
-    m, k, hx = _tag_parts(tag_col)
-    keep = _hit_expr(m, k, hx, F.lit(h1) % m, F.lit(h2) % m)
-    # NULL-tag fast path: CaseWhen short-circuits per row, so files
-    # without a bloom tag (untagged tables, non-bloom'd columns) never
-    # evaluate the probe expression at all — without this they'd walk
-    # the whole NULL-propagating probe tree just to coalesce to True
-    return F.when(tag_col.isNull(), F.lit(True)) \
-        .otherwise(F.coalesce(keep, F.lit(True)))
-
-
-def _tag_parts(tag_col):
-    parts = F.split(tag_col, ":")
-    return (parts.getItem(0).cast("long"), parts.getItem(1).cast("int"),
-            parts.getItem(2))
-
-
-def _hit_expr(m, k, hx, h1c, h2c):
-    """All-k-bits-set test for one (h1 mod m, h2 mod m) pair against a
-    file's hex filter — the shared probe core."""
-    bit_of = F.array(F.lit(1), F.lit(2), F.lit(4), F.lit(8))
-
-    def probe(i):
-        p = (h1c + i.cast("long") * h2c) % m
-        ch = hx.substr((p / F.lit(4)).cast("long") + F.lit(1), F.lit(1))
-        nib = F.conv(ch, 16, 10).cast("long")
-        mask = F.element_at(bit_of, (p % F.lit(4)).cast("int")
-                            + F.lit(1)).cast("long")
-        return nib.bitwiseAND(mask) != F.lit(0)
-
-    return F.forall(F.sequence(F.lit(0), k - F.lit(1)), probe)
-
-
-def bloom_keep_any_column(tag_col, values) -> Optional[F.Column]:
-    """Keep-file Column for ``col IN (values)``: the file survives iff
-    ANY value may be present (a file where every value cleanly misses
-    provably serves none of them). The hash pairs are driver-computed
-    and shipped as TWO array literals; the test is one short-circuiting
-    ``exists`` over them wrapping the same ``forall`` probe core — one
-    Column regardless of list size, never an unrolled OR of probes
-    (runtime join-key pruning hands this hundreds of keys).
-
-    Any value outside the hashable domain (NULL, non-int/str) → None:
-    that value carries no evidence, and under OR semantics one
-    unprovable disjunct forfeits the whole test (same soundness stance
-    as stats skipping's OR rule)."""
+def bloom_hashes(values) -> Optional[np.ndarray]:
+    """The (h1, h2) hash pairs of ``values``, one row each; None when any
+    value is out of scope (None, bool, non-int/str): under IN's OR
+    semantics one unprovable value forfeits the whole test."""
     keys = [bloom_key(v) for v in values]
     if not keys or any(key is None for key in keys):
         return None
-    hs = [_hashes64(key) for key in keys]
-    m, k, hx = _tag_parts(tag_col)
-    h1s = F.lit([h[0] for h in hs]).cast("array<long>")
-    h2s = F.lit([h[1] for h in hs]).cast("array<long>")
-    keep = F.exists(
-        F.sequence(F.lit(1), F.lit(len(hs))),
-        lambda j: _hit_expr(m, k, hx,
-                            F.element_at(h1s, j.cast("int")) % m,
-                            F.element_at(h2s, j.cast("int")) % m))
-    # NULL-tag fast path (two-phase evaluation, VERDICT r10 #5): the
-    # n×k interpreted HOF runs ONLY on rows that actually carry a
-    # bloom tag — an untagged file otherwise iterates all n exists
-    # elements propagating NULL before coalescing to True. Combined
-    # with the envelope being the LEFT conjunct in scan.py (Spark's
-    # And short-circuits per row), the expensive probe is evaluated
-    # exactly on envelope-surviving, bloom-tagged files.
-    return F.when(tag_col.isNull(), F.lit(True)) \
-        .otherwise(F.coalesce(keep, F.lit(True)))
+    return np.array([_hashes64(key) for key in keys], dtype=np.int64)
+
+
+# ASCII hex digit -> nibble value
+_NIBBLE = np.zeros(256, dtype=np.int64)
+_NIBBLE[np.frombuffer(b"0123456789abcdef", dtype=np.uint8)] = np.arange(16)
+
+
+def bloom_may_contain(tag: Optional[str], hashes) -> bool:
+    """False only when a file's tag proves every hashed value absent; a
+    missing or unparseable tag, or ``hashes`` of None, keeps the file."""
+    if not tag or hashes is None:
+        return True
+    parts = tag.split(":", 2)
+    try:
+        m, k, hx = int(parts[0]), int(parts[1]), parts[2]
+    except (ValueError, IndexError):
+        return True
+    if m < 4 or len(hx) * 4 < m:
+        return True
+    h = hashes % m
+    pos = (h[:, :1] + np.arange(k) * h[:, 1:]) % m
+    nib = _NIBBLE[np.frombuffer(hx.encode("ascii"), dtype=np.uint8)[pos // 4]]
+    return bool(((nib >> (pos % 4)) & 1).all(axis=1).any())

@@ -1,17 +1,14 @@
-"""Predicate expression tree for partition pruning and conflict detection.
+"""Predicate expression tree for scans, DML scopes and conflict checks.
 
 Re-expresses the reference's strict-eval expression language
 (``standalone/src/main/java/io/delta/standalone/expressions/``: Column,
 Literal, comparisons, And/Or/Not, IsNull/IsNotNull, In) as a small Python
-AST that can
-
-- compile to a ``pyspark.sql.Column`` (vectorized, codegen'd evaluation over
-  ``files_df`` -- E10's file-list filter in one distributed pass), and
-- strictly evaluate against a plain dict of decoded partition values
-  (driver-side use in the conflict checker, ConflictChecker.scala:148-173),
-
-with the same SQL 3-valued null semantics (BinaryExpression.eval returns
-null if either side is null, In.java:79-98 for IN).
+AST. ``eval`` is strict 3-valued evaluation against a dict, with SQL null
+semantics (BinaryExpression.eval returns null if either side is null,
+In.java:79-98 for IN): the file pruner (scan.py) and the conflict checker
+(ConflictChecker.scala:148-173) evaluate partition predicates with it on
+the driver. ``to_column`` compiles the row-level residual a data scan
+applies. :func:`bind` resolves a predicate against the table schema first.
 
 ``split_metadata_and_data`` mirrors
 PartitionUtils.splitMetadataAndDataPredicates (PartitionUtils.scala:61-99):
@@ -21,7 +18,7 @@ prunable; the rest is the residual the data scan applies.
 
 from __future__ import annotations
 
-import datetime as _dt
+import functools
 from dataclasses import dataclass
 from typing import Any, Dict, FrozenSet, List, Optional, Sequence, Tuple
 
@@ -35,8 +32,8 @@ class Expression:
 
     def to_column(self, resolver=F.col) -> SparkColumn:
         """Compile to a Spark Column; ``resolver`` maps a column name to the
-        Column expression to read it from (e.g. a typed partitionValues
-        lookup)."""
+        Column expression to read it from (e.g. replaceWhere's generated
+        column expressions)."""
         raise NotImplementedError
 
     def eval(self, row: Dict[str, Any]) -> Any:
@@ -121,8 +118,6 @@ def _lit(v) -> Expression:
 def _cmp(a: Any, b: Any) -> Optional[int]:
     if a is None or b is None:
         return None
-    if isinstance(a, _dt.datetime) and isinstance(b, _dt.datetime):
-        pass
     return (a > b) - (a < b)
 
 
@@ -311,12 +306,47 @@ def split_metadata_and_data(
         else:
             data.append(c)
 
-    def _combine(parts: List[Expression]) -> Optional[Expression]:
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = And(out, p)
-        return out
+    return (functools.reduce(And, meta) if meta else None,
+            functools.reduce(And, data) if data else None)
 
-    return _combine(meta), _combine(data)
+
+_COMPARISONS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
+                LessThanOrEqual)
+
+
+def bind(expr: Optional[Expression], schema) -> Optional[Expression]:
+    """``expr`` bound to ``schema`` (a StructType) by the bind rule
+    scan.py states; a name the schema lacks stays as written."""
+    from .errors import DeltaError
+    from .partition_values import decode
+    fields = {f.name.lower(): f for f in schema.fields}
+
+    def field(e):
+        return fields.get(e.name.lower()) if isinstance(e, Col) else None
+
+    def go(e, f=None):
+        # ``f``: the field a literal ``e`` is compared with
+        if isinstance(e, Col):
+            return Col(field(e).name) if field(e) else e
+        if isinstance(e, Lit):
+            if f is None or not isinstance(e.value, str) \
+                    or f.dataType.simpleString() == "string":
+                return e
+            try:
+                return Lit(decode(e.value, f.dataType))
+            except (ValueError, ArithmeticError):
+                raise DeltaError(f"cannot cast {e.value!r} to "
+                                 f"{f.dataType.simpleString()} for column "
+                                 f"{f.name}") from None
+        if isinstance(e, _COMPARISONS):
+            return type(e)(go(e.left, field(e.right)),
+                           go(e.right, field(e.left)))
+        if isinstance(e, In):
+            return In(go(e.value), [go(x, field(e.value)) for x in e.elems])
+        if isinstance(e, (And, Or)):
+            return type(e)(go(e.left), go(e.right))
+        if isinstance(e, (Not, IsNull, IsNotNull)):
+            return type(e)(go(e.child))
+        return e
+
+    return None if expr is None else go(expr)

@@ -373,9 +373,9 @@ def replay_planes(segment: LogSegment, deltas, table_path: str
 
 
 def addfiles_from_rows(rows: Sequence) -> List[AddFile]:
-    """Materialize ``files_df`` rows (any filtered subset) as AddFile
-    actions — the bridge from the DataFrame file inventory to the
-    driver-side action list a commit must enumerate."""
+    """Inventory rows (``FILES_SCHEMA``, any subset) as AddFile actions —
+    the bridge from the file inventory to the action list a commit
+    must enumerate."""
     return [AddFile(path=r["path"],
                     partitionValues=dict(r["partitionValues"] or {}),
                     size=r["size"] or 0,
@@ -701,19 +701,20 @@ class Snapshot:
         return self._fold[1]
 
     @cached_property
+    def _inventory(self):
+        """``_files_rows`` in columns for the file pruner (scan.py), built
+        once per Snapshot."""
+        from ..scan import Inventory
+        return Inventory(self._files_rows, self.metadata)
+
+    @cached_property
     def files_local_df(self) -> DataFrame:
-        """``files_df`` as a driver-local relation over the materialized
-        inventory (same schema/rows). Metadata-plane filters and joins
-        (scan pruning, DML file scoping) run against this instead of
-        re-running the log replay; the distributed ``files_df`` plan
-        remains for genuinely distributed consumers (checkpoint
-        writes). ``localCheckpoint`` materializes the rows as JVM
-        InternalRows once — a bare ``createDataFrame`` from Python rows
-        keeps an ``applySchemaToPythonRDD`` step that round-trips
-        through a Python worker on EVERY action over the relation
-        (measured ~0.5 s/job at bench scale); after the checkpoint each
-        consumer job scans plain JVM rows. Freed by the ContextCleaner
-        with the Snapshot."""
+        """``files_df`` as a driver-local relation over ``_files_rows``,
+        for the APIs that return a DataFrame over the inventory
+        (``metadata_aggregates``, ``show_partitions``); perfbench's
+        tracer wraps it by name. Scans never use it. ``localCheckpoint``
+        stores the rows as JVM rows once, so no consumer job round-trips
+        through a Python worker."""
         from ..localrel import local_rows_df
         return (local_rows_df(self.spark, self._files_rows, FILES_SCHEMA)
                 .localCheckpoint(eager=True))
@@ -722,8 +723,7 @@ class Snapshot:
         """Collect active files to the driver. Only for callers whose
         COMMIT must enumerate every file anyway (whole-table overwrite/
         delete removes, clone, restore) and tests — DML paths that touch
-        a subset should filter ``files_df`` and collect just that subset
-        (see ``addfiles_from_rows``)."""
+        a subset take a pruned scan's rows (scan.py)."""
         return addfiles_from_rows(self._files_rows)
 
     # ------------------------------------------------------------------
@@ -905,34 +905,21 @@ class Snapshot:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def to_df(self, files=None,
+    def to_df(self, files: Optional[Sequence] = None,
               residual=None, with_file_col: bool = False,
               with_row_ids: bool = False,
               with_row_index: bool = False) -> DataFrame:
         """DataFrame of table rows for the active files, or for
-        ``files`` (inventory rows or a ``files_df``-shaped DataFrame,
-        e.g. a pruned scan), filtered by ``residual``.
+        ``files`` (inventory rows, e.g. a pruned scan's, or AddFiles
+        whose path is physical), filtered by ``residual``.
 
         Reads through :meth:`read_files`, which states the rules:
         partition values from the log, deletion vectors applied,
         ``with_file_col`` keeps ``__file``, ``with_row_index`` keeps
         ``__ri`` (a DV delete records it) and ``with_row_ids`` appends
         ``_row_id``/``_row_commit_version``."""
-        if files is None:
-            # whole-table read: reuse the per-Snapshot materialized
-            # inventory instead of re-running the log replay job
-            rows = self._files_rows
-        elif isinstance(files, (list, tuple)):
-            # already-materialized inventory rows (DML paths filter
-            # the Snapshot's cached inventory driver-side) — no
-            # createDataFrame → collect round trip
-            rows = list(files)
-        else:
-            sel = ["path", "partitionValues", "tags"]
-            if with_row_ids:
-                sel += ["baseRowId", "defaultRowCommitVersion"]
-            rows = files.select(*sel).collect()
-        df = self.read_files(rows, with_file=with_file_col,
+        df = self.read_files(self._files_rows if files is None else files,
+                             with_file=with_file_col,
                              with_row_index=with_row_index,
                              with_row_ids=with_row_ids)
         return df.where(residual) if residual is not None else df

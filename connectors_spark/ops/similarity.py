@@ -544,7 +544,7 @@ def build_ann_index(corpus: DataFrame, index_path: str, dim: int = 64,
     directory per LSH bucket. Built once, the index turns every ANN query
     into a partition-pruned scan of L buckets instead of a corpus sweep:
     sub-linear reads, and the pruning happens in our own metadata plane
-    (files_df filter) before any Parquet is opened. Returns the committed
+    (the driver-side file pruner) before any Parquet is opened. Returns the committed
     version."""
     from ..table import DeltaTable
     keys = _bucket_keys(vec_col, dim, num_planes, num_tables)

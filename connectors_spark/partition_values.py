@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 from decimal import Decimal
-from typing import Any, Dict, Optional
+from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import types as T
 
@@ -28,9 +28,10 @@ def decode(value: Optional[str], dtype: T.DataType) -> Any:
         return Decimal(value)
     if isinstance(dtype, T.DateType):
         return dt.date.fromisoformat(value)
-    if isinstance(dtype, T.TimestampType):
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         v = value.replace("T", " ")
-        for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S"):
+        for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S",
+                    "%Y-%m-%d"):
             try:
                 return dt.datetime.strptime(v, fmt)
             except ValueError:
@@ -57,7 +58,16 @@ def encode(value: Any) -> Optional[str]:
     return str(value)
 
 
-def decode_row(partition_values: Dict[str, Optional[str]],
-               partition_schema: T.StructType) -> Dict[str, Any]:
-    return {f.name: decode(partition_values.get(f.name), f.dataType)
-            for f in partition_schema.fields}
+def partition_fields(metadata) -> List[Tuple[str, str, T.DataType]]:
+    """(logical name, physical name, type) per partition column."""
+    nmap = metadata.name_map()
+    return [(f.name, nmap[f.name], f.dataType)
+            for f in metadata.partition_schema.fields]
+
+
+def decode_row(partition_values: Optional[Dict[str, Optional[str]]],
+               fields: List[Tuple[str, str, T.DataType]]) -> Dict[str, Any]:
+    """Log partition values (physical keys) decoded by ``fields``, keyed
+    by logical name: the row ``Expression.eval`` evaluates against."""
+    pv = partition_values or {}
+    return {name: decode(pv.get(phys), dtype) for name, phys, dtype in fields}

@@ -57,8 +57,8 @@ def _built(sf_dir: str, case: str, builder: Callable[[str], None]) -> str:
 SELECT * FROM lineitem WHERE l_returnflag = 'R' AND l_quantity < 10
 """, bench=True)
 def delta_scan_prune(spark, sf_dir):
-    # Partition pruning happens on the log (files_df filter) BEFORE any
-    # Parquet is opened: only the l_returnflag=R directory is read; the
+    # Partition pruning happens on the log (the driver-side pruner)
+    # BEFORE any Parquet is opened: only the l_returnflag=R directory is read; the
     # residual l_quantity<10 pushes into the Parquet scan.
     def build(d):
         li = load(spark, sf_dir, "lineitem")
@@ -566,8 +566,7 @@ def delta_join_prune(spark, sf_dir):
         # Range-partitioned by key AND bloom-tagged on it: min/max
         # bounds each file to a key band; the bloom additionally
         # refutes point keys INSIDE a band the file doesn't hold
-        # (bloom_keep_any_column — one exists-expression for the
-        # whole key list, SCALE.md §24).
+        # (the driver-side bloom probe, scan.py).
         DeltaTable.for_path(spark, d).write(
             li.repartitionByRange(8, "l_partkey"),
             configuration={BLOOM_COLUMNS_KEY: "l_partkey"})

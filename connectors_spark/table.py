@@ -99,16 +99,18 @@ def _stats_numrecords_bound(files) -> Optional[int]:
     return total
 
 
+def _small_files(rows, target_size: int) -> List:
+    """The inventory rows below ``target_size`` bytes: the files
+    OPTIMIZE bin-packs and auto-compaction counts."""
+    return [r for r in rows
+            if r["size"] is not None and r["size"] < target_size]
+
+
 def _scan_rows(snap: Snapshot, files, **kw) -> DataFrame:
-    """Rows of ``files`` (the AddFiles a DML rewrites), read from the
-    Snapshot's materialized inventory rows for their paths — never an
-    ``isin`` plan — with ``_row_id``/``_row_commit_version`` under row
-    tracking."""
-    paths = {f.path for f in files}
-    return snap.to_df(
-        files=[r for r in snap._files_rows if r["path"] in paths],
-        with_row_ids=TableConfig(
-            snap.metadata.configuration).enable_row_tracking, **kw)
+    """Rows of ``files`` (the inventory's AddFiles a DML rewrites), with
+    ``_row_id``/``_row_commit_version`` under row tracking."""
+    return snap.to_df(files=files, with_row_ids=TableConfig(
+        snap.metadata.configuration).enable_row_tracking, **kw)
 
 
 def _as_col(v) -> F.Column:
@@ -1085,8 +1087,9 @@ class DeltaTable:
         below the target size, bin-pack them in a follow-up OPTIMIZE
         commit (dataChange=False — change feeds skip it). Keeps
         many-small-append workloads from accreting a file-per-commit
-        layout without a scheduled OPTIMIZE job; the probe is one
-        metadata-plane count, no data read.
+        layout without a scheduled OPTIMIZE job; the probe counts the
+        Snapshot's inventory rows on the driver (``_small_files``), no
+        Spark job and no data read.
 
         Best-effort by contract (delta-spark parity): the data commit
         is already durable when this runs, so ANY failure here — e.g.
@@ -1099,9 +1102,7 @@ class DeltaTable:
             return
         try:
             target = conf.auto_compact_target_size
-            n_small = (self.snapshot().files_df
-                       .where(F.col("size") < target).limit(
-                           conf.auto_compact_min_files).count())
+            n_small = len(_small_files(self.snapshot()._files_rows, target))
             if n_small >= conf.auto_compact_min_files:
                 TableMaintenance(self).optimize(
                     target_file_size=target,
@@ -1478,8 +1479,7 @@ class DeltaTable:
                     f"merge predicate may only reference partition columns "
                     f"{sorted(part_cols)}; got non-partition column(s) "
                     f"{sorted(extra)}")
-            txn.mark_files_as_read(predicate)
-            scoped_files = DeltaScan(snap, predicate).files()
+            scoped_files = txn.mark_files_as_read(predicate)
         target = snap.to_df(files=scoped_files).alias("t")
         # Materialize the source once: it is referenced by three plans
         # (touched-file discovery, matched join, insert anti-join) and a
@@ -1523,10 +1523,9 @@ class DeltaTable:
         # otherwise the (checkpointed) source count stands in (matched
         # ≈ source rows under the usual key-equi condition; a
         # many-to-many fanout can exceed it — the budget is a heuristic
-        # guard, not a hard cap). A partition-scoped merge has its
-        # scoped files as a plan, not rows, so it uses the count.
-        tgt_bound = (_stats_numrecords_bound(snap._files_rows)
-                     if scoped_files is None else None)
+        # guard, not a hard cap).
+        tgt_bound = _stats_numrecords_bound(
+            snap._files_rows if scoped_files is None else scoped_files)
         est = tgt_bound if (tgt_bound is not None
                             and tgt_bound <= _DML_MATERIALIZE_MAX_ROWS) \
             else source.count()
@@ -2427,18 +2426,14 @@ class TableMaintenance:
                 raise DeltaError(
                     f"optimize WHERE may only reference partition "
                     f"columns {sorted(pcols)}; got {sorted(extra)}")
-        # Pre-filter candidates IN the DataFrame: only bin-packable
-        # files (or, for Z-order, the full rewrite set — inherent) are
-        # collected; a mostly-compacted table collects near-nothing.
-        cand_df = snap.files_local_df if cluster_by is not None \
-            else snap.files_local_df.where(F.col("size") < target_file_size)
-        if where is not None:
-            from .scan import DeltaScan
-            cand_df = cand_df.join(
-                DeltaScan(snap, where).files().select("path"),
-                "path", "left_semi")
+        # the WHERE scope's files; only the bin-packable ones unless
+        # clustering, which rewrites the whole scope
+        cand = snap._files_rows if where is None \
+            else DeltaScan(snap, where).rows
+        if cluster_by is None:
+            cand = _small_files(cand, target_file_size)
         groups: Dict[Tuple, List[Any]] = {}
-        for f in addfiles_from_rows(cand_df.collect()):
+        for f in addfiles_from_rows(cand):
             key = tuple((c, (f.partitionValues or {}).get(c)) for c in pcols)
             groups.setdefault(key, []).append(f)
         min_group = 1 if cluster_by else min_files_per_group

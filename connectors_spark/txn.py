@@ -40,7 +40,7 @@ from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
 from .log.logstore import FileAlreadyExistsError
 from .log.snapshot import canonical_path, read_commit, relativize
-from .partition_values import decode_row
+from .partition_values import decode_row, partition_fields
 
 MAX_RETRIES = 10_000_000  # OptimisticTransactionImpl.scala:44
 
@@ -73,13 +73,13 @@ class OptimisticTransaction:
         return self.snapshot.txn_version(app_id)
 
     def mark_files_as_read(self, predicate: Optional[Expression]):
-        """Run a pruned scan and remember predicate + files for conflict
-        detection (W2, OptimisticTransactionImpl.scala:162-172)."""
+        """Run a pruned scan and remember its bound predicate + files for
+        conflict detection (W2, OptimisticTransactionImpl.scala:162-172)."""
         from .scan import DeltaScan
         scan = DeltaScan(self.snapshot, predicate)
         files = scan.collect_files()
-        if predicate is not None:
-            self.read_predicates.append(predicate)
+        if scan.predicate is not None:
+            self.read_predicates.append(scan.predicate)
         else:
             self._read_whole_table = True
         self.read_files.update(f.path for f in files)
@@ -899,13 +899,14 @@ class OptimisticTransaction:
         check_adds = win_adds if (isolation == SERIALIZABLE or not blind_append) \
             else []
         if check_adds and (self._read_whole_table or self.read_predicates):
-            pschema = self.snapshot.metadata.partition_schema \
-                if self.snapshot else None
+            # the pruner's decode (scan.py): physical keys through the
+            # name map, typed by the partition schema
+            pfields = partition_fields(self.snapshot.metadata)
             for a in check_adds:
                 if self._read_whole_table:
                     raise ConcurrentAppendException(
                         f"file added by version {winning_version}: {a.path}")
-                row = decode_row(a.partitionValues, pschema) if pschema else {}
+                row = decode_row(a.partitionValues, pfields)
                 for pred in self.read_predicates:
                     # Conservative three-valued resolution: eval() is None
                     # when the predicate references a column absent from

@@ -15,37 +15,31 @@ from pyspark.sql import functions as F
 from connectors_spark import DeltaTable
 from connectors_spark.bloom import (BLOOM_BITS_KEY, BLOOM_COLUMNS_KEY,
                                     BLOOM_HASHES_KEY, bloom_config,
-                                    bloom_keep_column, bloom_tag_value,
-                                    build_bloom_hex)
+                                    bloom_hashes, bloom_may_contain,
+                                    bloom_tag_value, build_bloom_hex)
 from connectors_spark.expressions import Col, Lit
 
 
-def test_bloom_hex_no_false_negatives_and_skips(spark):
-    """Every inserted value must test positive through the Column-side
+def test_bloom_hex_no_false_negatives_and_skips():
+    """Every inserted value must test positive through the driver-side
     probe; absent values must mostly test negative (fpp sanity)."""
     values = [str(i * 37) for i in range(400)] + list(range(400))
     hx = build_bloom_hex(values, 16384, 7)
     tag = bloom_tag_value(hx, 16384, 7)
-    df = spark.createDataFrame([(tag,)], "t: string")
-    # probe a sample in ONE job (array of keep columns — per-probe
-    # jobs or unrolled trees make ANALYSIS the bottleneck)
     present = values[::5]
     absents = [str(99991 * i) for i in range(1, 101)]
-    row = df.select(
-        F.array(*[bloom_keep_column(F.col("t"), v)
-                  for v in present]).alias("present"),
-        F.array(*[bloom_keep_column(F.col("t"), v)
-                  for v in absents]).alias("absent")).first()
-    assert all(row.present)                      # zero false negatives
-    misses = sum(0 if k else 1 for k in row.absent)
+    # zero false negatives
+    assert all(bloom_may_contain(tag, bloom_hashes([v])) for v in present)
+    misses = sum(0 if bloom_may_contain(tag, bloom_hashes([v])) else 1
+                 for v in absents)
     assert misses > 90                           # ~1% fpp at this load
-    # null tag -> keep (no evidence)
-    assert spark.createDataFrame([(None,)], "t: string").select(
-        bloom_keep_column(F.col("t"), 42).alias("k")).first().k
+    # missing tag -> keep (no evidence)
+    assert bloom_may_contain(None, bloom_hashes([42]))
     # out-of-scope literal types -> no test at all
-    assert bloom_keep_column(F.col("t"), 1.5) is None
-    assert bloom_keep_column(F.col("t"), True) is None
-    assert bloom_keep_column(F.col("t"), None) is None
+    assert bloom_hashes([1.5]) is None
+    assert bloom_hashes([True]) is None
+    assert bloom_hashes([None]) is None
+    assert bloom_may_contain(tag, None)
 
 
 def test_bloom_config_validation():
@@ -203,15 +197,12 @@ def test_auto_sized_filters_stay_selective_at_high_cardinality(spark,
 
 
 def test_large_in_list_bloom_composition(spark, tmp_path):
-    """IN lists past the per-value unroll bound (64) compose ONE
-    any-value bloom test (bloom_keep_any_column) with the min/max
-    envelope: a 100-key probe set with zero table hits reads ZERO
-    files (the envelope alone keeps them all — uid round-robins), a
-    mixed present/absent set stays bit-identical to the unskipped
-    read, and a None in the list forfeits bloom evidence but never
-    range evidence."""
-    from connectors_spark.bloom import bloom_keep_any_column
-    from connectors_spark.expressions import In, Lit as L
+    """IN lists of up to _IN_BLOOM_MAX_VALUES values compose the bloom
+    probe with per-value range containment: a 100-key probe set with
+    zero table hits reads ZERO files (min/max alone keeps them all —
+    uid round-robins), a mixed present/absent set stays bit-identical
+    to the unskipped read, and the bloom probe of a list holding None
+    gives no evidence."""
 
     t = _bloom_table(spark, str(tmp_path / "bigin"))
     total = len(t.snapshot().all_files())
@@ -233,17 +224,13 @@ def test_large_in_list_bloom_composition(spark, tmp_path):
                  .filter(F.col("uid").isin(mixed)).collect())
     assert got == exp and got
     # any-value probe: zero false negatives on a synthetic tag
-    from connectors_spark.bloom import bloom_tag_value, build_bloom_hex
     hx = build_bloom_hex(list(range(500)), 16384, 7)
     tag = bloom_tag_value(hx, 16384, 7)
-    df = spark.createDataFrame([(tag,)], "t: string")
-    assert df.select(bloom_keep_any_column(
-        F.col("t"), [9999991, 123, 9999992]).alias("k")).first().k
-    assert not df.select(bloom_keep_any_column(
-        F.col("t"), [9999991 + i for i in range(50)])
-        .alias("k")).first().k
+    assert bloom_may_contain(tag, bloom_hashes([9999991, 123, 9999992]))
+    assert not bloom_may_contain(
+        tag, bloom_hashes([9999991 + i for i in range(50)]))
     # a None value voids bloom evidence entirely
-    assert bloom_keep_any_column(F.col("t"), [1, None, 3]) is None
-    # past the composition cap: envelope only (sound, looser)
+    assert bloom_hashes([1, None, 3]) is None
+    # past the composition cap: range containment only
     far = [2000003 + i for i in range(300)]
     assert t.scan(Col("uid").isin(*far)).to_df().count() == 0

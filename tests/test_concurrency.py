@@ -21,7 +21,7 @@ from connectors_spark.errors import (ConcurrentAppendException,
                                      ConcurrentTransactionException,
                                      MetadataChangedException,
                                      ProtocolChangedException)
-from connectors_spark.expressions import Col
+from connectors_spark.expressions import Col, Lit
 from connectors_spark.log.actions import SetTransaction
 from tests.conftest import read_table
 
@@ -158,6 +158,29 @@ def test_read_whole_table_vs_delete_conflicts(spark, tmp_path):
     adds1 = _stage(t, orders.limit(50), "O")
     with pytest.raises(ConcurrentDeleteReadException):
         txn1.commit(adds1, "WRITE")
+
+
+@pytest.mark.pin
+@pytest.mark.parametrize("pred,added", [(Col("p") == Lit("1"), 1),
+                                        (Col("p").isin(1, "2"), 2)],
+                         ids=["string_literal", "mixed_in_list"])
+def test_string_literal_on_int_partition_conflicts(spark, tmp_path, pred,
+                                                   added):
+    # A read predicate is recorded bound to the schema: "1" on an int
+    # partition column decodes to 1, so J2 evaluates it against the
+    # concurrent add instead of comparing int with str (TypeError).
+    t = DeltaTable.for_path(spark, str(tmp_path / "sl"))
+    t.write(spark.range(40).select((F.col("id") % 4).cast("int").alias("p"),
+                                   F.col("id").alias("v")),
+            partition_by=["p"])
+    txn = t.log.start_transaction()
+    files = txn.mark_files_as_read(pred)
+    assert files and {f.partitionValues["p"] for f in files} <= {"1", "2"}
+    DeltaTable.for_path(spark, t.path).write(
+        spark.createDataFrame([(added, 99)], "p int, v long"),
+        mode="append")
+    with pytest.raises(ConcurrentAppendException):
+        txn.commit([files[0].remove(int(time.time() * 1000))], "DELETE")
 
 
 def test_read_whole_table_vs_blind_append_conflicts(spark, tmp_path):

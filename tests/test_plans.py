@@ -111,26 +111,51 @@ def test_hilbert_code_is_pure_jvm_expression(spark):
     assert "Python" not in p and "ArrowEval" not in p
 
 
-def test_bloom_skip_plan_never_collects_inventory(spark, tmp_path):
-    # the bloom probe is a Column over the file inventory: the
-    # pruned-files plan must stay a pure DataFrame plan with no Python
-    # EVALUATION nodes (per-file compute stays codegen'd JVM). The
-    # inventory relation itself is the Snapshot's materialized local
-    # state (r14) — its RDD debug name mentions
-    # "applySchemaToPythonRDD", which is a createDataFrame artifact,
-    # not per-row Python execution, so match eval-node names rather
-    # than the bare substring.
-    from pyspark.sql import functions as F
+@pytest.mark.pin
+def test_pruning_on_loaded_inventory_runs_no_spark_job(spark, tmp_path):
+    # Files are chosen on the driver (scan.py): once a Snapshot holds
+    # its inventory, collect_files() and scan(pred).to_df() launch zero
+    # Spark jobs, for partition, stats and bloom predicates and for a
+    # 300-key runtime join-key prune. Counted per statusTracker job
+    # group, with a positive control that the counter sees jobs.
+    import uuid
 
     from connectors_spark import DeltaTable
     from connectors_spark.bloom import BLOOM_COLUMNS_KEY
     from connectors_spark.expressions import Col, Lit
-    t = DeltaTable.for_path(spark, str(tmp_path / "bp"))
-    t.write(spark.range(100).select(F.col("id").alias("uid")),
+    from connectors_spark.scan import DeltaScan, prune_by_join_keys
+    t = DeltaTable.for_path(spark, str(tmp_path / "jobs"))
+    t.write(spark.range(4000).select(F.col("id").alias("uid"),
+                                     (F.col("id") % 4).alias("p"))
+            .repartitionByRange(8, "uid"), partition_by=["p"],
             configuration={BLOOM_COLUMNS_KEY: "uid"})
-    p = plan_of(t.scan(Col("uid") == Lit(7)).files())
-    assert "BatchEvalPython" not in p and "ArrowEval" not in p \
-        and "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p
+    snap = t.snapshot()
+    assert len(snap._files_rows) > 8                  # inventory loaded
+    keys = [r.k for r in spark.range(300)
+            .select((F.col("id") * 3).alias("k")).collect()]
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"prune-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pruning job-count pin")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    preds = {"partition": Col("p") == Lit(1),
+             "stats": Col("uid") >= Lit(3500),
+             "bloom": Col("uid") == Lit(7)}
+    for name, pred in preds.items():
+        assert jobs(lambda: DeltaScan(snap, pred).collect_files()) == 0, name
+        assert jobs(lambda: DeltaScan(snap, pred).to_df()) == 0, name
+    by_keys = prune_by_join_keys(
+        t, "uid", spark.createDataFrame([(k,) for k in keys], "k long"))
+    assert by_keys.snapshot is snap
+    assert jobs(by_keys.to_df) == 0
+    assert 0 < len(by_keys.rows) < len(snap._files_rows)
+    assert jobs(lambda: DeltaScan(snap, preds["stats"]).to_df().count()) > 0
 
 
 def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
@@ -194,25 +219,6 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
             cold.domain_metadata)
     assert snap.set_transactions == {"app-1": 3}
     assert snap.domain_metadata["my.domain"] == "{}"
-
-
-def test_scan_reuses_materialized_inventory(spark, tmp_path):
-    # r14: a Snapshot materializes its active-file inventory once; a
-    # second scan of the same Snapshot must plan over the local
-    # relation (Scan ExistingRDD) instead of re-running the log-replay
-    # window (no parquet/json checkpoint scan, no Window node), and the
-    # materialized row list must be the cached object itself.
-    from pyspark.sql import functions as F
-
-    from connectors_spark import DeltaTable
-    from connectors_spark.expressions import Col, Lit
-    t = DeltaTable.for_path(spark, str(tmp_path / "inv"))
-    t.write(spark.range(100).select(F.col("id").alias("uid")))
-    snap = t.log.snapshot()
-    assert snap._files_rows is snap._files_rows          # cached once
-    p = plan_of(t.scan(Col("uid") == Lit(7)).files())
-    assert "ExistingRDD" in p
-    assert "Window" not in p and "Scan parquet" not in p
 
 
 def test_fuzzy_edit_pairs_no_cartesian(plans):
@@ -682,32 +688,6 @@ def test_trigram_index_probe_prunes_buckets(spark, sf_dir, tmp_path):
                for r in substring_search_indexed(
                    spark, idx, docs, pats).collect()}
     assert indexed == adhoc and len(adhoc) > 0
-
-
-def test_join_key_bloom_prune_plan_stays_pure(spark, tmp_path):
-    # runtime join-key pruning with a >64-key list composes the
-    # any-value bloom test: still ONE Column over files_df — no
-    # Python nodes, no unrolled per-key probe forest (plan length
-    # bounded), inventory never collected
-    from pyspark.sql import functions as F
-
-    from connectors_spark import DeltaTable
-    from connectors_spark.bloom import BLOOM_COLUMNS_KEY
-    from connectors_spark.scan import prune_by_join_keys
-    t = DeltaTable.for_path(spark, str(tmp_path / "jbp"))
-    t.write(spark.range(5000).select(F.col("id").alias("uid"),
-                                     (F.col("id") % 7).alias("v")),
-            configuration={BLOOM_COLUMNS_KEY: "uid"})
-    keys = spark.range(100).select((F.col("id") * 31).alias("k"))
-    scan = prune_by_join_keys(t, "uid", keys)
-    p = plan_of(scan.files())
-    # eval-node names, not the bare substring: the materialized
-    # inventory's RDD debug name contains "applySchemaToPythonRDD"
-    # (createDataFrame artifact, not per-row Python execution)
-    assert "BatchEvalPython" not in p and "ArrowEval" not in p \
-        and "MapInPandas" not in p
-    # one exists-expression, not 100 unrolled forall probes
-    assert p.count("forall") <= 4
 
 
 def test_containment_pairs_no_cartesian(plans):

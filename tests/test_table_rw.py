@@ -143,6 +143,161 @@ def test_disjunctive_stats_skipping(spark, tmp_path):
     assert DeltaScan(snap, unbounded).files().count() == 10
 
 
+# ---------------------------------------------------------------------
+# Pruning matrix: one table exercising every keep rule (scan.py)
+# ---------------------------------------------------------------------
+
+_MX_SCHEMA = ("Part int, q string, i int, b bigint, d double, dt date, "
+              "ts timestamp, s string, dec decimal(10,2)")
+
+
+def _mx_rows(j, part, q):
+    import datetime as dt
+    from decimal import Decimal
+    return [(part, q, 10 * j + k, 1000 * j + 7 * k, j + k / 10,
+             dt.date(2020, 1, 1) + dt.timedelta(days=10 * j + k),
+             dt.datetime(2020, 1, 1) + dt.timedelta(hours=10 * j + k),
+             f"s{j}{k}", Decimal(f"{j}.{k}0")) for k in range(10)]
+
+
+def _matrix_table(spark, path):
+    """Partitioned by (int ``Part``, string ``q``); bloom on ``b``. Six
+    range-banded files, one with some nulls, one whose data columns are
+    all null, one committed without stats, one whose stats do not parse,
+    and one carrying a DV."""
+    import dataclasses
+
+    from connectors_spark.bloom import BLOOM_COLUMNS_KEY
+    from connectors_spark.writer import stage_and_collect
+    t = DeltaTable.for_path(spark, path)
+    layout = [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "b")]
+    for j, (part, q) in enumerate(layout):
+        rows = _mx_rows(j, part, q)
+        if j == 2:
+            rows[3] = (part, q) + (None,) * 7
+        t.write(spark.createDataFrame(rows, _MX_SCHEMA).coalesce(1),
+                partition_by=["Part", "q"], mode="append",
+                configuration={BLOOM_COLUMNS_KEY: "b"} if j == 0 else None)
+    t.write(spark.createDataFrame([(1, "a") + (None,) * 7] * 3, _MX_SCHEMA)
+            .coalesce(1), mode="append")                      # all null
+    adds = stage_and_collect(
+        spark.createDataFrame(_mx_rows(6, 2, "b") + _mx_rows(7, 3, "a"),
+                              _MX_SCHEMA).coalesce(1),
+        path, ["Part", "q"], collect_stats=False)
+    assert len(adds) == 2 and all(a.stats is None for a in adds)
+    bad = '{"numRecords":10,"minValues":{"i":70,'              # truncated
+    adds = [a if a.partitionValues["Part"] == "2"             # no stats
+            else dataclasses.replace(a, stats=bad) for a in adds]
+    t.log.start_transaction().commit(adds, "WRITE", {"mode": "Append"})
+    t.delete(Col("i") == Lit(41), deletion_vectors=True)      # DV
+    return t
+
+
+def _matrix_cases():
+    import datetime as dt
+    from decimal import Decimal
+
+    from connectors_spark.expressions import (
+        EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
+        LessThan, LessThanOrEqual, Not)
+    ops = {"eq": EqualTo, "lt": LessThan, "le": LessThanOrEqual,
+           "gt": GreaterThan, "ge": GreaterThanOrEqual}
+    lits = {"i": 25, "b": 2014, "d": 2.5, "dt": dt.date(2020, 1, 25),
+            "s": "s25", "ts": dt.datetime(2020, 1, 2, 1),
+            "dec": Decimal("2.30"), "Part": 2}
+    cases = {}
+    for c, v in lits.items():
+        full = c in ("i", "b", "dt", "s", "Part")
+        for name, op in ops.items():
+            if full or name in ("eq", "ge"):
+                cases[f"{c}_{name}"] = op(Col(c), Lit(v))
+            if full or name == "lt":
+                cases[f"{c}_{name}_litleft"] = op(Lit(v), Col(c))
+    cases.update({
+        "i_isnull": IsNull(Col("i")), "i_notnull": IsNotNull(Col("i")),
+        "s_isnull": IsNull(Col("s")), "s_notnull": IsNotNull(Col("s")),
+        "b_in3": Col("b").isin(7, 2005, 4063),
+        "b_in100": Col("b").isin(*range(2001, 2201, 2)),
+        "b_in300": Col("b").isin(*range(3001, 3301)),
+        "i_in3": Col("i").isin(5, 33, 999),
+        "i_in100": Col("i").isin(*range(200, 300)),
+        "i_in300": Col("i").isin(*range(15, 915, 3)),
+        "and_part_data": (Col("Part") == Lit(2)) & (Col("i") >= Lit(25)),
+        "or_data": (Col("i") < Lit(5)) | (Col("d") > Lit(4.5)),
+        "or_part_data": (Col("Part") == Lit(1)) | (Col("i") > Lit(45)),
+        "not_part": Not(Col("q") == Lit("a")) & (Col("i") < Lit(30)),
+        "not_data": Not(Col("i") < Lit(40)),
+        "string_lit_int_part": Col("Part") == Lit("2"),
+        "string_lit_int_part_in": Col("Part").isin("1", "3"),
+        "mixed_case_part": Col("part") == Lit(3),
+        "mixed_case_data": (Col("I") > Lit(33)) & (Col("Q") == Lit("b")),
+    })
+    return cases
+
+
+_MATRIX = _matrix_cases()
+# Kept-file counts of the Column pruning plan this pruner replaced, run
+# over the same table (None: it raised KeyError on the mixed-case name).
+_MATRIX_PREVIOUS_KEPT = {
+    "Part_eq": 3, "Part_eq_litleft": 3, "Part_ge": 6, "Part_ge_litleft": 6,
+    "Part_gt": 3, "Part_gt_litleft": 3, "Part_le": 6, "Part_le_litleft": 6,
+    "Part_lt": 3, "Part_lt_litleft": 3,
+    "and_part_data": 3,
+    "b_eq": 4, "b_eq_litleft": 4, "b_ge": 7, "b_ge_litleft": 6, "b_gt": 7,
+    "b_gt_litleft": 6, "b_in100": 4, "b_in3": 5, "b_in300": 4, "b_le": 6,
+    "b_le_litleft": 7, "b_lt": 6, "b_lt_litleft": 7,
+    "d_eq": 4, "d_ge": 7, "d_lt_litleft": 7,
+    "dec_eq": 9, "dec_ge": 9, "dec_lt_litleft": 9,
+    "dt_eq": 4, "dt_eq_litleft": 4, "dt_ge": 7, "dt_ge_litleft": 6,
+    "dt_gt": 7, "dt_gt_litleft": 6, "dt_le": 6, "dt_le_litleft": 7,
+    "dt_lt": 6, "dt_lt_litleft": 7,
+    "i_eq": 4, "i_eq_litleft": 4, "i_ge": 7, "i_ge_litleft": 6, "i_gt": 7,
+    "i_gt_litleft": 6, "i_in100": 3, "i_in3": 5, "i_in300": 8,
+    "i_isnull": 4, "i_le": 6, "i_le_litleft": 7, "i_lt": 6,
+    "i_lt_litleft": 7, "i_notnull": 8,
+    "mixed_case_data": None, "mixed_case_part": None,
+    "not_data": 9, "not_part": 2,
+    "or_data": 6, "or_part_data": 9,
+    "s_eq": 4, "s_eq_litleft": 4, "s_ge": 7, "s_ge_litleft": 6, "s_gt": 7,
+    "s_gt_litleft": 6, "s_isnull": 4, "s_le": 6, "s_le_litleft": 7,
+    "s_lt": 6, "s_lt_litleft": 7, "s_notnull": 8,
+    "string_lit_int_part": 3, "string_lit_int_part_in": 6,
+    "ts_eq": 9, "ts_ge": 9, "ts_lt_litleft": 9,
+}
+
+
+@pytest.fixture(scope="module")
+def matrix_table(spark, tmp_path_factory):
+    t = _matrix_table(spark, str(tmp_path_factory.mktemp("mx") / "t"))
+    snap = t.snapshot()
+    full = snap.to_df(with_file_col=True).localCheckpoint()
+    return t, snap, full
+
+
+@pytest.mark.pin
+@pytest.mark.parametrize("case", sorted(_MATRIX))
+def test_pruning_matrix_exact_and_sound(matrix_table, case):
+    """For each predicate: (a) the pruned scan returns exactly the rows a
+    plain filter does; (b) no skipped file holds a matching row (each
+    file's rows read on their own, DV applied); (c) no more files kept
+    than the replaced Column plan kept."""
+    from collections import Counter
+
+    from connectors_spark.scan import DeltaScan
+    t, snap, full = matrix_table
+    pred = _MATRIX[case]
+    scan = DeltaScan(snap, pred)
+    cols = [c for c in full.columns if c != "__file"]
+    hits = full.where(pred.to_column(F.col)).collect()
+    got = Counter(tuple(r) for r in scan.to_df().select(*cols).collect())
+    assert got == Counter(tuple(r[c] for c in cols) for r in hits)
+    kept = {r["path"] for r in scan.rows}
+    assert {r["__file"] for r in hits} <= kept
+    previous = _MATRIX_PREVIOUS_KEPT[case]
+    assert len(kept) <= (previous if previous is not None
+                         else len(snap._files_rows))
+
+
 def test_replace_where_partial_file_coverage(spark, tmp_path):
     """Non-partition predicate on an unpartitioned table: touched files
     are rewritten keep-rows-only, untouched rows survive byte-exact,
