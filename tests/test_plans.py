@@ -111,51 +111,106 @@ def test_hilbert_code_is_pure_jvm_expression(spark):
     assert "Python" not in p and "ArrowEval" not in p
 
 
-@pytest.mark.pin
-def test_pruning_on_loaded_inventory_runs_no_spark_job(spark, tmp_path):
-    # Files are chosen on the driver (scan.py): once a Snapshot holds
-    # its inventory, collect_files() and scan(pred).to_df() launch zero
-    # Spark jobs, for partition, stats and bloom predicates and for a
-    # 300-key runtime join-key prune. Counted per statusTracker job
-    # group, with a positive control that the counter sees jobs.
-    import uuid
-
+def _loaded_pruning_table(spark, path):
+    # 8 range-partitioned files per partition value, with a bloom
+    # column; the returned Snapshot holds its inventory
     from connectors_spark import DeltaTable
     from connectors_spark.bloom import BLOOM_COLUMNS_KEY
-    from connectors_spark.expressions import Col, Lit
-    from connectors_spark.scan import DeltaScan, prune_by_join_keys
-    t = DeltaTable.for_path(spark, str(tmp_path / "jobs"))
+    t = DeltaTable.for_path(spark, path)
     t.write(spark.range(4000).select(F.col("id").alias("uid"),
                                      (F.col("id") % 4).alias("p"))
             .repartitionByRange(8, "uid"), partition_by=["p"],
             configuration={BLOOM_COLUMNS_KEY: "uid"})
     snap = t.snapshot()
     assert len(snap._files_rows) > 8                  # inventory loaded
+    return t, snap
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a fresh
+    statusTracker job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"prune-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pruning job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_PYTHON_EVAL_NODES = ("BatchEvalPython", "ArrowEval", "MapInPandas",
+                      "FlatMapGroupsInPandas")
+
+
+@pytest.mark.pin
+def test_bloom_skip_plan_never_collects_inventory(spark, tmp_path):
+    # Files are chosen on the driver (scan.py): a bloom predicate on a
+    # Snapshot that holds its inventory launches zero Spark jobs for
+    # collect_files() and scan(pred).to_df(), and the kept-files
+    # relation has no Python evaluation nodes. Match eval-node names,
+    # not "Python": the local relation's RDD debug name mentions
+    # "applySchemaToPythonRDD", a createDataFrame artifact. The last
+    # line is the positive control that the counter sees jobs.
+    from connectors_spark.expressions import Col, Lit
+    from connectors_spark.scan import DeltaScan
+    t, snap = _loaded_pruning_table(spark, str(tmp_path / "bp"))
+    pred = Col("uid") == Lit(7)
+    assert _spark_jobs(
+        spark, lambda: DeltaScan(snap, pred).collect_files()) == 0
+    assert _spark_jobs(spark, lambda: DeltaScan(snap, pred).to_df()) == 0
+    scan = DeltaScan(snap, pred)
+    assert 0 < len(scan.rows) < len(snap._files_rows)
+    p = plan_of(scan.files())
+    assert not any(n in p for n in _PYTHON_EVAL_NODES)
+    assert _spark_jobs(
+        spark, lambda: DeltaScan(snap, pred).to_df().count()) > 0
+
+
+@pytest.mark.pin
+def test_scan_reuses_materialized_inventory(spark, tmp_path):
+    # r14: a Snapshot materializes its active-file inventory once; a scan
+    # of it prunes those very rows on the driver, with zero Spark jobs
+    # for partition and stats predicates (no log replay re-run), and the
+    # kept-files relation is the local rows (ExistingRDD), with no
+    # Window node and no parquet checkpoint scan.
+    from connectors_spark.expressions import Col, Lit
+    from connectors_spark.scan import DeltaScan
+    t, snap = _loaded_pruning_table(spark, str(tmp_path / "inv"))
+    assert snap._files_rows is snap._files_rows          # cached once
+    cached = {id(r) for r in snap._files_rows}
+    for pred in (Col("p") == Lit(1), Col("uid") >= Lit(3500)):
+        assert _spark_jobs(
+            spark, lambda: DeltaScan(snap, pred).collect_files()) == 0, pred
+        assert _spark_jobs(
+            spark, lambda: DeltaScan(snap, pred).to_df()) == 0, pred
+        kept = DeltaScan(snap, pred).rows
+        assert 0 < len(kept) < len(snap._files_rows)
+        assert all(id(r) in cached for r in kept)
+    p = plan_of(t.scan(Col("uid") == Lit(7)).files())
+    assert "ExistingRDD" in p
+    assert "Window" not in p and "Scan parquet" not in p
+
+
+@pytest.mark.pin
+def test_join_key_bloom_prune_plan_stays_pure(spark, tmp_path):
+    # runtime join-key pruning with a 300-key list (past the 64-key
+    # unrolled-probe range): the keys are collected once, then the
+    # files are chosen on the driver from the loaded inventory — zero
+    # Spark jobs to build the pruned scan, fewer files kept, and no
+    # Python evaluation nodes in the kept-files relation
+    from connectors_spark.scan import prune_by_join_keys
+    t, snap = _loaded_pruning_table(spark, str(tmp_path / "jbp"))
     keys = [r.k for r in spark.range(300)
             .select((F.col("id") * 3).alias("k")).collect()]
-    sc = spark.sparkContext
-
-    def jobs(fn):
-        group = f"prune-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "pruning job-count pin")
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    preds = {"partition": Col("p") == Lit(1),
-             "stats": Col("uid") >= Lit(3500),
-             "bloom": Col("uid") == Lit(7)}
-    for name, pred in preds.items():
-        assert jobs(lambda: DeltaScan(snap, pred).collect_files()) == 0, name
-        assert jobs(lambda: DeltaScan(snap, pred).to_df()) == 0, name
-    by_keys = prune_by_join_keys(
+    scan = prune_by_join_keys(
         t, "uid", spark.createDataFrame([(k,) for k in keys], "k long"))
-    assert by_keys.snapshot is snap
-    assert jobs(by_keys.to_df) == 0
-    assert 0 < len(by_keys.rows) < len(snap._files_rows)
-    assert jobs(lambda: DeltaScan(snap, preds["stats"]).to_df().count()) > 0
+    assert scan.snapshot is snap
+    assert _spark_jobs(spark, scan.to_df) == 0
+    assert 0 < len(scan.rows) < len(snap._files_rows)
+    p = plan_of(scan.files())
+    assert not any(n in p for n in _PYTHON_EVAL_NODES)
 
 
 def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
