@@ -7,8 +7,10 @@ AST. ``eval`` is strict 3-valued evaluation against a dict, with SQL null
 semantics (BinaryExpression.eval returns null if either side is null,
 In.java:79-98 for IN): the file pruner (scan.py) and the conflict checker
 (ConflictChecker.scala:148-173) evaluate partition predicates with it on
-the driver. ``to_column`` compiles the row-level residual a data scan
-applies. :func:`bind` resolves a predicate against the table schema first.
+the driver; values of different types compare after Spark's implicit
+cast (``_implicit_cast``). ``to_column`` compiles the row-level residual
+a data scan applies. :func:`bind` resolves a predicate against the table
+schema first.
 
 ``split_metadata_and_data`` mirrors
 PartitionUtils.splitMetadataAndDataPredicates (PartitionUtils.scala:61-99):
@@ -18,12 +20,15 @@ prunable; the rest is the residual the data scan applies.
 
 from __future__ import annotations
 
+import datetime as dt
 import functools
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Any, Dict, FrozenSet, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class Expression:
@@ -118,7 +123,38 @@ def _lit(v) -> Expression:
 def _cmp(a: Any, b: Any) -> Optional[int]:
     if a is None or b is None:
         return None
+    if type(a) is not type(b):
+        a, b = _implicit_cast(a, b), _implicit_cast(b, a)
     return (a > b) - (a < b)
+
+
+def _implicit_cast(v: Any, other: Any) -> Any:
+    """``v`` as Spark's implicit cast reads it beside ``other``: a string
+    decodes to the other side's type (``DeltaError`` where the ANSI cast
+    fails), a date is midnight beside a timestamp, a number is a float
+    beside a float."""
+    if isinstance(v, str) and not isinstance(other, str):
+        dtype = next((t for p, t in _SPARK_TYPES if isinstance(other, p)),
+                     None)
+        return v if dtype is None else _cast_string(v, dtype)
+    if type(v) is dt.date and isinstance(other, dt.datetime):
+        return dt.datetime.combine(v, dt.time())
+    if isinstance(other, float) and isinstance(v, (int, Decimal)):
+        return float(v)
+    return v
+
+
+def _cast_string(value: str, dtype, column: Optional[str] = None) -> Any:
+    """``value`` cast to ``dtype`` by the partition-value codec;
+    ``DeltaError`` where Spark's ANSI cast fails."""
+    from .errors import DeltaError
+    from .partition_values import decode
+    try:
+        return decode(value, dtype)
+    except (ValueError, ArithmeticError):
+        raise DeltaError(f"cannot cast {value!r} to {dtype.simpleString()}"
+                         + (f" for column {column}" if column else "")
+                         ) from None
 
 
 @dataclass(frozen=True)
@@ -310,6 +346,13 @@ def split_metadata_and_data(
             functools.reduce(And, data) if data else None)
 
 
+# the Spark type a string casts to beside a value of each Python type
+# (bool before int, datetime before date: subclasses first)
+_SPARK_TYPES = ((bool, T.BooleanType()), (int, T.LongType()),
+                (float, T.DoubleType()), (Decimal, T.DecimalType(38, 18)),
+                (dt.datetime, T.TimestampType()), (dt.date, T.DateType()),
+                (bytes, T.BinaryType()))
+
 _COMPARISONS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
                 LessThanOrEqual)
 
@@ -317,8 +360,6 @@ _COMPARISONS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
 def bind(expr: Optional[Expression], schema) -> Optional[Expression]:
     """``expr`` bound to ``schema`` (a StructType) by the bind rule
     scan.py states; a name the schema lacks stays as written."""
-    from .errors import DeltaError
-    from .partition_values import decode
     fields = {f.name.lower(): f for f in schema.fields}
 
     def field(e):
@@ -332,12 +373,7 @@ def bind(expr: Optional[Expression], schema) -> Optional[Expression]:
             if f is None or not isinstance(e.value, str) \
                     or f.dataType.simpleString() == "string":
                 return e
-            try:
-                return Lit(decode(e.value, f.dataType))
-            except (ValueError, ArithmeticError):
-                raise DeltaError(f"cannot cast {e.value!r} to "
-                                 f"{f.dataType.simpleString()} for column "
-                                 f"{f.name}") from None
+            return Lit(_cast_string(e.value, f.dataType, f.name))
         if isinstance(e, _COMPARISONS):
             return type(e)(go(e.left, field(e.right)),
                            go(e.right, field(e.left)))

@@ -13,6 +13,9 @@ rows. The rules:
   to the schema's case-insensitively; a string literal compared with a
   non-string column is decoded by ``partition_values.decode``, and one
   that does not decode raises ``DeltaError``, as Spark's ANSI cast does.
+  Other mixed types meet in ``eval``, which casts as Spark does: a
+  string partition value to a non-string literal's type, a date to a
+  timestamp, a number to a float beside a float.
 - **Partition conjuncts are exact.** The predicate splits into conjuncts
   over partition columns only and a residual (PartitionUtils.scala:
   61-99). Each partition conjunct is ``eval``'d once per distinct
@@ -27,12 +30,15 @@ rows. The rules:
   partition columns only is exact per file. ``<``, ``<=``, ``>``, ``>=``
   test min or max; ``=`` and ``IN`` test exact per-value containment in
   [min, max] (``searchsorted`` over the sorted values, any list length).
-  ``IS NULL`` needs nullCount > 0, ``IS NOT NULL`` nullCount <
-  numRecords, and an all-null column matches no comparison. A max
-  timestamp counts 1 ms later: stats truncate to milliseconds
-  (delta-spark's rule). Bloom tags (bloom.py) are probed for ``=`` and
-  IN lists of at most ``_IN_BLOOM_MAX_VALUES`` values, on the files
-  min/max keeps, with the values inside each file's range.
+  Bounds and literals compare in the type Spark's implicit cast gives
+  the pair: integers and decimals exactly, numbers beside a float,
+  double or float literal as float64 (``_keys``). ``IS NULL`` needs
+  nullCount > 0, ``IS NOT NULL`` nullCount < numRecords, and an
+  all-null column matches no comparison. A max timestamp counts 1 ms
+  later: stats truncate to milliseconds (delta-spark's rule). Bloom
+  tags (bloom.py) are probed for ``=`` and IN lists of at most
+  ``_IN_BLOOM_MAX_VALUES`` values, on the files min/max keeps, with
+  the values inside each file's range.
 - **Stats parse vectorized**: one ``pyarrow.json.read_json`` over the
   stats lines, for the residual's columns only, with an explicit schema
   from the data schema (physical names).
@@ -163,12 +169,12 @@ class Inventory:
 _OPS = {EqualTo: "in", LessThan: "<", LessThanOrEqual: "<=",
         GreaterThan: ">", GreaterThanOrEqual: ">="}
 _FLIP = {"in": "in", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
-# comparison domain per column type: float64 for numbers (rounding is
-# monotone, so comparisons stay sound), the ISO text for strings and
-# dates, epoch microseconds (UTC) for timestamps
-_KINDS = dict.fromkeys(("tinyint", "smallint", "int", "bigint", "float",
-                        "double", "decimal"), "num")
-_KINDS.update(string="str", date="date", timestamp="ts")
+# how each column type's stats parse: integers as int64, a float as
+# float32 (its exact value), decimals exactly, strings and dates as ISO
+# text, timestamps as epoch microseconds (UTC)
+_KINDS = dict.fromkeys(("tinyint", "smallint", "int", "bigint"), "int")
+_KINDS.update(float="float", double="double", decimal="dec",
+              string="str", date="date", timestamp="ts")
 
 
 def _leaf(e: Expression):
@@ -190,20 +196,45 @@ def _leaf(e: Expression):
     return None
 
 
-def _lit_key(v, kind: str):
-    """A literal in its column's comparison domain; None when it has no
-    place there (no evidence)."""
-    if v is None or isinstance(v, bool):
+def _keys(kind: str, values: list):
+    """(domain, keys): the literals ``values`` in the domain Spark's
+    implicit cast compares them in beside a ``kind`` column, or None when
+    one has no place there (no evidence). Numbers compare as float64
+    beside a float or double, or beside a float literal (an integer
+    widens to float32 first beside a float), else exactly: "int" is the
+    int64 case, "exact" any other (Python ints and Decimals)."""
+    if any(v is None or isinstance(v, bool) for v in values):
         return None
-    if kind == "num":
-        ok = isinstance(v, (int, float, Decimal)) and v == v
-        return float(v) if ok else None
+    if kind in ("int", "float", "double", "dec"):
+        if not all(isinstance(v, (int, float, Decimal)) and v == v
+                   for v in values):
+            return None
+        if kind in ("float", "double") \
+                or any(isinstance(v, float) for v in values):
+            return "f64", [float(np.float32(v)) if kind == "float"
+                           and isinstance(v, int) else float(v)
+                           for v in values]
+        if kind == "int" and all(isinstance(v, int) and -2**63 <= v < 2**63
+                                 for v in values):
+            return "int", values
+        return "exact", values
     if kind == "str":
-        return v if isinstance(v, str) else None
-    if kind == "date":
-        return v.isoformat() if type(v) is dt.date else None
-    return T.TimestampType().toInternal(v) \
-        if isinstance(v, dt.datetime) else None
+        ok, keys = all(isinstance(v, str) for v in values), values
+    elif kind == "date":
+        ok = all(type(v) is dt.date for v in values)
+        keys = [v.isoformat() for v in values] if ok else None
+    else:
+        ok = all(isinstance(v, dt.datetime) for v in values)
+        keys = [T.TimestampType().toInternal(v) for v in values] \
+            if ok else None
+    return (kind, keys) if ok else None
+
+
+def _in_domain(a: np.ndarray, domain: str) -> np.ndarray:
+    """Parsed stats values in a comparison domain of :func:`_keys`."""
+    if domain == "f64":
+        return a.astype(np.float64)
+    return a.astype(object) if domain == "exact" else a
 
 
 def _parse_stats(lines: List[str], kinds: Dict[str, str]):
@@ -212,7 +243,10 @@ def _parse_stats(lines: List[str], kinds: Dict[str, str]):
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.json as pj
-    types = {"num": pa.float64(), "ts": pa.timestamp("us", tz="UTC")}
+    # decimal256(76, 38) holds every decimal(p <= 38, s) exactly
+    types = {"int": pa.int64(), "float": pa.float32(),
+             "double": pa.float64(), "dec": pa.decimal256(76, 38),
+             "ts": pa.timestamp("us", tz="UTC")}
     leaf = pa.struct([(c, types.get(k, pa.string()))
                       for c, k in kinds.items()])
     opts = pj.ParseOptions(explicit_schema=pa.schema([
@@ -247,8 +281,9 @@ def _parse_stats(lines: List[str], kinds: Dict[str, str]):
         if kind == "ts":
             micros = pc.fill_null(arr.cast(pa.int64()), 0).to_numpy()
             return micros + (1000 if struct == "maxValues" else 0), valid
-        return (pc.fill_null(arr, "" if kind in ("str", "date") else 0)
-                .to_numpy(zero_copy_only=False), valid)
+        fill = "" if kind in ("str", "date") else \
+            pa.scalar(Decimal(0), arr.type) if kind == "dec" else 0
+        return pc.fill_null(arr, fill).to_numpy(zero_copy_only=False), valid
 
     return get
 
@@ -278,11 +313,13 @@ def _stats_keep(inv: Inventory, idx: np.ndarray, meta,
             return ~nulls_ok | (nulls > 0)
         if op == "IsNotNull":
             return ~(nulls_ok & nrec_ok) | (nulls < nrec)
-        keys = [_lit_key(v, kind) for v in values]
-        if None in keys:
+        domain = _keys(kind, values)
+        if domain is None:
             return None
+        domain, keys = domain
         lo, lo_ok = get("minValues", p)
         hi, hi_ok = get("maxValues", p)
+        lo, hi = _in_domain(lo, domain), _in_domain(hi, domain)
         if op in ("<", "<="):
             keep = ~lo_ok | ((lo < keys[0]) if op == "<" else (lo <= keys[0]))
         elif op in (">", ">="):
@@ -290,8 +327,7 @@ def _stats_keep(inv: Inventory, idx: np.ndarray, meta,
         else:
             # sorted by comparison key; the bloom hashes the literals
             pairs = sorted(zip(keys, values), key=lambda kv: kv[0])
-            vals = np.array([k for k, _ in pairs],
-                            dtype=object if kind in ("str", "date") else None)
+            vals = np.array([k for k, _ in pairs], dtype=lo.dtype)
             ranged = lo_ok & hi_ok
             i0 = np.searchsorted(vals, lo, "left")
             i1 = np.searchsorted(vals, hi, "right")

@@ -38,6 +38,7 @@ import json
 import os
 import urllib.parse
 import uuid
+from decimal import Decimal
 from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
@@ -62,7 +63,8 @@ _STATS_TYPES = ("int8", "int16", "int32", "int64", "float", "double",
 
 
 def _json_safe(v: Any) -> Any:
-    if isinstance(v, bytes):
+    # bytes, and decimals (json has no exact number for them): no stats
+    if isinstance(v, (bytes, Decimal)):
         return None
     if isinstance(v, dt.datetime):
         return v.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"

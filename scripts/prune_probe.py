@@ -12,15 +12,26 @@ the same rows:
   stats through ``get_json_object``) and collected back. This is the
   plan the driver pruner replaced.
 
+A second, bloom-tagged inventory of ``--bloom-files`` rows (default
+20 000: each row carries a 4 KiB tag, and the Column side ships every
+tag to the JVM) has stats whose [min, max] spans every key, so min/max
+keeps every file and only the bloom probe can skip one. Its tags are
+drawn from a pool of 64 random filters (m 16384 bits, k 7, about 35%
+of bits set, as 1000 distinct values set them). It is probed with IN
+lists of 100 keys (bloom probed) and 300 keys (past
+``_IN_BLOOM_MAX_VALUES``, so both sides test the range only).
+
 Cold is the first scan of a fresh Snapshot (its per-Snapshot state
 built inside the timing); warm is the median of the next ``--warm``
 scans of the same Snapshot. Prints one JSON line per (predicate,
 method).
 
 Usage: python scripts/prune_probe.py [n_files] [--warm 3]
+       [--bloom-files 20000]
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -47,11 +58,68 @@ def inventory(n: int):
     return out
 
 
+def bloom_inventory(n: int):
+    import numpy as np
+
+    from connectors_spark.log.snapshot import FILES_SCHEMA
+    from pyspark.sql import Row
+    row = Row(*FILES_SCHEMA.names)
+    rng = np.random.default_rng(7)
+    m, k = 16384, 7
+    lut = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
+    pool = []
+    for _ in range(64):
+        bits = rng.random((m // 4, 4)) < 0.35
+        nib = (bits * np.array([1, 2, 4, 8])).sum(axis=1)
+        pool.append(f"{m}:{k}:" + lut[nib].tobytes().decode("ascii"))
+    stats = json.dumps({"numRecords": 1000, "minValues": {"x": 0},
+                        "maxValues": {"x": 10**9}, "nullCount": {"x": 0}},
+                       separators=(",", ":"))
+    return [row(f"/t/p={i % 100}/b{i}.parquet", {"p": str(i % 100)},
+                1000, 0, True, stats, {"bloom.x": pool[i % 64]}, None,
+                None, 0) for i in range(n)]
+
+
+def bloom_column(values):
+    """The replaced Column bloom probe of an IN list: one ``exists`` over
+    the values' hash pairs wrapping a ``forall`` over the k positions of
+    each file's own ``m:k:hex`` tag; a file without a tag is kept."""
+    from pyspark.sql import functions as F
+
+    from connectors_spark.bloom import _hashes64
+    hs = [_hashes64(str(v)) for v in values]
+    tag = F.col("tags")["bloom.x"]
+    parts = F.split(tag, ":")
+    m, k = parts.getItem(0).cast("long"), parts.getItem(1).cast("int")
+    hx = parts.getItem(2)
+    h1s = F.lit([h[0] for h in hs]).cast("array<long>")
+    h2s = F.lit([h[1] for h in hs]).cast("array<long>")
+    bit_of = F.array(F.lit(1), F.lit(2), F.lit(4), F.lit(8))
+
+    def hit(j):
+        h1 = F.element_at(h1s, j.cast("int")) % m
+        h2 = F.element_at(h2s, j.cast("int")) % m
+
+        def probe(i):
+            p = (h1 + i.cast("long") * h2) % m
+            ch = hx.substr((p / F.lit(4)).cast("long") + F.lit(1), F.lit(1))
+            mask = F.element_at(bit_of, (p % F.lit(4)).cast("int")
+                                + F.lit(1)).cast("long")
+            return F.conv(ch, 16, 10).cast("long").bitwiseAND(mask) != 0
+        return F.forall(F.sequence(F.lit(0), k - F.lit(1)), probe)
+
+    keep = F.exists(F.sequence(F.lit(1), F.lit(len(hs))), hit)
+    return F.when(tag.isNull(), F.lit(True)) \
+        .otherwise(F.coalesce(keep, F.lit(True)))
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n = int(args[0]) if args else 1_000_000
-    warm = int(sys.argv[sys.argv.index("--warm") + 1]) \
-        if "--warm" in sys.argv else 3
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("n_files", nargs="?", type=int, default=1_000_000)
+    ap.add_argument("--warm", type=int, default=3)
+    ap.add_argument("--bloom-files", type=int, default=20_000)
+    opts = ap.parse_args()
+    n, warm, n_bloom = opts.n_files, opts.warm, opts.bloom_files
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -65,7 +133,7 @@ def main() -> None:
     class ProbeSnapshot(Snapshot):
         """A Snapshot over the synthetic rows instead of a log."""
 
-        def __init__(self):
+        def __init__(self, rows):
             self.spark = spark
             self._files_rows = rows
 
@@ -82,6 +150,13 @@ def main() -> None:
     meta = Metadata(schemaString=schema.json(), partitionColumns=["p"])
     rows = inventory(n)
     hi = n * 10
+
+    def envelope(values):
+        return F.coalesce(
+            (F.get_json_object("stats", "$.minValues.x").cast("long")
+             <= max(values))
+            & (F.get_json_object("stats", "$.maxValues.x").cast("long")
+               >= min(values)), F.lit(True))
     preds = {
         "partition": (Col("p") == Lit(7),
                       F.col("partitionValues")["p"].cast("int") == 7),
@@ -89,23 +164,26 @@ def main() -> None:
                   F.coalesce(F.get_json_object("stats", "$.maxValues.x")
                              .cast("long") >= hi - 5000, F.lit(True))),
         "in_list": (Col("x").isin(*range(5, hi, hi // 100)),
-                    F.coalesce(
-                        (F.get_json_object("stats", "$.minValues.x")
-                         .cast("long") <= hi)
-                        & (F.get_json_object("stats", "$.maxValues.x")
-                           .cast("long") >= 5), F.lit(True))),
+                    envelope(range(5, hi, hi // 100))),
+    }
+    keys100 = list(range(5, 10**9, 10**7))
+    keys300 = list(range(5, 10**9, 10**9 // 300 + 1))
+    bloom_preds = {
+        "bloom_in100": (Col("x").isin(*keys100),
+                        envelope(keys100) & bloom_column(keys100)),
+        "bloom_in300": (Col("x").isin(*keys300), envelope(keys300)),
     }
 
-    def driver(pred):
+    def driver(pred, rows):
         snap = {}
 
         def run():
             if "s" not in snap:
-                snap["s"] = ProbeSnapshot()
+                snap["s"] = ProbeSnapshot(rows)
             return len(DeltaScan(snap["s"], pred).rows)
         return run
 
-    def column(cond):
+    def column(cond, rows):
         rel = {}
 
         def run():
@@ -115,8 +193,13 @@ def main() -> None:
             return len(rel["df"].where(cond).select("path").collect())
         return run
 
-    for name, (pred, cond) in preds.items():
-        for method, fn in (("driver", driver(pred)), ("column", column(cond))):
+    cases = [(name, pc, rows) for name, pc in preds.items()]
+    if n_bloom:
+        brows = bloom_inventory(n_bloom)
+        cases += [(name, pc, brows) for name, pc in bloom_preds.items()]
+    for name, (pred, cond), rows in cases:
+        for method, fn in (("driver", driver(pred, rows)),
+                           ("column", column(cond, rows))):
             t0 = time.perf_counter()
             kept = fn()
             cold = time.perf_counter() - t0
@@ -125,7 +208,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 fn()
                 times.append(time.perf_counter() - t0)
-            print(json.dumps({"files": n, "predicate": name,
+            print(json.dumps({"files": len(rows), "predicate": name,
                               "method": method, "kept": kept,
                               "cold_s": round(cold, 3),
                               "warm_s": round(statistics.median(times), 3)}),

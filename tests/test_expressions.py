@@ -106,3 +106,36 @@ def test_spark_agreement(spark):
                             else int(r.y)})
                     for r in pdf.itertuples()]
         assert got_spark == got_eval, str(e)
+
+
+def test_mixed_type_eval_agrees_with_spark(spark):
+    """eval() casts values of different types as Spark's implicit cast
+    does: a string to a non-string literal's type, a date to a
+    timestamp, a number to a double beside a double."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from connectors_spark.errors import DeltaError
+    rows = [("2020", dt.datetime(2020, 1, 1), Decimal("0.1"), 2),
+            ("02020", dt.datetime(2020, 1, 1, 12), Decimal("0.2"), 3),
+            ("7", None, None, None), ("010", dt.datetime(2019, 12, 31),
+                                      Decimal("0.0"), 9007199254740993),
+            (None, dt.datetime(2020, 1, 2), Decimal("0.1"), 1)]
+    df = spark.createDataFrame(rows, "y string, t timestamp, "
+                                     "d decimal(10,1), i bigint")
+    day = dt.date(2020, 1, 1)
+    exprs = [Col("y") == Lit(2020), Col("y") > Lit(999),
+             Col("y").isin(7, 10), Lit(8) < Col("y"),
+             Col("t") == Lit(day), Col("t") > Lit(day),
+             Col("t").isin(day), Col("d") == Lit(0.1),
+             Col("d") >= Lit(Decimal("0.1")), Col("i") > Lit(2.5),
+             Col("i") > Lit(9007199254740992.0)]
+    got = df.collect()
+    for e in exprs:
+        spark_vals = [r[0] for r in df.select(e.to_column(F.col)).collect()]
+        assert spark_vals == [e.eval(r.asDict()) for r in got], str(e)
+    with pytest.raises(DeltaError):
+        (Col("y") == Lit(5)).eval({"y": "abc"})

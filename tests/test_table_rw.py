@@ -148,7 +148,7 @@ def test_disjunctive_stats_skipping(spark, tmp_path):
 # ---------------------------------------------------------------------
 
 _MX_SCHEMA = ("Part int, q string, i int, b bigint, d double, dt date, "
-              "ts timestamp, s string, dec decimal(10,2)")
+              "ts timestamp, s string, dec decimal(38,18)")
 
 
 def _mx_rows(j, part, q):
@@ -160,17 +160,59 @@ def _mx_rows(j, part, q):
              f"s{j}{k}", Decimal(f"{j}.{k}0")) for k in range(10)]
 
 
+# the foreign file's rows: values where float64 rounding merges
+# neighbours (2**53 + 1, a decimal(38,18) just above 1e19) and
+# timestamps whose stats truncate to milliseconds
+_FX_B = 2**53 + 1
+_FX_DEC = "10000000000000000000.000000000000000001"
+_FX_TS = [(10, 0, 0, 100000), (10, 0, 0, 110000), (10, 0, 0, 123456)]
+
+
+def _foreign_stats(rows):
+    """delta-spark-style stats for ``rows``: numbers as JSON numbers
+    (decimals at full scale), timestamps as ISO strings truncated to
+    milliseconds, the min with a +02:00 offset, the max in UTC."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    def iso(v, offset_h):
+        utc = dt.datetime(1970, 1, 1) + dt.timedelta(
+            microseconds=T.TimestampType().toInternal(v))
+        local = utc + dt.timedelta(hours=offset_h)
+        zone = f"+{offset_h:02d}:00" if offset_h else "Z"
+        return local.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + zone
+
+    cols = ("i", "b", "d", "dt", "ts", "s", "dec")
+    lo = {c: min(r[2 + n] for r in rows) for n, c in enumerate(cols)}
+    hi = {c: max(r[2 + n] for r in rows) for n, c in enumerate(cols)}
+
+    def side(v, offset_h):
+        return ", ".join(
+            f'"{c}": ' + (f'"{iso(v[c], offset_h)}"' if c == "ts" else
+                          f'"{v[c].isoformat()}"' if c == "dt" else
+                          f'"{v[c]}"' if c == "s" else str(v[c]))
+            for c in cols)
+    return (f'{{"numRecords": {len(rows)}, "minValues": {{{side(lo, 2)}}}, '
+            f'"maxValues": {{{side(hi, 0)}}}, "nullCount": {{'
+            + ", ".join(f'"{c}": 0' for c in cols) + "}}")
+
+
 def _matrix_table(spark, path):
-    """Partitioned by (int ``Part``, string ``q``); bloom on ``b``. Six
-    range-banded files, one with some nulls, one whose data columns are
-    all null, one committed without stats, one whose stats do not parse,
-    and one carrying a DV."""
+    """Partitioned by (int ``Part``, string ``q`` holding numbers); bloom
+    on ``b``. Six range-banded files, one with some nulls, one whose
+    data columns are all null, one committed without stats, one whose
+    stats do not parse, one carrying a DV, and one foreign file whose
+    stats were written as delta-spark writes them."""
     import dataclasses
+    import datetime as dt
+    from decimal import Decimal
 
     from connectors_spark.bloom import BLOOM_COLUMNS_KEY
     from connectors_spark.writer import stage_and_collect
     t = DeltaTable.for_path(spark, path)
-    layout = [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "b")]
+    layout = [(1, "7"), (1, "010"), (2, "7"), (2, "010"), (3, "7"),
+              (3, "010")]
     for j, (part, q) in enumerate(layout):
         rows = _mx_rows(j, part, q)
         if j == 2:
@@ -178,16 +220,23 @@ def _matrix_table(spark, path):
         t.write(spark.createDataFrame(rows, _MX_SCHEMA).coalesce(1),
                 partition_by=["Part", "q"], mode="append",
                 configuration={BLOOM_COLUMNS_KEY: "b"} if j == 0 else None)
-    t.write(spark.createDataFrame([(1, "a") + (None,) * 7] * 3, _MX_SCHEMA)
+    t.write(spark.createDataFrame([(1, "7") + (None,) * 7] * 3, _MX_SCHEMA)
             .coalesce(1), mode="append")                      # all null
     adds = stage_and_collect(
-        spark.createDataFrame(_mx_rows(6, 2, "b") + _mx_rows(7, 3, "a"),
+        spark.createDataFrame(_mx_rows(6, 2, "010") + _mx_rows(7, 3, "7"),
                               _MX_SCHEMA).coalesce(1),
         path, ["Part", "q"], collect_stats=False)
     assert len(adds) == 2 and all(a.stats is None for a in adds)
     bad = '{"numRecords":10,"minValues":{"i":70,'              # truncated
     adds = [a if a.partitionValues["Part"] == "2"             # no stats
             else dataclasses.replace(a, stats=bad) for a in adds]
+    fx = [(3, "010", 500 + k, _FX_B, 9.5, dt.date(2021, 6, 1),
+           dt.datetime(2021, 6, 1, *hms), "zz", Decimal(_FX_DEC))
+          for k, hms in enumerate(_FX_TS)]
+    [foreign] = stage_and_collect(
+        spark.createDataFrame(fx, _MX_SCHEMA).coalesce(1), path,
+        ["Part", "q"], collect_stats=False)
+    adds.append(dataclasses.replace(foreign, stats=_foreign_stats(fx)))
     t.log.start_transaction().commit(adds, "WRITE", {"mode": "Append"})
     t.delete(Col("i") == Lit(41), deletion_vectors=True)      # DV
     return t
@@ -213,6 +262,7 @@ def _matrix_cases():
                 cases[f"{c}_{name}"] = op(Col(c), Lit(v))
             if full or name == "lt":
                 cases[f"{c}_{name}_litleft"] = op(Lit(v), Col(c))
+    ts = dt.datetime(2021, 6, 1, 10)
     cases.update({
         "i_isnull": IsNull(Col("i")), "i_notnull": IsNotNull(Col("i")),
         "s_isnull": IsNull(Col("s")), "s_notnull": IsNotNull(Col("s")),
@@ -222,48 +272,81 @@ def _matrix_cases():
         "i_in3": Col("i").isin(5, 33, 999),
         "i_in100": Col("i").isin(*range(200, 300)),
         "i_in300": Col("i").isin(*range(15, 915, 3)),
+        "i_gt_float": Col("i") > Lit(24.5),
         "and_part_data": (Col("Part") == Lit(2)) & (Col("i") >= Lit(25)),
         "or_data": (Col("i") < Lit(5)) | (Col("d") > Lit(4.5)),
         "or_part_data": (Col("Part") == Lit(1)) | (Col("i") > Lit(45)),
-        "not_part": Not(Col("q") == Lit("a")) & (Col("i") < Lit(30)),
+        "not_part": Not(Col("q") == Lit("7")) & (Col("i") < Lit(30)),
         "not_data": Not(Col("i") < Lit(40)),
         "string_lit_int_part": Col("Part") == Lit("2"),
         "string_lit_int_part_in": Col("Part").isin("1", "3"),
+        "int_lit_string_part": Col("q") == Lit(10),
+        "int_lit_string_part_gt": Col("q") > Lit(8),
+        "int_lit_string_part_in": Col("q").isin(7, 11),
         "mixed_case_part": Col("part") == Lit(3),
-        "mixed_case_data": (Col("I") > Lit(33)) & (Col("Q") == Lit("b")),
+        "mixed_case_data": (Col("I") > Lit(33)) & (Col("Q") == Lit("010")),
+        # the foreign file: exact integer and decimal bounds, delta-spark
+        # timestamp strings, the 1 ms rule on a truncated max
+        "fx_b_gt": Col("b") > Lit(2**53),
+        "fx_b_gt_skip": Col("b") > Lit(_FX_B),
+        "fx_b_eq": Col("b") == Lit(_FX_B),
+        "fx_b_in": Col("b").isin(2**53, _FX_B + 1),
+        "fx_dec_gt": Col("dec") > Lit(Decimal(10**19)),
+        "fx_dec_lt_skip": Col("dec") < Lit(Decimal(_FX_DEC)),
+        "fx_dec_eq": Col("dec") == Lit(Decimal(_FX_DEC)),
+        "fx_ts_gt_truncated": Col("ts") > Lit(ts.replace(
+            microsecond=123400)),
+        "fx_ts_gt_skip": Col("ts") > Lit(ts.replace(microsecond=124000)),
+        "fx_ts_lt_skip": Col("ts") < Lit(ts.replace(microsecond=50000)),
+        "fx_ts_eq": Col("ts") == Lit(ts.replace(microsecond=110000)),
     })
     return cases
 
 
 _MATRIX = _matrix_cases()
 # Kept-file counts of the Column pruning plan this pruner replaced, run
-# over the same table (None: it raised KeyError on the mixed-case name).
+# over the same table (None: it raised KeyError on the mixed-case name,
+# or kept fewer files than is sound).
 _MATRIX_PREVIOUS_KEPT = {
-    "Part_eq": 3, "Part_eq_litleft": 3, "Part_ge": 6, "Part_ge_litleft": 6,
-    "Part_gt": 3, "Part_gt_litleft": 3, "Part_le": 6, "Part_le_litleft": 6,
-    "Part_lt": 3, "Part_lt_litleft": 3,
+    "Part_eq": 3, "Part_eq_litleft": 3, "Part_ge": 7, "Part_ge_litleft": 6,
+    "Part_gt": 4, "Part_gt_litleft": 3, "Part_le": 6, "Part_le_litleft": 7,
+    "Part_lt": 3, "Part_lt_litleft": 4,
     "and_part_data": 3,
-    "b_eq": 4, "b_eq_litleft": 4, "b_ge": 7, "b_ge_litleft": 6, "b_gt": 7,
+    "b_eq": 4, "b_eq_litleft": 4, "b_ge": 8, "b_ge_litleft": 6, "b_gt": 8,
     "b_gt_litleft": 6, "b_in100": 4, "b_in3": 5, "b_in300": 4, "b_le": 6,
-    "b_le_litleft": 7, "b_lt": 6, "b_lt_litleft": 7,
-    "d_eq": 4, "d_ge": 7, "d_lt_litleft": 7,
-    "dec_eq": 9, "dec_ge": 9, "dec_lt_litleft": 9,
-    "dt_eq": 4, "dt_eq_litleft": 4, "dt_ge": 7, "dt_ge_litleft": 6,
-    "dt_gt": 7, "dt_gt_litleft": 6, "dt_le": 6, "dt_le_litleft": 7,
-    "dt_lt": 6, "dt_lt_litleft": 7,
-    "i_eq": 4, "i_eq_litleft": 4, "i_ge": 7, "i_ge_litleft": 6, "i_gt": 7,
-    "i_gt_litleft": 6, "i_in100": 3, "i_in3": 5, "i_in300": 8,
-    "i_isnull": 4, "i_le": 6, "i_le_litleft": 7, "i_lt": 6,
-    "i_lt_litleft": 7, "i_notnull": 8,
+    "b_le_litleft": 8, "b_lt": 6, "b_lt_litleft": 8,
+    "d_eq": 4, "d_ge": 8, "d_lt_litleft": 8,
+    "dec_eq": 9, "dec_ge": 10, "dec_lt_litleft": 10,
+    "dt_eq": 4, "dt_eq_litleft": 4, "dt_ge": 8, "dt_ge_litleft": 6,
+    "dt_gt": 8, "dt_gt_litleft": 6, "dt_le": 6, "dt_le_litleft": 8,
+    "dt_lt": 6, "dt_lt_litleft": 8,
+    "fx_b_eq": 4, "fx_b_gt": 4, "fx_b_gt_skip": 3, "fx_b_in": 3,
+    "fx_dec_eq": 9, "fx_dec_gt": 9, "fx_dec_lt_skip": 10,
+    "fx_ts_eq": 10, "fx_ts_gt_skip": 9,
+    "fx_ts_gt_truncated": None,     # it skipped a file holding a match
+    "fx_ts_lt_skip": 9,
+    "i_eq": 4, "i_eq_litleft": 4, "i_ge": 8, "i_ge_litleft": 6, "i_gt": 8,
+    "i_gt_float": 8, "i_gt_litleft": 6, "i_in100": 3, "i_in3": 5,
+    "i_in300": 9, "i_isnull": 4, "i_le": 6, "i_le_litleft": 8, "i_lt": 6,
+    "i_lt_litleft": 8, "i_notnull": 9,
+    "int_lit_string_part": 5, "int_lit_string_part_gt": 5,
+    "int_lit_string_part_in": 5,
     "mixed_case_data": None, "mixed_case_part": None,
-    "not_data": 9, "not_part": 2,
-    "or_data": 6, "or_part_data": 9,
-    "s_eq": 4, "s_eq_litleft": 4, "s_ge": 7, "s_ge_litleft": 6, "s_gt": 7,
-    "s_gt_litleft": 6, "s_isnull": 4, "s_le": 6, "s_le_litleft": 7,
-    "s_lt": 6, "s_lt_litleft": 7, "s_notnull": 8,
-    "string_lit_int_part": 3, "string_lit_int_part_in": 6,
-    "ts_eq": 9, "ts_ge": 9, "ts_lt_litleft": 9,
+    "not_data": 10,
+    "not_part": 2,
+    "or_data": 7,
+    "or_part_data": 10,
+    "s_eq": 4, "s_eq_litleft": 4, "s_ge": 8, "s_ge_litleft": 6, "s_gt": 8,
+    "s_gt_litleft": 6, "s_isnull": 4, "s_le": 6, "s_le_litleft": 8,
+    "s_lt": 6, "s_lt_litleft": 8, "s_notnull": 9,
+    "string_lit_int_part": 3, "string_lit_int_part_in": 7,
+    "ts_eq": 9, "ts_ge": 10, "ts_lt_litleft": 10,
 }
+
+
+# Cases whose evidence proves the foreign file holds no match.
+_MATRIX_SKIPS_FOREIGN = {"fx_b_gt_skip", "fx_b_in", "fx_dec_lt_skip",
+                         "fx_ts_gt_skip", "fx_ts_lt_skip"}
 
 
 @pytest.fixture(scope="module")
@@ -271,7 +354,10 @@ def matrix_table(spark, tmp_path_factory):
     t = _matrix_table(spark, str(tmp_path_factory.mktemp("mx") / "t"))
     snap = t.snapshot()
     full = snap.to_df(with_file_col=True).localCheckpoint()
-    return t, snap, full
+    foreign = {r["path"] for r in snap._files_rows
+               if r["stats"] and "+02:00" in r["stats"]}
+    assert len(foreign) == 1
+    return t, snap, full, foreign.pop()
 
 
 @pytest.mark.pin
@@ -280,11 +366,12 @@ def test_pruning_matrix_exact_and_sound(matrix_table, case):
     """For each predicate: (a) the pruned scan returns exactly the rows a
     plain filter does; (b) no skipped file holds a matching row (each
     file's rows read on their own, DV applied); (c) no more files kept
-    than the replaced Column plan kept."""
+    than the replaced Column plan kept; and the foreign file is skipped
+    where its stats prove it holds no match."""
     from collections import Counter
 
     from connectors_spark.scan import DeltaScan
-    t, snap, full = matrix_table
+    t, snap, full, foreign = matrix_table
     pred = _MATRIX[case]
     scan = DeltaScan(snap, pred)
     cols = [c for c in full.columns if c != "__file"]
@@ -296,6 +383,8 @@ def test_pruning_matrix_exact_and_sound(matrix_table, case):
     previous = _MATRIX_PREVIOUS_KEPT[case]
     assert len(kept) <= (previous if previous is not None
                          else len(snap._files_rows))
+    if case in _MATRIX_SKIPS_FOREIGN:
+        assert foreign not in kept
 
 
 def test_replace_where_partial_file_coverage(spark, tmp_path):
