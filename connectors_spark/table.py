@@ -22,6 +22,7 @@ import functools
 import hashlib
 import json
 import os
+import re
 import time
 import threading
 import uuid
@@ -33,7 +34,7 @@ from pyspark.sql import types as T
 
 from .config import TableConfig
 from .errors import DeltaError, DeltaProtocolError
-from .expressions import Expression
+from .expressions import Expression, bind
 from .log import filenames as fn
 from .bloom import bloom_config
 from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
@@ -43,6 +44,7 @@ from .log.segment import LogSegment, get_log_segment
 from .log.snapshot import (Snapshot, addfiles_from_rows, canonical_path,
                             canonical_path_col, materialized_rt_cols,
                             read_commit)
+from .localrel import local_rows_df
 from .log import history as hist
 from .scan import DeltaScan
 from .txn import OptimisticTransaction
@@ -51,11 +53,6 @@ from .writer import (CHANGE_TYPE_COL, stage_and_collect,
 
 _log_cache: Dict[str, "DeltaLog"] = {}
 _log_cache_lock = threading.Lock()
-
-# ``removes`` of DeltaTable._commit_legs: every live file of the read
-# snapshot
-_WHOLE_TABLE = object()
-
 
 # Materialization budget for DML intermediate relations: localCheckpoint
 # of a relation several legs read (UPDATE's hit rows, MERGE's matched
@@ -547,21 +544,24 @@ class DeltaTable:
                         version: Optional[int] = None) -> DataFrame:
         """SHOW PARTITIONS: the distinct partition tuples of the
         snapshot's ACTIVE files, decoded to the partition schema's
-        types — answered from the file inventory alone (no data
-        Parquet opened). Raises on an unpartitioned table, matching
+        types by the pruner's codec — answered from the Snapshot's
+        file rows alone (no data Parquet opened, no Spark job until the
+        result is read). Raises on an unpartitioned table, matching
         delta-spark."""
+        from .partition_values import decode_row
         snap = self._resolve(version, None)
         pcols = snap.metadata.partitionColumns
         if not pcols:
             raise DeltaError("SHOW PARTITIONS on an unpartitioned table")
         ptypes = {f.name: f.dataType
                   for f in snap.metadata.partition_schema.fields}
-        phys = snap.metadata.name_map()
-        return (snap.files_local_df
-                .select(*[F.col("partitionValues")
-                          .getItem(phys.get(c, c))
-                          .cast(ptypes[c]).alias(c) for c in pcols])
-                .distinct())
+        inv = snap._inventory
+        # distinct after decoding: "1" and "01" are one int partition
+        rows = list(dict.fromkeys(
+            tuple(map(decode_row(pv, inv.fields).get, pcols))
+            for pv in inv.tuples))
+        return local_rows_df(self.spark, rows, T.StructType(
+            [T.StructField(c, ptypes[c]) for c in pcols]))
 
     def describe_detail(self) -> Dict[str, Any]:
         """DESCRIBE DETAIL: one metadata-plane row about the table —
@@ -701,15 +701,14 @@ class DeltaTable:
         if new in names:
             raise DeltaError(f"column already exists: {new!r}")
         for key, expr in (meta.configuration or {}).items():
-            if key.startswith("delta.constraints.") and old in expr:
+            if key.startswith("delta.constraints.") \
+                    and _references(expr, old):
                 raise DeltaError(
                     f"column {old!r} is referenced by constraint "
                     f"{key!r}; drop the constraint first")
-        import re as _re
         for f in meta.schema.fields:
             gen = (f.metadata or {}).get(_GEN_KEY)
-            if gen and f.name != old and _re.search(
-                    rf"\b{_re.escape(old)}\b", gen):
+            if gen and f.name != old and _references(gen, old):
                 raise DeltaError(
                     f"column {old!r} is referenced by generated "
                     f"column {f.name!r} (GENERATED ALWAYS AS {gen})")
@@ -747,15 +746,14 @@ class DeltaTable:
         if len(names) == 1:
             raise DeltaError("cannot drop the last column")
         for key, expr in (meta.configuration or {}).items():
-            if key.startswith("delta.constraints.") and name in expr:
+            if key.startswith("delta.constraints.") \
+                    and _references(expr, name):
                 raise DeltaError(
                     f"column {name!r} is referenced by constraint "
                     f"{key!r}; drop the constraint first")
-        import re as _re
         for f in meta.schema.fields:
             gen = (f.metadata or {}).get(_GEN_KEY)
-            if gen and f.name != name and _re.search(
-                    rf"\b{_re.escape(name)}\b", gen):
+            if gen and f.name != name and _references(gen, name):
                 raise DeltaError(
                     f"column {name!r} is referenced by generated "
                     f"column {f.name!r} (GENERATED ALWAYS AS {gen})")
@@ -846,10 +844,9 @@ class DeltaTable:
             # convenience — refuse loudly.
             raise DeltaError(
                 f"cannot widen partition column {name!r}")
-        import re as _re
         for f in meta.schema.fields:
             gen = (f.metadata or {}).get(_GEN_KEY)
-            if gen and _re.search(rf"\b{_re.escape(name)}\b", gen):
+            if gen and _references(gen, name):
                 raise DeltaError(
                     f"column {name!r} is referenced by generated "
                     f"column {f.name!r}; widening could change the "
@@ -1069,7 +1066,7 @@ class DeltaTable:
         conf = (txn.new_metadata or meta).configuration
         version = self._commit_legs(
             txn, operation, params,
-            _WHOLE_TABLE if overwrite and meta is not None else [],
+            _whole_table(txn) if overwrite and meta is not None else [],
             inserted=df, actions=actions, user_metadata=user_metadata,
             metrics=lambda adds: {
                 "numFiles": str(len(adds)),
@@ -1185,7 +1182,8 @@ class DeltaTable:
         rows. Under row tracking every leg but ``inserted`` carries
         ``_row_id``/``_row_commit_version`` as
         ``Snapshot.to_df(with_row_ids=True)`` yields them. ``removes``
-        is the list of files the commit replaces, or ``_WHOLE_TABLE``.
+        is the list of files the commit replaces (``_whole_table``
+        for every live file).
         ``actions`` join the same commit (SetTransaction,
         DomainMetadata, a DV delete's re-adds). ``data_change=False``
         marks a layout-only rewrite (OPTIMIZE, REORG: a kept leg).
@@ -1214,9 +1212,8 @@ class DeltaTable:
         - one staging call; partition columns, stats width, schema
           order, bloom columns and physical names all come from the
           effective metadata;
-        - one commit: whole-table removes stream off ``files_df``
-          through ``commit_stream``; every other commit goes through
-          ``txn.commit``."""
+        - one commit through ``txn.commit``, which derives the
+          isolation level and blind-append flag from the actions."""
         meta = txn.new_metadata or txn.snapshot.metadata
         conf = TableConfig(meta.configuration)
         tcols = [f.name for f in meta.schema.fields]
@@ -1290,25 +1287,6 @@ class DeltaTable:
                                          meta.partitionColumns,
                                          physical_meta=meta)
         now = int(time.time() * 1000)
-        if removes is _WHOLE_TABLE:
-            # every live file: an O(table-width) action set, streamed
-            # like CLONE/RESTORE (the adds are this commit's own output,
-            # already O(new files) on the driver)
-            txn.read_whole_table()
-            files_df = txn.snapshot.files_df
-
-            def files():
-                for r in files_df.toLocalIterator():
-                    yield addfiles_from_rows([r])[0].remove(
-                        now, data_change=data_change)
-                yield from adds
-
-            return txn.commit_stream(
-                list(actions) + cdcs, files, has_removes=True,
-                data_change=data_change, operation=operation,
-                operation_parameters=params,
-                operation_metrics=metrics(adds),
-                user_metadata=user_metadata)
         return txn.commit(
             list(adds) + [f.remove(now, data_change=data_change)
                           for f in removes] + list(actions) + cdcs,
@@ -1329,7 +1307,7 @@ class DeltaTable:
             raise FileNotFoundError("table does not exist")
         if predicate is None:
             return self._commit_legs(txn, "DELETE", {"predicate": "true"},
-                                     _WHOLE_TABLE)
+                                     _whole_table(txn))
         candidates = txn.mark_files_as_read(predicate)
         residual = DeltaScan(snap, predicate).residual
         if residual is not None and deletion_vectors:
@@ -1473,6 +1451,7 @@ class DeltaTable:
             # every concurrent add. Reject it here with a clear error
             # rather than silently degrading the conflict footprint.
             part_cols = set(snap.metadata.partitionColumns)
+            predicate = bind(predicate, snap.metadata.schema)
             extra = predicate.references() - part_cols
             if extra:
                 raise ValueError(
@@ -1723,8 +1702,9 @@ class DeltaTable:
         Deep: additionally copies every active data file under the
         target root (relative paths). The DATA MOVEMENT — the 100 TB
         part — runs as a distributed job over the file list through the
-        store; the driver builds only the action list (inherent: the
-        commit enumerates the files either way).
+        store; the driver builds the action list from the source
+        Snapshot's file rows (inherent: the commit enumerates the files
+        either way).
 
         The target must not already exist. Returns
         {version, sourceVersion, filesCloned, bytesCloned}.
@@ -1740,34 +1720,23 @@ class DeltaTable:
             src.metadata, id=str(uuid.uuid4()), createdTime=now))
         tgt_root = tgt_log.table_path
         src_root = src.table_path
-        # commit-width metrics come from ONE aggregate, not a driver
-        # loop over the file list
-        row = (src.files_df
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("size"), F.lit(0)).alias("b"))
-               .first())
-        n_files, bytes_cloned = int(row["n"]), int(row["b"])
+        summary = src.state_summary()
+        n_files, bytes_cloned = summary["numOfFiles"], summary["sizeInBytes"]
 
         def _dest_rel(absolute: str) -> str:
             # deterministic (md5-derived, not uuid): the deep-copy job
-            # and the streamed action pass compute it independently
+            # and the action list compute it independently
             if absolute.startswith(src_root + "/"):
                 return os.path.relpath(absolute, src_root)
             digest = hashlib.md5(absolute.encode()).hexdigest()
             return f"{digest}-{os.path.basename(absolute)}"
 
-        def files_factory():
-            # streamed off the file-set DataFrame: the driver holds ONE
-            # action at a time (VERDICT r10 #8), the commit JSON is
-            # written incrementally through the LogStore. Paths are
-            # physical; the commit's relativize encodes them.
-            for r in src.files_df.toLocalIterator():
-                f = addfiles_from_rows([r])[0]
-                new_path = (os.path.join(tgt_root, _dest_rel(f.path))
-                            if deep else f.path)
-                yield dataclasses.replace(
-                    f, path=new_path, dataChange=True,
-                    modificationTime=now)
+        # paths are physical; the commit's relativize encodes them
+        adds = [dataclasses.replace(
+                    f, path=(os.path.join(tgt_root, _dest_rel(f.path))
+                             if deep else f.path),
+                    dataChange=True, modificationTime=now)
+                for f in addfiles_from_rows(src._files_rows)]
 
         if deep and n_files:
             import pandas as pd
@@ -1786,8 +1755,9 @@ class DeltaTable:
 
             n_parts = min(n_files,
                           self.spark.sparkContext.defaultParallelism) or 1
-            copied = (src.files_df.select("path")
-                      .repartition(n_parts)
+            copied = (local_rows_df(self.spark,
+                                    [(r["path"],) for r in src._files_rows],
+                                    "path string", parts=n_parts)
                       .mapInPandas(copy_files, "n long")
                       .agg(F.sum("n")).collect()[0][0])
             assert copied == n_files, (copied, n_files)
@@ -1799,9 +1769,8 @@ class DeltaTable:
             # physical names / DV tags, so a legacy-reader-refuses gate
             # must survive the clone
             head.append(src.protocol)
-        ver = txn.commit_stream(
-            head, files_factory, has_removes=False, data_change=True,
-            operation="CLONE",
+        ver = txn.commit(
+            head + adds, "CLONE",
             operation_parameters={"source": self.path,
                                   "sourceVersion": str(src.version),
                                   "isShallow": json.dumps(not deep)},
@@ -1809,6 +1778,14 @@ class DeltaTable:
                                "clonedBytes": str(bytes_cloned)})
         return {"version": ver, "sourceVersion": src.version,
                 "filesCloned": n_files, "bytesCloned": bytes_cloned}
+
+
+def _whole_table(txn: OptimisticTransaction) -> List[AddFile]:
+    """Every live file of the txn's read snapshot, recorded as a
+    whole-table read: the removes of an overwrite and of an
+    unconditional DELETE."""
+    txn.read_whole_table()
+    return txn.snapshot.all_files()
 
 
 def _nested_fields(dtype) -> Any:
@@ -1916,6 +1893,15 @@ def _enforce_invariants(df: DataFrame, meta, what: str) -> None:
 
 
 _GEN_KEY = "delta.generationExpression"
+
+
+def _references(sql: str, column: str) -> bool:
+    """True when the SQL text ``sql`` (a CHECK constraint or generation
+    expression) names ``column`` as a whole word, case-insensitively as
+    Spark resolves it: ``amount > 0`` references ``amount``, not
+    ``a``."""
+    return re.search(rf"(?<!\w){re.escape(column)}(?!\w)", sql,
+                     re.IGNORECASE) is not None
 
 
 def _generated_exprs(meta) -> Dict[str, Tuple[Any, str]]:
@@ -2252,25 +2238,29 @@ def _hilbert_code(df: DataFrame, cols: List[str]) -> F.Column:
 
 
 def _protected_paths(snap: Snapshot, horizon: int) -> DataFrame:
-    """The paths VACUUM must keep, as one ``__p`` column: active files,
-    their deletion-vector sidecars, and the tombstones still inside the
-    retention window with their sidecars. The tombstone legs are the
-    contract VACUUM must honour (InMemoryLogReplay.scala:90-92,
-    DeltaConfig.scala:219-225): a file DELETE'd yesterday has an OLD
-    mtime but its tombstone is young — reclaiming it would strand time
-    travel to every version of the retention window. Protection keys on
-    deletionTimestamp, never mtime."""
+    """The paths VACUUM must keep, as one local relation of one ``__p``
+    column: active files, their deletion-vector sidecars, and the
+    tombstones still inside the retention window with their sidecars.
+    The tombstone legs are the contract VACUUM must honour
+    (InMemoryLogReplay.scala:90-92, DeltaConfig.scala:219-225): a file
+    DELETE'd yesterday has an OLD mtime but its tombstone is young —
+    reclaiming it would strand time travel to every version of the
+    retention window. Protection keys on deletionTimestamp, never
+    mtime."""
     from .dv import DV_TAG
-
-    def with_dvs(df):
-        dv = (df.select(F.col("tags").getItem(DV_TAG).alias("__t"))
-              .where(F.col("__t").isNotNull())
-              .select(canonical_path_col("__t", snap.table_path)
-                      .alias("__p")))
-        return df.select(F.col("path").alias("__p")).unionByName(dv)
-    return (with_dvs(snap.files_df)
-            .unionByName(with_dvs(snap.retained_tombstones(horizon)))
-            .distinct())
+    keep = set()
+    for rows in (snap._files_rows, snap.retained_tombstone_rows(horizon)):
+        for r in rows:
+            keep.add(r["path"])
+            dv = (r["tags"] or {}).get(DV_TAG)
+            if dv:
+                keep.add(canonical_path(dv, snap.table_path))
+    rel = local_rows_df(snap.spark, [(p,) for p in keep], "__p string")
+    # Spark cannot size a driver-built relation, so it would shuffle both
+    # join sides; its own broadcast threshold applies to the known size
+    limit = snap.spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return F.broadcast(rel) if sum(map(len, keep)) <= limit else rel
 
 
 def _compact_log_range(log, table_path: str, start: int,
@@ -2421,6 +2411,7 @@ class TableMaintenance:
             # partitionPredicate): partition-column predicates only —
             # a data-column predicate can't select whole files and
             # would silently degrade to full-table, so refuse instead.
+            where = bind(where, snap.metadata.schema)
             extra = where.references() - set(pcols)
             if extra:
                 raise DeltaError(
@@ -2601,25 +2592,20 @@ class TableMaintenance:
         txn.read_whole_table()
 
         from .dv import DV_TAG
-        # The file-set diff runs as DataFrame joins on files_df (paths
-        # are canonical there) — only the DIFF rows, which the commit
-        # must enumerate anyway, ever reach the driver. A path present
-        # in both snapshots still needs re-adding when its deletion
-        # vector differs (the DV lives in tags, not the path).
-        cur_k = snap.files_df.select(
-            F.col("path").alias("__p"),
-            F.col("tags").getItem(DV_TAG).alias("__cdv"))
-        want_df = target.files_df.withColumn(
-            "__wdv", F.col("tags").getItem(DV_TAG))
-        add_df = (want_df
-                  .join(cur_k, want_df["path"] == cur_k["__p"], "left")
-                  .where(F.col("__p").isNull() |
-                         ~F.col("__wdv").eqNullSafe(F.col("__cdv")))
-                  .drop("__p", "__cdv", "__wdv"))
-        remove_df = snap.files_df.join(target.files_df.select("path"),
-                                       "path", "left_anti")
-        n_add = add_df.count()
-        n_remove = remove_df.count()
+        # The file-set diff, keyed by canonical path on the driver. A
+        # path present in both snapshots is re-added when its deletion
+        # vector differs (the DV lives in tags, not the path); the
+        # replaced entry is removed in the same commit, so the file
+        # count and the change feed see one file, not two.
+        cur = {r["path"]: r for r in snap._files_rows}
+        want = {r["path"]: r for r in target._files_rows}
+
+        def dv(r):
+            return (r["tags"] or {}).get(DV_TAG)
+        add_rows = [r for p, r in want.items()
+                    if p not in cur or dv(cur[p]) != dv(r)]
+        remove_rows = [r for p, r in cur.items()
+                       if p not in want or dv(want[p]) != dv(r)]
 
         root = t.path
         local_root = root[len("file:"):] if root.startswith("file:") else root
@@ -2630,12 +2616,8 @@ class TableMaintenance:
         from .shipping import ensure_shipped_by_value
         ensure_shipped_by_value()
         store = t.log.store
-        dv_needed = (target.files_df
-                     .select(F.col("tags").getItem(DV_TAG).alias("__t"))
-                     .where(F.col("__t").isNotNull())
-                     .select(canonical_path_col("__t", snap.table_path)
-                             .alias("path")))
-        needed = target.files_df.select("path").unionByName(dv_needed)
+        needed = list(want) + [canonical_path(dv(r), snap.table_path)
+                               for r in want.values() if dv(r)]
 
         def find_missing(batches):
             for pdf in batches:
@@ -2644,28 +2626,15 @@ class TableMaintenance:
                 yield pd.DataFrame({"path": gone})
 
         missing = [r["path"] for r in
-                   needed.mapInPandas(find_missing, "path string")
-                   .limit(100).collect()]
+                   local_rows_df(t.spark, [(p,) for p in needed],
+                                 "path string")
+                   .mapInPandas(find_missing, "path string")
+                   .limit(100).collect()] if needed else []
         if missing:
             raise DeltaError(
                 f"cannot restore to version {target.version}: "
                 f"data file(s) were removed by VACUUM "
                 f"(first: {sorted(missing)[0]})")
-
-        now = int(time.time() * 1000)
-        import dataclasses
-
-        def files_factory():
-            # streamed action pass (VERDICT r10 #8): the commit JSON
-            # enumerates the diff atomically, but the driver holds one
-            # action at a time. Re-added files are a data change even
-            # if their original commit was a dataChange=false layout
-            # rewrite (OPTIMIZE).
-            for r in add_df.toLocalIterator():
-                yield dataclasses.replace(addfiles_from_rows([r])[0],
-                                          dataChange=True)
-            for r in remove_df.toLocalIterator():
-                yield addfiles_from_rows([r])[0].remove(now)
 
         if target.metadata.schemaString != snap.metadata.schemaString \
                 or target.metadata.configuration \
@@ -2673,13 +2642,18 @@ class TableMaintenance:
                 or target.metadata.partitionColumns \
                 != snap.metadata.partitionColumns:
             txn.update_metadata(target.metadata, overwrite_schema=True)
-        ver = txn.commit_stream(
-            [], files_factory, has_removes=n_remove > 0,
-            data_change=True, operation="RESTORE",
-            operation_parameters={"version": str(target.version)},
-            operation_metrics={"numRestoredFiles": str(n_add),
-                               "numRemovedFiles": str(n_remove)})
-        return {"filesAdded": n_add, "filesRemoved": n_remove,
+        # Re-added files are a data change even if their original
+        # commit was a dataChange=false layout rewrite (OPTIMIZE).
+        import dataclasses
+        now = int(time.time() * 1000)
+        ver = txn.commit(
+            [dataclasses.replace(f, dataChange=True)
+             for f in addfiles_from_rows(add_rows)]
+            + [f.remove(now) for f in addfiles_from_rows(remove_rows)],
+            "RESTORE", {"version": str(target.version)},
+            operation_metrics={"numRestoredFiles": str(len(add_rows)),
+                               "numRemovedFiles": str(len(remove_rows))})
+        return {"filesAdded": len(add_rows), "filesRemoved": len(remove_rows),
                 "version": ver}
 
     def compute_stats(self) -> Dict[str, int]:
@@ -2719,7 +2693,6 @@ class TableMaintenance:
                 yield pd.DataFrame(rows,
                                    columns=["path", "stats", "size"])
 
-        from .localrel import local_rows_df
         par = min(len(missing),
                   spark.sparkContext.defaultParallelism) or 1
         stat_rows = {r["path"]: r for r in
@@ -2782,21 +2755,18 @@ class TableMaintenance:
         return _compact_log_range(log, snap.table_path, start, end)
 
     def compute_checksum(self) -> Dict[str, int]:
-        """Bootstrap (or repair) the version-checksum chain: aggregate
-        the CURRENT snapshot's file relation once (numFiles, total
-        bytes — one Spark job, never per-commit) and publish
-        ``<version>.crc``. Every later commit then extends the chain
+        """Bootstrap (or repair) the version-checksum chain: sum the
+        CURRENT snapshot's file rows once (numFiles, total bytes — no
+        Spark job, never per-commit) and publish ``<version>.crc``. Every later commit then extends the chain
         incrementally at zero job cost (txn._write_version_checksum).
         Use on pre-feature tables or after a chain break (a remove
         without size info)."""
         from .log import checksum as cks
         snap = self.table.snapshot()
-        row = (snap.files_df
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"))
-               .first())
+        summary = snap.state_summary()
         crc = cks.VersionChecksum(
-            tableSizeBytes=int(row["bytes"]), numFiles=int(row["n"]),
+            tableSizeBytes=summary["sizeInBytes"],
+            numFiles=summary["numOfFiles"],
             protocol=snap.protocol, metadata=snap.metadata,
             domainMetadata=[DomainMetadata(k, v) for k, v in
                             sorted(snap.domain_metadata.items())])
@@ -2808,8 +2778,8 @@ class TableMaintenance:
                 "tableSizeBytes": crc.tableSizeBytes}
 
     def verify_checksum(self) -> Dict[str, Any]:
-        """Integrity check (FSCK's log-side twin): aggregate the live
-        snapshot state and compare against the writer's ``.crc``
+        """Integrity check (FSCK's log-side twin): sum the live
+        snapshot's file rows and compare against the writer's ``.crc``
         record at the same version. Raises DeltaError on mismatch — a
         lost delta file, truncated checkpoint or corrupted action
         surfaces loudly instead of as silently wrong aggregates.
@@ -2819,13 +2789,10 @@ class TableMaintenance:
         snap = self.table.snapshot()
         crc = cks.read_checksum(snap.store, self.table.log.log_path,
                                 snap.version)
-        row = (snap.files_df
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"))
-               .first())
+        summary = snap.state_summary()
         out = {"version": snap.version, "checksum_present": crc is not None,
-               "numFiles": int(row["n"]),
-               "tableSizeBytes": int(row["bytes"])}
+               "numFiles": summary["numOfFiles"],
+               "tableSizeBytes": summary["sizeInBytes"]}
         if crc is None:
             return out
         problems = []
@@ -2897,7 +2864,6 @@ class TableMaintenance:
                 yield pd.DataFrame(missing or None,
                                    columns=["path"])
 
-        from .localrel import local_rows_df
         n_parts = min(len(files),
                       spark.sparkContext.defaultParallelism) or 1
         missing = [r["path"] for r in
@@ -3011,7 +2977,6 @@ class TableMaintenance:
                             mts.append(st[1])
                 yield pd.DataFrame({"rel": rels, "mtime": mts})
 
-        from .localrel import local_rows_df
         n_seed_parts = min(len(seeds),
                            spark.sparkContext.defaultParallelism) or 1
         listing = (local_rows_df(spark, [(s,) for s in seeds],
@@ -3020,10 +2985,10 @@ class TableMaintenance:
 
         active = _protected_paths(snap, horizon)
 
-        # No broadcast hint on the anti-join: the active inventory is
-        # usually tiny (→ auto-broadcast) but a forced hint would pin a
-        # multi-million-file inventory in driver memory; both sides are
-        # metadata-sized, so a shuffled anti-join is fine at the tail.
+        # The anti-join broadcasts the protected set under Spark's
+        # threshold (_protected_paths); a multi-million-file inventory
+        # takes a shuffled anti-join instead — both sides are
+        # metadata-sized, so that is fine at the tail.
         cand = (listing
                 .withColumn("__p", F.concat(F.lit(local_root + "/"),
                                             F.col("rel")))
@@ -3047,9 +3012,13 @@ class TableMaintenance:
             doomed = [r["rel"] for r in
                       cand.select("rel").mapInPandas(
                           delete_files, "rel string").collect()]
-            # prune now-empty partition dirs (bounded by dir count)
+            # prune now-empty partition dirs (bounded by dir count); a
+            # concurrent writer's _staging_* tree is skipped, as in the
+            # listing: its empty task dirs are still in use
             for dirpath, dirs, files in os.walk(local_root, topdown=False):
-                if "_delta_log" in dirpath or dirpath == local_root:
+                if "_delta_log" in dirpath or dirpath == local_root \
+                        or os.path.relpath(dirpath, local_root) \
+                        .startswith("_staging"):
                     continue
                 if not dirs and not files:
                     try:
@@ -3205,11 +3174,11 @@ class TableMaintenance:
         paths written. Stale manifest subdirectories from dropped
         partitions are removed.
 
-        Scale: the grouping runs on ``files_df`` (one shuffle keyed by
-        the physical directory — the partition fan-out) and each
-        executor task writes its directories' manifest files through
-        the LogStore; the driver collects only the written paths
-        (bounded by partition count, the inherent report size).
+        Scale: the driver groups the Snapshot's file rows by physical
+        directory (the partition fan-out) and executor tasks write the
+        directories' manifest files through the LogStore; the driver
+        collects only the written paths (bounded by partition count,
+        the inherent report size).
         """
         t = self.table
         spark = t.log.spark
@@ -3229,17 +3198,12 @@ class TableMaintenance:
         # mirrors the on-disk partition layout even for escaped
         # partition values; files outside the table root (absolute-path
         # adds) land in the root manifest
-        rel = F.when(F.col("path").startswith(prefix),
-                     F.expr(f"substring(path, {len(prefix) + 1})"))
-        sub = F.when(rel.isNull() | ~rel.contains("/"), F.lit("")) \
-            .otherwise(F.regexp_replace(rel, "/[^/]*$", ""))
-        grouped = (snap.files_df
-                   .select(sub.alias("__sub"),
-                           F.concat(F.lit("file:"), F.col("path"))
-                           .alias("__uri"))
-                   .groupBy("__sub")
-                   .agg(F.sort_array(F.collect_list("__uri"))
-                        .alias("__uris")))
+        groups: Dict[str, List[str]] = {}
+        for r in snap._files_rows:
+            p = r["path"]
+            sub = os.path.dirname(p[len(prefix):]) \
+                if p.startswith(prefix) else ""
+            groups.setdefault(sub, []).append("file:" + p)
 
         def write_manifests(batches):
             for pdf in batches:
@@ -3252,6 +3216,9 @@ class TableMaintenance:
                     out.append(path)
                 yield pd.DataFrame({"path": out})
 
+        grouped = local_rows_df(
+            spark, [(sub, sorted(uris)) for sub, uris in groups.items()],
+            "__sub string, __uris array<string>")
         written = [r["path"] for r in
                    grouped.mapInPandas(write_manifests,
                                        "path string").collect()]

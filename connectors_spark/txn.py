@@ -151,9 +151,14 @@ class OptimisticTransaction:
         # reading NULL (delta-spark's ALTER TABLE enablement backfill).
         # The re-adds depend on the file list we read, so the txn reads
         # the whole table — a concurrent OPTIMIZE/DELETE must abort us,
-        # not be resurrected by a stale re-add.
+        # not be resurrected by a stale re-add. Skipped: files this
+        # commit adds or removes (a re-add of a removed file would win
+        # on replay and bring it back, e.g. a RESTORE across an
+        # enablement) and files that kept ids from an earlier
+        # enablement.
         new_meta_act = next(
             (a for a in acts if isinstance(a, Metadata)), None)
+        backfilled: Set[str] = set()
         if (new_meta_act is not None and self.snapshot is not None
                 and TableConfig(new_meta_act.configuration)
                 .enable_row_tracking
@@ -161,14 +166,15 @@ class OptimisticTransaction:
                 .enable_row_tracking):
             import dataclasses
             tp = self.log.table_path
-            already = {canonical_path(a.path, tp)
-                       for a in acts if isinstance(a, AddFile)}
+            touched = {canonical_path(a.path, tp) for a in acts
+                       if isinstance(a, (AddFile, RemoveFile))}
             backfill = [
                 dataclasses.replace(a, path=relativize(a.path, tp),
-                                    dataChange=False, baseRowId=None,
+                                    dataChange=False,
                                     defaultRowCommitVersion=None)
                 for a in self.snapshot.all_files()
-                if a.path not in already]
+                if a.path not in touched and a.baseRowId is None]
+            backfilled = {a.path for a in backfill}
             if backfill:
                 self._read_whole_table = True
                 self._carries_enablement_backfill = True
@@ -265,7 +271,11 @@ class OptimisticTransaction:
             try:
                 self.log.store.write(target, lines, overwrite=False)
                 self.committed = True
-                self._write_version_checksum(attempt_version, eff_acts)
+                # a backfill re-add replaces its own live entry: no
+                # change to the file count or the table size
+                self._write_version_checksum(attempt_version, [
+                    a for a in eff_acts if not (
+                        isinstance(a, AddFile) and a.path in backfilled)])
                 self.log.post_commit(attempt_version)
                 return attempt_version
             except FileAlreadyExistsError:
@@ -338,245 +348,6 @@ class OptimisticTransaction:
                 json.dumps({"rowIdHighWaterMark": hwm},
                            separators=(",", ":"))))
         return out
-
-    def commit_stream(self, head_actions: Sequence[Any], files_factory,
-                      *, has_removes: bool, data_change: bool = True,
-                      operation: str = "Manual Update",
-                      operation_parameters: Optional[Dict[str, str]] = None,
-                      engine_info: str = ENGINE_INFO,
-                      operation_metrics: Optional[Dict[str, str]] = None,
-                      user_metadata: Optional[str] = None) -> int:
-        """Commit a WIDE file set without materializing it on the driver
-        (CLONE / RESTORE / whole-table overwrite — VERDICT r10 #8): the
-        commit JSON must enumerate every file atomically, but the driver
-        can stream it. ``head_actions`` is the small list (Metadata /
-        Protocol / SetTransaction); ``files_factory()`` returns a FRESH
-        iterator of AddFile/RemoveFile actions (typically mapped off
-        ``DataFrame.toLocalIterator()``), consumed once per commit
-        attempt — peak driver memory is O(one action), the LogStore
-        streams lines to the file. The caller declares
-        ``has_removes`` / ``data_change`` (deriving them would need an
-        extra pass). Conflict-retry and the incremental checksum both
-        re-pull fresh iterators / use write-pass tallies, so no path
-        re-materializes the set."""
-        if self.committed:
-            raise DeltaError("Transaction already committed")
-        for a in head_actions:
-            if isinstance(a, (AddFile, RemoveFile)):
-                raise DeltaError(
-                    "file actions belong in files_factory, not head")
-        head = self._prepare_commit(list(head_actions))
-
-        eff_meta = self.new_metadata or (
-            self.snapshot.metadata if self.snapshot else None)
-        if eff_meta is None:
-            meta = next((a for a in head if isinstance(a, Metadata)), None)
-            eff_meta = meta
-        cfg = TableConfig(eff_meta.configuration) if eff_meta else None
-        if cfg is not None and cfg.append_only and has_removes \
-                and data_change:
-            raise DeltaError(
-                "This table is append-only (delta.appendOnly); removes "
-                "with dataChange are forbidden "
-                "(DeltaLogImpl.assertRemovable)")
-        pcols = sorted(eff_meta.physical_partition_columns) \
-            if eff_meta is not None else []
-        table_path = self.log.table_path
-
-        tally = {"n": 0, "bytes": 0, "broken": False, "domains": []}
-
-        def prepped():
-            tally["n"] = 0
-            tally["bytes"] = 0
-            tally["broken"] = False
-            tally["domains"] = []
-            for a in files_factory():
-                if isinstance(a, AddFile):
-                    if sorted(a.partitionValues.keys()) != pcols:
-                        raise DeltaError(
-                            f"AddFile partition values "
-                            f"{sorted(a.partitionValues)} do not match "
-                            f"table partition columns {pcols}")
-                    a = AddFile(path=relativize(a.path, table_path),
-                                partitionValues=a.partitionValues,
-                                size=a.size,
-                                modificationTime=a.modificationTime,
-                                dataChange=a.dataChange, stats=a.stats,
-                                tags=a.tags, baseRowId=a.baseRowId,
-                                defaultRowCommitVersion=a.
-                                defaultRowCommitVersion)
-                    tally["n"] += 1
-                    tally["bytes"] += int(a.size or 0)
-                elif isinstance(a, RemoveFile):
-                    a = RemoveFile(path=relativize(a.path, table_path),
-                                   deletionTimestamp=a.deletionTimestamp,
-                                   dataChange=a.dataChange,
-                                   extendedFileMetadata=a.extendedFileMetadata,
-                                   partitionValues=a.partitionValues,
-                                   size=a.size, tags=a.tags,
-                                   baseRowId=a.baseRowId,
-                                   defaultRowCommitVersion=a.
-                                   defaultRowCommitVersion)
-                    tally["n"] -= 1
-                    if a.size is None:
-                        tally["broken"] = True
-                    else:
-                        tally["bytes"] -= int(a.size)
-                else:
-                    raise DeltaError(
-                        "streamed actions must be AddFile/RemoveFile")
-                yield a
-
-        isolation = SERIALIZABLE if data_change else SNAPSHOT_ISOLATION
-        depends_on_files = bool(self.read_predicates) \
-            or self._read_whole_table
-        is_blind_append = not has_removes and not depends_on_files
-        ict_enabled = eff_meta is not None and TableConfig(
-            eff_meta.configuration).enable_in_commit_timestamps
-        rt_enabled = cfg is not None and cfg.enable_row_tracking
-
-        def build_lines(prev_version: int):
-            import dataclasses
-            ict = None
-            if ict_enabled:
-                prev = _read_ict(self.log.store, self.log.log_path,
-                                 prev_version)
-                ict = max(int(time.time() * 1000), (prev or 0) + 1)
-            info = CommitInfo(
-                timestamp=int(time.time() * 1000),
-                operation=operation,
-                operationParameters=operation_parameters or {},
-                readVersion=self.read_version
-                if self.read_version >= 0 else None,
-                isolationLevel=isolation,
-                isBlindAppend=is_blind_append,
-                operationMetrics=operation_metrics,
-                userMetadata=user_metadata,
-                engineInfo=engine_info,
-                inCommitTimestamp=ict,
-            )
-            yield to_json_line(info)
-            for a in head:
-                yield to_json_line(a)
-            if not rt_enabled:
-                for a in prepped():
-                    yield to_json_line(a)
-                return
-            # Row tracking in the STREAMED pass: assign baseRowIds on
-            # the fly (one action live at a time, same as the rest of
-            # the stream) and publish the watermark after the last one.
-            if self.snapshot is None:
-                dm = None  # first commit: the table starts at -1
-            elif prev_version == self.read_version:
-                dm = self.snapshot.domain_metadata.get(
-                    ROW_TRACKING_DOMAIN)
-            else:
-                dm = self.log.snapshot().domain_metadata.get(
-                    ROW_TRACKING_DOMAIN)
-            hwm = json.loads(dm)["rowIdHighWaterMark"] if dm else -1
-            n_adds = 0
-            hwm0 = hwm
-            for a in prepped():
-                if isinstance(a, AddFile):
-                    n = (json.loads(a.stats).get("numRecords")
-                         if a.stats else None)
-                    if a.baseRowId is not None:
-                        # preserved re-add (CLONE/RESTORE): keep ids,
-                        # but the watermark must dominate its top edge
-                        if n is not None:
-                            hwm = max(hwm, a.baseRowId + int(n) - 1)
-                        elif a.baseRowId > hwm:
-                            raise DeltaError(
-                                f"cannot preserve row ids of {a.path}:"
-                                f" baseRowId exceeds the watermark and"
-                                f" no numRecords stats are present")
-                        n_adds += 1
-                    else:
-                        if n is None:
-                            raise DeltaError(
-                                f"row tracking requires numRecords "
-                                f"stats on every AddFile; {a.path} "
-                                f"has none")
-                        a = dataclasses.replace(
-                            a, baseRowId=hwm + 1,
-                            defaultRowCommitVersion=prev_version + 1)
-                        hwm += int(n)
-                        n_adds += 1
-                yield to_json_line(a)
-            if n_adds and (hwm != hwm0 or dm is None):
-                wm = DomainMetadata(
-                    ROW_TRACKING_DOMAIN,
-                    json.dumps({"rowIdHighWaterMark": hwm},
-                               separators=(",", ":")))
-                # not part of head: surface it to the checksum fold
-                tally["domains"].append(wm)
-                yield to_json_line(wm)
-
-        import itertools
-        attempt_version = self.read_version + 1
-        for _ in range(MAX_RETRIES):
-            target = fn.delta_file(self.log.log_path, attempt_version)
-            try:
-                self.log.store.write(target,
-                                     build_lines(attempt_version - 1),
-                                     overwrite=False)
-                self.committed = True
-                self._write_streamed_checksum(attempt_version, head, tally)
-                self.log.post_commit(attempt_version)
-                return attempt_version
-            except FileAlreadyExistsError:
-                self._check_for_conflicts(
-                    attempt_version,
-                    itertools.chain(head, prepped()), isolation)
-                attempt_version += 1
-        raise DeltaError("commit retry budget exhausted")
-
-    def _write_streamed_checksum(self, version: int, head: List[Any],
-                                 tally: Dict[str, Any]) -> None:
-        """Checksum twin of _write_version_checksum for streamed
-        commits: the file-set deltas were tallied DURING the write pass,
-        so no second pass over the set is needed."""
-        try:
-            from .log import checksum as cks
-            if tally["broken"] \
-                    or getattr(self.log, "_crc_chain_broken", False):
-                if tally["broken"]:
-                    self.log._crc_chain_broken = True
-                return
-            prev = (cks.reconstruct_checksum(
-                self.log.store, self.log.log_path, version - 1)
-                if version > 0 else None)
-            if prev is None and version > 0:
-                self.log._crc_chain_broken = True
-                return
-            crc = cks.incremental_checksum(
-                prev, head, version == 0,
-                self.snapshot.protocol if self.snapshot else None,
-                self.snapshot.metadata if self.snapshot else None)
-            if crc is None:
-                return
-            n = crc.numFiles + tally["n"]
-            size = crc.tableSizeBytes + tally["bytes"]
-            if n < 0 or size < 0:
-                return
-            dom = ({d.domain: d for d in crc.domainMetadata}
-                   if crc.domainMetadata is not None else None)
-            if dom is not None:
-                for d in tally.get("domains", []):
-                    if d.removed:
-                        dom.pop(d.domain, None)
-                    else:
-                        dom[d.domain] = d
-            crc = cks.VersionChecksum(
-                tableSizeBytes=size, numFiles=n, protocol=crc.protocol,
-                metadata=crc.metadata,
-                domainMetadata=(sorted(dom.values(),
-                                       key=lambda x: x.domain)
-                                if dom is not None else None))
-            cks.write_checksum(self.log.store, self.log.log_path,
-                               version, crc)
-        except Exception:  # noqa: BLE001 — advisory record only
-            pass
 
     def _write_version_checksum(self, version: int,
                                 acts: List[Any]) -> None:
@@ -868,18 +639,11 @@ class OptimisticTransaction:
                 f"concurrent SetTransaction for appIds "
                 f"{sorted(win_txns & self.read_txn_app_ids)}")
 
-        # ONE pass over my_actions (commit_stream passes a one-shot
-        # iterator — consuming it twice would silently empty the J4
-        # delete/delete check): collect my removes and my metadata
-        # domains together.
         table_path = self.log.table_path
-        my_removed: Set[str] = set()
-        my_domains: Set[str] = set()
-        for a in my_actions:
-            if isinstance(a, RemoveFile):
-                my_removed.add(canonical_path(a.path, table_path))
-            elif isinstance(a, DomainMetadata):
-                my_domains.add(a.domain)
+        my_removed = {canonical_path(a.path, table_path)
+                      for a in my_actions if isinstance(a, RemoveFile)}
+        my_domains = {a.domain for a in my_actions
+                      if isinstance(a, DomainMetadata)}
 
         # Domain-metadata conflicts: two txns writing the SAME domain is
         # a lost update for whichever retries blindly — abort, except
@@ -931,8 +695,7 @@ class OptimisticTransaction:
             raise ConcurrentDeleteReadException(
                 f"version {winning_version} deleted file(s) read by this txn: "
                 f"{sorted(hit)[:3]}")
-        # J4: both deleted the same file (my_removed collected in the
-        # single pass above).
+        # J4: both deleted the same file.
         both = win_removed_paths & my_removed
         if both:
             raise ConcurrentDeleteDeleteException(

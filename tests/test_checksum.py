@@ -278,3 +278,20 @@ def test_checksum_rebuilt_from_genesis_tracks_domains(spark, tmp_path):
     assert rec == dict(t.snapshot().domain_metadata)
     out = TableMaintenance(t).verify_checksum()
     assert out["checksum_present"]
+
+
+@pytest.mark.pin
+def test_checksum_exact_through_readds_of_live_files(spark, tmp_path):
+    """Two commits re-add files that stay live: the row-tracking
+    enablement backfill, and a RESTORE to a version where a file had
+    another deletion vector (it removes the current entry and adds the
+    target's). Each re-added file counts once in the ``.crc``."""
+    t = DeltaTable.for_path(spark, str(tmp_path / "readd"))
+    t.write(spark.range(0, 100, 1, 2))
+    t.set_properties({"delta.enableRowTracking": "true"})
+    assert (_crc(t, 1).numFiles, _crc(t, 1).tableSizeBytes) == _live(t)
+    t.delete(Col("id") < Lit(3), deletion_vectors=True)
+    res = TableMaintenance(t).restore(version=1)
+    assert res["filesAdded"] == res["filesRemoved"] == 1
+    assert TableMaintenance(t).verify_checksum()["numFiles"] == 2
+    assert t.to_df().count() == 100

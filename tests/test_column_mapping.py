@@ -295,6 +295,23 @@ def test_rename_guards_generated_column_sources(spark, tmp_path):
     assert t.to_df().columns == ["k", "when"]
 
 
+@pytest.mark.pin
+def test_constraint_references_match_whole_words(spark, tmp_path):
+    """A CHECK constraint references a column only by its whole name:
+    ``amount > 0`` blocks renaming ``amount`` but not ``a``."""
+    t = DeltaTable.for_path(spark, str(tmp_path / "cmwords"))
+    t.write(spark.createDataFrame([Row(a=1, amount=5)]))
+    t.add_constraint("pos", "amount > 0")
+    t.enable_column_mapping()
+    t.rename_column("a", "b")
+    with pytest.raises(DeltaError, match="constraint"):
+        t.rename_column("amount", "total")
+    with pytest.raises(DeltaError, match="constraint"):
+        t.drop_column("amount")
+    t.drop_column("b")
+    assert t.to_df().columns == ["amount"]
+
+
 def test_add_column_physical_name_collision(spark, tmp_path):
     """The upgrade rule keeps existing columns' physical names equal to
     their logical names, so a pre-existing column literally named

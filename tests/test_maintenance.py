@@ -1194,3 +1194,54 @@ def test_vacuum_protects_dv_sidecar_of_young_tombstone_via_checkpoint(
     listed = maint.vacuum(retention_ms=0, dry_run=True)
     assert any(r.endswith(".parquet") for r in listed)
     assert any("deletion" in r or ".bin" in r for r in listed), listed
+
+
+@pytest.mark.pin
+def test_whole_table_commits_keep_checksum_exact(spark, tmp_path):
+    """Overwrite, an unconditional DELETE, RESTORE and CLONE each
+    enumerate the whole table in one commit; after every one the
+    ``.crc`` record agrees with the live file rows."""
+    from connectors_spark.log import checksum as cks
+
+    def check(t):
+        snap = t.log.update()
+        assert TableMaintenance(t).verify_checksum()["checksum_present"]
+        crc = cks.read_checksum(snap.store, t.log.log_path, snap.version)
+        assert crc.numFiles == len(snap._files_rows)
+
+    t = _small_appends(spark, tmp_path / "w", n=3, partitioned=True)
+    check(t)
+    t.write(spark.range(7).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("p")),
+        mode="overwrite")
+    check(t)
+    assert t.to_df().count() == 7
+    t.delete()
+    check(t)
+    assert t.to_df().count() == 0
+    res = TableMaintenance(t).restore(version=2)
+    check(t)
+    assert res["filesRemoved"] == 0 and t.to_df().count() == 30
+    c = DeltaTable.for_path(spark, str(tmp_path / "c"))
+    t.clone_to(c.path)
+    check(c)
+    assert sorted(r.id for r in c.to_df().collect()) == list(range(30))
+
+
+@pytest.mark.pin
+def test_partition_scope_checks_bind_column_names(spark, tmp_path):
+    """MERGE's ``predicate`` and OPTIMIZE's ``where`` name partition
+    columns case-insensitively, as a scan does: both bind the
+    predicate to the schema before checking its partition scope."""
+    t = DeltaTable.for_path(spark, str(tmp_path / "b"))
+    t.write(spark.range(40).select(
+        F.col("id"), (F.col("id") % 2).cast("int").alias("Part"))
+        .repartition(4), partition_by=["Part"])
+    assert len(t.scan(Col("part") == Lit(1)).collect_files()) > 1
+    res = TableMaintenance(t).optimize(where=Col("part") == Lit(1))
+    assert res["filesAdded"] == 1
+    src = spark.createDataFrame([(1, 1), (41, 1)], "id long, Part int")
+    t.merge(src, "t.id = s.id", when_matched_update={"id": "s.id"},
+            predicate=Col("part") == Lit(1))
+    assert sorted(r.id for r in t.to_df().collect()) == \
+        list(range(40)) + [41]

@@ -347,6 +347,26 @@ def test_enable_rt_backfills_existing_files(spark, tmp_path):
     assert _rids(t) == rid
 
 
+@pytest.mark.pin
+def test_restore_across_rt_enablement_keeps_removed_files_removed(
+        spark, tmp_path):
+    # RESTORE to a version with row tracking on, from one with it off,
+    # re-enables it in the restore commit. The enablement backfill must
+    # neither re-add the files the restore removes (the add would win
+    # on replay and bring them back) nor renumber files that kept ids
+    # from the earlier enablement.
+    t = DeltaTable.for_path(spark, str(tmp_path / "t"))
+    t.write(spark.range(0, 10, 1, 2))                          # v0
+    t.set_properties({"delta.enableRowTracking": "true"})      # v1
+    t.set_properties({"delta.enableRowTracking": "false"})     # v2
+    t.write(spark.range(10, 20, 1, 2), mode="append")          # v3
+    TableMaintenance(t).restore(version=1)
+    snap = t.log.update()
+    assert len(snap._files_rows) == 2
+    assert t.to_df().count() == 10
+    assert sorted(r["baseRowId"] for r in snap._files_rows) == [0, 5]
+
+
 def test_domain_metadata_bumps_protocol_without_autoupgrade(spark,
                                                             tmp_path):
     # ADVICE r11: OPTIMIZE cluster_by writes a delta.clustering

@@ -545,6 +545,18 @@ def test_show_partitions_metadata_only(spark, tmp_path):
     got = sorted(r.o_orderstatus for r in t.show_partitions().collect())
     assert got == ["F", "O"]  # P's files are gone from the snapshot
 
+    # null and escaped partition values decode to the rows Spark's cast
+    # gives, in the partition schema's types
+    d3 = str(tmp_path / "v")
+    t3 = DeltaTable.for_path(spark, d3)
+    t3.write(spark.createDataFrame(
+        [(1, None, 1), (2, "a b/c%3D=d", 2), (3, "x", None), (4, "x", None)],
+        "k int, s string, n int"), partition_by=["s", "n"])
+    parts = t3.show_partitions()
+    assert parts.dtypes == [("s", "string"), ("n", "int")]
+    assert sorted(map(tuple, parts.collect()), key=repr) == sorted(
+        [(None, 1), ("a b/c%3D=d", 2), ("x", None)], key=repr)
+
     d2 = str(tmp_path / "u")
     t2 = DeltaTable.for_path(spark, d2)
     t2.write(od.limit(5))
