@@ -35,7 +35,7 @@ import os
 import shutil
 import urllib.parse
 import uuid
-from typing import Dict, Sequence, Tuple
+from typing import Callable, Dict, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +95,21 @@ def apply_dv(data: DataFrame, dv: DataFrame, key) -> DataFrame:
     return data.join(
         dv, (data["__file"] == dv["file_path"]) & (key == dv["__dvkey"])
         & (data["__ri"] == dv["row_index"]), "left_anti")
+
+
+def copy_sidecar(src: str, dest: str, place: Callable[[str], str]) -> None:
+    """Write the sidecar ``src`` to ``dest`` with each row's data-file
+    path mapped through ``place``: a deep clone copies the data files
+    too, and a sidecar names its files by absolute path. Idempotent (a
+    retried task rewrites the same bytes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    tbl = pq.read_table(src)
+    i = tbl.schema.get_field_index("file_path")
+    tbl = tbl.set_column(i, "file_path", pa.array(
+        [place(p) for p in tbl.column(i).to_pylist()], pa.string()))
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    pq.write_table(tbl, dest)
 
 
 def stage_dv(spark: SparkSession, table_path: str,

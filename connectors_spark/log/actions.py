@@ -443,6 +443,14 @@ def from_json_line(line: str) -> Optional[Action]:
     return None
 
 
+def as_parsed(action: Action) -> Optional[Action]:
+    """``action`` as ``from_json_line`` reads it back from the line
+    ``to_json_line`` writes (omitted fields read as absent), without
+    the JSON round trip."""
+    (key, d), = action.wrap().items()
+    return parse_action(key, d)
+
+
 # ---------------------------------------------------------------------------
 # Spark schema for SingleAction — used by spark.read.json over delta files and
 # spark.read.parquet over checkpoints (same struct column names).

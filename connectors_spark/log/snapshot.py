@@ -724,12 +724,11 @@ class Snapshot:
     def files_local_df(self) -> DataFrame:
         """``files_df`` as a driver-local relation over ``_files_rows``,
         for ``metadata_aggregates``, which returns a DataFrame over the
-        inventory; perfbench's tracer wraps it by name. Scans never use it. ``localCheckpoint``
-        stores the rows as JVM rows once, so no consumer job round-trips
-        through a Python worker."""
+        inventory; perfbench's tracer wraps it by name. Scans never use
+        it. The JVM decodes it from Arrow, so no job over it starts a
+        Python worker."""
         from ..localrel import local_rows_df
-        return (local_rows_df(self.spark, self._files_rows, FILES_SCHEMA)
-                .localCheckpoint(eager=True))
+        return local_rows_df(self.spark, self._files_rows, FILES_SCHEMA)
 
     def all_files(self) -> List[AddFile]:
         """Every active file as an AddFile: the removes of whole-table
@@ -840,8 +839,8 @@ class Snapshot:
                 ("_row_commit_version", T.LongType(), with_row_ids))
             if wanted]
         if not files:
-            return self.spark.createDataFrame(
-                [], T.StructType(meta.schema.fields + tail))
+            return local_rows_df(
+                self.spark, [], T.StructType(meta.schema.fields + tail))
         # physical -> logical rename happens HERE, the one boundary
         # between the file plane and the table contract (identity when
         # column mapping is off); the projection also restores schema

@@ -23,13 +23,12 @@ from pyspark.sql import functions as F
 from .dedup import _spread
 
 from ..functions.text import tokens
+from ..localrel import local_rows_df
 
 
 
 def _local_patterns_df(spark, patterns):
-    """Pattern list as a single-slice local relation (localrel: avoids
-    defaultParallelism-wide Python slices for a handful of rows)."""
-    from ..localrel import local_rows_df
+    """Pattern list as a driver-local relation."""
     return local_rows_df(spark, [(p,) for p in patterns],
                          "pattern: string")
 
@@ -209,7 +208,7 @@ def _guard_patterns(docs: DataFrame, patterns: Sequence[str],
         T.StructField("doc_id", docs.schema[id_col].dataType),
         T.StructField("n_occurrences", T.LongType()),
     ])
-    return docs.sparkSession.createDataFrame([], schema)
+    return local_rows_df(docs.sparkSession, [], schema)
 
 
 def _verify_contains(cand_with_txt: DataFrame) -> DataFrame:

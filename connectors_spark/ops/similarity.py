@@ -711,7 +711,10 @@ def ivf_query_indexed(spark, index_path: str, queries: DataFrame,
     Read cost: nprobe/nlist of the corpus per query batch, against the
     LSH index's L-buckets-per-query — IVF reads less when queries
     cluster, LSH guarantees per-query bucket locality."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     from ..expressions import Col, Lit
+    from ..localrel import local_rows_df
     from ..table import DeltaTable
     qrows = _collect_query_side(queries, query_id_col, vec_col)
     qmat = np.array([r["_qv"] for r in qrows], dtype=np.float64)
@@ -731,9 +734,11 @@ def ivf_query_indexed(spark, index_path: str, queries: DataFrame,
     q = F.broadcast(queries.select(F.col(query_id_col).alias("_qid"),
                                    F.col(vec_col).alias("_qv")))
     # A candidate counts only if its list is among ITS query's probes.
-    probe_pairs = [(qid, l) for qid, ls in probes.items() for l in ls]
-    pp = F.broadcast(spark.createDataFrame(
-        probe_pairs, ["_qid", "list_id"]))
+    pp_rows = [(qid, l) for qid, ls in probes.items() for l in ls]
+    pp_schema = StructType([
+        StructField("_qid", queries.schema[query_id_col].dataType),
+        StructField("list_id", IntegerType())])
+    pp = F.broadcast(local_rows_df(spark, pp_rows, pp_schema))
     scored = (cand.join(pp, "list_id")
               .join(q, "_qid")
               .filter(F.col(id_col) != F.col("_qid"))

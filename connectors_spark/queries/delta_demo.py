@@ -20,6 +20,7 @@ from typing import Callable
 from pyspark.sql import functions as F
 
 from ..expressions import Col, Lit
+from ..localrel import local_rows_df
 from ..table import DeltaTable
 from .registry import load, register
 
@@ -122,7 +123,7 @@ def delta_history(spark, sf_dir):
     d = _build_tt(spark, sf_dir)
     t = DeltaTable.for_path(spark, d)
     rows = [(h["version"], h["operation"]) for h in t.history()]
-    return spark.createDataFrame(rows, "version: bigint, operation: string")
+    return local_rows_df(spark, rows, "version bigint, operation string")
 
 
 # --------------------------------------------------------------------------

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import DeltaError
+from ..localrel import local_rows_df
 from ..log.actions import AddCDCFile, AddFile, RemoveFile
 from ..log.snapshot import canonical_path
 from ..writer import CHANGE_TYPE_COL
@@ -116,5 +117,5 @@ def table_changes(table, start_version: int = 0,
         df = df.select(*out_schema.fieldNames())
         out = df if out is None else out.unionByName(df)
     if out is None:
-        return table.spark.createDataFrame([], out_schema)
+        return local_rows_df(table.spark, [], out_schema)
     return out

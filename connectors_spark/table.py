@@ -38,12 +38,12 @@ from .expressions import Expression, bind
 from .log import filenames as fn
 from .bloom import bloom_config
 from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
-                          Protocol, RemoveFile, SetTransaction)
+                          Protocol, RemoveFile, SetTransaction, as_parsed)
 from .log.logstore import LogStore, default_log_store, strip_scheme
 from .log.segment import LogSegment, get_log_segment
 from .log.snapshot import (Snapshot, addfiles_from_rows, canonical_path,
                             canonical_path_col, materialized_rt_cols,
-                            read_commit)
+                            read_commit, relativize)
 from .localrel import local_rows_df
 from .log import history as hist
 from .scan import DeltaScan
@@ -160,9 +160,13 @@ class DeltaLog:
         except (FileNotFoundError, ValueError):
             return False
 
-    def update(self) -> Optional[Snapshot]:
+    def update(self, committed: Optional[Tuple[int, List[Any]]] = None
+               ) -> Optional[Snapshot]:
         """Recompute the latest snapshot; no-op when the segment is unchanged
-        (SnapshotManagement.update:65-99)."""
+        (SnapshotManagement.update:65-99). ``committed`` is the
+        (version, actions) of the commit this process just wrote: when
+        it is the one commit between the cached Snapshot and the listed
+        segment, the seed folds it instead of reading it back."""
         with self._lock:
             try:
                 seg = get_log_segment(self.store, self.log_path)
@@ -181,11 +185,17 @@ class DeltaLog:
             if (cur is not None and seg.version >= cur.segment.version
                     and any(k in cur.__dict__ for k in Snapshot.SEEDED)):
                 try:
-                    new.seed_from(cur, [
-                        (v, read_commit(self.store,
-                                        fn.delta_file(self.log_path, v)))
-                        for v in range(cur.segment.version + 1,
-                                       seg.version + 1)])
+                    if (committed is not None and committed[0]
+                            == seg.version == cur.segment.version + 1):
+                        tail = [(committed[0],
+                                 [as_parsed(a) for a in committed[1]])]
+                    else:
+                        tail = [(v, read_commit(
+                                    self.store,
+                                    fn.delta_file(self.log_path, v)))
+                                for v in range(cur.segment.version + 1,
+                                               seg.version + 1)]
+                    new.seed_from(cur, tail)
                 except Exception:  # noqa: BLE001 — seed is best-effort
                     for k in Snapshot.SEEDED:
                         new.__dict__.pop(k, None)
@@ -280,10 +290,13 @@ class DeltaLog:
     def start_transaction(self) -> OptimisticTransaction:
         return OptimisticTransaction(self)
 
-    def post_commit(self, version: int) -> None:
+    def post_commit(self, version: int,
+                    actions: Optional[List[Any]] = None) -> None:
         """W7/W8 (OptimisticTransactionImpl.postCommit:393-405): checkpoint
-        every ``checkpointInterval`` commits, then expired-log cleanup."""
-        snap = self.update()
+        every ``checkpointInterval`` commits, then expired-log cleanup.
+        ``actions`` are the ones the commit wrote at ``version``; the
+        snapshot update folds them (``update``)."""
+        snap = self.update(None if actions is None else (version, actions))
         if snap is None:
             return
         cfg = TableConfig(snap.metadata.configuration)
@@ -1699,8 +1712,9 @@ class DeltaTable:
         (SnapshotImpl.scala:349-362) and FileNames.absolutePath
         (FileNames.scala:100-107).
 
-        Deep: additionally copies every active data file under the
-        target root (relative paths). The DATA MOVEMENT — the 100 TB
+        Deep: additionally copies every active data file, and every
+        deletion-vector sidecar they reference, under the target root
+        (relative paths). The DATA MOVEMENT — the 100 TB
         part — runs as a distributed job over the file list through the
         store; the driver builds the action list from the source
         Snapshot's file rows (inherent: the commit enumerates the files
@@ -1731,12 +1745,28 @@ class DeltaTable:
             digest = hashlib.md5(absolute.encode()).hexdigest()
             return f"{digest}-{os.path.basename(absolute)}"
 
-        # paths are physical; the commit's relativize encodes them
-        adds = [dataclasses.replace(
-                    f, path=(os.path.join(tgt_root, _dest_rel(f.path))
-                             if deep else f.path),
-                    dataChange=True, modificationTime=now)
-                for f in addfiles_from_rows(src._files_rows)]
+        def _placed(absolute: str) -> str:
+            # where a source file sits for the clone: a copy under the
+            # target root (deep), or the source file itself (shallow)
+            return (os.path.join(tgt_root, _dest_rel(absolute)) if deep
+                    else absolute)
+
+        # Data paths are physical; the commit's relativize encodes them.
+        # A deletion-vector tag is a log path relative to the SOURCE
+        # root, so it is re-encoded against the target root.
+        from .dv import DV_TAG, copy_sidecar
+        adds, copies = [], {}
+        for f in addfiles_from_rows(src._files_rows):
+            copies[f.path] = False
+            tags = f.tags
+            if (tags or {}).get(DV_TAG):
+                sidecar = canonical_path(tags[DV_TAG], src_root)
+                copies[sidecar] = True
+                tags = {**tags, DV_TAG: relativize(_placed(sidecar),
+                                                   tgt_root)}
+            adds.append(dataclasses.replace(
+                f, path=_placed(f.path), tags=tags, dataChange=True,
+                modificationTime=now))
 
         if deep and n_files:
             import pandas as pd
@@ -1746,21 +1776,24 @@ class DeltaTable:
 
             def copy_files(batches):
                 for pdf in batches:
-                    n = 0
-                    for p in pdf["path"]:
-                        store.copy_file(
-                            p, os.path.join(tgt_root, _dest_rel(p)))
-                        n += 1
-                    yield pd.DataFrame({"n": [n]})
+                    for p, is_sidecar in zip(pdf["path"], pdf["sidecar"]):
+                        if is_sidecar:
+                            copy_sidecar(p, _placed(p), _placed)
+                        else:
+                            store.copy_file(p, _placed(p))
+                    yield pd.DataFrame({"n": [len(pdf)]})
 
-            n_parts = min(n_files,
-                          self.spark.sparkContext.defaultParallelism) or 1
-            copied = (local_rows_df(self.spark,
-                                    [(r["path"],) for r in src._files_rows],
-                                    "path string", parts=n_parts)
+            # data files and the DV sidecars they reference (a sidecar
+            # may serve several files: copied once, its rows re-pointed
+            # at the copies)
+            n_parts = min(len(copies),
+                          self.spark.sparkContext.defaultParallelism)
+            copied = (local_rows_df(self.spark, list(copies.items()),
+                                    "path string, sidecar boolean",
+                                    parts=n_parts)
                       .mapInPandas(copy_files, "n long")
                       .agg(F.sum("n")).collect()[0][0])
-            assert copied == n_files, (copied, n_files)
+            assert copied == len(copies), (copied, len(copies))
         head: List[Any] = []
         if (src.protocol.minReaderVersion,
                 src.protocol.minWriterVersion) != (1, 2):

@@ -255,8 +255,9 @@ class OptimisticTransaction:
                 engineInfo=engine_info,
                 inCommitTimestamp=ict,
             )
-            return [to_json_line(info)] + [to_json_line(a)
-                                           for a in eff_acts]
+            # the actions as written: an ICT flip stamps the Metadata
+            return ([to_json_line(info)]
+                    + [to_json_line(a) for a in eff_acts], eff_acts)
 
         attempt_version = self.read_version + 1
         for _ in range(MAX_RETRIES):
@@ -266,7 +267,7 @@ class OptimisticTransaction:
             # "reassign above the winner's watermark and retry".
             eff_acts = self._assign_row_ids(acts, attempt_version) \
                 if rt_enabled else acts
-            lines = build_lines(attempt_version - 1, eff_acts)
+            lines, written = build_lines(attempt_version - 1, eff_acts)
             target = fn.delta_file(self.log.log_path, attempt_version)
             try:
                 self.log.store.write(target, lines, overwrite=False)
@@ -276,7 +277,7 @@ class OptimisticTransaction:
                 self._write_version_checksum(attempt_version, [
                     a for a in eff_acts if not (
                         isinstance(a, AddFile) and a.path in backfilled)])
-                self.log.post_commit(attempt_version)
+                self.log.post_commit(attempt_version, written)
                 return attempt_version
             except FileAlreadyExistsError:
                 self._check_for_conflicts(attempt_version, eff_acts,

@@ -3,18 +3,30 @@ protocol.
 
 The distributed write is plain ``df.write.partitionBy(...).parquet`` into a
 hidden staging directory under the table root (so a publish is a same-
-filesystem rename, never a copy). Publication is ALSO distributed: the
-staged file list (names only — no data I/O) fans out through
-``mapInPandas``, and each executor task reads its files' Parquet footers
-for stats (numRecords/min/max/nullCount — the skipping input the
-reference carries opaquely in ``AddFile.stats``, actions.scala:116-117),
-moves them into their final Hive-style location, and emits one metadata
-row. The driver collects ONLY the action list — O(files) rows of path +
-stats JSON, never file contents — so a million-file commit stays a
-million tiny rows, not a million driver-side footer reads. Mirrors the
-reference's writer+commit split (Flink ``DeltaWriter``/
-``DeltaWriterBucket`` stage files, ``DeltaGlobalCommitter`` commits;
-DeltaWriterBucket.java, S8).
+filesystem rename, never a copy). Publication then reads each staged
+file's Parquet footer for stats (numRecords/min/max/nullCount — the
+skipping input the reference carries opaquely in ``AddFile.stats``,
+actions.scala:116-117), moves the file into its final Hive-style
+location and emits one metadata row, in one of two places:
+
+- on the driver, a loop over the staged files, when there are at most
+  ``DRIVER_PUBLISH_MAX_FILES`` of them and no bloom columns: the loop
+  costs about 0.2 ms a file on a local file system, where the job below
+  costs half a second or more at any size (its Python workers
+  included). scripts/publish_probe.py puts the crossover near 3000
+  files at local[4]. On an object store (S3: rename is copy + delete)
+  each file's exists/footer/move/stat calls are remote round trips made
+  in series by the loop; that cost is not measured;
+- otherwise on executors (``publish_plan``): the staged file list
+  (names only) fans out through ``mapInPandas`` and the driver collects
+  ONLY the action rows, so a million-file commit stays a million tiny
+  rows, not a million driver-side footer reads. Bloom tags read whole
+  columns, which is data I/O, so a bloom write always takes this path.
+
+Both paths run the same per-file step (``_publish_one``) and give the
+same rows. Mirrors the reference's writer+commit split (Flink
+``DeltaWriter``/``DeltaWriterBucket`` stage files,
+``DeltaGlobalCommitter`` commits; DeltaWriterBucket.java, S8).
 
 Task-retry safety: the per-file move is idempotent (a retried task that
 finds its source gone but the destination present treats the move as
@@ -57,6 +69,14 @@ CHANGE_TYPE_COL = "_change_type"
 # into either the table layout or _change_data (delta-spark's
 # CDC_PARTITION_COL).
 CDC_PART_COL = "__is_cdc"
+# Largest staged set published by the driver loop instead of the
+# ``publish_plan`` job (module docstring). scripts/publish_probe.py at
+# local[4], medians of 7, loop against job: 2048 files 0.40/0.71 s (the
+# loop won 7 of 7), 3072 0.63/0.69 s (4 of 7: a tie), 4096 0.93/0.80 s.
+# The budget is the largest size the loop won outright, below the tie,
+# leaving room for a remote store, where each file costs the loop more
+# (unmeasured).
+DRIVER_PUBLISH_MAX_FILES = 2048
 
 _STATS_TYPES = ("int8", "int16", "int32", "int64", "float", "double",
                 "string", "date32", "date64")
@@ -161,21 +181,22 @@ def _bloom_tags_json(path: str, bloom_cfg) -> Optional[str]:
 
 
 def _publish_one(store, staging: str, table_path: str, rel_path: str,
-                 collect_stats: bool, bloom_cfg=None,
-                 dest_rel: Optional[str] = None
-                 ) -> Tuple[int, int, Optional[str], Optional[str]]:
+                 dest_rel: Optional[str], collect_stats: bool,
+                 bloom_cfg=None) -> Dict[str, Any]:
     """Extract stats from one staged file and move it into place (through
     the LogStore's file-plane ops — never raw os calls, so an
-    object-store deployment swaps the store, not this code).
-    Idempotent: a task retry that finds src gone but dest present reuses
-    the already-published file. Returns (size, mtime_ms, stats_json,
-    bloom_tags_json). ``dest_rel`` overrides the destination path
-    relative to the table root (defaults to ``rel_path`` — identity
-    layout); CDC-folded writes use it to strip the synthetic
+    object-store deployment swaps the store, not this code): the
+    per-file step of both publish paths. Idempotent: a task retry that
+    finds src gone but dest present reuses the already-published file.
+    Returns one row of ``publish_plan``'s output (rel_path, dest_rel,
+    size, mtime, stats json, bloom tags json). ``dest_rel`` overrides
+    the destination path relative to the table root (None: ``rel_path``
+    — identity layout); CDC-folded writes use it to strip the synthetic
     ``__is_cdc`` staging dir and to land change files under
     ``_change_data/``."""
+    dest_rel = dest_rel if dest_rel is not None else rel_path
     src = os.path.join(staging, rel_path)
-    dest = os.path.join(table_path, dest_rel or rel_path)
+    dest = os.path.join(table_path, dest_rel)
     stats = tags = None
     if store.exists(src):
         if collect_stats:
@@ -191,7 +212,8 @@ def _publish_one(store, staging: str, table_path: str, rel_path: str,
         if bloom_cfg is not None:
             tags = _bloom_tags_json(dest, bloom_cfg)
     size, mtime = store.stat(dest)
-    return size, mtime, stats, tags
+    return {"rel_path": rel_path, "dest_rel": dest_rel, "size": size,
+            "mtime": mtime, "stats": stats, "tags": tags}
 
 
 def publish_plan(spark, staging: str, table_path: str,
@@ -233,28 +255,16 @@ def publish_plan(spark, staging: str, table_path: str,
 
     def _publish(batches):
         for pdf in batches:
-            rows = {"rel_path": [], "dest_rel": [], "size": [],
-                    "mtime": [], "stats": [], "tags": []}
-            for rel, dest, ws in zip(pdf["rel_path"], pdf["dest_rel"],
-                                     pdf["want_stats"]):
-                size, mtime, stats, tags = _publish_one(
-                    store, staging, table_path, rel,
-                    collect_stats and bool(ws),
-                    bloom_cfg if ws else None,
-                    dest_rel=dest)
-                rows["rel_path"].append(rel)
-                rows["dest_rel"].append(dest if dest is not None else rel)
-                rows["size"].append(size)
-                rows["mtime"].append(mtime)
-                rows["stats"].append(stats)
-                rows["tags"].append(tags)
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(
+                [_publish_one(store, staging, table_path, rel, dest,
+                              collect_stats and bool(ws),
+                              bloom_cfg if ws else None)
+                 for rel, dest, ws in zip(pdf["rel_path"], pdf["dest_rel"],
+                                          pdf["want_stats"])],
+                columns=out_schema.fieldNames())
 
     # Explicit slicing replaces the repartition: the file list lands in
-    # n_parts tasks directly, with no shuffle stage and no
-    # defaultParallelism-wide Python source (r14, guide §2.4/§4.1 —
-    # createDataFrame(list).repartition cost ~0.7 s/commit at local[32]
-    # for a 2-file publish, almost all of it empty Python slices).
+    # n_parts tasks directly, with no shuffle stage.
     from .localrel import local_rows_df
     n_parts = min(len(rel_paths),
                   spark.sparkContext.defaultParallelism) or 1
@@ -291,8 +301,8 @@ def stage_and_collect(df: DataFrame, table_path: str,
     data schema in table-schema order (StatisticsCollection).
 
     The staged-file LISTING is a names-only walk (no data I/O); footer
-    reads and moves run on executors via ``publish_plan``. Only the
-    resulting action rows come back to the driver.
+    reads and moves run on the driver for a small staged set and on
+    executors via ``publish_plan`` otherwise (module docstring).
 
     ``physical_meta`` (a Metadata under column mapping): callers stay
     entirely in the LOGICAL name domain; this one seam renames the
@@ -337,8 +347,8 @@ def _stage(df: Optional[DataFrame], cdc_df: Optional[DataFrame],
            schema_cols: Optional[List[str]] = None,
            bloom_cfg=None, physical_meta=None
            ) -> Tuple[List[AddFile], List[AddCDCFile]]:
-    """One staging write + one publish job for data rows (``df``),
-    change rows (``cdc_df``) or both."""
+    """One staging write + one publish for data rows (``df``), change
+    rows (``cdc_df``) or both."""
     from pyspark.sql import functions as F
     partition_by = list(partition_by or [])
     if physical_meta is not None \
@@ -434,39 +444,44 @@ def _stage(df: Optional[DataFrame], cdc_df: Optional[DataFrame],
             else:
                 dests.append(rest if cdc_df is not None else None)
             stats_flags.append(not is_cdc)
-        if rel_paths:
+        if rel_paths and (bloom_cfg is not None or
+                          len(rel_paths) > DRIVER_PUBLISH_MAX_FILES):
             pub = publish_plan(out.sparkSession, staging, table_path,
                                rel_paths, collect_stats_eff, store=store,
                                bloom_cfg=bloom_cfg, dest_rels=dests,
                                want_stats=stats_flags).collect()
-            for r in pub:
-                rel_path = r["dest_rel"]
-                quoted = "/".join(urllib.parse.quote(s)
-                                  for s in rel_path.split("/"))
-                rel_dir = os.path.dirname(rel_path)
-                if rel_path.startswith(CDC_DIR + "/"):
-                    cdcs.append(AddCDCFile(
-                        path=quoted,
-                        partitionValues=_parse_partition_dirs(
-                            rel_dir[len(CDC_DIR):], partition_by),
-                        size=r["size"]))
-                    continue
-                stats = r["stats"]
-                if keep_cols is not None and stats:
-                    d = json.loads(stats)
-                    for k in ("minValues", "maxValues", "nullCount"):
-                        d[k] = {c: v for c, v in d.get(k, {}).items()
-                                if c in keep_cols}
-                    stats = json.dumps(d, separators=(",", ":"))
-                adds.append(AddFile(
+        else:
+            pub = [_publish_one(store, staging, table_path, rel, dest,
+                                collect_stats_eff and ws)
+                   for rel, dest, ws in zip(rel_paths, dests, stats_flags)]
+        for r in pub:
+            rel_path = r["dest_rel"]
+            quoted = "/".join(urllib.parse.quote(s)
+                              for s in rel_path.split("/"))
+            rel_dir = os.path.dirname(rel_path)
+            if rel_path.startswith(CDC_DIR + "/"):
+                cdcs.append(AddCDCFile(
                     path=quoted,
-                    partitionValues=_parse_partition_dirs(rel_dir,
-                                                          partition_by),
-                    size=r["size"],
-                    modificationTime=r["mtime"],
-                    dataChange=data_change,
-                    stats=stats,
-                    tags=json.loads(r["tags"]) if r["tags"] else None))
+                    partitionValues=_parse_partition_dirs(
+                        rel_dir[len(CDC_DIR):], partition_by),
+                    size=r["size"]))
+                continue
+            stats = r["stats"]
+            if keep_cols is not None and stats:
+                d = json.loads(stats)
+                for k in ("minValues", "maxValues", "nullCount"):
+                    d[k] = {c: v for c, v in d.get(k, {}).items()
+                            if c in keep_cols}
+                stats = json.dumps(d, separators=(",", ":"))
+            adds.append(AddFile(
+                path=quoted,
+                partitionValues=_parse_partition_dirs(rel_dir,
+                                                      partition_by),
+                size=r["size"],
+                modificationTime=r["mtime"],
+                dataChange=data_change,
+                stats=stats,
+                tags=json.loads(r["tags"]) if r["tags"] else None))
     finally:
         store.remove_tree(staging)
     if has_variant and collect_stats and adds:

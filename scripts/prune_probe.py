@@ -21,13 +21,19 @@ of bits set, as 1000 distinct values set them). It is probed with IN
 lists of 100 keys (bloom probed) and 300 keys (past
 ``_IN_BLOOM_MAX_VALUES``, so both sides test the range only).
 
+A last case, ``metadata_aggregates``, answers ``COUNT(*)`` and the
+min/max of ``x`` from the first inventory's stats through
+``DeltaTable.metadata_aggregates``, two ways: over the Snapshot's
+``files_local_df`` as the engine builds it (``arrow``), and over the same
+relation after an eager ``localCheckpoint`` (``arrow_checkpoint``).
+
 Cold is the first scan of a fresh Snapshot (its per-Snapshot state
 built inside the timing); warm is the median of the next ``--warm``
 scans of the same Snapshot. Prints one JSON line per (predicate,
 method).
 
 Usage: python scripts/prune_probe.py [n_files] [--warm 3]
-       [--bloom-files 20000]
+       [--bloom-files 20000] [--only PREDICATE]
 """
 from __future__ import annotations
 
@@ -118,6 +124,7 @@ def main() -> None:
     ap.add_argument("n_files", nargs="?", type=int, default=1_000_000)
     ap.add_argument("--warm", type=int, default=3)
     ap.add_argument("--bloom-files", type=int, default=20_000)
+    ap.add_argument("--only", help="run only the named predicate")
     opts = ap.parse_args()
     n, warm, n_bloom = opts.n_files, opts.warm, opts.bloom_files
     from pyspark.sql import SparkSession
@@ -129,6 +136,7 @@ def main() -> None:
     from connectors_spark.log.actions import Metadata
     from connectors_spark.log.snapshot import FILES_SCHEMA, Snapshot
     from connectors_spark.scan import DeltaScan
+    from connectors_spark.table import DeltaTable
 
     class ProbeSnapshot(Snapshot):
         """A Snapshot over the synthetic rows instead of a log."""
@@ -193,13 +201,43 @@ def main() -> None:
             return len(rel["df"].where(cond).select("path").collect())
         return run
 
-    cases = [(name, pc, rows) for name, pc in preds.items()]
-    if n_bloom:
+    def aggregates(rows, checkpoint):
+        snap = {}
+
+        class ProbeTable:
+            def _resolve(self, version, timestamp):
+                return snap["s"]
+
+        def run():
+            if "s" not in snap:
+                snap["s"] = ProbeSnapshot(rows)
+                if checkpoint:
+                    snap["s"].files_local_df = \
+                        snap["s"].files_local_df.localCheckpoint(eager=True)
+            out = DeltaTable.metadata_aggregates(ProbeTable(), ["x"])
+            return out.collect()[0]["n_rows"]
+        return run
+
+    cases = [(name, (("driver", driver(pred, rows)),
+                     ("column", column(cond, rows))), rows)
+             for name, (pred, cond) in preds.items()]
+    if n_bloom and opts.only in (None, *bloom_preds):
         brows = bloom_inventory(n_bloom)
-        cases += [(name, pc, brows) for name, pc in bloom_preds.items()]
-    for name, (pred, cond), rows in cases:
-        for method, fn in (("driver", driver(pred, rows)),
-                           ("column", column(cond, rows))):
+        cases += [(name, (("driver", driver(pred, brows)),
+                          ("column", column(cond, brows))), brows)
+                  for name, (pred, cond) in bloom_preds.items()]
+    if opts.only in (None, "metadata_aggregates"):
+        # both ways once on a small inventory first, so neither cold
+        # time carries the JVM's first compile of this plan
+        for checkpoint in (False, True):
+            aggregates(inventory(1000), checkpoint)()
+    cases.append(("metadata_aggregates",
+                  (("arrow", aggregates(rows, False)),
+                   ("arrow_checkpoint", aggregates(rows, True))), rows))
+    for name, methods, rows in cases:
+        if opts.only not in (None, name):
+            continue
+        for method, fn in methods:
             t0 = time.perf_counter()
             kept = fn()
             cold = time.perf_counter() - t0

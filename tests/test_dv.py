@@ -167,3 +167,39 @@ def test_dv_full_coverage_removes_file_outright(spark, tmp_path):
                        for f in t2.snapshot().all_files()}
     assert sorted(r.id for r in t2.to_df().collect()) == \
         [i for i in range(100) if i % 4 != 2]
+
+
+@pytest.mark.pin
+@pytest.mark.parametrize("deep", [False, True])
+def test_clone_of_dv_table(spark, tmp_path, deep):
+    """CLONE of a table with deletion vectors: the clone reads the
+    source's surviving rows, and VACUUM on the clone lists no source
+    path. A shallow clone's DV tags name the source's sidecars by
+    absolute path; a deep clone copies each sidecar under its own root,
+    so it reads with the source gone."""
+    import shutil
+
+    from connectors_spark.log.snapshot import canonical_path
+
+    src = _make(spark, tmp_path / "src", partitioned=True)
+    src.delete(Col("id") < Lit(10), deletion_vectors=True)
+    src.delete(Col("id") >= Lit(95), deletion_vectors=True)
+    src_root = src.log.table_path
+    cl = DeltaTable.for_path(spark, str(tmp_path / "cl"))
+    src.clone_to(cl.path, deep=deep)
+    assert sorted(r.id for r in cl.to_df().collect()) == list(range(10, 95))
+    sidecars = {canonical_path(r["tags"][DV_TAG], cl.log.table_path)
+                for r in cl.snapshot()._files_rows
+                if (r["tags"] or {}).get(DV_TAG)}
+    assert sidecars and all(os.path.exists(s) for s in sidecars)
+    root = cl.log.table_path if deep else src_root
+    assert all(s.startswith(root + "/_deletion_vectors/") for s in sidecars)
+    listed = TableMaintenance(cl).vacuum(retention_ms=0, dry_run=True)
+    assert not [p for p in listed
+                if os.path.exists(os.path.join(src_root, p))], listed
+    assert listed == []
+    if deep:
+        shutil.rmtree(src_root)
+        assert sorted(r.id for r in DeltaTable.for_path(
+            spark, str(tmp_path / "cl")).to_df().collect()) \
+            == list(range(10, 95))

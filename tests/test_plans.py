@@ -173,8 +173,9 @@ def test_scan_reuses_materialized_inventory(spark, tmp_path):
     # r14: a Snapshot materializes its active-file inventory once; a scan
     # of it prunes those very rows on the driver, with zero Spark jobs
     # for partition and stats predicates (no log replay re-run), and the
-    # kept-files relation is the local rows (ExistingRDD), with no
-    # Window node and no parquet checkpoint scan.
+    # kept-files relation is the local rows (LocalTableScan, decoded from
+    # Arrow by the JVM), with no Window node and no parquet checkpoint
+    # scan.
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.scan import DeltaScan
     t, snap = _loaded_pruning_table(spark, str(tmp_path / "inv"))
@@ -189,7 +190,7 @@ def test_scan_reuses_materialized_inventory(spark, tmp_path):
         assert 0 < len(kept) < len(snap._files_rows)
         assert all(id(r) in cached for r in kept)
     p = plan_of(t.scan(Col("uid") == Lit(7)).files())
-    assert "ExistingRDD" in p
+    assert "LocalTableScan" in p
     assert "Window" not in p and "Scan parquet" not in p
 
 
@@ -274,6 +275,55 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
             cold.domain_metadata)
     assert snap.set_transactions == {"app-1": 3}
     assert snap.domain_metadata["my.domain"] == "{}"
+
+
+@pytest.mark.pin
+def test_post_commit_seeds_from_the_commit_in_hand(spark, tmp_path,
+                                                  monkeypatch):
+    # The snapshot update after a commit folds the actions the commit
+    # wrote instead of reading its file back; the seeded Snapshot's
+    # planes and log state equal a cold Snapshot's after an append, a
+    # DELETE, a row-tracking enablement (a backfill of re-adds) and an
+    # in-commit-timestamp flip (a stamped Metadata).
+    import connectors_spark.table as TB
+    from connectors_spark import DeltaTable
+    from connectors_spark.expressions import Col, Lit
+    from connectors_spark.log.snapshot import Snapshot
+
+    t = DeltaTable.for_path(spark, str(tmp_path / "seed"))
+
+    def rows(i):
+        return spark.range(i * 10, i * 10 + 10).selectExpr(
+            "id", "id % 2 AS p")
+    t.write(rows(0), partition_by=["p"])
+    for k in Snapshot.SEEDED:                 # the seed carries these
+        getattr(t.log.snapshot(), k)
+    reads = []
+    orig = TB.read_commit
+
+    def spy(*a, **k):
+        reads.append(a[1])
+        return orig(*a, **k)
+    monkeypatch.setattr(TB, "read_commit", spy)
+    ops = [lambda: t.write(rows(1), mode="append"),
+           lambda: t.delete(Col("id") == Lit(3)),
+           lambda: t.set_properties({"delta.enableRowTracking": "true"}),
+           lambda: t.set_properties(
+               {"delta.enableInCommitTimestamps": "true"})]
+    for op in ops:
+        op()
+        snap = t.log.snapshot()
+        assert reads == [], reads
+        assert all(k in snap.__dict__ for k in Snapshot.SEEDED)
+        cold = Snapshot(spark, snap.table_path, snap.segment, snap.store)
+        for plane in ("_files_rows", "_tombstone_rows"):
+            assert sorted(getattr(snap, plane)) \
+                == sorted(getattr(cold, plane)), plane
+        assert snap._log_state == cold._log_state
+    conf = t.log.snapshot().metadata.configuration
+    assert conf["delta.inCommitTimestampEnablementVersion"] == "4"
+    assert all(r["baseRowId"] is not None
+               for r in t.log.snapshot()._files_rows)
 
 
 def test_fuzzy_edit_pairs_no_cartesian(plans):
@@ -417,10 +467,13 @@ def test_repetition_partial_aggregation(plans):
 
 
 def test_commit_publish_is_distributed(spark, tmp_path):
-    """The commit path's footer-stats extraction + file moves must run as
-    a Spark job (mapInPandas over the staged file list), never a
-    driver-side per-file loop — the difference between a constant-time
-    and an O(files) serial commit at fleet scale."""
+    """Above ``DRIVER_PUBLISH_MAX_FILES`` staged files (or with bloom
+    columns), the commit path's footer-stats extraction + file moves run
+    as a Spark job (``publish_plan``: mapInPandas over the staged file
+    list), never a driver-side per-file loop — the difference between a
+    constant-time and an O(files) serial commit at fleet scale. At or
+    below the budget the driver loop publishes (test_table_rw pins both
+    paths equal)."""
     from connectors_spark.writer import publish_plan, stage_and_collect
 
     df = spark.range(0, 1000).selectExpr(
@@ -447,6 +500,139 @@ def test_commit_publish_is_distributed(spark, tmp_path):
     adds = stage_and_collect(df, str(tmp_path / "tbl2"), ["grp"])
     assert sum(_json.loads(a.stats)["numRecords"] for a in adds) == 1000
     assert all(a.partitionValues.get("grp") is not None for a in adds)
+
+
+def _sql_plans(spark, fn) -> list:
+    """Physical plans of the SQL executions ``fn()`` runs, from the
+    session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() > before]
+
+
+@pytest.mark.pin
+def test_sink_batch_runs_no_python_worker(spark, tmp_path, monkeypatch):
+    """A 2k-row ``DeltaStreamSink.write_batch`` publishes on the driver
+    and reads through Arrow-backed local relations: none of its SQL
+    executions has a Python eval node, and it runs one Spark job fewer
+    than with the publish job forced on (budget 0)."""
+    import connectors_spark.writer as W
+    from connectors_spark import DeltaTable
+    from connectors_spark.streaming import DeltaStreamSink
+    sink = DeltaStreamSink(str(tmp_path / "sink"), app_id="pin")
+
+    def batch(i):
+        return spark.range(i * 2000, (i + 1) * 2000).selectExpr(
+            "id", "id % 5 AS k")
+    sink.write_batch(batch(0), 0)
+    with monkeypatch.context() as m:
+        m.setattr(W, "DRIVER_PUBLISH_MAX_FILES", 0)
+        with_job = _spark_jobs(spark, lambda: sink.write_batch(batch(1), 1))
+    jobs = []
+    plans = _sql_plans(spark, lambda: jobs.append(
+        _spark_jobs(spark, lambda: sink.write_batch(batch(2), 2))))
+    assert jobs == [with_job - 1]
+    assert plans and not [p for p in plans
+                          if any(n in p for n in _PYTHON_EVAL_NODES)]
+    assert DeltaTable.for_path(spark, str(tmp_path / "sink")) \
+        .to_df().count() == 6000
+
+
+def test_local_rows_df_matches_python_rdd(spark):
+    """``local_rows_df`` (Arrow) gives the rows and schema the former
+    Python-RDD relation gave, for inventory and tombstone rows with
+    null and empty maps and null fields, empty input, a DDL schema, and
+    timestamps (top level and nested), dates and decimals under
+    non-UTC time zones; ``parts`` sets the slice count of the Arrow
+    RDD."""
+    from connectors_spark.localrel import local_rows_df
+    from connectors_spark.log.snapshot import FILES_SCHEMA, TOMBSTONES_SCHEMA
+
+    def python_rdd(rows, schema):
+        if not rows:
+            return spark.createDataFrame([], schema)
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 2), schema)
+    files = [
+        ("/t/p=1/a.parquet", {"p": "1"}, 10, 5, True,
+         '{"numRecords":1}', None, None, None, 3),
+        ("/t/b.parquet", {}, None, None, None, None,
+         {"deletionVector": "_deletion_vectors/dv-1.parquet"}, 4, 2, 7),
+        ("/t/p=/c.parquet", {"p": None}, 1, 2, False, None, {}, None,
+         None, None)]
+    tombs = [("/t/x.parquet", 11, None, True, {"p": "2"}, 99, 4),
+             ("/t/y.parquet", None, {}, None, None, None, None)]
+    ddl = "a: long, b string, m map<string, bigint>, l array<string>"
+    cases = [(files, FILES_SCHEMA), (tombs, TOMBSTONES_SCHEMA),
+             ([], FILES_SCHEMA), ([], ddl),
+             ([(1, "x", {"k": 1}, ["u", None]), (None, None, None, None)],
+              ddl)]
+    for rows, schema in cases:
+        got, exp = local_rows_df(spark, rows, schema), python_rdd(rows,
+                                                                 schema)
+        assert got.schema == exp.schema
+        assert got.collect() == exp.collect()
+    # A naive datetime is local time to Spark and UTC to pyarrow: under a
+    # non-UTC driver time zone (and session time zone) the values must
+    # match Spark's list path, which converts them on the driver, both
+    # as Python values and as the JVM renders them.
+    import datetime
+    import decimal
+    import os
+    import time
+    # A map of timestamps takes Spark's Python path (``_rebuilt_map``)
+    # and must keep its null.
+    ts = datetime.datetime(2024, 7, 1, 23, 30, 0, 123456)
+    temporal = ("t timestamp, n timestamp_ntz, d date, x decimal(12,3), "
+                "a array<timestamp>, s struct<u: timestamp, v: int>")
+    ts_rows = [(ts, ts, ts.date(), decimal.Decimal("12.345"), [ts, None],
+                (ts, 1)), (None,) * 6]
+    mapped = "m map<string, timestamp>"
+    map_rows = [({"k": ts},), (None,)]
+    old_tz, old_session = os.environ.get("TZ"), spark.conf.get(
+        "spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        for rows, schema, arrow in ((ts_rows, temporal, True),
+                                    (map_rows, mapped, False)):
+            got = local_rows_df(spark, rows, schema)
+            exp = spark.createDataFrame(rows, schema)
+            assert ("LocalTableScan" in plan_of(got)) == arrow
+            assert got.schema == exp.schema
+            assert got.collect() == exp.collect()
+            text = [f"cast({c} as string)" for c in got.columns]
+            assert got.selectExpr(*text).collect() == \
+                exp.selectExpr(*text).collect()
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session)
+    # Past the local-relation threshold the Arrow batches become an RDD,
+    # one partition per slice
+    many = [(f"/t/f{i}.parquet", {"p": str(i % 3)}, i, i, True, None,
+             None, None, None, 0) for i in range(25)]
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(key, "0")
+    try:
+        df = local_rows_df(spark, many, FILES_SCHEMA, parts=3)
+        assert "ExistingRDD" in plan_of(df)
+        assert df.rdd.getNumPartitions() == 3
+        assert df.collect() == python_rdd(many, FILES_SCHEMA).collect()
+    finally:
+        spark.conf.unset(key)
 
 
 def test_merge_no_isin_literal_in_touched_filter(spark, tmp_path):

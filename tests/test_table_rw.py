@@ -1090,3 +1090,66 @@ def test_merge_allocates_identity_on_insert(spark, tmp_path):
     with pytest.raises(DeltaError, match="IDENTITY"):
         t.merge(spark.createDataFrame([Row(k=1, v=1)]), "t.k = s.k",
                 when_matched_update={"uid": "999"})
+
+
+@pytest.mark.pin
+@pytest.mark.parametrize("case", ["cdf_fold", "zero_row_cdc_leg", "plain"])
+def test_publish_paths_agree(spark, tmp_path, monkeypatch, case):
+    """The two publish paths of the writer (the driver loop at or below
+    ``DRIVER_PUBLISH_MAX_FILES`` staged files, the ``publish_plan`` job
+    above it) give equal AddFile and AddCDCFile lists, all fields but
+    mtime, on the same inputs published with the budget far above, at
+    and one below the staged file count. The inputs: a
+    partitioned table with a CDF fold and a stats budget
+    (``num_indexed_cols``), a CDC leg with zero change rows, and a
+    plain write. The two writes are separate Spark jobs, so their file
+    names differ only by the job's UUID, which is masked."""
+    import dataclasses
+    import json
+    import re
+
+    import connectors_spark.writer as W
+
+    df = spark.createDataFrame(
+        [(i, "a" if i % 3 else "b=/ %", i * 1.5, f"s{i}") for i in range(40)],
+        "id long, part string, val double, s string").repartition(2)
+    cdc = None
+    kw = {}
+    if case == "cdf_fold":
+        cdc = df.where("id < 7").withColumn(W.CHANGE_TYPE_COL,
+                                            F.lit("delete"))
+        kw = {"num_indexed_cols": 1,
+              "schema_cols": ["part", "s", "id", "val"]}
+    elif case == "zero_row_cdc_leg":
+        cdc = df.limit(0).withColumn(W.CHANGE_TYPE_COL, F.lit("delete"))
+    job = re.compile(r"-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+    orig = W.publish_plan
+
+    def published(budget, name):
+        calls = []
+
+        def spy(*a, **k):
+            calls.append(1)
+            return orig(*a, **k)
+        monkeypatch.setattr(W, "publish_plan", spy)
+        monkeypatch.setattr(W, "DRIVER_PUBLISH_MAX_FILES", budget)
+        out = W.stage_and_collect(df, str(tmp_path / name), ["part"],
+                                  cdc_df=cdc, **kw)
+        adds, cdcs = out if cdc is not None else (out, [])
+        norm = [dataclasses.replace(a, path=job.sub("-<job>", a.path),
+                                    modificationTime=0) for a in adds]
+        return calls, norm, [dataclasses.replace(
+            c, path=job.sub("-<job>", c.path)) for c in cdcs]
+
+    on_driver = published(10_000, "driver")
+    staged = len(on_driver[1]) + len(on_driver[2])
+    at_budget = published(staged, "at")
+    above = published(staged - 1, "above")
+    assert on_driver[0] == at_budget[0] == [] and above[0] == [1]
+    assert on_driver[1]
+    assert on_driver[1:] == at_budget[1:] == above[1:]
+    if cdc is not None:
+        assert on_driver[2], "a CDC leg commits at least one AddCDCFile"
+    if case == "cdf_fold":
+        stats = json.loads(on_driver[1][0].stats)
+        assert set(stats["minValues"]) == {"s"}
