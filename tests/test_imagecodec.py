@@ -846,3 +846,144 @@ def test_jpeg_progressive_420_matches_baseline_420():
     with _pytest.raises(ValueError):
         encode_jpeg_progressive(8, 8, bytes(8 * 8 * 3), channels=3,
                                 subsampling="420")
+
+
+# ---------------------------------------------------------------------------
+# Byte pins for the JPEG codec: every encoder's stream and every decode's
+# pixels, as SHA-256 prefixes. A change to the transform, the headers or
+# the MCU walk that alters one byte or one pixel fails here.
+# ---------------------------------------------------------------------------
+
+def _corpus_px(did, w, h, c):
+    """The closed-form block rule the multimodal.synth_jpeg_* corpora
+    draw: block b (raster) is 128 + 2·(((did·7 + b·13) % 64) − 32)."""
+    px = bytearray(w * h * c)
+    for y in range(h):
+        for x in range(w):
+            b = (y // 8) * (w // 8) + (x // 8)
+            px[(y * w + x) * c:(y * w + x + 1) * c] = \
+                bytes([128 + 2 * (((did * 7 + b * 13) % 64) - 32)]) * c
+    return bytes(px)
+
+
+def _jpeg_pin_streams():
+    import numpy as np
+
+    from connectors_spark.ops import jpegcodec as jc
+
+    rng = np.random.RandomState(2024)
+    noise_g = rng.randint(0, 256, size=(24, 32), dtype=np.uint8).tobytes()
+    noise_c = rng.randint(0, 256, size=(32, 32, 3),
+                          dtype=np.uint8).tobytes()
+    yy, xx = np.mgrid[0:32, 0:32]
+    smooth = np.stack([(4 * xx + 3 * yy) % 256, (7 * yy) % 256,
+                       (255 - 5 * xx) % 256], -1).astype(np.uint8)
+    out = {}
+    for ri in range(4):
+        out[f"gray_ri{ri}"] = jc.encode_jpeg_gray(32, 24, noise_g,
+                                                  restart_interval=ri)
+    out["gray_q4"] = jc.encode_jpeg_gray(32, 24, noise_g, quant=4)
+    for tag, rgb in (("noise", noise_c), ("smooth", smooth.tobytes())):
+        out[f"c444_{tag}"] = jc.encode_jpeg_color(32, 32, rgb, quant=4)
+        out[f"c422_{tag}"] = jc.encode_jpeg_color_422(32, 32, rgb, quant=4)
+        out[f"c420_{tag}"] = jc.encode_jpeg_color_420(32, 32, rgb, quant=4)
+        out[f"p444_{tag}"] = jc.encode_jpeg_progressive(32, 32, rgb, 3,
+                                                        quant=4)
+        out[f"p420_{tag}"] = jc.encode_jpeg_progressive(
+            32, 32, rgb, 3, quant=4, subsampling="420")
+    out["pgray_noise"] = jc.encode_jpeg_progressive(32, 24, noise_g,
+                                                    quant=4)
+    # multimodal.synth_jpeg_media layouts
+    for did in range(8):
+        if did % 4 == 3:
+            w = h = 16
+        elif did % 8 == 5:
+            w, h = 16, 8
+        else:
+            w, h = 8 * (1 + did % 3), 8 * (1 + did % 2)
+        c = 3 if did % 2 else 1
+        px = _corpus_px(did, w, h, c)
+        if did % 8 in (1, 6):
+            out[f"media_{did}"] = jc.encode_jpeg_progressive(w, h, px, c)
+        else:
+            enc = (jc.encode_jpeg_color_420 if did % 4 == 3
+                   else jc.encode_jpeg_color_422 if did % 8 == 5
+                   else jc.encode_jpeg_color if c == 3
+                   else jc.encode_jpeg_gray)
+            out[f"media_{did}"] = enc(w, h, px)
+    # multimodal.synth_jpeg_progressive_media layouts
+    for did in range(4):
+        if did % 2:
+            w, h, c, sub = (16 if did % 4 == 1 else 32), 16, 3, "420"
+        else:
+            w, h, c, sub = 8 * (1 + did % 3), 8 * (1 + did % 2), 1, "444"
+        out[f"prog_{did}"] = jc.encode_jpeg_progressive(
+            w, h, _corpus_px(did, w, h, c), channels=c, subsampling=sub)
+    # multimodal.synth_jpeg_scaled_media: one group at all three sizes
+    g = 7
+    cells = np.array([[128 + 2 * ((((g + 3) * (ci * 5 + cj * 11 + 7)
+                                    + g * g) % 64) - 32)
+                       for cj in range(4)] for ci in range(4)],
+                     dtype=np.uint8)
+    for size in (32, 64, 128):
+        cs = size // 4
+        px = np.repeat(np.repeat(cells, cs, axis=0), cs, axis=1)
+        out[f"scaled_{size}"] = jc.encode_jpeg_gray(size, size,
+                                                    px.tobytes())
+    blob = out["gray_ri0"]
+    i = blob.index(b"\xff\xc0")
+    out["sof1"] = blob[:i] + b"\xff\xc1" + blob[i + 2:]
+    return out
+
+
+# name -> (stream digest, decoded-pixel digest); captured before the
+# transform stage was shared between the encoders and decoder paths
+_JPEG_PINS = {
+    "gray_ri0": ("884faab076af3a8db25dbaa8", "eedd060f200881f7583dcfe1"),
+    "gray_ri1": ("0bbe4b94be3cc05c09144eb6", "eedd060f200881f7583dcfe1"),
+    "gray_ri2": ("3a280c5d167de321c717d4fa", "eedd060f200881f7583dcfe1"),
+    "gray_ri3": ("2dc3a7f39be4f853445464fa", "eedd060f200881f7583dcfe1"),
+    "gray_q4": ("1ad23197d793658eec8b81a6", "206c8178b26b2730d97aa6ee"),
+    "c444_noise": ("e7a618be955c895654c9a34e", "02d962f2f82e945944e43e3a"),
+    "c422_noise": ("88a2a2ec3b8229d77546f3c3", "948d6dfb0b8754d1376a4da1"),
+    "c420_noise": ("fb997e61ffb421eac5d40c7c", "a9433fe4c2425db0693ed4f3"),
+    "p444_noise": ("da1dcc4541f82f571f5ca29b", "02d962f2f82e945944e43e3a"),
+    "p420_noise": ("b69b39741cf864bb8aa591ad", "a9433fe4c2425db0693ed4f3"),
+    "c444_smooth": ("e6150b95c41ffe9af58c4cc0", "7ebb23a636debc3dc8d78e82"),
+    "c422_smooth": ("08b7bea59e30163d916f7eb3", "9f80674bcba82be634ce454c"),
+    "c420_smooth": ("8d2ac6e93636dd88d3ea0cd8", "67ebbef240167b7b36e588f0"),
+    "p444_smooth": ("13019853a4aaf4dc1eb1ce65", "7ebb23a636debc3dc8d78e82"),
+    "p420_smooth": ("4b6369131fa67468ce40fe2b", "67ebbef240167b7b36e588f0"),
+    "pgray_noise": ("6091f0667bc7aece18d7ae87", "206c8178b26b2730d97aa6ee"),
+    "media_0": ("4b51d76b044653c5dea0d859", "127a7d2fda27f8b3d44aafa6"),
+    "media_1": ("6d70bb0ed299339365669915", "81fe8844102b88d3ced96467"),
+    "media_2": ("25ca4666cf89a37064ff7905", "8036ff2feeb7f90584f6555e"),
+    "media_3": ("b7823fce22fd7db343a65385", "522f0fcaf79679f9cffe2d31"),
+    "media_4": ("56f25bf7af7e723180b2e83a", "a3804976974b00737723ee2b"),
+    "media_5": ("c538cdd1bb195aa6895e3f6a", "40e82a55220bb71a28403947"),
+    "media_6": ("ef0ffc173f298901b58f081c", "08fc8b578c9c7663d6ee12ab"),
+    "media_7": ("e4efd093bcc9e5eaac4b67e4", "eeb1c5b005a0d3c002ff168d"),
+    "prog_0": ("014b3122feac30e2cdb28f5b", "127a7d2fda27f8b3d44aafa6"),
+    "prog_1": ("14436ec084eb2464b296a466", "81fe8844102b88d3ced96467"),
+    "prog_2": ("930122c5ffb2136fc6eb8dbe", "8036ff2feeb7f90584f6555e"),
+    "prog_3": ("60774515d1fb9be52af7ee13", "a21bbc6d5f2f4b0fca3111ab"),
+    "scaled_32": ("fe05be84710323b6961ea911", "5dbac79b48929f4056962fb1"),
+    "scaled_64": ("669ccbb06aaa81c1f61fd14f", "07da680847df1104b3fdb711"),
+    "scaled_128": ("01760ad08a88bdcf1b84fb7c", "74a8a2e4988ccda5a4b8ad62"),
+    "sof1": ("0a4ddae8c4783cf202d916b8", "eedd060f200881f7583dcfe1"),
+}
+
+
+def test_jpeg_streams_and_pixels_match_pins():
+    import hashlib
+
+    from connectors_spark.ops.jpegcodec import decode_jpeg
+
+    def h(b):
+        return hashlib.sha256(b).hexdigest()[:24]
+
+    got = {}
+    for name, blob in _jpeg_pin_streams().items():
+        w, hh, c, px = decode_jpeg(blob)
+        got[name] = (h(blob), h(b"%d,%d,%d:" % (w, hh, c) + px))
+    assert got == _JPEG_PINS
