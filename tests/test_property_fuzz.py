@@ -116,6 +116,7 @@ def _blocky_gray(draw, max_blocks=3):
     return w, h, bytes(px)
 
 
+@pytest.mark.pin
 @given(_blocky_gray(), st.integers(0, 3))
 @settings(max_examples=60, deadline=None)
 def test_jpeg_blocky_roundtrip_exact_any_restarts(img, ri):
@@ -125,6 +126,7 @@ def test_jpeg_blocky_roundtrip_exact_any_restarts(img, ri):
     assert jc.decode_jpeg(data) == (w, h, 1, px)
 
 
+@pytest.mark.pin
 @given(st.integers(1, 2), st.integers(1, 2), st.binary(min_size=0),
        st.integers(2, 8))
 @settings(max_examples=60, deadline=None)
@@ -145,6 +147,7 @@ def test_jpeg_arbitrary_gray_bounded_error(bw, bh, seed, quant):
     assert np.abs(arr - img.astype(int)).max() <= 4 * quant
 
 
+@pytest.mark.pin
 @given(st.integers(1, 2), st.integers(1, 2), st.binary(min_size=0),
        st.sampled_from(["420", "422"]))
 @settings(max_examples=40, deadline=None)
@@ -177,6 +180,7 @@ def test_jpeg_subsampled_color_bounded_error(bw, bh, seed, mode):
     assert np.abs(arr - img.astype(int)).max() <= 24
 
 
+@pytest.mark.pin
 @given(st.integers(1, 4), st.integers(1, 4), st.binary(min_size=0),
        st.integers(2, 16), st.booleans())
 @settings(max_examples=50, deadline=None)
