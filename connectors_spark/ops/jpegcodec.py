@@ -1,4 +1,4 @@
-"""Stdlib-only baseline JPEG codec (grayscale, ITU-T.81 sequential DCT).
+"""Stdlib-only JPEG codec (ITU-T.81 sequential and progressive DCT).
 
 Closes the "compressed codecs remain guarded" gap left after round 6's
 PNG/BMP/WAV/AVI stdlib codecs: baseline JPEG needs nothing beyond
@@ -7,18 +7,27 @@ matmuls), so the `decode_image` seam in ops/multimodal.py can run a
 REAL compressed-format pixel path.
 
 Scope (documented, raises outside it):
-- decode: baseline sequential DCT (SOF0) AND progressive DCT (SOF2,
-  ITU-T.81 Annex G: spectral selection, successive approximation,
-  EOBn runs, DC/AC refinement scans), 8-bit, grayscale or color with
-  any integer-ratio sampling (4:4:4, 4:2:0, 4:2:2, 4:4:0, 4:1:1 —
-  interleaved MCUs, replication chroma upsample, JFIF YCbCr→RGB),
-  Huffman tables read from the file's DHT segments (any valid
-  tables, not just Annex K), restart intervals (DRI + RSTn);
-  arithmetic coding and lossless/extended SOFs raise.
+- decode: baseline sequential DCT (SOF0), 8-bit extended sequential
+  (SOF1) AND progressive DCT (SOF2, ITU-T.81 Annex G: spectral
+  selection, successive approximation, EOBn runs, DC/AC refinement
+  scans), 8-bit, grayscale or color with any integer-ratio sampling
+  (4:4:4, 4:2:0, 4:2:2, 4:4:0, 4:1:1 — interleaved MCUs, replication
+  chroma upsample, JFIF YCbCr→RGB), Huffman tables read from the
+  file's DHT segments (any valid tables, not just Annex K), restart
+  intervals (DRI + RSTn); arithmetic coding and lossless SOFs raise.
 - encode: real pipeline — level shift, float 2-D DCT-II, quantize
   (round-to-nearest), zigzag, DC-diff + AC run-length Huffman with
   byte stuffing — emitting a spec-conformant JFIF stream whose DQT /
-  DHT / SOF0 / SOS segments the decoder (or any JPEG reader) parses.
+  DHT / SOF0 (or SOF2) / SOS segments the decoder (or any JPEG reader)
+  parses.
+
+One transform stage serves every layout. Encode: ``_planes`` (level
+shift, YCbCr, chroma mean) → ``_coef_blocks`` (the one batched FDCT +
+quantizer) → ``_mcu_walk`` (interleaved MCU order) → per-symbol
+Huffman, behind one ``_frame_header``. Decode: ``_scan`` entropy-decodes
+every scan, sequential or progressive, into per-component coefficient
+arrays; after the last one ``_idct_planes`` dequantizes and inverts
+every block in one batched pass.
 
 Determinism: the corpus generator (ops/multimodal.synth_jpeg_media)
 feeds piecewise-constant blocks whose DC coefficients quantize and
@@ -61,6 +70,8 @@ def _zigzag_order() -> List[Tuple[int, int]]:
 
 
 _ZZ = _zigzag_order()
+_ZZ_IDX = np.array([r * 8 + c for r, c in _ZZ])   # zigzag → raster
+_UNZZ = np.argsort(_ZZ_IDX)                        # raster → zigzag
 
 # Spec-conformant custom Huffman tables (JPEG permits any canonical
 # tables carried in DHT; the decoder reads them from the file, so
@@ -71,6 +82,11 @@ _DC_VALS = list(range(12))
 _AC_VALS = ([0x00, 0xF0]
             + [(r << 4) | s for r in range(16) for s in range(1, 11)])
 _AC_BITS = [0] * 7 + [len(_AC_VALS)] + [0] * 8
+# Progressive AC table: every (run 0-15, size 0-10) symbol — size 0 is
+# EOBn for run 0-14 (end-of-band run category) and ZRL for run 15 —
+# all at 8 bits (176 ≤ 256, canonical).
+_ACP_VALS = [(r << 4) | s for r in range(16) for s in range(11)]
+_ACP_BITS = [0] * 7 + [len(_ACP_VALS)] + [0] * 8
 
 
 def _canonical_codes(bits: List[int],
@@ -88,6 +104,7 @@ def _canonical_codes(bits: List[int],
 
 _DC_ENC = _canonical_codes(_DC_BITS, _DC_VALS)
 _AC_ENC = _canonical_codes(_AC_BITS, _AC_VALS)
+_ACP_ENC = _canonical_codes(_ACP_BITS, _ACP_VALS)
 
 
 class _BitWriter:
@@ -114,69 +131,162 @@ class _BitWriter:
 
 
 def _category(v: int) -> int:
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
+    return abs(v).bit_length()
 
 
 def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">HH", marker, len(body) + 2) + body
 
 
-def _encode_block(w: _BitWriter, blk: "np.ndarray", q: "np.ndarray",
-                  prev_dc: int) -> int:
-    """FDCT + quantize + Huffman-encode one 8×8 block; returns its
-    quantized DC (the next block's predictor)."""
-    coef = _T @ blk @ _T.T
-    cq = np.round(coef / q).astype(np.int64)
-    zzc = [int(cq[r, c]) for r, c in _ZZ]
-    diff = zzc[0] - prev_dc
-    s = _category(diff)
-    code, length = _DC_ENC[s]
-    w.put(code, length)
-    if s:
-        w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-    run = 0
-    last_nz = max((i for i in range(1, 64) if zzc[i]), default=0)
-    for i in range(1, last_nz + 1):
-        v = zzc[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            c16, l16 = _AC_ENC[0xF0]
-            w.put(c16, l16)
-            run -= 16
-        s = _category(v)
-        if s > 10:
-            raise ValueError("AC coefficient too large")
-        code, length = _AC_ENC[(run << 4) | s]
-        w.put(code, length)
-        w.put(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        code, length = _AC_ENC[0x00]                    # EOB
-        w.put(code, length)
-    return zzc[0]
+# ---------------------------------------------------------------------------
+# Encoder: one transform stage for every layout
+# ---------------------------------------------------------------------------
+
+def _planes(width: int, height: int, data: bytes, channels: int,
+            hv: Tuple[int, int]):
+    """Level-shifted sample planes and their (h, v) sampling factors:
+    grayscale, or JFIF YCbCr with chroma mean-subsampled by the luma
+    factors ``hv`` — (1, 1) 4:4:4, (2, 1) 4:2:2, (2, 2) 4:2:0.
+    Dimensions must be whole MCUs (8h × 8v)."""
+    h, v = hv
+    if width % (8 * h) or height % (8 * v):
+        raise ValueError(f"JPEG encoding needs multiple-of-{8 * h} width "
+                         f"and multiple-of-{8 * v} height")
+    if channels == 1:
+        img = np.frombuffer(bytes(data), dtype=np.uint8) \
+            .reshape(height, width).astype(np.float64) - 128.0
+        return [img], [(1, 1)]
+    if channels != 3:
+        raise ValueError("channels must be 1 or 3")
+    arr = np.frombuffer(bytes(data), dtype=np.uint8) \
+        .reshape(height, width, 3).astype(np.float64)
+    r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
+    y = 0.299 * r + 0.587 * g + 0.114 * b - 128.0           # Y (shifted)
+    chroma = [-0.168736 * r - 0.331264 * g + 0.5 * b,       # Cb - 128
+              0.5 * r - 0.418688 * g - 0.081312 * b]        # Cr - 128
+    if hv != (1, 1):
+        chroma = [c.reshape(height // v, v, width // h, h).mean(axis=(1, 3))
+                  for c in chroma]
+    return [y] + chroma, [hv, (1, 1), (1, 1)]
 
 
-def _headers(width: int, height: int, q: "np.ndarray",
-             ncomp: int, restart_interval: int = 0) -> bytearray:
+def _coef_blocks(plane: "np.ndarray", q: "np.ndarray") -> "np.ndarray":
+    """FDCT + quantize every 8×8 block of a (level-shifted) plane →
+    (bh, bw, 64) int array in zigzag order."""
+    h, w = plane.shape
+    bh, bw = h // 8, w // 8
+    tiles = plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
+    # batched matmul in the association (_T @ blk) @ _T.T — float
+    # contraction order changes round-at-.5 results, so another order
+    # changes the streams (tests pin them byte for byte)
+    coefs = np.matmul(np.matmul(_T, tiles), _T.T)
+    cq = np.round(coefs / q).astype(np.int64)
+    return cq.reshape(bh, bw, 64)[:, :, _ZZ_IDX]
+
+
+def _mcu_walk(samp: List[Tuple[int, int]], mbh: int, mbw: int):
+    """Interleaved MCU order (ITU-T.81 §A.2.3): MCUs in raster order,
+    each component's h×v blocks in raster order within the MCU, as
+    (component, block row, block column) per block — an MCU is
+    sum(h·v) consecutive entries. With one (1, 1) component it is the
+    raster walk of a non-interleaved scan (§A.2.2)."""
+    return [(ci, my * v + sv, mx * h + sh)
+            for my in range(mbh) for mx in range(mbw)
+            for ci, (h, v) in enumerate(samp)
+            for sv in range(v) for sh in range(h)]
+
+
+def _frame_header(sof: int, width: int, height: int, q: "np.ndarray",
+                  samp: List[Tuple[int, int]], ac_bits: List[int],
+                  ac_vals: List[int], restart_interval: int = 0) -> bytearray:
+    """Every segment before the first SOS: SOI, JFIF APP0, DQT (id 0),
+    SOFn with component ids 1.. and their sampling factors, the DC and
+    AC DHTs (id 0) and, when restarts are on, DRI."""
     out = bytearray(b"\xff\xd8")                        # SOI
     out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     zz = bytes(int(q[r][c]) for r, c in _ZZ)
     out += _seg(0xFFDB, b"\x00" + zz)                   # DQT, 8-bit, id 0
-    comps = b"".join(bytes([cid, 0x11, 0])
-                     for cid in range(1, ncomp + 1))
-    out += _seg(0xFFC0, struct.pack(">BHHB", 8, height, width, ncomp)
-                + comps)                                # SOF0
+    comps = b"".join(bytes([ci + 1, (h << 4) | v, 0])
+                     for ci, (h, v) in enumerate(samp))
+    out += _seg(sof, struct.pack(">BHHB", 8, height, width, len(samp))
+                + comps)
     out += _seg(0xFFC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xFFC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
+    out += _seg(0xFFC4, b"\x10" + bytes(ac_bits) + bytes(ac_vals))
     if restart_interval:
         out += _seg(0xFFDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp]) + b"".join(bytes([cid, 0x00])
-                                    for cid in range(1, ncomp + 1)) \
-        + bytes([0, 63, 0])
-    out += _seg(0xFFDA, sos)                            # SOS
     return out
+
+
+def _sos(comp_ids: List[int], ss: int, se: int, ah: int, al: int) -> bytes:
+    return _seg(0xFFDA, bytes([len(comp_ids)])
+                + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
+                + bytes([ss, se, (ah << 4) | al]))
+
+
+def _transform(width: int, height: int, data: bytes, channels: int,
+               hv: Tuple[int, int], quant: int):
+    """The encoders' shared front half: planes → FDCT + quantize →
+    each component's zigzag blocks as nested lists [by][bx][64] (one
+    ``tolist()`` per plane, so entropy coding reads Python ints), and
+    the MCU walk over them."""
+    planes, samp = _planes(width, height, data, channels, hv)
+    q = np.full((8, 8), float(quant))
+    rows = [_coef_blocks(p, q).tolist() for p in planes]
+    walk = _mcu_walk(samp, height // (8 * hv[1]), width // (8 * hv[0]))
+    return q, samp, rows, walk
+
+
+def _encode_baseline(width: int, height: int, data: bytes, channels: int,
+                     hv: Tuple[int, int], quant: int,
+                     restart_interval: int = 0) -> bytes:
+    """A baseline (SOF0) stream: one interleaved scan, each block's
+    DC diff then AC run-lengths in MCU order, independent DC
+    predictors per component (ITU-T.81 §A.2), and RSTn markers every
+    ``restart_interval`` MCUs when it is positive."""
+    q, samp, rows, walk = _transform(width, height, data, channels, hv,
+                                     quant)
+    out = _frame_header(0xFFC0, width, height, q, samp, _AC_BITS, _AC_VALS,
+                        restart_interval)
+    out += _sos(list(range(1, len(samp) + 1)), 0, 63, 0, 0)
+    w = _BitWriter()
+    put = w.put
+    prev = [0] * len(samp)
+    every = restart_interval * sum(h * v for h, v in samp)
+    rst = 0
+    for n, (ci, by, bx) in enumerate(walk):
+        if every and n and n % every == 0:
+            w.flush()
+            w.buf += bytes((0xFF, 0xD0 + (rst & 7)))
+            rst += 1
+            prev = [0] * len(samp)
+        zzc = rows[ci][by][bx]
+        diff = zzc[0] - prev[ci]
+        prev[ci] = zzc[0]
+        s = _category(diff)
+        put(*_DC_ENC[s])
+        if s:
+            put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        last = 63
+        while last and not zzc[last]:
+            last -= 1
+        run = 0
+        for v in zzc[1:last + 1]:
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                put(*_AC_ENC[0xF0])                     # ZRL
+                run -= 16
+            s = _category(v)
+            if s > 10:
+                raise ValueError("AC coefficient too large")
+            put(*_AC_ENC[(run << 4) | s])
+            put(v if v > 0 else v + (1 << s) - 1, s)
+            run = 0
+        if last < 63:
+            put(*_AC_ENC[0x00])                         # EOB
+    w.flush()
+    return bytes(out + w.buf + b"\xff\xd9")             # EOI
 
 
 def encode_jpeg_gray(width: int, height: int, pixels: bytes,
@@ -187,42 +297,8 @@ def encode_jpeg_gray(width: int, height: int, pixels: bytes,
     ``quant``. ``restart_interval`` > 0 emits a DRI segment and RSTn
     markers every that many MCUs (predictors reset, ITU-T.81 §E.1.2) —
     the error-resilience device most real encoders use."""
-    if width % 8 or height % 8:
-        raise ValueError("encode_jpeg_gray needs multiple-of-8 dims")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8) \
-        .reshape(height, width).astype(np.float64) - 128.0
-    q = np.full((8, 8), float(quant))
-    out = _headers(width, height, q, 1, restart_interval)
-    w = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    rst = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            if restart_interval and mcu \
-                    and mcu % restart_interval == 0:
-                w.flush()
-                w.buf += bytes((0xFF, 0xD0 + (rst & 7)))
-                rst += 1
-                prev_dc = 0
-            mcu += 1
-            prev_dc = _encode_block(
-                w, img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8], q, prev_dc)
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"                                  # EOI
-    return bytes(out)
-
-
-def _ycbcr_planes(width: int, height: int, rgb: bytes):
-    arr = np.frombuffer(bytes(rgb), dtype=np.uint8) \
-        .reshape(height, width, 3).astype(np.float64)
-    r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-    return [
-        0.299 * r + 0.587 * g + 0.114 * b - 128.0,          # Y (shifted)
-        -0.168736 * r - 0.331264 * g + 0.5 * b,             # Cb - 128
-        0.5 * r - 0.418688 * g - 0.081312 * b,              # Cr - 128
-    ]
+    return _encode_baseline(width, height, pixels, 1, (1, 1), quant,
+                            restart_interval)
 
 
 def encode_jpeg_color(width: int, height: int, rgb: bytes,
@@ -231,23 +307,7 @@ def encode_jpeg_color(width: int, height: int, rgb: bytes,
     as a baseline 4:4:4 color JFIF stream: JFIF RGB→YCbCr, then one
     interleaved MCU (Y, Cb, Cr block) per 8×8 tile with independent DC
     predictors per component (ITU-T.81 §A.2)."""
-    if width % 8 or height % 8:
-        raise ValueError("encode_jpeg_color needs multiple-of-8 dims")
-    planes = _ycbcr_planes(width, height, rgb)
-    q = np.full((8, 8), float(quant))
-    out = _headers(width, height, q, 3)
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            for ci, plane in enumerate(planes):
-                prev[ci] = _encode_block(
-                    w, plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8],
-                    q, prev[ci])
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"                                  # EOI
-    return bytes(out)
+    return _encode_baseline(width, height, rgb, 3, (1, 1), quant)
 
 
 def encode_jpeg_color_422(width: int, height: int, rgb: bytes,
@@ -257,38 +317,7 @@ def encode_jpeg_color_422(width: int, height: int, rgb: bytes,
     by side), chroma 0x11 and horizontally 1×2-mean-subsampled.
     Width must be a multiple of 16, height of 8 (one MCU row = one
     block row)."""
-    if width % 16 or height % 8:
-        raise ValueError("encode_jpeg_color_422 needs width %16, height %8")
-    y, cb, cr = _ycbcr_planes(width, height, rgb)
-    cb = cb.reshape(height, width // 2, 2).mean(axis=2)
-    cr = cr.reshape(height, width // 2, 2).mean(axis=2)
-    q = np.full((8, 8), float(quant))
-    out = bytearray(b"\xff\xd8")                        # SOI
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz = bytes(int(q[r][c]) for r, c in _ZZ)
-    out += _seg(0xFFDB, b"\x00" + zz)
-    out += _seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 3)
-                + bytes([1, 0x21, 0]) + bytes([2, 0x11, 0])
-                + bytes([3, 0x11, 0]))                  # SOF0 4:2:2
-    out += _seg(0xFFC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xFFC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += _seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(height // 8):
-        for mx in range(width // 16):
-            for sh in range(2):                         # two Y blocks
-                blk = y[my * 8:my * 8 + 8,
-                        mx * 16 + sh * 8:mx * 16 + sh * 8 + 8]
-                prev[0] = _encode_block(w, blk, q, prev[0])
-            prev[1] = _encode_block(
-                w, cb[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8], q, prev[1])
-            prev[2] = _encode_block(
-                w, cr[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8], q, prev[2])
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"                                  # EOI
-    return bytes(out)
+    return _encode_baseline(width, height, rgb, 3, (2, 1), quant)
 
 
 def encode_jpeg_color_420(width: int, height: int, rgb: bytes,
@@ -298,67 +327,12 @@ def encode_jpeg_color_420(width: int, height: int, rgb: bytes,
     2×2-mean-subsampled (0x11); each MCU carries four Y blocks then
     one Cb and one Cr (ITU-T.81 §A.2.3 interleave order). Dimensions
     must be multiples of 16."""
-    if width % 16 or height % 16:
-        raise ValueError("encode_jpeg_color_420 needs multiple-of-16 dims")
-    y, cb, cr = _ycbcr_planes(width, height, rgb)
-    cb = cb.reshape(height // 2, 2, width // 2, 2).mean(axis=(1, 3))
-    cr = cr.reshape(height // 2, 2, width // 2, 2).mean(axis=(1, 3))
-    q = np.full((8, 8), float(quant))
-    out = bytearray(b"\xff\xd8")                        # SOI
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz = bytes(int(q[r][c]) for r, c in _ZZ)
-    out += _seg(0xFFDB, b"\x00" + zz)
-    out += _seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 3)
-                + bytes([1, 0x22, 0]) + bytes([2, 0x11, 0])
-                + bytes([3, 0x11, 0]))                  # SOF0 4:2:0
-    out += _seg(0xFFC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xFFC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += _seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for sv in range(2):                         # four Y blocks
-                for sh in range(2):
-                    blk = y[my * 16 + sv * 8:my * 16 + sv * 8 + 8,
-                            mx * 16 + sh * 8:mx * 16 + sh * 8 + 8]
-                    prev[0] = _encode_block(w, blk, q, prev[0])
-            prev[1] = _encode_block(
-                w, cb[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8], q, prev[1])
-            prev[2] = _encode_block(
-                w, cr[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8], q, prev[2])
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"                                  # EOI
-    return bytes(out)
+    return _encode_baseline(width, height, rgb, 3, (2, 2), quant)
 
 
 # ---------------------------------------------------------------------------
 # Progressive encoder (SOF2, ITU-T.81 Annex G)
 # ---------------------------------------------------------------------------
-
-# Progressive AC table: every (run 0-15, size 0-10) symbol — size 0 is
-# EOBn for run 0-14 (end-of-band run category) and ZRL for run 15 —
-# all at 8 bits (176 ≤ 256, canonical).
-_ACP_VALS = [(r << 4) | s for r in range(16) for s in range(11)]
-_ACP_BITS = [0] * 7 + [len(_ACP_VALS)] + [0] * 8
-_ACP_ENC = _canonical_codes(_ACP_BITS, _ACP_VALS)
-
-
-def _coef_blocks(plane: "np.ndarray", q: "np.ndarray") -> "np.ndarray":
-    """FDCT + quantize every 8×8 block of a (level-shifted) plane →
-    (bh, bw, 64) int array in zigzag order."""
-    h, w = plane.shape
-    bh, bw = h // 8, w // 8
-    tiles = plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-    # batched matmul in the SAME association as the sequential
-    # encoder's _T @ blk @ _T.T — float contraction order changes
-    # round-at-.5 results, and progressive must quantize identically
-    coefs = np.matmul(np.matmul(_T, tiles), _T.T)
-    cq = np.round(coefs / q).astype(np.int64)
-    zz = np.array([r * 8 + c for r, c in _ZZ])
-    return cq.reshape(bh, bw, 64)[:, :, zz]
-
 
 class _ProgressiveWriter:
     """Emits the entropy data of progressive scans over pre-computed
@@ -394,12 +368,12 @@ class _ProgressiveWriter:
             self.w.put(b, 1)
         self.corr_cur = []
 
-    def dc_first(self, blocks_iter, al: int) -> None:
+    def dc_first(self, blocks, al: int) -> None:
         """Interleaved DC scan, Ah=0: point-transformed DC diffs.
-        ``blocks_iter`` yields (comp_index, zigzag block)."""
+        ``blocks`` holds (comp_index, zigzag block) in MCU order."""
         preds: Dict[int, int] = {}
-        for ci, blk in blocks_iter:
-            v = int(blk[0]) >> al                # arithmetic shift (§G.1.2.1)
+        for ci, blk in blocks:
+            v = blk[0] >> al                     # arithmetic shift (§G.1.2.1)
             diff = v - preds.get(ci, 0)
             preds[ci] = v
             s = _category(diff)
@@ -408,9 +382,9 @@ class _ProgressiveWriter:
             if s:
                 self.w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
 
-    def dc_refine(self, blocks_iter, al: int) -> None:
-        for _ci, blk in blocks_iter:
-            self.w.put((int(blk[0]) >> al) & 1, 1)
+    def dc_refine(self, blocks, al: int) -> None:
+        for _ci, blk in blocks:
+            self.w.put((blk[0] >> al) & 1, 1)
 
     def ac_first(self, blocks, ss: int, se: int, al: int) -> None:
         def pt(v: int) -> int:                   # toward-zero (§G.1.2.2)
@@ -419,7 +393,7 @@ class _ProgressiveWriter:
         for blk in blocks:
             r = 0
             for k in range(ss, se + 1):
-                t = pt(int(blk[k]))
+                t = pt(blk[k])
                 if t == 0:
                     r += 1
                     continue
@@ -440,7 +414,7 @@ class _ProgressiveWriter:
 
     def ac_refine(self, blocks, ss: int, se: int, al: int) -> None:
         for blk in blocks:
-            absv = [(abs(int(blk[k])) >> al) for k in range(ss, se + 1)]
+            absv = [abs(v) >> al for v in blk[ss:se + 1]]
             eob = ss - 1                         # last newly-significant
             for i, t in enumerate(absv):
                 if t == 1:
@@ -463,7 +437,7 @@ class _ProgressiveWriter:
                 self._emit_eobrun()
                 code, length = _ACP_ENC[(r << 4) | 1]
                 self.w.put(code, length)
-                self.w.put(1 if int(blk[k]) > 0 else 0, 1)
+                self.w.put(1 if blk[k] > 0 else 0, 1)
                 self._emit_cur()
                 r = 0
             if r or self.corr_cur:
@@ -501,95 +475,30 @@ def encode_jpeg_progressive(width: int, height: int, pixels: bytes,
     identically through either path."""
     if subsampling not in ("444", "420"):
         raise ValueError("subsampling must be '444' or '420'")
-    sub420 = channels == 3 and subsampling == "420"
-    if sub420:
-        if width % 16 or height % 16:
-            raise ValueError(
-                "progressive 4:2:0 needs multiple-of-16 dims")
-    elif width % 8 or height % 8:
-        raise ValueError("encode_jpeg_progressive needs multiple-of-8 dims")
-    if channels == 1:
-        img = np.frombuffer(bytes(pixels), dtype=np.uint8) \
-            .reshape(height, width).astype(np.float64) - 128.0
-        planes = [img]
-    elif channels == 3:
-        planes = _ycbcr_planes(width, height, pixels)
-        if sub420:
-            # 2×2-mean chroma, same prep as the baseline 4:2:0 encoder
-            for i in (1, 2):
-                planes[i] = planes[i].reshape(
-                    height // 2, 2, width // 2, 2).mean(axis=(1, 3))
-    else:
-        raise ValueError("channels must be 1 or 3")
-    q = np.full((8, 8), float(quant))
-    coefs = [_coef_blocks(p, q) for p in planes]
-    # per-component sampling factors and block grids (Y 2×2 at 4:2:0)
-    samp = [(2, 2), (1, 1), (1, 1)] if sub420 \
-        else [(1, 1)] * len(planes)
-    grids = [c.shape[:2] for c in coefs]         # (bh, bw) per comp
-    # MCU grid: the chroma (1,1) grid at 4:2:0, else the full grid
-    mbh, mbw = grids[1] if sub420 else grids[0]
-
-    ncomp = len(planes)
-    out = bytearray(b"\xff\xd8")                 # SOI
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz = bytes(int(q[r][c]) for r, c in _ZZ)
-    out += _seg(0xFFDB, b"\x00" + zz)
-    comps = b"".join(
-        bytes([cid, (samp[cid - 1][0] << 4) | samp[cid - 1][1], 0])
-        for cid in range(1, ncomp + 1))
-    out += _seg(0xFFC2, struct.pack(">BHHB", 8, height, width, ncomp)
-                + comps)                         # SOF2
-    out += _seg(0xFFC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xFFC4, b"\x10" + bytes(_ACP_BITS)
-                + bytes(bytearray(_ACP_VALS)))
-
-    def sos(comp_ids: List[int], ss: int, se: int, ah: int,
-            al: int) -> bytes:
-        hdr = bytes([len(comp_ids)]) \
-            + b"".join(bytes([cid, 0x00]) for cid in comp_ids) \
-            + bytes([ss, se, (ah << 4) | al])
-        return _seg(0xFFDA, hdr)
-
+    hv = (2, 2) if channels == 3 and subsampling == "420" else (1, 1)
+    q, samp, rows, walk = _transform(width, height, pixels, channels, hv,
+                                     quant)
+    out = _frame_header(0xFFC2, width, height, q, samp, _ACP_BITS,
+                        _ACP_VALS)
+    all_ids = list(range(1, len(samp) + 1))
+    dc_blocks = [(ci, rows[ci][by][bx]) for ci, by, bx in walk]
     pw = _ProgressiveWriter()
-
-    def mcu_blocks():
-        # interleaved MCU order (§A.2.3): h×v blocks per component,
-        # raster within the MCU — matches the decoder's DC walk
-        for my in range(mbh):
-            for mx in range(mbw):
-                for ci in range(ncomp):
-                    h, v = samp[ci]
-                    for sv in range(v):
-                        for sh in range(h):
-                            yield ci, coefs[ci][my * v + sv,
-                                                mx * h + sh]
-
-    def comp_blocks(ci: int):
-        gh, gw = grids[ci]
-        for by in range(gh):
-            for bx in range(gw):
-                yield coefs[ci][by, bx]
-
-    all_ids = list(range(1, ncomp + 1))
-    out += sos(all_ids, 0, 0, 0, 1)              # scan 1: DC, Al=1
-    pw.dc_first(mcu_blocks(), 1)
+    out += _sos(all_ids, 0, 0, 0, 1)             # scan 1: DC, Al=1
+    pw.dc_first(dc_blocks, 1)
     out += pw.finish_scan()
-    out += sos(all_ids, 0, 0, 1, 0)              # scan 2: DC refine
-    pw.dc_refine(mcu_blocks(), 0)
+    out += _sos(all_ids, 0, 0, 1, 0)             # scan 2: DC refine
+    pw.dc_refine(dc_blocks, 0)
     out += pw.finish_scan()
-    for ci in range(ncomp):                      # AC first, Al=1
-        for lo, hi in ((1, 5), (6, 63)):
-            out += sos([ci + 1], lo, hi, 0, 1)
-            pw.ac_first(comp_blocks(ci), lo, hi, 1)
-            out += pw.finish_scan()
-    for ci in range(ncomp):                      # AC refine, Al=0
-        for lo, hi in ((1, 5), (6, 63)):
-            out += sos([ci + 1], lo, hi, 1, 0)
-            pw.ac_refine(comp_blocks(ci), lo, hi, 0)
-            out += pw.finish_scan()
-    out += b"\xff\xd9"                           # EOI
-    return bytes(out)
+    # AC first (Al=1), then AC refine (Al=0): per component, over its
+    # OWN block grid in raster order (§A.2.2)
+    for ah, al, scan in ((0, 1, pw.ac_first), (1, 0, pw.ac_refine)):
+        for ci, comp in enumerate(rows):
+            blocks = [blk for row in comp for blk in row]
+            for lo, hi in ((1, 5), (6, 63)):
+                out += _sos([ci + 1], lo, hi, ah, al)
+                scan(blocks, lo, hi, al)
+                out += pw.finish_scan()
+    return bytes(out + b"\xff\xd9")              # EOI
 
 
 # ---------------------------------------------------------------------------
@@ -668,11 +577,17 @@ class _BitReader:
 
 
 def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
-    """Decode a baseline grayscale JPEG → (width, height, 1, pixels).
+    """Decode a JPEG → (width, height, channels, pixels), channels 1
+    (grayscale) or 3 (RGB).
 
-    Real entropy decode: canonical Huffman from the file's DHT, DC
-    prediction, AC run-length/EOB/ZRL, dequantize from DQT, inverse
-    zigzag, float IDCT, level shift + clamp."""
+    Reads 8-bit baseline (SOF0), extended sequential (SOF1) and
+    progressive (SOF2) streams with 1 or 3 components at any integral
+    sampling, restart intervals and the file's own DHT tables. Real
+    entropy decode: canonical Huffman, DC prediction, AC run-length/
+    EOB/ZRL (plus EOBn runs and refinement bits when progressive) into
+    per-component coefficient arrays; then one batched dequantize (DQT),
+    inverse zigzag and float IDCT, chroma upsample, YCbCr→RGB, level
+    shift + clamp."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -683,6 +598,7 @@ def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
     comps: list = []
     restart_interval = 0
     progressive = False
+    scans = 0
     coef: list = []          # per-comp (bh_pad, bw_pad, 64) zigzag coeffs
     while pos < len(data):
         if data[pos] != 0xFF:
@@ -699,10 +615,8 @@ def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
                 pq, tq = body[o] >> 4, body[o] & 0x0F
                 if pq != 0:
                     raise ValueError("16-bit DQT unsupported")
-                tab = np.zeros((8, 8))
-                for i, (r, c) in enumerate(_ZZ):
-                    tab[r, c] = body[o + 1 + i]
-                qt[tq] = tab
+                # kept in the file's zigzag order, like the coefficients
+                qt[tq] = np.array(list(body[o + 1:o + 65]), float)
                 o += 65
         elif marker == 0xFFC4:                          # DHT
             o = 0
@@ -729,18 +643,22 @@ def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
             for ci in range(ncomp):
                 cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
                 comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            # Sampling is generic in the MCU loop below: any per-
-            # component (h, v) in 1..4 whose ratios to (hmax, vmax)
-            # divide evenly (the replication upsample needs integer
-            # ratios). Covers grayscale, 4:4:4, 4:2:0 (2,2), 4:2:2
-            # (2,1), 4:4:0 (1,2) and 4:1:1 (4,1).
-            hm = max(h for _, h, _v, _ in comps)
-            vm = max(v for _, _h, v, _ in comps)
+            # Sampling is generic in the MCU walk: any per-component
+            # (h, v) in 1..4 whose ratios to (hmax, vmax) divide evenly
+            # (the replication upsample needs integer ratios). Covers
+            # grayscale, 4:4:4, 4:2:0 (2,2), 4:2:2 (2,1), 4:4:0 (1,2)
+            # and 4:1:1 (4,1).
+            hmax = max(h for _, h, _v, _ in comps)
+            vmax = max(v for _, _h, v, _ in comps)
             for _, h, v, _ in comps:
                 if not (1 <= h <= 4 and 1 <= v <= 4
-                        and hm % h == 0 and vm % v == 0):
+                        and hmax % h == 0 and vmax % v == 0):
                     raise NotImplementedError(
                         f"unsupported sampling factors ({h},{v})")
+            mbw = (width + 8 * hmax - 1) // (8 * hmax)
+            mbh = (height + 8 * vmax - 1) // (8 * vmax)
+            coef = [np.zeros((mbh * v, mbw * h, 64), dtype=np.int32)
+                    for _, h, v, _ in comps]
         elif marker in (0xFFC3, 0xFFC9, 0xFFCA):
             raise NotImplementedError(
                 f"unsupported SOF 0x{marker:04x} (lossless / "
@@ -748,103 +666,19 @@ def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
                 f"not reproducible from the spec text alone)")
         elif marker == 0xFFDD:                          # DRI
             (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xFFDA and progressive:          # SOS (one of many)
-            hmax = max(h for _, h, _v, _ in comps)
-            vmax = max(v for _, _h, v, _ in comps)
-            mbw = (width + 8 * hmax - 1) // (8 * hmax)
-            mbh = (height + 8 * vmax - 1) // (8 * vmax)
-            if not coef:
-                coef = [np.zeros((mbh * v, mbw * h, 64), dtype=np.int32)
-                        for _, h, v, _ in comps]
-            pos = _progressive_scan(
-                data, pos, seglen, body, comps, dc_tabs, ac_tabs, coef,
-                width, height, hmax, vmax, mbw, mbh, restart_interval)
-            continue
         elif marker == 0xFFDA:                          # SOS
-            ns = body[0]
-            if ns != len(comps):
-                raise NotImplementedError(
-                    "scan must cover every frame component")
-            scan_tabs = {}                              # cid -> (dc, ac)
-            for ci in range(ns):
-                cid = body[1 + 2 * ci]
-                tb = body[2 + 2 * ci]
-                scan_tabs[cid] = (dc_tabs[tb >> 4], ac_tabs[tb & 0x0F])
-            br = _BitReader(data, pos + seglen)
-            hmax = max(h for _, h, _v, _ in comps)
-            vmax = max(v for _, _h, v, _ in comps)
-            mcu_w, mcu_h = 8 * hmax, 8 * vmax
-            mbw = (width + mcu_w - 1) // mcu_w
-            mbh = (height + mcu_h - 1) // mcu_h
-            planes = [np.zeros((mbh * v * 8, mbw * h * 8),
-                               dtype=np.float64)
-                      for _, h, v, _ in comps]
-            prev = [0] * len(comps)
-            mcu_count = 0
-            rst_seq = 0
-            for my in range(mbh):
-                for mx in range(mbw):
-                    if restart_interval and mcu_count \
-                            and mcu_count % restart_interval == 0:
-                        br.restart(rst_seq)
-                        rst_seq = (rst_seq + 1) & 7
-                        prev = [0] * len(comps)
-                    mcu_count += 1
-                    # one interleaved MCU: h×v blocks per component,
-                    # raster order within the MCU (ITU-T.81 §A.2.3)
-                    for ci, (cid, ch, cv, tq) in enumerate(comps):
-                        dct, act = scan_tabs[cid]
-                        for sv in range(cv):
-                            for sh in range(ch):
-                                zzc = [0] * 64
-                                s = dct.read(br)
-                                prev[ci] += br.receive_extend(s)
-                                zzc[0] = prev[ci]
-                                i = 1
-                                while i < 64:
-                                    rs = act.read(br)
-                                    if rs == 0x00:      # EOB
-                                        break
-                                    if rs == 0xF0:      # ZRL
-                                        i += 16
-                                        continue
-                                    i += rs >> 4
-                                    if i > 63:
-                                        raise ValueError(
-                                            "AC index overflow")
-                                    zzc[i] = br.receive_extend(
-                                        rs & 0x0F)
-                                    i += 1
-                                coef = np.zeros((8, 8))
-                                for i, (r, c) in enumerate(_ZZ):
-                                    coef[r, c] = zzc[i]
-                                blk = _T.T @ (coef * qt[tq]) @ _T
-                                py = (my * cv + sv) * 8
-                                px_ = (mx * ch + sh) * 8
-                                planes[ci][py:py + 8,
-                                           px_:px_ + 8] = blk
-            return _assemble(comps, planes, width, height, hmax, vmax)
+            if not comps:
+                raise ValueError("SOS before SOF")
+            pos = _scan(data, pos + seglen, body, comps, dc_tabs, ac_tabs,
+                        coef, (width, height, hmax, vmax, mbw, mbh),
+                        restart_interval, progressive)
+            scans += 1
+            continue
         pos += seglen
-    if progressive and coef:
-        # all scans accumulated: dequantize, un-zigzag, IDCT every
-        # block of every component in one vectorized pass each
-        hmax = max(h for _, h, _v, _ in comps)
-        vmax = max(v for _, _h, v, _ in comps)
-        planes = []
-        for ci, (cid, ch, cv, tq) in enumerate(comps):
-            qzz = np.array([qt[tq][r, c] for r, c in _ZZ])
-            deq = coef[ci].astype(np.float64) * qzz[None, None, :]
-            bh, bw = deq.shape[:2]
-            cmat = np.zeros((bh, bw, 8, 8))
-            for i, (r, c) in enumerate(_ZZ):
-                cmat[:, :, r, c] = deq[:, :, i]
-            # same association as the baseline IDCT (_T.T @ X @ _T) so
-            # both paths round identical floats to identical pixels
-            blk = np.matmul(np.matmul(_T.T, cmat), _T)
-            planes.append(np.transpose(blk, (0, 2, 1, 3))
-                          .reshape(bh * 8, bw * 8))
-        return _assemble(comps, planes, width, height, hmax, vmax)
-    raise ValueError("no scan data found")
+    if not scans:
+        raise ValueError("no scan data found")
+    return _assemble(comps, _idct_planes(comps, coef, qt), width, height,
+                     hmax, vmax)
 
 
 def _next_marker(data: bytes, p: int) -> int:
@@ -857,56 +691,63 @@ def _next_marker(data: bytes, p: int) -> int:
     return len(data)
 
 
-def _progressive_scan(data: bytes, pos: int, seglen: int, body: bytes,
-                      comps, dc_tabs, ac_tabs, coef, width: int,
-                      height: int, hmax: int, vmax: int, mbw: int,
-                      mbh: int, restart_interval: int) -> int:
-    """Decode ONE progressive scan (ITU-T.81 §G.2) into the
+def _scan(data: bytes, pos: int, body: bytes, comps, dc_tabs, ac_tabs,
+          coef, frame, restart_interval: int, progressive: bool) -> int:
+    """Decode ONE scan whose entropy data starts at ``pos`` into the
     accumulated ``coef`` arrays and return the stream position of the
     next marker.
 
-    Covers the full progressive feature set: interleaved or
-    single-component DC scans, DC successive-approximation refinement
-    (one raw bit per block), single-component AC scans with spectral
-    selection (Ss..Se), AC first scans with EOBn run codes, AC
-    refinement scans with correction bits (the libjpeg
-    decode_mcu_AC_refine algorithm), and restart intervals (predictors
-    and the EOB run reset)."""
+    A sequential (SOF0/SOF1) scan codes every block whole: its DC diff,
+    then its AC run-lengths up to EOB. That is a DC-first step and an
+    AC-first step over band 1..63 with no point transform, so it runs
+    through the same block steps as a progressive scan.
+
+    Progressive scans (ITU-T.81 §G.2) cover the full feature set:
+    interleaved or single-component DC scans, DC successive-
+    approximation refinement (one raw bit per block), single-component
+    AC scans with spectral selection (Ss..Se), AC first scans with EOBn
+    run codes, AC refinement scans with correction bits (the libjpeg
+    decode_mcu_AC_refine algorithm). Restart intervals reset the
+    predictors and the EOB run."""
+    width, height, hmax, vmax, mbw, mbh = frame
     ns = body[0]
-    scomps = []                                  # (ci, dc_id, ac_id)
+    if progressive:
+        ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+        ah, al = a >> 4, a & 0x0F
+        if ss == 0 and se != 0:
+            raise ValueError("progressive DC scan must have Se=0")
+        if ss and ns != 1:
+            raise ValueError("progressive AC scan must be one component")
+    else:
+        ss, se, ah, al = 0, 63, 0, 0
+    scomps = []                                  # (ci, dc table, ac table)
     for i in range(ns):
         cid, tb = body[1 + 2 * i], body[2 + 2 * i]
         ci = next(j for j, c in enumerate(comps) if c[0] == cid)
-        scomps.append((ci, tb >> 4, tb & 0x0F))
-    ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-    ah, al = a >> 4, a & 0x0F
-    br = _BitReader(data, pos + seglen)
-    state = {"eobrun": 0}
-
-    def comp_grid(ci: int) -> Tuple[int, int]:
+        scomps.append((ci, dc_tabs[tb >> 4] if ss == 0 and ah == 0 else None,
+                       ac_tabs[tb & 0x0F] if se else None))
+    if ns > 1:
+        samp = [comps[ci][1:3] for ci, _, _ in scomps]
+        walk = _mcu_walk(samp, mbh, mbw)
+        every = restart_interval * sum(h * v for h, v in samp)
+    else:
         # a non-interleaved scan covers the component's OWN block
         # grid (§A.2.2), not the MCU-padded one
-        _, h, v, _ = comps[ci]
-        cw = (-(-width * h // hmax) + 7) // 8
-        chh = (-(-height * v // vmax) + 7) // 8
-        return cw, chh
+        _, h, v, _ = comps[scomps[0][0]]
+        walk = _mcu_walk([(1, 1)], (-(-height * v // vmax) + 7) // 8,
+                         (-(-width * h // hmax) + 7) // 8)
+        every = restart_interval
+    br = _BitReader(data, pos)
+    lo = max(ss, 1)                              # first AC index coded
+    p1, m1 = 1 << al, -(1 << al)
+    eobrun = 0
 
-    def dc_first(ci: int, by: int, bx: int, pred: list, k: int,
-                 tab) -> None:
-        s = tab.read(br)
-        pred[k] += br.receive_extend(s)
-        coef[ci][by, bx, 0] = pred[k] << al
-
-    def dc_refine(ci: int, by: int, bx: int) -> None:
-        if br.bit():
-            coef[ci][by, bx, 0] |= (1 << al)
-
-    def ac_first(ci: int, by: int, bx: int, tab) -> None:
-        blk = coef[ci][by, bx]
-        if state["eobrun"] > 0:
-            state["eobrun"] -= 1
+    def ac_first(blk, tab) -> None:
+        nonlocal eobrun
+        if eobrun > 0:
+            eobrun -= 1
             return
-        k = ss
+        k = lo
         while k <= se:
             rs = tab.read(br)
             r, s = rs >> 4, rs & 0x0F
@@ -914,29 +755,24 @@ def _progressive_scan(data: bytes, pos: int, seglen: int, body: bytes,
                 if r == 15:                      # ZRL
                     k += 16
                     continue
-                state["eobrun"] = (1 << r) - 1
-                if r:
-                    state["eobrun"] += br.receive(r)
+                eobrun = (1 << r) - 1 + br.receive(r)   # EOB / EOBn
                 break
             k += r
             if k > se:
-                raise ValueError("AC index overflow in progressive scan")
+                raise ValueError("AC index overflow")
             blk[k] = br.receive_extend(s) << al
             k += 1
 
-    def ac_refine(ci: int, by: int, bx: int, tab) -> None:
-        blk = coef[ci][by, bx]
-        p1, m1 = 1 << al, -(1 << al)
-        k = ss
-        if state["eobrun"] == 0:
+    def ac_refine(blk, tab) -> None:
+        nonlocal eobrun
+        k = lo
+        if eobrun == 0:
             while k <= se:
                 rs = tab.read(br)
                 r, s = rs >> 4, rs & 0x0F
                 if s == 0:
                     if r != 15:
-                        state["eobrun"] = (1 << r)
-                        if r:
-                            state["eobrun"] += br.receive(r)
+                        eobrun = (1 << r) + br.receive(r)
                         break                    # remainder below
                     s = 0                        # ZRL: skip 16 zeros
                 else:
@@ -958,70 +794,56 @@ def _progressive_scan(data: bytes, pos: int, seglen: int, body: bytes,
                 if s and k <= se:
                     blk[k] = s
                 k += 1
-        if state["eobrun"] > 0:
+        if eobrun > 0:
             while k <= se:
                 c = int(blk[k])
                 if c != 0:
                     if br.bit() and (c & p1) == 0:
                         blk[k] = c + (p1 if c >= 0 else m1)
                 k += 1
-            state["eobrun"] -= 1
+            eobrun -= 1
 
-    def maybe_restart(count: int, rst_seq: int, pred: list) -> int:
-        if restart_interval and count and count % restart_interval == 0:
+    ac = ac_refine if ah else ac_first
+    pred = [0] * ns
+    rst_seq = 0
+    for n, (j, by, bx) in enumerate(walk):
+        if every and n and n % every == 0:
             br.restart(rst_seq)
-            pred[:] = [0] * len(pred)
-            state["eobrun"] = 0
-            return (rst_seq + 1) & 7
-        return rst_seq
-
-    if ss == 0:                                  # DC scan
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        pred = [0] * len(scomps)
-        rst_seq, count = 0, 0
-        if ns > 1:                               # interleaved MCU order
-            for my in range(mbh):
-                for mx in range(mbw):
-                    rst_seq = maybe_restart(count, rst_seq, pred)
-                    count += 1
-                    for k, (ci, dci, _aci) in enumerate(scomps):
-                        _, h, v, _ = comps[ci]
-                        for sv in range(v):
-                            for sh in range(h):
-                                by, bx = my * v + sv, mx * h + sh
-                                if ah == 0:
-                                    dc_first(ci, by, bx, pred, k,
-                                             dc_tabs[dci])
-                                else:
-                                    dc_refine(ci, by, bx)
-        else:
-            ci, dci, _aci = scomps[0]
-            cw, chh = comp_grid(ci)
-            for by in range(chh):
-                for bx in range(cw):
-                    rst_seq = maybe_restart(count, rst_seq, pred)
-                    count += 1
-                    if ah == 0:
-                        dc_first(ci, by, bx, pred, 0, dc_tabs[dci])
-                    else:
-                        dc_refine(ci, by, bx)
-    else:                                        # AC scan
-        if ns != 1:
-            raise ValueError("progressive AC scan must be one component")
-        ci, _dci, aci = scomps[0]
-        cw, chh = comp_grid(ci)
-        rst_seq, count = 0, 0
-        pred: list = []
-        for by in range(chh):
-            for bx in range(cw):
-                rst_seq = maybe_restart(count, rst_seq, pred)
-                count += 1
-                if ah == 0:
-                    ac_first(ci, by, bx, ac_tabs[aci])
-                else:
-                    ac_refine(ci, by, bx, ac_tabs[aci])
+            rst_seq = (rst_seq + 1) & 7
+            pred = [0] * ns
+            eobrun = 0
+        ci, dct, act = scomps[j]
+        blk = coef[ci][by, bx]
+        if ss == 0:
+            if ah:                               # DC refinement bit
+                if br.bit():
+                    blk[0] |= p1
+            else:
+                pred[j] += br.receive_extend(dct.read(br))
+                blk[0] = pred[j] << al
+        if se:
+            ac(blk, act)
     return _next_marker(data, br.pos)
+
+
+def _idct_planes(comps, coef, qt) -> List["np.ndarray"]:
+    """Dequantize, un-zigzag and IDCT every block of every component,
+    one batched pass each → level-shifted spatial planes."""
+    planes = []
+    for ci, (_cid, _h, _v, tq) in enumerate(comps):
+        deq = coef[ci].astype(np.float64) * qt[tq]
+        bh, bw = deq.shape[:2]
+        # C-contiguous blocks: BLAS then takes every block by the same
+        # kernel as a lone 8×8 block, where a strided operand falls
+        # back to numpy's own loop, which sums in another order
+        cmat = np.ascontiguousarray(deq[:, :, _UNZZ]).reshape(bh, bw, 8, 8)
+        # association (_T.T @ X) @ _T — float order decides which
+        # .5 pixels round up, so another order changes decoded pixels
+        # (tests pin them)
+        blk = np.matmul(np.matmul(_T.T, cmat), _T)
+        planes.append(np.transpose(blk, (0, 2, 1, 3))
+                      .reshape(bh * 8, bw * 8))
+    return planes
 
 
 def _assemble(comps, planes, width: int, height: int,

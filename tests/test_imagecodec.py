@@ -472,6 +472,17 @@ def test_jpeg_restart_intervals():
         assert any(bytes((0xFF, 0xD0 + i)) in data for i in range(8))
         w, h, c, out = decode_jpeg(data)
         assert (w, h, c, out) == (8, 32, 1, px)
+    # interleaved MCUs restart every ri MCUs, not every ri blocks
+    import numpy as np
+    from connectors_spark.ops.jpegcodec import _encode_baseline
+    rgb = np.random.RandomState(3).randint(
+        0, 256, size=(32, 48, 3), dtype=np.uint8).tobytes()
+    for hv in ((1, 1), (2, 1), (2, 2)):
+        plain = decode_jpeg(_encode_baseline(48, 32, rgb, 3, hv, 4))
+        for ri in (1, 2, 5):
+            data = _encode_baseline(48, 32, rgb, 3, hv, 4, ri)
+            assert bytes((0xFF, 0xD0)) in data
+            assert decode_jpeg(data) == plain
     # an out-of-sequence restart marker must fail loudly
     data = bytearray(encode_jpeg_gray(8, 32, px, restart_interval=1))
     i = bytes(data).find(bytes((0xFF, 0xD0)))
@@ -893,6 +904,14 @@ def _jpeg_pin_streams():
             32, 32, rgb, 3, quant=4, subsampling="420")
     out["pgray_noise"] = jc.encode_jpeg_progressive(32, 24, noise_g,
                                                     quant=4)
+    # smooth rows whose quant-50 reconstruction has exact .5 pixels:
+    # the IDCT's float order decides which way they round
+    walk = np.random.RandomState(8).normal(128, 40, size=(32, 32))
+    ties = np.clip(walk.cumsum(axis=1) / np.arange(1, 33), 0, 255) \
+        .astype(np.uint8).tobytes()
+    out["gray_ties_q50"] = jc.encode_jpeg_gray(32, 32, ties, quant=50)
+    out["pgray_ties_q50"] = jc.encode_jpeg_progressive(32, 32, ties,
+                                                       quant=50)
     # multimodal.synth_jpeg_media layouts
     for did in range(8):
         if did % 4 == 3:
@@ -955,6 +974,8 @@ _JPEG_PINS = {
     "p444_smooth": ("13019853a4aaf4dc1eb1ce65", "7ebb23a636debc3dc8d78e82"),
     "p420_smooth": ("4b6369131fa67468ce40fe2b", "67ebbef240167b7b36e588f0"),
     "pgray_noise": ("6091f0667bc7aece18d7ae87", "206c8178b26b2730d97aa6ee"),
+    "gray_ties_q50": ("26722549fc0e63556ad9509e", "46e11ea14cc60d644a6bc8e9"),
+    "pgray_ties_q50": ("51aa1a298a19de87fa604af3", "46e11ea14cc60d644a6bc8e9"),
     "media_0": ("4b51d76b044653c5dea0d859", "127a7d2fda27f8b3d44aafa6"),
     "media_1": ("6d70bb0ed299339365669915", "81fe8844102b88d3ced96467"),
     "media_2": ("25ca4666cf89a37064ff7905", "8036ff2feeb7f90584f6555e"),
@@ -987,3 +1008,35 @@ def test_jpeg_streams_and_pixels_match_pins():
         w, hh, c, px = decode_jpeg(blob)
         got[name] = (h(blob), h(b"%d,%d,%d:" % (w, hh, c) + px))
     assert got == _JPEG_PINS
+
+
+def test_jpeg_sequential_non_interleaved_scans():
+    """A sequential stream may code each component in its own scan
+    (ITU-T.81 §A.2.2): the decoder fills each component's coefficients
+    scan by scan and inverts them after the last. For gray RGB the
+    chroma planes quantize to zero, so the three scans are the entropy
+    data of gray streams of Y and of two flat 128 planes, and the
+    result must equal the interleaved 4:4:4 stream's pixels."""
+    import numpy as np
+
+    from connectors_spark.ops import jpegcodec as jc
+
+    w, h = 24, 16
+    luma = _corpus_px(5, w, h, 1)
+    flat = bytes([128]) * (w * h)
+
+    def entropy(blob):
+        i = blob.index(b"\xff\xda")
+        return blob[i + 2 + int.from_bytes(blob[i + 2:i + 4], "big"):-2]
+
+    q = np.full((8, 8), 16.0)
+    blob = bytes(jc._frame_header(0xFFC0, w, h, q, [(1, 1)] * 3,
+                                  jc._AC_BITS, jc._AC_VALS))
+    for cid, px in ((1, luma), (2, flat), (3, flat)):
+        blob += jc._sos([cid], 0, 63, 0, 0)
+        blob += entropy(jc.encode_jpeg_gray(w, h, px))
+    blob += b"\xff\xd9"
+    rgb = bytes(v for v in luma for _ in range(3))
+    assert jc.decode_jpeg(blob) == jc.decode_jpeg(
+        jc.encode_jpeg_color(w, h, rgb))
+    assert jc.decode_jpeg(blob)[3] == rgb
