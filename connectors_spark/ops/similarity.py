@@ -355,15 +355,24 @@ _PREFILTER_MARGIN = 1e-4
 
 
 def _corpus_closure(df: DataFrame, id_col: str, vec_col: str):
-    """(ids int64 array, matrix float64 [n, dim], id -> row index dict)
+    """(ids array, matrix float64 [n, dim], id -> row index dict)
     collected to the driver — the same memory class as the forced
     F.broadcast of the full corpus these pair verifiers already
-    required (a broadcast relation is built driver-side too)."""
+    required (a broadcast relation is built driver-side too). Ids keep
+    the column's own type (integral, string, ...)."""
     rows = df.select(F.col(id_col).alias("_id"),
                      F.col(vec_col).alias("_v")).collect()
-    ids = np.array([r["_id"] for r in rows], dtype=np.int64)
+    id_list = [r["_id"] for r in rows]
     mat = np.array([r["_v"] for r in rows], dtype=np.float64)
-    return ids, mat, {int(i): ix for ix, i in enumerate(ids)}
+    return np.array(id_list), mat, {i: ix for ix, i in enumerate(id_list)}
+
+
+def _pair_schema(df: DataFrame, id_col: str):
+    """(a_id, b_id) typed like the input's id column."""
+    from pyspark.sql.types import StructField, StructType
+    id_type = df.schema[id_col].dataType
+    return StructType([StructField("a_id", id_type),
+                       StructField("b_id", id_type)])
 
 
 def _exact_verify(cand: DataFrame, df: DataFrame, threshold: float,
@@ -412,12 +421,9 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
     double-precision SQL oracle. A zero-norm vector's cosine is NaN on
     both sides, and both keep the pair.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
     ids, mat, _ = _corpus_closure(df, id_col, vec_col)
     norms = np.sqrt((mat * mat).sum(axis=1))
     cut = threshold - _PREFILTER_MARGIN
-    out_schema = StructType([StructField("a_id", LongType()),
-                             StructField("b_id", LongType())])
 
     def prefilter(batches):
         for pdf in batches:
@@ -432,11 +438,10 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
                 keep = (((sims >= cut) | np.isnan(sims))
                         & (ids[None, :] > aids[:, None]))
             ai, bi = np.nonzero(keep)
-            yield pd.DataFrame({"a_id": aids[ai].astype(np.int64),
-                                "b_id": ids[bi]})
+            yield pd.DataFrame({"a_id": aids[ai], "b_id": ids[bi]})
 
     cand = (_spread(df.select(F.col(id_col), F.col(vec_col)))
-            .mapInPandas(prefilter, out_schema))
+            .mapInPandas(prefilter, _pair_schema(df, id_col)))
     return _exact_verify(cand, df, threshold, id_col, vec_col)
 
 
@@ -509,12 +514,9 @@ def cosine_neardup_pairs_lsh(df: DataFrame, threshold: float = 0.45,
     # numpy costs microseconds, while distinct-ing the full candidate
     # stream was a dedicated exchange over millions of 16-byte rows
     # (guide §2.3 — the shuffle, not the arithmetic, was the cost).
-    from pyspark.sql.types import LongType, StructField, StructType
-    ids_np, mat, idx = _corpus_closure(df, id_col, vec_col)
+    _, mat, idx = _corpus_closure(df, id_col, vec_col)
     norms = np.sqrt((mat * mat).sum(axis=1))
     cut = threshold - _PREFILTER_MARGIN
-    pair_schema = StructType([StructField("a_id", LongType()),
-                              StructField("b_id", LongType())])
 
     def prefilter(batches):
         for pdf in batches:
@@ -528,7 +530,8 @@ def cosine_neardup_pairs_lsh(df: DataFrame, threshold: float = 0.45,
             keep = sims >= cut
             yield pdf[["a_id", "b_id"]][keep]
 
-    cand = cand.mapInPandas(prefilter, pair_schema).distinct()
+    cand = (cand.mapInPandas(prefilter, _pair_schema(df, id_col))
+            .distinct())
     return _exact_verify(cand, df, threshold, id_col, vec_col)
 
 

@@ -451,6 +451,35 @@ def test_cosine_neardup_keeps_zero_norm_pairs(spark):
     assert got[(2, 3)] == exact[(2, 3)]
 
 
+@pytest.mark.pin
+def test_cosine_neardup_string_ids(spark):
+    """Ids keep the column's own type: a string ``vec_id`` flows
+    through the exact and the LSH pair finders, and both emit string
+    (a_id, b_id) equal to the exact filter over every pair."""
+    from pyspark.sql.types import StringType
+    rows = [("doc-c", [1.0, 0.0, 0.0]), ("doc-a", [0.9, 0.1, 0.0]),
+            ("doc-e", [0.0, 1.0, 0.0]), ("doc-b", [0.1, 0.9, 0.0]),
+            ("doc-d", [0.0, 0.0, 1.0])]
+    emb = spark.createDataFrame(rows,
+                                "vec_id string, embedding array<float>")
+    every_pair = (emb.select(F.col("vec_id").alias("a_id"))
+                  .crossJoin(emb.select(F.col("vec_id").alias("b_id")))
+                  .where("a_id < b_id"))
+    exact = {(r.a_id, r.b_id): r.sim for r in sim._exact_verify(
+        every_pair, emb, 0.45, "vec_id", "embedding").collect()}
+    assert set(exact) == {("doc-a", "doc-c"), ("doc-b", "doc-e")}
+    for pairs in (sim.cosine_neardup_pairs(emb, threshold=0.45),
+                  sim.cosine_neardup_pairs_lsh(emb, threshold=0.45,
+                                               dim=3)):
+        assert pairs.schema["a_id"].dataType == StringType()
+        assert pairs.schema["b_id"].dataType == StringType()
+        got = {(r.a_id, r.b_id): r.sim for r in pairs.collect()}
+        assert set(got) <= set(exact)
+        assert all(got[p] == exact[p] for p in got)
+    assert {(r.a_id, r.b_id) for r in sim.cosine_neardup_pairs(
+        emb, threshold=0.45).collect()} == set(exact)
+
+
 def test_ann_indexed_matches_unindexed(spark, sf_dir, tmp_path):
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
