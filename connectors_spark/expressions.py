@@ -300,8 +300,47 @@ class In(Expression):
         return out
 
     def to_column(self, resolver=F.col):
+        # ``isin`` costs about three JVM calls per element; a large list
+        # (a DML key slice) goes to the JVM as one SQL string instead
+        sql = self._sql() if resolver is F.col else None
+        if sql is not None:
+            return F.expr(sql)
         return self.value.to_column(resolver).isin(
             *[e.to_column(resolver) for e in self.elems])
+
+    def _sql(self) -> Optional[str]:
+        """This IN as SQL, or None. Only for a plain ``Col`` whose name
+        has no dot (``F.col`` reads one as a nested field) or backtick,
+        quoted in backticks, and elements that are all literal ints in
+        int64 range, strs, bools or None: each renders as a SQL literal
+        that Spark types as ``F.lit`` types the value (an int as int or
+        bigint by its size). A str with a quote or backslash is escaped,
+        unless the legacy ``spark.sql.parser.escapedStringLiterals``
+        makes escapes literal."""
+        if type(self.value) is not Col or not self.elems:
+            return None
+        name = self.value.name
+        if "." in name or "`" in name:
+            return None
+        out = []
+        for e in self.elems:
+            if type(e) is not Lit:
+                return None
+            v = e.value
+            if v is None:
+                out.append("NULL")
+            elif type(v) is bool:
+                out.append("true" if v else "false")
+            elif type(v) is int and -2**63 <= v < 2**63:
+                out.append(str(v))
+            elif type(v) is str:
+                if ("\\" in v or "'" in v) and _escapes_literal():
+                    return None
+                out.append("'" + v.replace("\\", "\\\\").replace("'", "\\'")
+                           + "'")
+            else:
+                return None
+        return f"`{name}` IN ({', '.join(out)})"
 
     def eval(self, row):
         v = self.value.eval(row)
@@ -315,6 +354,13 @@ class In(Expression):
             elif _cmp(v, ev) == 0:
                 return True
         return None if saw_null else False
+
+
+def _escapes_literal() -> bool:
+    from pyspark.sql import SparkSession
+    spark = SparkSession.getActiveSession()
+    return spark is not None and spark.conf.get(
+        "spark.sql.parser.escapedStringLiterals", "false") == "true"
 
 
 def split_conjuncts(expr: Expression) -> List[Expression]:

@@ -50,7 +50,8 @@ values come from ``AddFile.partitionValues``, never from paths
 (DeltaInputFormat.scala:33-53): through Spark's partition-dir
 discovery when the layout provably agrees with the log, else through
 the scan's one broadcast per-file map, which also carries commit
-versions and row-id bases.
+versions and row-id bases. File sizes and modification times come from
+the log too: Spark lists nothing.
 """
 
 from __future__ import annotations
@@ -805,6 +806,11 @@ class Snapshot:
         in that file), ``_commit_version`` (iff ``versions``) and
         ``_row_id``/``_row_commit_version``.
 
+        - Each file's status (path, size, modification time) comes
+          from its action in the log, so Spark lists nothing: no stat,
+          no listing job (``fileindex.parquet_relation``). Only a file
+          whose action has no size (such as a RemoveFile without
+          ``extendedFileMetadata``) is stat'ed.
         - ``__file`` and ``__ri`` come from the scan's ``_metadata``
           columns, which unlike ``input_file_name()`` stay legal once
           the plan joins other sources.
@@ -827,6 +833,7 @@ class Snapshot:
           writes the materialized columns, and files without them read
           NULL there."""
         from ..dv import DV_TAG, apply_dv, dv_relation
+        from ..fileindex import parquet_relation
         from ..localrel import local_rows_df
         meta = self.metadata
         tagged = versions is not None
@@ -878,16 +885,18 @@ class Snapshot:
                     [f.path for f, _ in group],
                     [f.partitionValues for f, _ in group]))
             base_path = bool(pcols) and not use_map
-            fields = list((meta.physical_schema if base_path
-                           else meta.physical_data_schema).fields)
-            fields += list(extra_fields)
+            fields = meta.physical_data_schema.fields + list(extra_fields)
             if with_row_ids:
                 fields += [T.StructField(rid_c, T.LongType()),
                            T.StructField(rcv_c, T.LongType())]
-            reader = self.spark.read.schema(T.StructType(fields))
-            if base_path:
-                reader = reader.option("basePath", self.table_path)
-            df = reader.parquet(*dict.fromkeys(f.path for f, _ in group))
+            df = parquet_relation(
+                self.spark,
+                [(f.path, getattr(f, "size", None),
+                  getattr(f, "modificationTime", None) or 0)
+                 for f, _ in group],
+                T.StructType(fields),
+                meta.physical_partition_schema if base_path else None,
+                self.table_path if base_path else None)
             if with_row_index or with_row_ids or has_dv:
                 df = df.withColumn("__ri", F.col("_metadata.row_index"))
             if with_file or use_map or has_dv:

@@ -87,6 +87,28 @@ def test_whole_file_delete_synthesizes_from_removes(spark, tmp_path):
                    (5, "x", "delete", 1)}
 
 
+@pytest.mark.pin
+def test_foreign_remove_without_size_reads_its_delete_rows(spark, tmp_path):
+    # A foreign writer's RemoveFile with extendedFileMetadata=false has
+    # no size; the delete leg stats that one file instead of taking its
+    # status from the log, and returns the file's rows.
+    import json
+    import time as _time
+
+    rows = [Row(k=i, v="x" if i % 2 else "y") for i in range(6)]
+    t = _mk(spark, tmp_path, rows, partition_by=["v"], cdf=False)
+    gone = [f for f in t.log.snapshot().all_files()
+            if f.partitionValues["v"] == "x"]
+    v = t.log.snapshot().version + 1
+    t.log.store.write(fn.delta_file(t.log.log_path, v), [json.dumps(
+        {"remove": {"path": f.path, "dataChange": True,
+                    "deletionTimestamp": int(_time.time() * 1000),
+                    "extendedFileMetadata": False}}) for f in gone])
+    assert all(a.size is None for a in list(t.log.get_changes(v))[0][1])
+    # the remove carries no partitionValues either: v reads NULL
+    assert _changes(t, v) == {(k, None, "delete", v) for k in (1, 3, 5)}
+
+
 def test_merge_mixed_change_types(spark, tmp_path):
     t = _mk(spark, tmp_path, [Row(k=1, v="a"), Row(k=2, v="b")])
     src = spark.createDataFrame([Row(k=2, v="B2"), Row(k=9, v="new")])

@@ -139,3 +139,41 @@ def test_mixed_type_eval_agrees_with_spark(spark):
         assert spark_vals == [e.eval(r.asDict()) for r in got], str(e)
     with pytest.raises(DeltaError):
         (Col("y") == Lit(5)).eval({"y": "abc"})
+
+
+def test_in_literal_list_is_one_sql_in_with_isin_rows(spark):
+    """A literal IN over a plain column compiles to one SQL IN (one JVM
+    call, not about three per element) that keeps the same rows as
+    Spark's ``isin`` of the same values: quotes, backslashes, a None,
+    negatives and a value above 2**31. Other element types keep the
+    per-literal form."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+    strs = ["it's", "back\\slash", "\\'", "''", "plain", None, "a\\nb"]
+    ints = [-7, 0, 3, 2**31 + 5, -2**40, None]
+    rows = [(s, i, i is not None and i > 0) for s in strs for i in ints]
+    df = spark.createDataFrame(rows + [("x", 2**62, None)],
+                               "s string, i bigint, b boolean")
+    cases = [(Col("s"), strs), (Col("s"), ["it's", "a\\nb"]),
+             (Col("i"), ints), (Col("i"), [2**31 + 5, -7]),
+             (Col("b"), [True, None])]
+    for col, values in cases:
+        e = col.isin(*values)
+        assert e._sql() is not None, values
+        got = sorted(map(tuple, df.where(e.to_column(F.col)).collect()),
+                     key=repr)
+        want = sorted(map(tuple, df.where(
+            F.col(col.name).isin(*values)).collect()), key=repr)
+        assert got == want and got, values
+    # the legacy parser setting reads escapes literally: such a list
+    # keeps the per-literal form
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        assert Col("s").isin("back\\slash")._sql() is None
+        assert Col("s").isin("plain")._sql() is not None
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    assert Col("d").isin(dt.date(2020, 1, 1))._sql() is None
+    assert Col("i").isin(2**63)._sql() is None
+    assert In(Col("a.b"), [Lit(1)])._sql() is None

@@ -195,6 +195,63 @@ def test_scan_reuses_materialized_inventory(spark, tmp_path):
 
 
 @pytest.mark.pin
+def test_reads_run_no_listing_job(spark, tmp_path):
+    # Reads take each file's status from the log: a 40-file table (past
+    # spark.read's 32-path parallel-listing threshold) launches as many
+    # Spark jobs for a count, now and at an older version, as a 4-file
+    # table does. A listing job would add one with one task per file.
+    from connectors_spark import DeltaTable
+
+    def jobs(n):
+        t = DeltaTable.for_path(spark, str(tmp_path / f"t{n}"))
+        t.write(spark.range(0, 10 * n, 1, n))
+        t.write(spark.range(1))
+        assert len(t.log.snapshot_for_version(0)._files_rows) == n
+        return [_spark_jobs(spark, lambda: t.to_df().count()),
+                _spark_jobs(spark, lambda: t.to_df(version=0).count())]
+
+    assert jobs(40) == jobs(4)
+
+
+@pytest.mark.pin
+def test_status_bytes_decode_to_the_same_file_statuses(spark):
+    # The log's statuses reach the JVM as one ObjectWritable FileStatus[]:
+    # Hadoop decodes the same path, length and modification time,
+    # multi-byte varints, non-ASCII paths and a zero time included.
+    from py4j.java_gateway import JavaClass
+
+    from connectors_spark.fileindex import _status_array
+    want = [("file:/t/p=a b%3A/part-0.parquet", 1, 0),
+            ("file:/t/ünï/x.parquet", 2**40 + 3, 1_700_000_000_123),
+            ("hdfs://nn:8020/t/y.parquet", 127, 128)]
+    client = spark.sparkContext._gateway._gateway_client
+    stream = JavaClass("java.io.DataInputStream", client)(
+        JavaClass("java.io.ByteArrayInputStream", client)(
+            _status_array(want)))
+    got = JavaClass("org.apache.hadoop.io.ObjectWritable",
+                    client).readObject(stream, None)
+    assert [(st.getPath().toString(), st.getLen(), st.getModificationTime(),
+             st.isFile()) for st in got] == [w + (True,) for w in want]
+
+
+@pytest.mark.pin
+def test_read_of_a_file_deleted_out_of_band_names_it(spark, tmp_path):
+    # The log's statuses are trusted: a data file removed behind the
+    # log's back fails the read when the scan opens it, and the error
+    # names the file.
+    import os
+
+    from connectors_spark import DeltaTable
+    t = DeltaTable.for_path(spark, str(tmp_path / "oob"))
+    t.write(spark.range(0, 30, 1, 3))
+    gone = t.snapshot()._files_rows[1]["path"]
+    os.remove(gone)
+    with pytest.raises(Exception) as err:
+        t.to_df().count()
+    assert os.path.basename(gone) in str(err.value)
+
+
+@pytest.mark.pin
 def test_join_key_bloom_prune_plan_stays_pure(spark, tmp_path):
     # runtime join-key pruning with a 300-key list (past the 64-key
     # unrolled-probe range): the keys are collected once, then the
