@@ -314,13 +314,12 @@ class In(Expression):
         quoted in backticks, and elements that are all literal ints in
         int64 range, strs, bools or None: each renders as a SQL literal
         that Spark types as ``F.lit`` types the value (an int as int or
-        bigint by its size). A str with a quote or backslash is escaped,
-        unless the legacy ``spark.sql.parser.escapedStringLiterals``
-        makes escapes literal."""
+        bigint by its size); a quote or backslash in a str is escaped.
+        Also None under a legacy parser setting (``_legacy_parser``)."""
         if type(self.value) is not Col or not self.elems:
             return None
         name = self.value.name
-        if "." in name or "`" in name:
+        if "." in name or "`" in name or _legacy_parser():
             return None
         out = []
         for e in self.elems:
@@ -334,8 +333,6 @@ class In(Expression):
             elif type(v) is int and -2**63 <= v < 2**63:
                 out.append(str(v))
             elif type(v) is str:
-                if ("\\" in v or "'" in v) and _escapes_literal():
-                    return None
                 out.append("'" + v.replace("\\", "\\\\").replace("'", "\\'")
                            + "'")
             else:
@@ -356,11 +353,15 @@ class In(Expression):
         return None if saw_null else False
 
 
-def _escapes_literal() -> bool:
+def _legacy_parser() -> bool:
+    """Whether a legacy parser setting changes what ``In._sql``'s text
+    means: ``escapedStringLiterals`` reads escapes literally and
+    ``quotedRegexColumnNames`` reads a backtick-quoted name as a regex."""
     from pyspark.sql import SparkSession
     spark = SparkSession.getActiveSession()
-    return spark is not None and spark.conf.get(
-        "spark.sql.parser.escapedStringLiterals", "false") == "true"
+    return spark is not None and any(
+        spark.conf.get(f"spark.sql.parser.{k}", "false").lower() == "true"
+        for k in ("escapedStringLiterals", "quotedRegexColumnNames"))
 
 
 def split_conjuncts(expr: Expression) -> List[Expression]:

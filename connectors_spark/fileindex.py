@@ -15,63 +15,34 @@ through a ``FileStatusCache`` client of its own: one entry per parent
 directory, the index's root paths. The index finds every root in the
 cache and lists nothing; the cache is emptied once the index holds the
 statuses, so no JVM cache keeps them. Spark refreshes a file index only
-under a cached relation whose path is refreshed (``refreshByPath``) or
-written to, and the engine caches no relation; a refresh would list the
-directories, files outside the snapshot included.
+under a cached relation whose root path is refreshed (``refreshByPath``)
+or lies under a path Spark writes to; the engine stages its writes in a
+directory under the table root, never above a root. A refresh would
+list the directories, files outside the snapshot included.
 
-The statuses cross py4j as bytes, not as one JVM call per file: each
-``FileStatus[]`` is written in Hadoop's ``ObjectWritable`` form, whose
-elements are ``FileStatus`` Writables (a length-prefixed
-``FSProtos.FileStatusProto``), and ``ObjectWritable.readObject`` decodes
-it. A read makes about 30 JVM calls plus four per directory, however
-many files it reads.
+Spark counts two such relations equal when their root paths, schemas
+and options are equal (``InMemoryFileIndex`` compares root paths only),
+and then serves one from the other's cached data or shuffle. Two reads
+of one directory over different files (two versions, or one before and
+one after an append) share their roots, so each relation carries the
+digest of its file set as an option (``_FILE_SET_OPTION``, which Parquet
+ignores): relations over different files are never equal.
+
+Each status is built over py4j: a ``Path``, a ``FileStatus`` and an
+array slot per file, so a read makes about 30 JVM calls plus three per
+file and four per directory.
 """
 
 from __future__ import annotations
 
-import struct
+import hashlib
 from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-_FILE_STATUS = "org.apache.hadoop.fs.FileStatus"
 _DATASOURCES = "org.apache.spark.sql.execution.datasources."
-
-
-def _utf8(s: str) -> bytes:
-    """Hadoop ``UTF8.writeString`` of an ASCII class name."""
-    b = s.encode("ascii")
-    return struct.pack(">H", len(b)) + b
-
-
-def _varint(v: int) -> bytes:
-    """Protobuf base-128 varint of a uint64."""
-    v &= (1 << 64) - 1
-    out = bytearray()
-    while v > 0x7F:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
-_ELEMENT_HEAD = _utf8(_FILE_STATUS) * 2   # declared class, instance class
-
-
-def _status_array(statuses: Sequence[Tuple[str, int, int]]) -> bytes:
-    """``(qualified path, length, modification ms)`` triples as one
-    ``FileStatus[]`` in ``ObjectWritable`` form. Each element is a plain
-    file: ``FileStatusProto`` fields 1 (fileType FT_FILE), 2 (path),
-    3 (length) and 7 (modification_time); the rest read as the proto's
-    defaults."""
-    out = [_utf8(f"[L{_FILE_STATUS};"), struct.pack(">i", len(statuses))]
-    for path, length, mtime in statuses:
-        p = path.encode("utf-8")
-        msg = (b"\x08\x02\x12" + _varint(len(p)) + p + b"\x18"
-               + _varint(length) + b"\x38" + _varint(mtime))
-        out += [_ELEMENT_HEAD, struct.pack(">i", len(msg)), msg]
-    return b"".join(out)
+_FILE_SET_OPTION = "connectors_spark.fileSet"
 
 
 def parquet_relation(spark: SparkSession,
@@ -108,26 +79,29 @@ def parquet_relation(spark: SparkSession,
         q = prefix + path if path.startswith("/") else path
         by_dir.setdefault(q.rpartition("/")[0], {})[q] = (size, mtime)
 
-    def status(q, size, mtime):
-        if size:
-            return q, size, mtime
-        st = Path(q).getFileSystem(conf).getFileStatus(Path(q))
-        return q, st.getLen(), st.getModificationTime()
-
-    stream = jclass("java.io.DataInputStream")(
-        jclass("java.io.ByteArrayInputStream")(b"".join(
-            _status_array([status(q, *st) for q, st in statuses.items()])
-            for statuses in by_dir.values())))
-    read = jclass("org.apache.hadoop.io.ObjectWritable").readObject
+    FileStatus = jclass("org.apache.hadoop.fs.FileStatus")
+    new_array = spark.sparkContext._gateway.new_array
     # no size bound and no expiry: an evicted directory would be listed
     cache = jclass(_DATASOURCES + "SharedInMemoryCache")(
         (1 << 63) - 1, -1).createForNewClient()
     roots = []
-    for d in by_dir:
+    # one call a slot: py4j's own item assignment also asks the length
+    set_slot = jclass("java.lang.reflect.Array").set
+    for d, statuses in by_dir.items():
+        leaves = new_array(FileStatus, len(statuses))
+        for i, (q, (size, mtime)) in enumerate(statuses.items()):
+            p = Path(q)
+            set_slot(leaves, i, FileStatus(size, False, 0, 0, mtime, p)
+                     if size else p.getFileSystem(conf).getFileStatus(p))
         roots.append(Path(d))
-        cache.putLeafFiles(roots[-1], read(stream, None))
+        cache.putLeafFiles(roots[-1], leaves)
+    digest = hashlib.sha1("\n".join(sorted(
+        q for statuses in by_dir.values() for q in statuses)).encode())
     utils = spark._jvm.PythonUtils
-    options = utils.toScalaMap({"basePath": base_path} if base_path else {})
+    options = {_FILE_SET_OPTION: digest.hexdigest()}
+    if base_path:
+        options["basePath"] = base_path
+    options = utils.toScalaMap(options)
     none = getattr(jclass("scala.None$"), "MODULE$")
     # as DataSource does: a file may hold a null in a NOT NULL column
     jdata = jspark.parseDataType(data_schema.json()).asNullable()

@@ -166,14 +166,19 @@ def test_in_literal_list_is_one_sql_in_with_isin_rows(spark):
         want = sorted(map(tuple, df.where(
             F.col(col.name).isin(*values)).collect()), key=repr)
         assert got == want and got, values
-    # the legacy parser setting reads escapes literally: such a list
-    # keeps the per-literal form
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        assert Col("s").isin("back\\slash")._sql() is None
-        assert Col("s").isin("plain")._sql() is not None
-    finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    # a legacy parser setting reads escapes literally or a quoted name as
+    # a regex: every list keeps the per-literal form, with isin's rows
+    for legacy in ("escapedStringLiterals", "quotedRegexColumnNames"):
+        spark.conf.set(f"spark.sql.parser.{legacy}", "true")
+        try:
+            for col, values in cases:
+                e = col.isin(*values)
+                assert e._sql() is None, (legacy, values)
+                assert df.where(e.to_column(F.col)).count() == df.where(
+                    F.col(col.name).isin(*values)).count() > 0
+        finally:
+            spark.conf.unset(f"spark.sql.parser.{legacy}")
+    assert Col("s").isin("back\\slash")._sql() is not None
     assert Col("d").isin(dt.date(2020, 1, 1))._sql() is None
     assert Col("i").isin(2**63)._sql() is None
     assert In(Col("a.b"), [Lit(1)])._sql() is None

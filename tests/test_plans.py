@@ -214,24 +214,35 @@ def test_reads_run_no_listing_job(spark, tmp_path):
 
 
 @pytest.mark.pin
-def test_status_bytes_decode_to_the_same_file_statuses(spark):
-    # The log's statuses reach the JVM as one ObjectWritable FileStatus[]:
-    # Hadoop decodes the same path, length and modification time,
-    # multi-byte varints, non-ASCII paths and a zero time included.
-    from py4j.java_gateway import JavaClass
-
-    from connectors_spark.fileindex import _status_array
-    want = [("file:/t/p=a b%3A/part-0.parquet", 1, 0),
-            ("file:/t/ünï/x.parquet", 2**40 + 3, 1_700_000_000_123),
-            ("hdfs://nn:8020/t/y.parquet", 127, 128)]
-    client = spark.sparkContext._gateway._gateway_client
-    stream = JavaClass("java.io.DataInputStream", client)(
-        JavaClass("java.io.ByteArrayInputStream", client)(
-            _status_array(want)))
-    got = JavaClass("org.apache.hadoop.io.ObjectWritable",
-                    client).readObject(stream, None)
-    assert [(st.getPath().toString(), st.getLen(), st.getModificationTime(),
-             st.isFile()) for st in got] == [w + (True,) for w in want]
+def test_reads_of_different_file_sets_are_different_relations(spark,
+                                                              tmp_path):
+    # Two reads of one directory share the index's root paths; a read
+    # must still not be served another file set's cached rows, nor have
+    # its shuffle swapped for another version's in a sort-merge join
+    # (exchange reuse matches canonically equal scans). A re-read of the
+    # same files is still the same relation.
+    from connectors_spark import DeltaTable
+    t = DeltaTable.for_path(spark, str(tmp_path / "fs"))
+    t.write(spark.range(0, 10, 1, 2))
+    cached = t.to_df().cache()
+    try:
+        assert cached.count() == 10
+        t.write(spark.range(10, 15, 1, 1))
+        assert t.to_df().count() == 15
+        assert t.to_df(version=0).count() == 10
+    finally:
+        cached.unpersist()
+    new, old = t.to_df(), t.to_df(version=0)
+    assert not new.sameSemantics(old) and new.sameSemantics(t.to_df())
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        both = new.join(old, "id")
+        assert "SortMergeJoin" in plan_of(both)
+        assert both.count() == 10 and old.join(new, "id").count() == 10
+        assert sorted(r.id for r in new.join(old, "id", "left_anti")
+                      .collect()) == list(range(10, 15))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 @pytest.mark.pin
