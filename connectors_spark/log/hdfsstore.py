@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import posixpath
 import uuid
-from typing import Callable, Dict, Iterable, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 from .logstore import FileAlreadyExistsError, LogStore
 
@@ -208,17 +208,14 @@ class HdfsLogStore(LogStore):
 
     # ---------------------------------------------------------- log files
 
-    def read(self, path: str) -> List[str]:
-        body = self._client.read(path)
-        return [ln for ln in body.decode("utf-8").split("\n")
-                if ln.strip()]
+    def read_bytes(self, path: str) -> bytes:
+        return self._client.read(path)
 
-    def write(self, path: str, lines: Iterable[str],
-              overwrite: bool = False) -> None:
-        body = "".join(ln + "\n" for ln in lines).encode("utf-8")
+    def write_bytes(self, path: str, data: bytes,
+                    overwrite: bool = False) -> None:
         parent = posixpath.dirname(path)
-        tmp = f"{parent}/.tmp_{uuid.uuid4().hex}.json"
-        self._client.create(tmp, body)
+        tmp = f"{parent}/.tmp_{uuid.uuid4().hex}"
+        self._client.create(tmp, data)
         renamed = False
         try:
             try:

@@ -35,15 +35,13 @@ def _commit_ts(store: LogStore, log_path: str, name: str) -> int:
     smooths mtime skew."""
     path = os.path.join(log_path, name)
     try:
-        head = getattr(store, "read_head", None)
-        line = head(path) if head is not None else \
-            next(iter(store.read(path)), None)
+        line = store.read_head(path)
         if line:
             a = from_json_line(line)
             if isinstance(a, CommitInfo) \
                     and a.inCommitTimestamp is not None:
                 return a.inCommitTimestamp
-    except (FileNotFoundError, ValueError, StopIteration):
+    except (FileNotFoundError, ValueError):
         pass
     return store.mtime_ms(path)
 
@@ -77,31 +75,6 @@ def earliest_version(store: LogStore, log_path: str) -> Optional[int]:
         if fn.is_delta_file(n):
             return fn.delta_version(n)
     return None
-
-
-def earliest_reproducible_version(store: LogStore, log_path: str) -> int:
-    """Earliest version whose state we can rebuild: the first delta file, or
-    the earliest complete checkpoint if the leading deltas were cleaned up
-    (DeltaHistoryManager.getEarliestReproducibleCommit:144-194)."""
-    first_delta: Optional[int] = None
-    ckpt_versions: List[int] = []
-    from .segment import _complete_checkpoints
-    names = store.list_from(log_path)
-    for n in names:
-        if fn.is_delta_file(n) and first_delta is None:
-            first_delta = fn.delta_version(n)
-    ckpts = _complete_checkpoints([n for n in names if fn.is_checkpoint_file(n)])
-    if first_delta == 0:
-        return 0
-    # Leading deltas were cleaned up: a complete checkpoint alone reproduces
-    # its own version; the earliest such checkpoint is the anchor.
-    if ckpts:
-        return min(ckpts)
-    if first_delta is None:
-        raise FileNotFoundError(f"no commits at {log_path}")
-    raise ValueError(
-        f"log at {log_path} starts at version {first_delta} with no "
-        f"checkpoint; no version is reproducible")
 
 
 def active_commit_at_time(commits: List[Commit], ts_ms: int,

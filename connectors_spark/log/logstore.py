@@ -44,47 +44,27 @@ class LogStore:
     """Local/POSIX log store. Subclass per scheme (HDFS/S3/...) as needed."""
 
     # ---------------------------------------------------------- log files
+    # A store implements two primitives, ``read_bytes`` and the atomic
+    # ``write_bytes``; the line-based ``read``/``write`` of commit files
+    # and checkpoint parquets alike go through them.
 
-    def read(self, path: str) -> List[str]:
-        with open(path, "r", encoding="utf-8") as f:
-            return [line.rstrip("\n") for line in f if line.strip()]
+    def read_bytes(self, path: str) -> bytes:
+        with open(path, "rb") as f:
+            return f.read()
 
-    def read_head(self, path: str) -> Optional[str]:
-        """First non-empty line of a log file — the history walk reads
-        only each commit's CommitInfo line, and a commit can carry
-        100k+ action lines. The base (POSIX) implementation streams
-        the file and stops at the first line; subclasses that override
-        ``read()`` for another backend MUST override this too if they
-        want laziness — the safe generic fallback is
-        ``self.read(path)[0]`` (see InMemoryLogStore).
-        """
-        if type(self).read is not LogStore.read:
-            # subclass changed the read backend but not read_head:
-            # fall back through ITS read() so we never open() a path
-            # that only exists in its backend
-            lines = self.read(path)
-            return lines[0] if lines else None
-        with open(path, "r", encoding="utf-8") as f:
-            for line in f:
-                line = line.rstrip("\n")
-                if line.strip():
-                    return line
-        return None
-
-    def write(self, path: str, lines: Iterable[str], overwrite: bool = False) -> None:
-        """Atomically write ``lines`` to ``path``.
+    def write_bytes(self, path: str, data: bytes,
+                    overwrite: bool = False) -> None:
+        """Atomically write ``data`` to ``path``.
 
         overwrite=False -> put-if-absent (HadoopFileSystemLogStore.scala:37-63
         semantics): raise FileAlreadyExistsError if ``path`` exists.
         """
         parent = os.path.dirname(path)
         os.makedirs(parent, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=parent, prefix=".tmp_", suffix=".json")
+        fd, tmp = tempfile.mkstemp(dir=parent, prefix=".tmp_")
         try:
-            with os.fdopen(fd, "w", encoding="utf-8") as f:
-                for line in lines:
-                    f.write(line)
-                    f.write("\n")
+            with os.fdopen(fd, "wb") as f:
+                f.write(data)
                 f.flush()
                 os.fsync(f.fileno())
             if overwrite:
@@ -98,6 +78,37 @@ class LogStore:
         finally:
             if tmp is not None and os.path.exists(tmp):
                 os.unlink(tmp)
+
+    def read(self, path: str) -> List[str]:
+        """The non-blank lines of a log file (universal newlines)."""
+        text = self.read_bytes(path).decode("utf-8")
+        if "\r" in text:
+            text = text.replace("\r\n", "\n").replace("\r", "\n")
+        return [ln for ln in text.split("\n") if ln.strip()]
+
+    def read_head(self, path: str) -> Optional[str]:
+        """First non-empty line of a log file — the history walk reads
+        only each commit's CommitInfo line, and a commit can carry
+        100k+ action lines. The POSIX store streams the file and stops
+        at the first line; a store with another ``read_bytes`` backend
+        reads the whole file through it."""
+        if type(self).read_bytes is not LogStore.read_bytes:
+            lines = self.read(path)
+            return lines[0] if lines else None
+        with open(path, "r", encoding="utf-8") as f:
+            for line in f:
+                line = line.rstrip("\n")
+                if line.strip():
+                    return line
+        return None
+
+    def write(self, path: str, lines: Iterable[str],
+              overwrite: bool = False) -> None:
+        """Atomically write ``lines`` to ``path``, one per line; same
+        contract as :meth:`write_bytes`."""
+        self.write_bytes(path,
+                         "".join(ln + "\n" for ln in lines).encode("utf-8"),
+                         overwrite)
 
     def list_from(self, dir_path: str, start_name: str = "") -> List[str]:
         """Names in ``dir_path`` >= ``start_name``, lexically sorted
@@ -165,7 +176,7 @@ class LogStore:
 class InMemoryLogStore(LogStore):
     """Conditional-put log store over a mutex'd dict — the non-POSIX
     seam proof. Models an object store with atomic put-if-absent (no
-    rename, no hard links): `write(overwrite=False)` is a single
+    rename, no hard links): `write_bytes(overwrite=False)` is a single
     compare-and-insert under the lock, exactly the contract
     S3SingleDriverLogStore.scala:32-60 builds from its path lock +
     listing cache. Driver-local by design (like the reference's
@@ -173,7 +184,7 @@ class InMemoryLogStore(LogStore):
     every DeltaLog in the process."""
 
     def __init__(self) -> None:
-        self._files: Dict[str, List[str]] = {}
+        self._files: Dict[str, bytes] = {}
         self._mtimes: Dict[str, int] = {}
         self._lock = threading.Lock()
 
@@ -189,15 +200,16 @@ class InMemoryLogStore(LogStore):
         self.__dict__.update(state)
         self._lock = threading.Lock()
 
-    def read(self, path: str) -> List[str]:
+    def read_bytes(self, path: str) -> bytes:
         with self._lock:
             if path not in self._files:
                 raise FileNotFoundError(path)
-            return list(self._files[path])
+            return self._files[path]
 
-    def write(self, path: str, lines: Iterable[str], overwrite: bool = False) -> None:
+    def write_bytes(self, path: str, data: bytes,
+                    overwrite: bool = False) -> None:
         import time
-        data = [l for l in lines]
+        data = bytes(data)
         with self._lock:
             if not overwrite and path in self._files:
                 raise FileAlreadyExistsError(path)
@@ -253,7 +265,7 @@ class InMemoryLogStore(LogStore):
         with self._lock:
             if src not in self._files:
                 raise FileNotFoundError(src)
-            self._files[dst] = list(self._files[src])
+            self._files[dst] = self._files[src]
             self._mtimes[dst] = self._mtimes.get(src, 0)
 
     def remove_tree(self, dir_path: str) -> None:
@@ -267,8 +279,7 @@ class InMemoryLogStore(LogStore):
         with self._lock:
             if path not in self._files:
                 raise FileNotFoundError(path)
-            size = sum(len(l) + 1 for l in self._files[path])
-            return size, self._mtimes.get(path, 0)
+            return len(self._files[path]), self._mtimes.get(path, 0)
 
 
 # --------------------------------------------------------------- dispatch

@@ -33,7 +33,7 @@ instance profile, ``AWS_ENDPOINT_URL`` for S3-compatible stores).
 from __future__ import annotations
 
 import threading
-from typing import Dict, Iterable, List, Tuple
+from typing import Dict, List, Tuple
 
 from .logstore import FileAlreadyExistsError, LogStore
 
@@ -82,23 +82,22 @@ class S3LogStore(LogStore):
 
     # ---------------------------------------------------------- log files
 
-    def read(self, path: str) -> List[str]:
+    def read_bytes(self, path: str) -> bytes:
         from botocore.exceptions import ClientError
         bucket, key = _parse(path)
         try:
-            body = self._client.get_object(Bucket=bucket, Key=key)["Body"].read()
+            return self._client.get_object(Bucket=bucket,
+                                           Key=key)["Body"].read()
         except ClientError as e:
             if _err_code(e) in _MISSING_CODES:
                 raise FileNotFoundError(path) from e
             raise
-        return [ln for ln in body.decode("utf-8").split("\n") if ln.strip()]
 
-    def write(self, path: str, lines: Iterable[str],
-              overwrite: bool = False) -> None:
+    def write_bytes(self, path: str, data: bytes,
+                    overwrite: bool = False) -> None:
         from botocore.exceptions import ClientError
         bucket, key = _parse(path)
-        body = "".join(ln + "\n" for ln in lines).encode("utf-8")
-        kwargs = dict(Bucket=bucket, Key=key, Body=body)
+        kwargs = dict(Bucket=bucket, Key=key, Body=data)
         if overwrite:
             self._client.put_object(**kwargs)
             return

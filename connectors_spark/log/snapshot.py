@@ -11,28 +11,22 @@ from the log. Everything downstream carries physical paths and never
 decodes them again: the file and tombstone planes, scans, DML candidate
 sets and the path sets of conflict checks. A Hive-escaped directory
 name holds literal ``%XX`` bytes, which a second decode corrupts.
-:func:`relativize` and its Column twin :func:`relativize_col` are the
-way back: they encode a physical path for the log (commits and both
-checkpoint writers).
+:func:`relativize` is the way back: it encodes a physical path for the
+log (commits and checkpoints).
 
 State. Table state is one replay of checkpoint plus commits, keyed by
 canonical path: the newest action wins, and within one version an add
 beats a remove (InMemoryLogReplay.scala:64-81). The replay yields two
 planes: active files (latest action an add) and tombstones (latest
-action a remove). It has two implementations, pinned equal by tests:
-
-- the window plan (``_latest_actions_df``): one distributed window over
-  add ∪ remove. It is the scale path, taken for v2 or multi-part
-  checkpoints, non-POSIX stores and checkpoints larger than
-  ``DRIVER_REPLAY_MAX_CHECKPOINT_BYTES``. It has two readers: this
-  module, which collects its planes into ``_files_rows`` and
-  ``_tombstone_rows`` for the segments the driver fold does not take,
-  and the distributed checkpoint writer (``checkpoints.py``);
-- the driver fold (:func:`fold_file_actions`), everywhere else. A cold
-  Snapshot reads the checkpoint's ``add`` and ``remove`` columns once
-  and folds the commits after it on top; ``DeltaLog.update`` folds the
-  new commits over the previous Snapshot's planes. The streaming
-  source, which has no SparkSession, folds every checkpoint shape.
+action a remove). It has one implementation, the driver fold
+(:func:`fold_file_actions`, driven by :func:`replay_planes`), for every
+store and every checkpoint shape (classic single-part, multi-part, v2
+manifest plus sidecars). A cold Snapshot reads each checkpoint file
+through its LogStore as bytes and folds its ``remove`` and ``add``
+columns one record batch at a time, then the commits after it;
+``DeltaLog.update`` folds new commits over the previous Snapshot's
+planes (``seed_from``). The streaming source, which has no
+SparkSession, calls the same fold.
 
 Every engine consumer of table state reads the driver rows
 (``_files_rows``, ``retained_tombstone_rows``): scans, DML, commits
@@ -64,23 +58,18 @@ from dataclasses import dataclass, field
 from functools import cached_property
 from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import TableConfig
 from . import filenames as fn
-from .actions import (SINGLE_ACTION_SCHEMA, AddFile, DomainMetadata,
-                      Metadata, Protocol, RemoveFile, SetTransaction,
-                      from_json_line, parse_action)
+from .actions import (AddFile, DomainMetadata, Metadata, Protocol,
+                      RemoveFile, SetTransaction, from_json_line,
+                      parse_action)
 from .features import assert_readable
 from .logstore import LogStore, strip_scheme
 from .segment import LogSegment
-
-# The driver fold replays a segment only when its checkpoint is one
-# classic parquet of at most this size; larger state takes the window
-# plan, whose parsing and dedup run on executors.
-DRIVER_REPLAY_MAX_CHECKPOINT_BYTES = 64 * 1024 * 1024
 
 _SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
 _SCHEME_AUTHORITY = _SCHEME + r"[^/]*"
@@ -135,46 +124,21 @@ def relativize(path: str, table_path: str) -> str:
     """Log spelling of a physical path, the inverse of
     :func:`canonical_path` (DeltaFileOperations.tryRelativizePath,
     FileNames.absolutePath:100-107). Under the table root it is
-    root-relative with each segment URI-encoded (``urllib.parse.quote``);
-    another absolute path becomes an encoded ``file://`` URI; any other
-    value is already a log path (the writer stages table-relative,
-    encoded paths) and passes through unchanged."""
-    if not path.startswith("/"):
-        return path
+    root-relative with each segment URI-encoded (``urllib.parse.quote``),
+    also under a root with a scheme (``memory://``, ``s3://``); another
+    absolute path becomes an encoded ``file://`` URI; any other value is
+    already a log path (the writer stages table-relative, encoded paths)
+    and passes through unchanged."""
     root = table_path.rstrip("/") + "/"
     if path.startswith(root):
         return urllib.parse.quote(path[len(root):])
+    if not path.startswith("/"):
+        return path
     return "file://" + urllib.parse.quote(path)
 
 
-def _quote_col(c):
-    # Spark's url_encode is Java's URLEncoder, which differs from quote()
-    # in three places: it writes ' ' as '+' (a literal '+' is %2B), keeps
-    # '*' and encodes '~'. It also encodes '/', so it runs per segment.
-    def seg(s):
-        for a, b in (("+", "%20"), ("*", "%2A"), ("%7E", "~")):
-            s = F.replace(s, F.lit(a), F.lit(b))
-        return s
-    return F.array_join(
-        F.transform(F.split(c, "/"),
-                    lambda s: seg(F.call_function("url_encode", s))), "/")
-
-
-def relativize_col(col: str, table_path: str):
-    """Column-expression twin of :func:`relativize`, equal to it on
-    every input."""
-    root = table_path.rstrip("/") + "/"
-    p = F.col(col)
-    return (F.when(p.startswith(root),
-                   _quote_col(F.substring(p, len(root) + 1, 2147483647)))
-            .when(p.startswith("/"),
-                  F.concat(F.lit("file://"), _quote_col(p)))
-            .otherwise(p))
-
-
-# The two planes' row shapes. Driver-side rows and the window plan's
-# output share them field for field, so the two replays are
-# interchangeable and rows re-enter Spark as local relations.
+# The two planes' row shapes; rows re-enter Spark as local relations
+# over them.
 _STR_MAP = T.MapType(T.StringType(), T.StringType())
 FILES_SCHEMA = T.StructType([
     T.StructField("path", T.StringType()),
@@ -213,9 +177,8 @@ def fold_file_actions(files: Dict[str, Row], tombstones: Dict[str, Row],
     place — the driver fold. ``files`` and ``tombstones`` map canonical
     path to row; ``adds`` and ``removes`` are field mappings
     (checkpoint column dicts, or ``vars()`` of parsed actions). Within
-    one version an add beats a remove of the same path (the window
-    plan's ``is_add`` tiebreak), so a remove applies only to paths the
-    version does not re-add."""
+    one version an add beats a remove of the same path, so a remove
+    applies only to paths the version does not re-add."""
     added = {canonical_path(a["path"], table_path): a for a in adds}
     for r in removes:
         p = canonical_path(r["path"], table_path)
@@ -259,11 +222,20 @@ def _commit_version(path: str) -> int:
     return fn.delta_version(os.path.basename(path))
 
 
-def _read_checkpoint(path: str, columns: Sequence[str]) -> Dict[str, list]:
-    """Non-null values of the named action columns of one checkpoint
-    parquet, column-pruned to those it has — one pyarrow read."""
+def _open_parquet(store: LogStore, path: str):
+    """A ``pyarrow.parquet.ParquetFile`` over one checkpoint file (or v2
+    sidecar), read through ``store`` as bytes: one read per file, on
+    any store."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
-    pf = pq.ParquetFile(path)
+    return pq.ParquetFile(pa.BufferReader(store.read_bytes(path)))
+
+
+def _read_checkpoint(store: LogStore, path: str,
+                     columns: Sequence[str]) -> Dict[str, list]:
+    """Non-null values of the named action columns of one checkpoint
+    parquet, column-pruned to those it has."""
+    pf = _open_parquet(store, path)
     cols = [c for c in columns if c in pf.schema_arrow.names]
     tbl = pf.read(columns=cols) if cols else None
     return {c: tbl.column(c).drop_null().to_pylist() if c in cols else []
@@ -328,22 +300,25 @@ def parse_deltas(store: LogStore, segment: LogSegment
             for p in segment.deltas]
 
 
-def _v2_sidecar_paths(segment: LogSegment, manifest: str) -> List[str]:
-    """Absolute paths of a v2 manifest's sidecar parquets (driver-
-    side column-pruned read — the manifest is O(sidecars) rows)."""
+def _v2_sidecar_paths(store: LogStore, segment: LogSegment,
+                      manifest: str) -> List[str]:
+    """Absolute paths of a v2 manifest's sidecar parquets (a column-
+    pruned read — the manifest is O(sidecars) rows)."""
     return [fn.sidecar_file(segment.log_path, sc["path"])
-            for sc in _read_checkpoint(manifest, ("sidecar",))["sidecar"]
+            for sc in _read_checkpoint(store, manifest,
+                                       ("sidecar",))["sidecar"]
             if sc.get("path")]
 
 
-def replay_log_state(segment: LogSegment, deltas, table_path: str
-                     ) -> LogState:
+def replay_log_state(store: LogStore, segment: LogSegment, deltas,
+                     table_path: str) -> LogState:
     """P&M, txns and domains at ``segment.version``: one pass over the
     checkpoint's small columns (one pruned read per checkpoint file),
     then over the parsed commits ``deltas``."""
     ckpt = []
     for cf in segment.checkpoint_files:
-        for key, rows in _read_checkpoint(cf, _STATE_COLUMNS).items():
+        for key, rows in _read_checkpoint(store, cf,
+                                          _STATE_COLUMNS).items():
             for d in rows:
                 if d.get(_STATE_COLUMNS[key]) is None:
                     continue
@@ -358,24 +333,63 @@ def replay_log_state(segment: LogSegment, deltas, table_path: str
             .checked(table_path, segment.version))
 
 
-def replay_planes(segment: LogSegment, deltas, table_path: str
-                  ) -> Tuple[List[Row], List[Row]]:
+# Rows per record batch of the checkpoint fold: a batch's Python dicts
+# are freed before the next is decoded, so peak memory tracks the
+# planes, not the checkpoint's decoded columns.
+FOLD_BATCH_ROWS = 8192
+
+
+def _pylist(arr) -> list:
+    """``arr.to_pylist()``, but with maps as dicts, and converted child
+    by child: pyarrow's row-by-row conversion of struct and map columns
+    is the slow part of a cold load (the ``add`` column of 200 k
+    AddFiles: 9.3 s, against 2.7 s this way)."""
+    import pyarrow as pa
+    if pa.types.is_struct(arr.type):
+        names = [f.name for f in arr.type]
+        rows = [dict(zip(names, v))
+                for v in zip(*[_pylist(c) for c in arr.flatten()])]
+    elif pa.types.is_map(arr.type):
+        # a sliced map's offsets index its whole, unsliced children
+        offs = arr.offsets.to_pylist()
+        keys, items = _pylist(arr.keys), _pylist(arr.items)
+        rows = [dict(zip(keys[i:j], items[i:j]))
+                for i, j in zip(offs, offs[1:])]
+    else:
+        return arr.to_pylist()
+    if arr.null_count:
+        rows = [r if ok else None
+                for r, ok in zip(rows, arr.is_valid().to_pylist())]
+    return rows
+
+
+def replay_planes(store: LogStore, segment: LogSegment, deltas,
+                  table_path: str) -> Tuple[List[Row], List[Row]]:
     """(file rows, tombstone rows) at ``segment.version`` by the driver
-    fold: the checkpoint's ``add`` and ``remove`` columns (v2 sidecars
-    included) in one pyarrow read per file, then the parsed commits
-    ``deltas``. Needs no SparkSession."""
+    fold, the one log replay: the checkpoint's ``remove`` and then its
+    ``add`` column, one record batch at a time from every checkpoint
+    file (classic single- or multi-part, or a v2 manifest's sidecars),
+    then the parsed commits ``deltas``. All removes before any add
+    keeps the add-beats-remove rule across batches and parts of the
+    one checkpoint version. Needs no SparkSession."""
     cfiles = list(segment.checkpoint_files)
     if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
-        cfiles += _v2_sidecar_paths(segment, cfiles[0])
+        cfiles += _v2_sidecar_paths(store, segment, cfiles[0])
     files: Dict[str, Row] = {}
     tombs: Dict[str, Row] = {}
-    for cf in cfiles:
-        cols = _read_checkpoint(cf, ("add", "remove"))
-        fold_file_actions(
-            files, tombs, segment.checkpoint_version,
-            [d for d in cols["add"] if d.get("path") is not None],
-            [d for d in cols["remove"] if d.get("path") is not None],
-            table_path)
+    parquets = [_open_parquet(store, cf) for cf in cfiles]
+    for kind in ("remove", "add"):
+        for pf in parquets:
+            if kind not in pf.schema_arrow.names:
+                continue
+            for batch in pf.iter_batches(batch_size=FOLD_BATCH_ROWS,
+                                         columns=[kind]):
+                acts = [d for d in _pylist(batch.column(0).drop_null())
+                        if d["path"] is not None]
+                fold_file_actions(files, tombs, segment.checkpoint_version,
+                                  acts if kind == "add" else [],
+                                  acts if kind == "remove" else [],
+                                  table_path)
     for v, actions in deltas:
         fold_commit(files, tombs, v, actions, table_path)
     return list(files.values()), list(tombs.values())
@@ -458,7 +472,8 @@ class Snapshot:
 
     @cached_property
     def _log_state(self) -> LogState:
-        return replay_log_state(self.segment, self._deltas, self.table_path)
+        return replay_log_state(self.store, self.segment, self._deltas,
+                                self.table_path)
 
     @property
     def protocol(self) -> Protocol:
@@ -509,127 +524,8 @@ class Snapshot:
             self.__dict__[k] = list(state[k].values())
 
     # ------------------------------------------------------------------
-    # Actions DataFrame (S2: checkpoint + delta load)
+    # State reconstruction: the driver fold
     # ------------------------------------------------------------------
-
-    def _conform(self, df: DataFrame) -> DataFrame:
-        """Project any actions-shaped DataFrame (e.g. a checkpoint written by
-        another engine with extra nested fields) onto SINGLE_ACTION_SCHEMA."""
-        cols = []
-        have = {f.name: f.dataType for f in df.schema.fields}
-        for f in SINGLE_ACTION_SCHEMA.fields:
-            if f.name not in have:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                continue
-            sub = have[f.name]
-            if isinstance(sub, T.StructType):
-                subnames = set(sub.names)
-                inner = [
-                    (F.col(f"{f.name}.{sf.name}").cast(sf.dataType)
-                     if sf.name in subnames else F.lit(None).cast(sf.dataType)
-                     ).alias(sf.name)
-                    for sf in f.dataType.fields
-                ]
-                cols.append(F.when(F.col(f.name).isNotNull(),
-                                   F.struct(*inner)).alias(f.name))
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        extra = [c for c in ("version", "is_checkpoint") if c in df.columns]
-        return df.select(*cols, *extra)
-
-    def actions_df(self) -> DataFrame:
-        """All actions of the segment with ``version`` and ``is_checkpoint``
-        columns. Executors parse the files in parallel (the reference's
-        ParVector load, SnapshotImpl.scala:248-293, for free)."""
-        parts = []
-        if self.segment.deltas:
-            # A compacted file (<start>.<end>.compacted.json) carries
-            # NET actions — at most one per path — so attributing its
-            # rows the range-END version preserves the window-dedup
-            # ordering exactly (no intra-range ties can exist).
-            comp_v = F.regexp_extract(F.input_file_name(),
-                                      r"\d+\.(\d+)\.compacted\.json", 1)
-            plain_v = F.regexp_extract(F.input_file_name(),
-                                       r"(\d+)\.json", 1)
-            d = (self.spark.read.json(list(self.segment.deltas),
-                                      schema=SINGLE_ACTION_SCHEMA)
-                 .withColumn("version",
-                             F.when(comp_v != "", comp_v)
-                             .otherwise(plain_v).cast("long"))
-                 .withColumn("is_checkpoint", F.lit(False)))
-            parts.append(self._conform(d))
-        if self.segment.checkpoint_files:
-            cfiles = list(self.segment.checkpoint_files)
-            if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
-                # V2 checkpoint: the manifest carries P&M/txn/domain +
-                # SidecarFile references; add/remove state lives in the
-                # sidecar parquets. One explicit-schema read over
-                # manifest + sidecars (per-file missing columns scan as
-                # NULL) reconstructs the classic action set.
-                cfiles = cfiles + _v2_sidecar_paths(self.segment, cfiles[0])
-                c = (self.spark.read.schema(SINGLE_ACTION_SCHEMA)
-                     .parquet(*cfiles)
-                     .withColumn("version",
-                                 F.lit(self.segment.checkpoint_version)
-                                 .cast("long"))
-                     .withColumn("is_checkpoint", F.lit(True)))
-            else:
-                c = (self.spark.read.parquet(*cfiles)
-                     .withColumn("version",
-                                 F.lit(self.segment.checkpoint_version)
-                                 .cast("long"))
-                     .withColumn("is_checkpoint", F.lit(True)))
-            parts.append(self._conform(c))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # ------------------------------------------------------------------
-    # State reconstruction: the window plan and the driver fold
-    # ------------------------------------------------------------------
-
-    @cached_property
-    def _latest_actions_df(self) -> DataFrame:
-        """The window plan: the latest add or remove per canonical path
-        (version desc, an add before a remove at one version). Its
-        ``is_add`` rows are the file plane, the rest the tombstone
-        plane. Scales to checkpoints with millions of AddFiles: the
-        shuffle is on ``path`` (unique, unskewed) and Parquet/JSON
-        parsing happens on executors."""
-        acts = self.actions_df()
-        fields = [f for f in FILES_SCHEMA.fields + TOMBSTONES_SCHEMA.fields
-                  if f.name not in ("path", "version")]
-        fields = list({f.name: f for f in fields}.values())
-
-        def leg(kind):
-            names = SINGLE_ACTION_SCHEMA[kind].dataType.names
-            return acts.where(F.col(f"{kind}.path").isNotNull()).select(
-                canonical_path_col(f"{kind}.path", self.table_path)
-                .alias("path"),
-                *[(F.col(f"{kind}.{f.name}") if f.name in names
-                   else F.lit(None).cast(f.dataType)).alias(f.name)
-                  for f in fields],
-                "version", F.lit(kind == "add").alias("is_add"))
-
-        w = Window.partitionBy("path").orderBy(F.desc("version"),
-                                               F.desc("is_add"))
-        return (leg("add").unionByName(leg("remove"))
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1).drop("__rn"))
-
-    @cached_property
-    def files_df(self) -> DataFrame:
-        """Active AddFiles as a distributed DataFrame (``FILES_SCHEMA``,
-        ``path`` physical) — the window plan's file plane."""
-        return (self._latest_actions_df.where(F.col("is_add"))
-                .select(*FILES_SCHEMA.names))
-
-    def _tombstones_window_df(self) -> DataFrame:
-        """All latest-per-path tombstones, unfiltered — the window
-        plan's tombstone plane."""
-        return (self._latest_actions_df.where(~F.col("is_add"))
-                .select(*TOMBSTONES_SCHEMA.names))
 
     def tombstone_horizon(self) -> int:
         """Epoch ms at or before which a tombstone has expired: now minus
@@ -639,32 +535,11 @@ class Snapshot:
                 - TableConfig(self.metadata.configuration)
                 .tombstone_retention_ms)
 
-    @cached_property
-    def tombstones_df(self) -> DataFrame:
-        """RemoveFile tombstones younger than the retention window
-        (InMemoryLogReplay.getTombstones, InMemoryLogReplay.scala:90-92)."""
-        return self.retained_tombstones(self.tombstone_horizon())
-
-    def retained_tombstones(self, min_ts: int) -> DataFrame:
-        """Latest-per-path RemoveFile tombstones with
-        ``deletionTimestamp > min_ts`` as a DataFrame, for the
-        distributed checkpoint writer (``tombstones_df``).
-
-        Same rule as replay: a driver-replayable Snapshot filters its
-        tombstone plane on the driver and returns a local relation;
-        otherwise the window plan runs."""
-        if self._driver_replayable():
-            from ..localrel import local_rows_df
-            return local_rows_df(self.spark,
-                                 self.retained_tombstone_rows(min_ts),
-                                 TOMBSTONES_SCHEMA)
-        return (self._tombstones_window_df()
-                .where(F.coalesce(F.col("deletionTimestamp"),
-                                  F.lit(0)) > min_ts))
-
     def retained_tombstone_rows(self, min_ts: int) -> List:
         """The tombstone plane's rows with ``deletionTimestamp > min_ts``.
-        VACUUM calls this with its own horizon: these paths (and their
+        A checkpoint keeps the rows past ``tombstone_horizon()``
+        (InMemoryLogReplay.getTombstones); VACUUM calls this with its
+        own horizon: these paths (and their
         DV sidecars, via ``tags``) are protected state — the files they
         name must survive until the retention window passes
         (InMemoryLogReplay.scala:90-92; delta-spark's VACUUM protects
@@ -672,46 +547,26 @@ class Snapshot:
         return [r for r in self._tombstone_rows
                 if (r["deletionTimestamp"] or 0) > min_ts]
 
-    def _driver_replayable(self) -> bool:
-        """True when the driver fold may replay this segment: a POSIX
-        store and at most one classic checkpoint of at most
-        ``DRIVER_REPLAY_MAX_CHECKPOINT_BYTES``."""
-        cfiles = self.segment.checkpoint_files
-        if type(self.store) is not LogStore or len(cfiles) > 1:
-            return False
-        if not cfiles:
-            return True
-        if fn.is_v2_checkpoint_file(cfiles[0]):
-            return False
-        try:
-            return (os.path.getsize(cfiles[0])
-                    <= DRIVER_REPLAY_MAX_CHECKPOINT_BYTES)
-        except OSError:
-            return False
-
     @cached_property
     def _fold(self) -> Tuple[List, List]:
         """(file rows, tombstone rows) by the driver fold, computed once
         for both planes."""
-        return replay_planes(self.segment, self._deltas, self.table_path)
+        return replay_planes(self.store, self.segment, self._deltas,
+                             self.table_path)
 
     @cached_property
     def _files_rows(self) -> List:
         """The active-file plane, materialized once per Snapshot and
         shared by every metadata consumer (``to_df``, DML file scoping,
-        scans, ``all_files``). Driver memory is O(active files), like
-        the reference's in-memory state; a new version gets a new
-        Snapshot and the old rows are freed with it."""
-        if not self._driver_replayable():
-            return self.files_df.collect()
+        scans, ``all_files``, checkpoints). Driver memory is O(active
+        files), like the reference's in-memory state; a new version gets
+        a new Snapshot and the old rows are freed with it."""
         return self._fold[0]
 
     @cached_property
     def _tombstone_rows(self) -> List:
         """All latest-per-path tombstones (no horizon), materialized
         once per Snapshot — the tombstone twin of ``_files_rows``."""
-        if not self._driver_replayable():
-            return self._tombstones_window_df().collect()
         return self._fold[1]
 
     @cached_property
@@ -723,11 +578,11 @@ class Snapshot:
 
     @cached_property
     def files_local_df(self) -> DataFrame:
-        """``files_df`` as a driver-local relation over ``_files_rows``,
-        for ``metadata_aggregates``, which returns a DataFrame over the
-        inventory; perfbench's tracer wraps it by name. Scans never use
-        it. The JVM decodes it from Arrow, so no job over it starts a
-        Python worker."""
+        """The active-file plane as a driver-local relation over
+        ``_files_rows`` (``FILES_SCHEMA``), for ``metadata_aggregates``,
+        which returns a DataFrame over the inventory; perfbench's tracer
+        wraps it by name. Scans never use it. The JVM decodes it from
+        Arrow, so no job over it starts a Python worker."""
         from ..localrel import local_rows_df
         return local_rows_df(self.spark, self._files_rows, FILES_SCHEMA)
 

@@ -72,7 +72,7 @@ def _segment(store, table_path: str, version: Optional[int] = None):
 
 def _latest_metadata(store, table_path: str) -> Metadata:
     seg = _segment(store, table_path)
-    return replay_log_state(seg, parse_deltas(store, seg),
+    return replay_log_state(store, seg, parse_deltas(store, seg),
                             strip_scheme(table_path)).metadata
 
 
@@ -90,7 +90,7 @@ def _snapshot_adds(store, table_path: str,
     initial-snapshot planner — it works even when W8 cleanup deleted the
     early deltas, because the state it needs lives in the checkpoint."""
     seg = _segment(store, table_path, version)
-    files, _ = replay_planes(seg, parse_deltas(store, seg),
+    files, _ = replay_planes(store, seg, parse_deltas(store, seg),
                              strip_scheme(table_path).rstrip("/"))
     return seg.version, files
 

@@ -393,20 +393,17 @@ class DeltaLog:
         side_names = [s for s in self.store.list_dir(side_dir)
                       if s.endswith(".parquet")]
         if side_names:
-            import pyarrow.parquet as pq
+            from .log.snapshot import _read_checkpoint
             referenced = set()
             for name in self.store.list_from(self.log_path):
                 if not fn.is_v2_checkpoint_file(name):
                     continue
                 mpath = os.path.join(self.log_path, name)
                 try:
-                    if "sidecar" not in pq.read_schema(mpath).names:
-                        continue
-                    for row in pq.read_table(
-                            mpath, columns=["sidecar"]).to_pylist():
-                        sc = row.get("sidecar")
-                        if sc and sc.get("path"):
-                            referenced.add(sc["path"])
+                    referenced.update(
+                        sc["path"] for sc in _read_checkpoint(
+                            self.store, mpath, ("sidecar",))["sidecar"]
+                        if sc.get("path"))
                 except Exception:  # noqa: BLE001 — keep on parse issues
                     return  # unreadable manifest: keep every sidecar
             for s in side_names:
@@ -1348,7 +1345,7 @@ class DeltaTable:
             return txn.commit([], "DELETE", params)
         hit = F.coalesce(predicate.to_column(F.col), F.lit(False))
         # Materialized once: reused for the sidecar write, the touched-
-        # file counts, and the change rows. __ri is each row's physical
+        # file list and the change rows. __ri is each row's physical
         # index, which a DV delete never renumbers.
         hits = (_scan_rows(snap, candidates, with_file_col=True,
                            with_row_index=True)
@@ -1389,7 +1386,13 @@ class DeltaTable:
             tags[DV_CARD_TAG] = str(counts.get(p, 0))
             readds.append(dataclasses.replace(
                 f, tags=tags, dataChange=True))
-        dv_metrics = {"numDeletedRows": str(hits.count()),
+        # A file's new cardinality is its old DV's plus this delete's
+        # hits (the scan already dropped the old DV's rows), so the
+        # deleted rows need no count job.
+        deleted = sum(counts.get(p, 0)
+                      - int((cand[p].tags or {}).get(DV_CARD_TAG, 0))
+                      for p in touched)
+        dv_metrics = {"numDeletedRows": str(deleted),
                       "numDeletionVectorsAdded": str(len(touched))}
         return self._commit_legs(
             txn, "DELETE", params, [cand[p] for p in touched],

@@ -8,18 +8,22 @@ Prints one JSON line per op run. Two parts:
   copy of the table whose Snapshot and file rows are loaded before the
   timing starts: RESTORE three versions back, a whole-table overwrite,
   a shallow ``clone_to``, ``compute_checksum``, ``verify_checksum``,
-  ``generate_manifest``, ``vacuum(dry_run=True)``, ``state_summary()``
-  and one ``files_df.count()`` (the window plan, for reference).
+  ``generate_manifest``, ``vacuum(dry_run=True)`` and
+  ``state_summary()``.
 - ``wide``: writes a table whose state is one synthetic checkpoint of
-  ``--n`` AddFiles (no data files: neither op reads data), then runs
+  ``--n`` AddFiles (no data files: neither op reads data), classic
+  single-part or, with ``--parts N``, N-part, then runs
   ``delete()`` (a whole-table remove commit) and a shallow
   ``clone_to``, each ``--runs`` times, each run in a fresh Python
   process on a fresh copy. ``load_s`` is the Snapshot and its file rows,
-  ``rss_loaded_mb`` the driver RSS after that load, ``op_s`` the op
-  itself and ``peak_rss_mb`` the process's peak RSS (``ru_maxrss``).
+  ``rss_loaded_mb`` the driver RSS after that load and
+  ``load_peak_rss_mb`` the process's peak RSS (``ru_maxrss``) up to
+  then, ``op_s`` the op itself and ``peak_rss_mb`` the process's peak
+  RSS at the end.
 
 Usage: python scripts/wide_commit_probe.py small [--passes 2]
        python scripts/wide_commit_probe.py wide --n 200000 [--runs 1]
+           [--parts 1]
 
 Tables are written under ``--work`` (a fresh temporary directory by
 default), which is removed at the end.
@@ -128,7 +132,6 @@ def run_small(passes: int, work: str) -> None:
         "vacuum_dry_run": lambda t, d: TableMaintenance(t)
         .vacuum(dry_run=True),
         "state_summary": lambda t, d: t.snapshot().state_summary(),
-        "files_df_count": lambda t, d: t.snapshot().files_df.count(),
     }
     for i in range(passes):
         for name, op in ops.items():
@@ -144,9 +147,9 @@ def run_small(passes: int, work: str) -> None:
 
 # ------------------------------------------------------------------- wide
 
-def build_wide(path: str, n: int) -> None:
-    """A table whose version 0 is one classic checkpoint holding
-    Protocol, Metadata and ``n`` AddFiles."""
+def build_wide(path: str, n: int, parts: int = 1) -> None:
+    """A table whose version 0 is one classic checkpoint of ``parts``
+    parts holding Protocol, Metadata and ``n`` AddFiles."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
@@ -177,10 +180,15 @@ def build_wide(path: str, n: int) -> None:
                              "maxValues": {"id": i * 10 + 9},
                              "nullCount": {"id": 0}},
                             separators=(",", ":"))}} for i in range(n)]
-    pq.write_table(pa.Table.from_pylist(
-        rows, schema=to_arrow_schema(SINGLE_ACTION_SCHEMA)),
-        fn.checkpoint_file_single(log_path, 0), compression="snappy")
-    write_last_checkpoint(store, log_path, 0, n + 2)
+    names = ([fn.checkpoint_file_single(log_path, 0)] if parts == 1
+             else fn.checkpoint_file_parts(log_path, 0, parts))
+    for i, name in enumerate(names):
+        part = rows[len(rows) * i // parts:len(rows) * (i + 1) // parts]
+        pq.write_table(pa.Table.from_pylist(
+            part, schema=to_arrow_schema(SINGLE_ACTION_SCHEMA)),
+            name, compression="snappy")
+    write_last_checkpoint(store, log_path, 0, n + 2,
+                          parts if parts > 1 else None)
 
 
 def run_wide_one(op: str, path: str, n: int) -> None:
@@ -188,20 +196,22 @@ def run_wide_one(op: str, path: str, n: int) -> None:
     spark = session()
     t = DeltaTable.for_path(spark, path)
     load_s, load_jobs = timed(spark, lambda: t.snapshot()._files_rows)
-    loaded = rss_mb()
+    loaded, load_peak = rss_mb(), peak_rss_mb()
+    parts = len(t.snapshot().segment.checkpoint_files)
     if op == "delete":
         wall, jobs = timed(spark, lambda: t.delete())
     else:
         wall, jobs = timed(spark, lambda: t.clone_to(path + "_clone"))
-    emit(part="wide", op=op, files=n, load_s=round(load_s, 2),
+    emit(part="wide", op=op, files=n, parts=parts, load_s=round(load_s, 2),
          load_jobs=load_jobs, op_s=round(wall, 2), jobs=jobs,
-         rss_loaded_mb=round(loaded), peak_rss_mb=round(peak_rss_mb()))
+         rss_loaded_mb=round(loaded), load_peak_rss_mb=round(load_peak),
+         peak_rss_mb=round(peak_rss_mb()))
     spark.stop()
 
 
-def run_wide(n: int, runs: int, work: str) -> None:
+def run_wide(n: int, runs: int, parts: int, work: str) -> None:
     template = os.path.join(work, f"wide-{n}")
-    build_wide(template, n)
+    build_wide(template, n, parts)
     for i in range(runs):
         for op in ("delete", "clone_shallow"):
             d = os.path.join(work, f"wide-{n}-{op}-{i}")
@@ -219,6 +229,7 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--n", type=int, default=200_000)
     ap.add_argument("--runs", type=int, default=1)
+    ap.add_argument("--parts", type=int, default=1)
     ap.add_argument("--work", default=None)
     ap.add_argument("--op", default="delete")
     ap.add_argument("--table", default=None)
@@ -231,7 +242,7 @@ def main() -> None:
         if opts.part == "small":
             run_small(opts.passes, work)
         else:
-            run_wide(opts.n, opts.runs, work)
+            run_wide(opts.n, opts.runs, opts.parts, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -256,15 +256,14 @@ def test_checkpoint_crash_fallbacks_on_s3_store(tmp_path):
 
 @pytest.mark.pin
 def test_checkpoint_from_materialized_inventory_matches_cold(spark, tmp_path):
-    """The two checkpoint writers produce the same rows: the driver
-    write (pyarrow over the driver fold's planes) and the distributed
-    write (``files_df`` and ``tombstones_df`` through Spark, forced by
-    ``parts=1`` on a cold snapshot). The log covers every field either
-    writer encodes: a partition value holding every character where
-    Spark's url_encode and quote() differ, an add outside the table
-    root, a deletion-vector tag, row ids, and a foreign tombstone with
-    ``extendedFileMetadata=false`` whose size and partition values the
-    checkpoint must drop."""
+    """A checkpoint holds the same rows whether it is written from a
+    warm snapshot (planes seeded commit by commit) as one part, or from
+    a cold one (planes folded from the log) as three parts. The log
+    covers every field the writer encodes: a partition value holding
+    every character where Spark's url_encode and quote() differ, an add
+    outside the table root, a deletion-vector tag, row ids, and a
+    foreign tombstone with ``extendedFileMetadata=false`` whose size
+    and partition values the checkpoint must drop."""
     import glob
     import json
     import time
@@ -303,28 +302,18 @@ def test_checkpoint_from_materialized_inventory_matches_cold(spark, tmp_path):
     def checkpoint_rows(snap, **kw):
         for f in glob.glob(os.path.join(log_dir, "*checkpoint*.parquet")):
             os.remove(f)
-        taken = []
-        orig = CK._write_checkpoint_driver
-
-        def spy(snap, pm):
-            taken.append(snap.version)
-            return orig(snap, pm)
-        CK._write_checkpoint_driver = spy
-        try:
-            CK.write_checkpoint(snap, **kw)
-        finally:
-            CK._write_checkpoint_driver = orig
+        CK.write_checkpoint(snap, **kw)
         files = glob.glob(os.path.join(log_dir, "*checkpoint*.parquet"))
-        return bool(taken), sorted(spark.read.parquet(*files)
-                                   .toJSON().collect())
+        return len(files), sorted(spark.read.parquet(*files)
+                                  .toJSON().collect())
 
     warm, cold = t.log.snapshot(), t.log.snapshot_for_version(v)
     assert warm.version == v and "_files_rows" in warm.__dict__
-    driver, rows_driver = checkpoint_rows(warm)
-    spark_write, rows_spark = checkpoint_rows(cold, parts=1)
-    assert driver and not spark_write
     assert "_files_rows" not in cold.__dict__
-    assert rows_driver == rows_spark
+    n_warm, rows_driver = checkpoint_rows(warm)
+    n_cold, rows_cold = checkpoint_rows(cold, parts=3)
+    assert (n_warm, n_cold) == (1, 3)
+    assert rows_driver == rows_cold
 
     acts = [json.loads(r) for r in rows_driver]
     adds = [a["add"] for a in acts if a.get("add")]

@@ -48,7 +48,7 @@ def test_dv_delete_no_rewrite_and_layering(spark, tmp_path):
     assert _data_files(tmp_path / "t") == before  # nothing rewritten
     assert sorted(r.id for r in t.to_df().collect()) == list(range(10, 100))
     tags = {r["path"]: dict(r["tags"] or {})
-            for r in t.snapshot().files_df.collect()}
+            for r in t.snapshot()._files_rows}
     assert any(DV_TAG in tg for tg in tags.values())
     # second DV on the same files unions the deleted positions
     t.delete(Col("id") >= Lit(90), deletion_vectors=True)
@@ -57,7 +57,7 @@ def test_dv_delete_no_rewrite_and_layering(spark, tmp_path):
     total_card = sum(int(tg.get(DV_CARD_TAG, 0))
                      for tg in {r["path"]: dict(r["tags"] or {})
                                 for r in
-                                t.snapshot().files_df.collect()}.values())
+                                t.snapshot()._files_rows}.values())
     assert total_card == 20
     # no-hit DV delete commits nothing new
     v = t.delete(Col("id") < Lit(0), deletion_vectors=True)
@@ -203,3 +203,34 @@ def test_clone_of_dv_table(spark, tmp_path, deep):
         assert sorted(r.id for r in DeltaTable.for_path(
             spark, str(tmp_path / "cl")).to_df().collect()) \
             == list(range(10, 95))
+
+
+# Spark jobs of the second DV DELETE below (local mode). Counting its
+# hits for the metric (``hits.count()``) ran two more: under AQE one
+# count action is two jobs.
+DV_DELETE_JOBS = 10
+
+
+@pytest.mark.pin
+def test_dv_delete_metric_counts_rows_without_a_count_job(spark, tmp_path):
+    """``numDeletedRows`` of a DV DELETE on a file that already carries
+    a DV is the rows this delete removed: the new DV's cardinality less
+    the old one's, from counts ``stage_dv`` already returns, so no Spark
+    job counts the hits."""
+    t = DeltaTable.for_path(spark, str(tmp_path / "t"))
+    t.write(spark.range(100).coalesce(1))
+    t.delete(Col("id") < Lit(10), deletion_vectors=True)
+    (f,) = t.snapshot().all_files()
+    assert f.tags[DV_CARD_TAG] == "10"
+    sc = spark.sparkContext
+    sc.setJobGroup("dv-delete-metric", "dv delete")
+    try:
+        t.delete(Col("id") < Lit(25), deletion_vectors=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dv-delete-metric"))
+    metrics = t.history()[0]["operationMetrics"]
+    assert metrics["numDeletedRows"] == "15"
+    assert metrics["numDeletionVectorsAdded"] == "1"
+    assert t.snapshot().all_files()[0].tags[DV_CARD_TAG] == "25"
+    assert jobs <= DV_DELETE_JOBS, jobs

@@ -247,7 +247,7 @@ def test_reader_iterates_200_file_table(spark, tmp_path):
     t.write(spark.range(0).select(F.col("id").cast("int").alias("col1")),
             mode="append")
     snap = t.snapshot()
-    assert snap.files_df.count() >= 200
+    assert len(snap._files_rows) >= 200
     got = t.to_df()
     assert got.count() == 200
     assert got.agg(F.sum("col1")).first()[0] == sum(range(200))
@@ -314,7 +314,7 @@ def test_delete_re_add_same_file(spark, tmp_path):
     txn.commit([victim.remove(now)], "DELETE", {})
     txn2 = t.log.start_transaction()
     txn2.commit([victim], "WRITE", {})
-    paths = [r.path for r in t.snapshot().files_df.collect()]
+    paths = [r.path for r in t.snapshot()._files_rows]
     assert sum(1 for p in paths if p.endswith(victim.path.split("/")[-1])) == 1
     assert t.to_df().count() == 5
 
@@ -532,7 +532,7 @@ def test_add_relative_remove_absolute_resolves(spark, tmp_path):
     txn.commit([RemoveFile(path=abs_uri,
                            deletionTimestamp=int(time.time() * 1000),
                            dataChange=True)], "DELETE", {})
-    assert t.snapshot().files_df.count() == len(adds) - 1
+    assert len(t.snapshot()._files_rows) == len(adds) - 1
 
     # reverse direction: absolute add, relative remove
     t2 = _t(spark, tmp_path, "t2")
@@ -543,14 +543,14 @@ def test_add_relative_remove_absolute_resolves(spark, tmp_path):
     txn = t2.log.start_transaction()
     txn.commit([AddFile(path=ghost_abs, partitionValues={}, size=1,
                         modificationTime=1, dataChange=True)], "WRITE", {})
-    n_after_add = t2.snapshot().files_df.count()
+    n_after_add = len(t2.snapshot()._files_rows)
     txn = t2.log.start_transaction()
     txn.commit([RemoveFile(path=ghost_rel,
                            deletionTimestamp=int(time.time() * 1000),
                            dataChange=True)], "DELETE", {})
-    assert t2.snapshot().files_df.count() == n_after_add - 1
+    assert len(t2.snapshot()._files_rows) == n_after_add - 1
     assert fresh.path.split("/")[-1] in {
-        r.path.split("/")[-1] for r in t2.snapshot().files_df.collect()}
+        r.path.split("/")[-1] for r in t2.snapshot()._files_rows}
 
 
 def test_snapshot_ignores_pre_checkpoint_deltas(spark, tmp_path):
@@ -609,10 +609,10 @@ def test_user_commit_info_rejected(spark, tmp_path):
 @pytest.mark.pin
 def test_foreign_path_spellings_replay_once(spark, tmp_path):
     """A foreign writer's log spells its files five ways. Each log path
-    is decoded exactly once, like the reference's canonicalizePath:
-    both replays agree, every file reads, the engine's own (canonical)
-    remove spelling cancels each foreign add, and the streaming source
-    reads the ``file:`` URI."""
+    is decoded exactly once, like the reference's canonicalizePath: a
+    cold replay agrees with the seeded one, every file reads, the
+    engine's own (canonical) remove spelling cancels each foreign add,
+    and the streaming source reads the ``file:`` URI."""
     import os
 
     import pyarrow as pa
@@ -666,16 +666,18 @@ def test_foreign_path_spellings_replay_once(spark, tmp_path):
     assert not physical & {f.path for f in snap.all_files()}
     assert physical <= {r["path"] for r in snap._tombstone_rows}
 
+    # a cold replay of the segment equals the planes the commits
+    # seeded forward, field for field
+    assert "_files_rows" in snap.__dict__
     cold = Snapshot(spark, snap.table_path, snap.segment, snap.store)
-    files, tombs = cold._fold
 
     def key(r):
         return tuple((k, tuple(sorted(v.items())) if isinstance(v, dict)
                       else v) for k, v in r.asDict().items())
-    assert sorted(map(key, files)) \
-        == sorted(map(key, cold.files_df.collect()))
-    assert sorted(map(key, tombs)) \
-        == sorted(map(key, cold._tombstones_window_df().collect()))
+    assert sorted(map(key, cold._files_rows)) \
+        == sorted(map(key, snap._files_rows))
+    assert sorted(map(key, cold._tombstone_rows)) \
+        == sorted(map(key, snap._tombstone_rows))
 
 
 _PATH_ROOT = "/tbl/root"
@@ -731,24 +733,21 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
 
 
 @pytest.mark.pin
-def test_relativize_col_twin_parity_and_roundtrip(spark):
-    """relativize_col must agree with its Python twin relativize on the
-    physical form of every log path above (under the root, outside it,
-    and every character where Spark's url_encode and quote() differ),
-    and canonical_path must undo relativize exactly."""
-    from connectors_spark.log.snapshot import (canonical_path, relativize,
-                                               relativize_col)
+def test_relativize_roundtrip():
+    """canonical_path must undo relativize exactly on the physical form
+    of every log path above (under the root, outside it, and every
+    character where Spark's url_encode and quote() differ), and under
+    a root with a scheme a path is table-relative too."""
+    from connectors_spark.log.snapshot import canonical_path, relativize
     tp = _PATH_ROOT
-    phys = sorted({canonical_path(p, tp) for p in _LOG_PATHS})
-    df = spark.createDataFrame([(p,) for p in phys], "p string")
-    got = {r["p"]: r["r"] for r in
-           df.select("p", relativize_col("p", tp).alias("r")).collect()}
-    for p in phys:
+    for p in sorted({canonical_path(p, tp) for p in _LOG_PATHS}):
         rel = relativize(p, tp)
-        assert got[p] == rel, f"column/twin divergence for {p!r}: " \
-            f"{got[p]!r} != {rel!r}"
         assert canonical_path(rel, tp) == p, (p, rel)
     assert relativize(tp + "/p=a b%c=d~e*f+g/x.parquet", tp) \
         == "p%3Da%20b%25c%3Dd~e%2Af%2Bg/x.parquet"
     assert relativize("/abs/sp ace.parquet", tp) \
         == "file:///abs/sp%20ace.parquet"
+    mem = "memory://ns/tbl"
+    assert relativize(mem + "/p=a/f 1.parquet", mem) == "p%3Da/f%201.parquet"
+    assert canonical_path("p%3Da/f%201.parquet", mem) \
+        == mem + "/p=a/f 1.parquet"

@@ -168,13 +168,13 @@ def test_compaction_mixed_spelling_remove_absolute(spark, tmp_path):
         path=abs_uri, deletionTimestamp=int(_time.time() * 1000),
         dataChange=True)])
     head = t.log.snapshot_for_version(1)
-    before = head.files_df.count()
+    before = len(head._files_rows)
     assert before == len(adds) - 1      # replay canonicalizes correctly
     TableMaintenance(t).compact_log(start=0, end=1)
     fresh = t.log.snapshot_for_version(1)
     assert len(fresh.segment.deltas) == 1 \
         and ".compacted.json" in fresh.segment.deltas[0]
-    assert fresh.files_df.count() == before, \
+    assert len(fresh._files_rows) == before, \
         "compaction resurrected a deleted file (raw-path net fold)"
     # and exactly one net action exists for the victim
     acts = _read_compacted(t, 0, 1)
@@ -206,10 +206,10 @@ def test_compaction_mixed_spelling_add_absolute(spark, tmp_path):
     _hand_commit(t, 2, [RemoveFile(
         path=ghost_rel, deletionTimestamp=int(_time.time() * 1000),
         dataChange=True)])
-    before = t.log.snapshot_for_version(2).files_df.count()
+    before = len(t.log.snapshot_for_version(2)._files_rows)
     TableMaintenance(t).compact_log(start=0, end=2)
     fresh = t.log.snapshot_for_version(2)
-    assert fresh.files_df.count() == before
+    assert len(fresh._files_rows) == before
     ghosts = [a for a in _read_compacted(t, 0, 2)
               if getattr(a, "path", None) and "ghost-part" in a.path]
     assert len(ghosts) == 1 \
@@ -234,9 +234,9 @@ def test_compaction_mixed_spelling_escaped(spark, tmp_path):
     _hand_commit(t, 2, [RemoveFile(
         path="part a.parquet",
         deletionTimestamp=int(_time.time() * 1000), dataChange=True)])
-    before = t.log.snapshot_for_version(2).files_df.count()
+    before = len(t.log.snapshot_for_version(2)._files_rows)
     TableMaintenance(t).compact_log(start=0, end=2)
-    assert t.log.snapshot_for_version(2).files_df.count() == before
+    assert len(t.log.snapshot_for_version(2)._files_rows) == before
     spaced = [a for a in _read_compacted(t, 0, 2)
               if getattr(a, "path", None) and "part" in a.path
               and ("%20" in a.path or " " in a.path)]

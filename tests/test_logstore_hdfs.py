@@ -27,6 +27,7 @@ from connectors_spark.log.hdfsstore import (HadoopFsClient, HdfsLogStore,
 from connectors_spark.log.logstore import (FileAlreadyExistsError,
                                            default_log_store)
 from connectors_spark.table import DeltaLog
+from tests.test_logstore_memory import assert_state_survives_checkpoint
 
 SCHEMA_JSON = (
     '{"type":"struct","fields":['
@@ -233,3 +234,7 @@ def test_hdfs_store_thread_race_loses_no_commit(spark, hdfs_root):
     # no temp litter left behind by the retry losers
     assert not [n for n in log.store._client.list_dir(log.log_path)
                 if n.startswith(".tmp_")]
+
+
+def test_state_survives_checkpoint_on_hdfs_store(spark, hdfs_root):
+    assert_state_survives_checkpoint(spark, "hdfs://nn1/proto/ckpt")

@@ -9,11 +9,14 @@ unchanged.
 
 from __future__ import annotations
 
+import os
 import threading
+import time
 
 import pytest
 
 from connectors_spark.errors import ConcurrentDeleteDeleteException
+from connectors_spark.log import filenames as fn
 from connectors_spark.log.actions import AddFile, Metadata, Protocol
 from connectors_spark.log.logstore import (FileAlreadyExistsError,
                                            InMemoryLogStore,
@@ -118,3 +121,47 @@ def test_memory_store_thread_race_loses_no_commit(spark):
     assert log.snapshot().version == 8
     names = log.store.list_from(log.log_path)
     assert len([n for n in names if n.endswith(".json")]) == 9
+
+
+def assert_state_survives_checkpoint(spark, table_path):
+    """Table state on a non-POSIX store, by the one driver fold: a
+    3-commit log reads its file plane; taken past the default
+    ``checkpointInterval`` (10), the commit at version 10 writes a
+    checkpoint through the store, and a fresh DeltaLog reads state from
+    that checkpoint plus its tail. Shared by the S3 and HDFS modules."""
+    log = DeltaLog.for_table(spark, table_path)
+    root = log.table_path
+
+    def path(i):
+        return f"{root}/part=a/f{i}.parquet"
+
+    txn = log.start_transaction()
+    txn.update_metadata(_metadata())
+    txn.commit([Protocol(), _add("part=a/f0.parquet", "a")], "WRITE")
+    for i in (1, 2):
+        log.start_transaction().commit(
+            [_add(f"part=a/f{i}.parquet", "a")], "WRITE")
+    assert sorted(r["path"] for r in log.snapshot()._files_rows) == \
+        [path(i) for i in range(3)]
+
+    now = int(time.time() * 1000)
+    for i in range(3, 13):
+        acts = [_add(f"part=a/f{i}.parquet", "a")]
+        if i == 5:      # a tombstone inside the retention window
+            acts.append(_add("part=a/f1.parquet", "a").remove(now))
+        log.start_transaction().commit(acts, "WRITE")
+    assert log.store.exists(fn.checkpoint_file_single(log.log_path, 10))
+
+    fresh = DeltaLog(spark, table_path).snapshot()
+    assert fresh.segment.checkpoint_version == 10
+    assert [fn.delta_version(os.path.basename(p))
+            for p in fresh.segment.deltas] == [11, 12]
+    assert sorted(r["path"] for r in fresh._files_rows) == \
+        sorted(path(i) for i in range(13) if i != 1)
+    assert [(r["path"], r["deletionTimestamp"])
+            for r in fresh._tombstone_rows] == [(path(1), now)]
+    assert fresh.metadata.partitionColumns == ["part"]
+
+
+def test_state_survives_checkpoint_on_memory_store(spark):
+    assert_state_survives_checkpoint(spark, "memory://ckpt/tbl")

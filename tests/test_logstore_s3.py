@@ -23,6 +23,7 @@ from connectors_spark.log.logstore import (FileAlreadyExistsError,
                                            default_log_store)
 from connectors_spark.log.s3store import S3LogStore, _s3_stores
 from connectors_spark.table import DeltaLog
+from tests.test_logstore_memory import assert_state_survives_checkpoint
 
 BUCKET = "graft-test-bucket"
 
@@ -175,3 +176,7 @@ def test_store_pickles_without_client(s3):
     assert clone._client_obj is None
     # same-process rebuild works against the ambient (mocked) endpoint
     assert clone.read(f"s3://{BUCKET}/t3/a.json") == ["z"]
+
+
+def test_state_survives_checkpoint_on_s3_store(spark, s3):
+    assert_state_survives_checkpoint(spark, f"s3://{BUCKET}/ckpt")

@@ -29,9 +29,9 @@ def _small_appends(spark, path, n=5, partitioned=False):
 
 def test_optimize_compacts_small_files(spark, tmp_path):
     t = _small_appends(spark, tmp_path / "t", n=5)
-    before = t.snapshot().files_df.count()
+    before = len(t.snapshot()._files_rows)
     res = TableMaintenance(t).optimize()
-    after = t.snapshot().files_df.count()
+    after = len(t.snapshot()._files_rows)
     assert res["filesRemoved"] == before >= 5
     assert res["filesAdded"] == after == 1
     assert t.to_df().count() == 50
@@ -503,7 +503,7 @@ def test_shallow_clone_is_independent(spark, tmp_path):
     assert sorted(r.id for r in cl.to_df().collect()) == list(range(10, 30))
     assert src.to_df().count() == 40
     # copy-on-write landed the rewrite under the clone's own root
-    active = {r.path for r in cl.snapshot().files_df.collect()}
+    active = {r.path for r in cl.snapshot()._files_rows}
     assert any(p.startswith(str(tmp_path / "cl")) for p in active)
     # vacuum on the clone must never reach into the source
     TableMaintenance(cl).vacuum(retention_ms=0)
@@ -524,7 +524,7 @@ def test_clone_at_version_and_deep(spark, tmp_path):
     deep = DeltaTable.for_path(spark, str(tmp_path / "deep"))
     assert deep.to_df().count() == 30
     # deep clone owns real copies under its root
-    active = {r.path for r in deep.snapshot().files_df.collect()}
+    active = {r.path for r in deep.snapshot()._files_rows}
     assert all(p.startswith(str(tmp_path / "deep")) for p in active)
 
 
@@ -1175,7 +1175,8 @@ def test_vacuum_protects_dv_sidecar_of_young_tombstone_via_checkpoint(
                for f in t.log.snapshot().all_files())
     t.delete()                                            # v2: remove file
     # tombstone carries the DV tag
-    tomb = t.log.snapshot().tombstones_df.collect()
+    snap = t.log.snapshot()
+    tomb = snap.retained_tombstone_rows(snap.tombstone_horizon())
     assert any((r["tags"] or {}).get(DV_TAG) for r in tomb)
     write_checkpoint(t.log.snapshot())
     # age every physical file's mtime so only tombstone youth protects

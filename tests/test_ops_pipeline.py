@@ -498,7 +498,7 @@ def test_ann_indexed_matches_unindexed(spark, sf_dir, tmp_path):
     # the probe is partition-pruned: scanning one bucket touches a strict
     # subset of the index's files
     t = DeltaTable.for_path(spark, idx)
-    total = t.snapshot().files_df.count()
+    total = len(t.snapshot()._files_rows)
     one = t.scan((Col("tbl") == Lit(0)) &
                  (Col("sig") == Lit(0))).files().count()
     assert 0 < one < total

@@ -286,8 +286,8 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
     # r14: DeltaLog.update seeds the new Snapshot's inventory from the
     # previous one's by applying the tail commits driver-side
     # (delta-spark's incremental InMemoryLogReplay). The seeded rows
-    # must be field-identical to a full distributed replay of the same
-    # segment — across partitioned writes, an UPDATE rewrite, a
+    # must be field-identical to a cold replay of the same segment —
+    # across partitioned writes, an UPDATE rewrite, a
     # DV-delete (tags) and a whole-file DELETE under row tracking.
     from pyspark.sql import functions as F
 
@@ -317,7 +317,7 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
 
     fresh = Snapshot(spark, snap.table_path, snap.segment, snap.store)
     assert sorted(map(key, snap._files_rows)) \
-        == sorted(map(key, fresh.files_df.collect()))
+        == sorted(map(key, fresh._files_rows))
     # and the seeded snapshot reads the right data
     n = t.to_df().count()
     exp = orders.where("o_orderkey >= 100 AND o_orderstatus <> 'P'") \
@@ -903,7 +903,7 @@ def test_ivfpq_probe_prunes_partitions(spark, sf_dir, tmp_path):
     idx = str(tmp_path / "ivfpq")
     cents, books = build_ivf_pq_index(emb, idx, nlist=16)
     t = DeltaTable.for_path(spark, idx)
-    total = t.snapshot().files_df.count()
+    total = len(t.snapshot()._files_rows)
     pruned = t.scan((Col("list_id") == Lit(0)) |
                     (Col("list_id") == Lit(1))).files().count()
     assert pruned < total and pruned <= 4
@@ -988,7 +988,7 @@ def test_trigram_index_probe_prunes_buckets(spark, sf_dir, tmp_path):
     grams = [pats[0][i:i + 3] for i in range(len(pats[0]) - 2)]
     buckets = sorted({_py_hash64(g) % 64 for g in grams})
     t = DeltaTable.for_path(spark, idx)
-    total = t.snapshot().files_df.count()
+    total = len(t.snapshot()._files_rows)
     pruned = t.scan(Col("bucket").isin(*buckets)).files().count()
     assert pruned < total
     adhoc = {(r.pattern, r.doc_id, r.n_occurrences)
@@ -1024,9 +1024,8 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
     # seed must survive a CHECKPOINT BOUNDARY (the segment switching to
     # a newer checkpoint does not invalidate driver-side state: commits
     # are immutable, so prev state + tail deltas IS the new state).
-    # Both planes must stay field-identical to a fresh distributed
-    # replay, and retained_tombstones' local-relation path must match
-    # the window plan's rows.
+    # Both planes must stay field-identical to a cold replay of the
+    # same segment (checkpoint plus tail).
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.log.snapshot import Snapshot
@@ -1050,7 +1049,7 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
     assert "_files_rows" in snap.__dict__
 
     # Keys deliberately EXCLUDE the internal ``version`` column: it is
-    # the dedup window's provenance stamp (a checkpoint-flattened
+    # the replay's provenance stamp (a checkpoint-flattened
     # replay stamps rows with the checkpoint version, while the seed
     # keeps the action's true commit version — strictly finer). No
     # consumer reads it from either plane; every observable field must
@@ -1070,76 +1069,141 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
 
     fresh = Snapshot(spark, snap.table_path, snap.segment, snap.store)
     assert sorted(map(tkey, snap._tombstone_rows)) \
-        == sorted(map(tkey, fresh._tombstones_window_df().collect()))
+        == sorted(map(tkey, fresh._tombstone_rows))
     assert len(snap._tombstone_rows) > 0
     assert sorted(map(fkey, snap._files_rows)) \
-        == sorted(map(fkey, fresh.files_df.collect()))
-    # the horizon-filtered local relation equals the distributed plan
-    assert sorted(map(tkey, snap.retained_tombstones(0).collect())) \
-        == sorted(map(tkey, fresh._tombstones_window_df()
-                      .where("deletionTimestamp > 0").collect()))
+        == sorted(map(fkey, fresh._files_rows))
+    # the horizon filter keeps every tombstone of this log (all younger
+    # than the table's retention) on both sides
+    assert sorted(map(tkey, snap.retained_tombstone_rows(
+        snap.tombstone_horizon()))) \
+        == sorted(map(tkey, fresh._tombstone_rows))
 
 
-def _folded_snapshot(spark, path):
-    # The two implementations of the replay: the driver fold (classic
-    # checkpoint's add+remove columns, then the parsed commit tail) and
-    # the distributed window plan. The fixture spans checkpointed adds
-    # and tombstones, DV-delete tags, partition values, a re-added path,
-    # and tail adds and removes. Returns a cold Snapshot and its fold.
-    from connectors_spark import DeltaTable
-    from connectors_spark.expressions import Col, Lit
-    from connectors_spark.log.snapshot import Snapshot
-    from tests.conftest import read_table
-
-    t = DeltaTable.for_path(spark, path)
-    orders = read_table(spark, "orders")
-    t.write(orders.limit(300), partition_by=["o_orderstatus"],
-            configuration={"delta.checkpointInterval": "2"})
-    t.delete(Col("o_orderkey") < Lit(100), deletion_vectors=True)  # v1
-    t.delete(Col("o_orderkey") < Lit(150))     # v2 -> checkpoint
-    t.write(orders.limit(400), mode="append")  # v3 (tail add)
-    t.delete(Col("o_orderstatus") == Lit("P"))  # v4 -> checkpoint
-    t.write(orders.limit(50), mode="append")   # v5 (tail add)
-    t.delete(Col("o_orderkey") < Lit(200))     # v6 -> checkpoint
-    t.delete(Col("o_orderkey") < Lit(220))     # v7 (tail remove)
-    snap = Snapshot(spark, t.path, t.log.snapshot().segment,
-                    t.log.store)
-    assert snap.segment.checkpoint_files and snap.segment.deltas
-    assert snap._driver_replayable()
-    return snap, snap._fold
+# Checkpoint shapes the one replay reads: (name, write_checkpoint's
+# ``parts``, table configuration).
+_SHAPES = [("classic", None, {}),
+           ("multi-part", 3, {}),
+           ("v2", None, {"delta.checkpointPolicy": "v2"}),
+           ("v2, 2 sidecars", 2, {"delta.checkpointPolicy": "v2"})]
 
 
-def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # The fold's file plane is field-identical to files_df (the window
-    # plan's add rows) — version stamp included: both attribute
-    # checkpoint rows to the checkpoint version.
-    snap, (files, _) = _folded_snapshot(spark, str(tmp_path / "fds"))
-    assert len(files) > 0
+def _hand_built_planes(spark, root):
+    """For each checkpoint shape, a log written action by action with a
+    checkpoint at version 3 and a tail of versions 4 and 5; yields
+    (shape, cold Snapshot at 5, the incremental ``seed_from`` fold from
+    version 0 to 5, expected files, expected tombstones). The log covers
+    partition values, a deletion-vector tag, row ids, a path that needs
+    URI encoding, a path re-added after its remove, an add and a remove
+    of one path in one commit (the add wins), and tail adds and removes.
+    Expected planes are the surviving actions, listed by hand."""
+    import time
 
+    from connectors_spark.log import filenames as fn
+    from connectors_spark.log.actions import (AddFile, Metadata, Protocol,
+                                              to_json_line)
+    from connectors_spark.log.checkpoints import write_checkpoint
+    from connectors_spark.log.snapshot import (Snapshot, canonical_path,
+                                               read_commit)
+    from connectors_spark.table import DeltaLog
+
+    schema = ('{"type":"struct","fields":['
+              '{"name":"id","type":"long","nullable":true,"metadata":{}},'
+              '{"name":"p","type":"string","nullable":true,"metadata":{}}]}')
+    now = int(time.time() * 1000)
+
+    def add(name, p, **kw):
+        return AddFile(path=f"p={p}/{name}.parquet",
+                       partitionValues={"p": p}, size=len(name) + 10,
+                       modificationTime=now - 5, dataChange=True,
+                       stats='{"numRecords":%d}' % len(name), **kw)
+
+    a, b, c = add("a", "x"), add("b", "y"), add(
+        "c", "x", tags={"deletionVector": "_deletion_vectors/dv-1.parquet",
+                        "dvCardinality": "2"})
+    d, e = add("d", "y", baseRowId=7, defaultRowCommitVersion=1), add("e", "x")
+    f, odd = add("f", "y"), add("o%20dd", "a b")
+    for shape, parts, conf in _SHAPES:
+        path = str(root / shape.replace(" ", "_").replace(",", ""))
+        log = DeltaLog(spark, path)
+        proto = (Protocol(3, 7, ["v2Checkpoint"], ["v2Checkpoint"])
+                 if conf else Protocol(1, 2))
+        commits = [
+            [proto, Metadata(id="m", schemaString=schema,
+                             partitionColumns=["p"], configuration=conf),
+             a, b, c, odd],
+            [a.remove(now), d],
+            [a, b.remove(now)],
+            [e, e.remove(now)],
+            [f, c.remove(now)],
+            [d.remove(now), b],
+        ]
+        for v, acts in enumerate(commits):
+            log.store.write(fn.delta_file(log.log_path, v),
+                            [to_json_line(x) for x in acts])
+            if v == 3:
+                write_checkpoint(log.snapshot_for_version(3), parts=parts)
+        cold = log.snapshot_for_version(5)
+        assert cold.segment.checkpoint_version == 3
+        assert len(cold.segment.checkpoint_files) == (
+            parts if parts and not conf else 1)
+        prev = log.snapshot_for_version(0)
+        _ = prev._files_rows, prev._tombstone_rows
+        seeded = Snapshot(spark, path, cold.segment, log.store)
+        seeded.seed_from(prev, [
+            (v, read_commit(log.store, fn.delta_file(log.log_path, v)))
+            for v in range(1, 6)])
+        assert {"_files_rows", "_tombstone_rows"} <= set(seeded.__dict__)
+
+        def canon(acts):
+            return {canonical_path(x.path, log.table_path): x for x in acts}
+        yield (shape, cold, seeded, canon([a, b, e, f, odd]),
+               canon([c.remove(now), d.remove(now)]))
+
+
+def test_cold_file_plane_matches_seeded_fold_and_expected(spark, tmp_path):
+    # One replay for every checkpoint shape: a cold Snapshot (checkpoint
+    # read batch by batch, then the tail) and the seeded fold hold the
+    # same file plane, and it is the hand-listed one. Version stamps
+    # differ by design (a cold replay stamps checkpoint rows with the
+    # checkpoint version), so they are checked apart.
     def k(r):
-        return (r["path"],
-                tuple(sorted((r["partitionValues"] or {}).items())),
-                r["size"], r["modificationTime"], r["dataChange"],
+        return (tuple(sorted((r["partitionValues"] or {}).items())),
+                r["size"], r["modificationTime"], bool(r["dataChange"]),
                 r["stats"], tuple(sorted((r["tags"] or {}).items())),
-                r["baseRowId"], r["defaultRowCommitVersion"],
-                r["version"])
+                r["baseRowId"], r["defaultRowCommitVersion"])
 
-    assert sorted(map(k, files)) \
-        == sorted(map(k, snap.files_df.collect()))
+    for shape, cold, seeded, files, _ in _hand_built_planes(spark,
+                                                            tmp_path):
+        want = {p: k(vars(x)) for p, x in files.items()}
+        assert {r["path"]: k(r) for r in cold._files_rows} == want, shape
+        assert {r["path"]: k(r) for r in seeded._files_rows} == want, shape
+        assert len(cold._files_rows) == len(want), shape
+        assert sorted(r["version"] for r in cold._files_rows) \
+            == [3, 3, 3, 4, 5], shape
+        assert sorted(r["version"] for r in seeded._files_rows) \
+            == [0, 2, 3, 4, 5], shape
 
 
-def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # The fold's tombstone plane is field-identical to the window plan's
-    # remove rows — version stamp included.
-    snap, (_, tombs) = _folded_snapshot(spark, str(tmp_path / "tds"))
-    assert len(tombs) > 0
-
+def test_cold_tombstone_plane_matches_seeded_fold_and_expected(spark,
+                                                              tmp_path):
+    # The tombstone twin: both tombstones were removed in the tail, so
+    # every field (the DV tag, extendedFileMetadata, partition values,
+    # size) and the version stamp agree.
     def k(r):
-        return (r["path"], r["deletionTimestamp"],
+        return (r["deletionTimestamp"],
                 tuple(sorted((r["tags"] or {}).items())),
                 bool(r["extendedFileMetadata"]),
                 tuple(sorted((r["partitionValues"] or {}).items())),
-                r["size"], r["version"])
+                r["size"])
 
-    assert sorted(map(k, tombs)) \
-        == sorted(map(k, snap._tombstones_window_df().collect()))
+    for shape, cold, seeded, _, tombs in _hand_built_planes(spark,
+                                                            tmp_path):
+        want = {p: k(vars(x)) for p, x in tombs.items()}
+        for snap in (cold, seeded):
+            assert {r["path"]: k(r) for r in snap._tombstone_rows} \
+                == want, shape
+            assert sorted(r["version"] for r in snap._tombstone_rows) \
+                == [4, 5], shape
+            assert snap.retained_tombstone_rows(
+                snap.tombstone_horizon()) == snap._tombstone_rows, shape

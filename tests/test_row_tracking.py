@@ -333,7 +333,7 @@ def test_enable_rt_backfills_existing_files(spark, tmp_path):
     t.set_properties({"delta.enableRowTracking": "true"})
     snap = t.log.snapshot()
     assert all(r["baseRowId"] is not None
-               for r in snap.files_df.select("baseRowId").collect())
+               for r in snap._files_rows)
     rid = _rids(t)
     assert sorted(v[0] for v in rid.values()) == list(range(120))
     # the enablement commit records the spec's materialized-name keys
@@ -439,7 +439,7 @@ def test_rt_enablement_backfill_aborts_on_concurrent_append(spark,
                       "delta.protocol.autoUpgrade": "true"})
     snap = t.log.snapshot()
     assert all(r["baseRowId"] is not None
-               for r in snap.files_df.select("baseRowId").collect())
+               for r in snap._files_rows)
     rids = [v[0] for v in _rids(t).values()]
     assert len(rids) == 60 and len(set(rids)) == 60
     assert all(r is not None for r in rids)

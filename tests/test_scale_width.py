@@ -102,7 +102,7 @@ def test_snapshot_is_checkpoint_plus_tail(spark, wide_table):
     fresh.store = CountingStore(fresh.store)
     t0 = time.perf_counter()
     snap = fresh.snapshot()
-    n_files = snap.files_df.count()
+    n_files = len(snap._files_rows)
     build_s = time.perf_counter() - t0
 
     seg = snap.segment
@@ -158,15 +158,15 @@ def test_multipart_checkpoint_roundtrip(spark, wide_table):
     seg = get_log_segment(fresh.store, log_path)
     assert len(seg.checkpoint_files) == 3
     assert seg.checkpoint_version == snap.version
-    assert fresh.snapshot().files_df.count() == snap.files_df.count()
+    assert len(fresh.snapshot()._files_rows) == len(snap._files_rows)
 
 
 def test_restore_and_vacuum_no_driver_file_loops(spark, wide_table):
     t, path = wide_table
     cur = t.log.snapshot()
-    n_cur = cur.files_df.count()
+    n_cur = len(cur._files_rows)
     target_v = 100
-    n_target = t.log.snapshot_for_version(target_v).files_df.count()
+    n_target = len(t.log.snapshot_for_version(target_v)._files_rows)
 
     spy = CountingStore(t.log.store)
     orig = t.log.store
@@ -305,7 +305,7 @@ def test_optimize_batch_skips_concurrently_removed_victims(spark, tmp_path):
 
     # and the .crc chain never double-decremented
     out = TableMaintenance(t).verify_checksum()
-    assert out["numFiles"] == t.snapshot().files_df.count()
+    assert out["numFiles"] == len(t.snapshot()._files_rows)
 
 
 def test_clone_commit_carries_every_source_file(spark, wide_table):

@@ -30,7 +30,7 @@ def test_convert_flat_parquet_dir(spark, tmp_path, sf_dir):
     assert {f.name for f in t.snapshot().metadata.schema.fields} == \
         set(src.columns)
     # adopted files were not rewritten
-    assert t.snapshot().files_df.count() >= 1
+    assert len(t.snapshot()._files_rows) >= 1
 
 
 def test_convert_hive_partitioned(spark, tmp_path, sf_dir):
@@ -45,7 +45,7 @@ def test_convert_hive_partitioned(spark, tmp_path, sf_dir):
     scan = t.scan(Col("l_returnflag") == Lit("R"))
     n_r = src.filter(F.col("l_returnflag") == "R").count()
     assert scan.to_df().count() == n_r
-    n_all_files = t.snapshot().files_df.count()
+    n_all_files = len(t.snapshot()._files_rows)
     n_r_files = scan.files().count()
     assert n_r_files < n_all_files   # fewer files after pruning
 

@@ -121,29 +121,25 @@ def test_sink_exactly_once(spark, tmp_path):
 def test_sink_checkpoint_is_driver_write_without_spark_jobs(
         spark, tmp_path, monkeypatch):
     """A log only the sink has written reaches its checkpoint interval
-    with no file plane cached. Its snapshot is driver-replayable, so the
-    checkpoint is the driver write and starts no Spark job."""
+    with no file plane cached. The checkpoint is written in this process
+    from the driver fold and starts no Spark job."""
     import connectors_spark.log.checkpoints as CK
     sink = DeltaStreamSink(str(tmp_path / "tgt"), app_id="pin",
                            configuration={"delta.checkpointInterval": "3"})
     tracker = spark.sparkContext.statusTracker()
-    driver, new_jobs = [], []
-    write, write_driver = CK.write_checkpoint, CK._write_checkpoint_driver
+    versions, new_jobs = [], []
+    write = CK.write_checkpoint
 
     def spy_write(snap, *args, **kwargs):
         before = set(tracker.getJobIdsForGroup())
         n = write(snap, *args, **kwargs)
+        versions.append(snap.version)
         new_jobs.append(set(tracker.getJobIdsForGroup()) - before)
         return n
-
-    def spy_driver(snap, pm_lines):
-        driver.append(snap.version)
-        return write_driver(snap, pm_lines)
     monkeypatch.setattr(CK, "write_checkpoint", spy_write)
-    monkeypatch.setattr(CK, "_write_checkpoint_driver", spy_driver)
     for b in range(4):
         sink.write_batch(spark.range(10 * b, 10 * b + 10), b)
-    assert driver == [3]
+    assert versions == [3]
     assert new_jobs == [set()]
     assert tracker.getJobIdsForGroup()       # the sink's own jobs count
     t = DeltaTable.for_path(spark, str(tmp_path / "tgt"))
@@ -463,7 +459,7 @@ def test_restart_snapshot_batch_clamped_to_persisted_end(spark, tmp_path):
     assert parts and all(p.version == 2 for p in parts)
     active_v2 = {r["path"].split("/")[-1]
                  for r in t.log.snapshot_for_version(2)
-                 .files_df.select("path").collect()}
+                 ._files_rows}
     assert {p.file_path.split("/")[-1] for p in parts} == active_v2
 
 
@@ -578,7 +574,7 @@ def test_sink_auto_compacts_micro_batches(spark, tmp_path):
         df = spark.range(b * 10, (b + 1) * 10).coalesce(1)
         sink.write_batch(df, b)
     t = DeltaTable.for_path(spark, str(tmp_path / "t"))
-    assert t.snapshot().files_df.count() < 5
+    assert len(t.snapshot()._files_rows) < 5
     assert "OPTIMIZE" in [h["operation"] for h in t.history()]
     assert sorted(r.id for r in t.to_df().collect()) == list(range(50))
     # replay after compaction is still an idempotent no-op

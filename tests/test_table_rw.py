@@ -51,7 +51,7 @@ def test_partitioned_write_and_prune(spark, tmp_path):
     assert snap.metadata.partitionColumns == ["o_orderstatus"]
     scan = t.scan(Col("o_orderstatus") == "F")
     pruned = scan.files().count()
-    total = snap.files_df.count()
+    total = len(snap._files_rows)
     assert 0 < pruned < total
     got = scan.to_df().count()
     want = orders.where("o_orderstatus = 'F'").count()
@@ -100,7 +100,7 @@ def test_null_stats_file_skipping(spark, tmp_path):
     t.write(all_nulls.coalesce(1), mode="append")
     t.write(mixed.coalesce(1), mode="append")
     snap = t.snapshot()
-    assert snap.files_df.count() == 3
+    assert len(snap._files_rows) == 3
 
     is_null = DeltaScan(snap, IsNull(Col("v")))
     assert is_null.files().count() == 2          # no_nulls file skipped
@@ -127,7 +127,7 @@ def test_disjunctive_stats_skipping(spark, tmp_path):
             F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
         t.write(df.coalesce(1), mode="append" if i else "overwrite")
     snap = t.snapshot()
-    assert snap.files_df.count() == 10
+    assert len(snap._files_rows) == 10
 
     pred = Or(And(Col("k") >= Lit(105), Col("k") < Lit(150)),
               Col("k") >= Lit(950))
@@ -497,7 +497,7 @@ def test_auto_compact_bounds_small_files(spark, tmp_path):
                 .select(F.col("id").alias("k")).coalesce(1),
                 mode="append", configuration=conf if i == 0 else None)
     snap = t.log.snapshot()
-    assert snap.files_df.count() < 6  # compaction fired
+    assert len(snap._files_rows) < 6  # compaction fired
     ops = [h["operation"] for h in t.history()]
     assert "OPTIMIZE" in ops
     assert sorted(r.k for r in t.to_df().collect()) == list(range(60))
@@ -508,7 +508,7 @@ def test_auto_compact_bounds_small_files(spark, tmp_path):
         t2.write(spark.range(i * 10, (i + 1) * 10)
                  .select(F.col("id").alias("k")).coalesce(1),
                  mode="append")
-    assert t2.log.snapshot().files_df.count() == 6
+    assert len(t2.log.snapshot()._files_rows) == 6
 
 
 def test_describe_detail(spark, tmp_path):
@@ -523,7 +523,7 @@ def test_describe_detail(spark, tmp_path):
     snap = t.log.snapshot()
     assert det["format"] == "delta"
     assert det["partitionColumns"] == ["o_orderstatus"]
-    assert det["numFiles"] == snap.files_df.count()
+    assert det["numFiles"] == len(snap._files_rows)
     assert det["sizeInBytes"] == sum(f.size for f in snap.all_files())
     assert det["properties"]["custom.owner"] == "pipelines"
     assert (det["minReaderVersion"], det["minWriterVersion"]) == (1, 2)

@@ -43,7 +43,7 @@ def test_v2_roundtrip_state_equality(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     before = t.log.snapshot()
     files_before = {(r["path"], r["size"])
-                    for r in before.files_df.collect()}
+                    for r in before._files_rows}
     write_checkpoint(before)
     log_dir = str(tmp_path / "t" / "_delta_log")
     assert any(fn.is_v2_checkpoint_file(n) for n in os.listdir(log_dir))
@@ -52,13 +52,13 @@ def test_v2_roundtrip_state_equality(spark, tmp_path):
     snap = t2.log.snapshot()
     assert snap.segment.checkpoint_version == before.version
     assert {(r["path"], r["size"])
-            for r in snap.files_df.collect()} == files_before
+            for r in snap._files_rows} == files_before
     assert snap.protocol == before.protocol
     assert snap.metadata.schemaString == before.metadata.schemaString
     assert snap.txn_version("app-x") == 3
     assert snap.to_df().count() == 140
     # tombstones rode along (the delete's removes within retention)
-    assert snap.tombstones_df.count() > 0
+    assert snap.retained_tombstone_rows(snap.tombstone_horizon())
     # reader feature pinned on the protocol
     assert "v2Checkpoint" in (snap.protocol.readerFeatures or [])
 
@@ -200,7 +200,7 @@ def test_foreign_v2_manifest_shapes(spark, tmp_path):
     # hand-write the sidecar: add rows only, via Spark so the nested
     # struct matches SINGLE_ACTION_SCHEMA, then move it in place
     from connectors_spark.log.snapshot import addfiles_from_rows
-    adds = addfiles_from_rows(snap.files_df.collect())
+    adds = addfiles_from_rows(snap._files_rows)
     side_name = "foreign-sidecar-0001.parquet"
     side_dir = os.path.join(log_dir, fn.SIDECAR_DIR)
     os.makedirs(side_dir, exist_ok=True)
