@@ -269,7 +269,7 @@ def test_hilbert_index_column_matches_reference(spark):
 
     from pyspark.sql import functions as F
 
-    from connectors_spark.table import _hilbert_index_col
+    from connectors_spark.maintenance import _hilbert_index_col
 
     # exhaustive small grids: bijection + adjacency
     for d, b in [(2, 4), (3, 3)]:
@@ -903,7 +903,7 @@ def test_hilbert_numpy_batch_matches_column_and_reference():
 
     import numpy as np
 
-    from connectors_spark.table import _hilbert_index_np
+    from connectors_spark.maintenance import _hilbert_index_np
 
     random.seed(23)
     for d, b in [(2, 4), (3, 3), (2, 16), (3, 16), (4, 15)]:

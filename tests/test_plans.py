@@ -103,7 +103,7 @@ def test_hilbert_code_is_pure_jvm_expression(spark):
     # ArrowEval/BatchEval nodes — it's aggregate/bit expressions only
     from pyspark.sql import functions as F
 
-    from connectors_spark.table import _hilbert_index_col
+    from connectors_spark.maintenance import _hilbert_index_col
     df = spark.range(100).select(
         (F.col("id") % 10).alias("x"), (F.col("id") % 7).alias("y"))
     p = plan_of(df.select(_hilbert_index_col(
