@@ -87,3 +87,19 @@ def local_rows_df(spark, rows: Sequence, schema,
     table = pa.Table.from_batches(
         [batch.slice(i, step) for i in range(0, n, step)], arrow_schema)
     return spark.createDataFrame(table, schema)
+
+
+def fan_out(spark, rows: Sequence, schema, body, out_schema):
+    """``body``, a ``mapInPandas`` function, run on executors over the
+    driver-built ``rows`` in at most ``defaultParallelism`` tasks: the
+    per-file work of maintenance commands (existence probes, deletes,
+    footer reads, copies, listings, manifest writes). The package's code
+    ships by value, so workers need no install. No rows: an empty
+    relation, which collects without a job."""
+    if not rows:
+        return local_rows_df(spark, [], out_schema)
+    from .shipping import ensure_shipped_by_value
+    ensure_shipped_by_value()
+    parts = min(len(rows), spark.sparkContext.defaultParallelism)
+    return (local_rows_df(spark, rows, schema, parts=parts)
+            .mapInPandas(body, out_schema))

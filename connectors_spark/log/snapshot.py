@@ -72,22 +72,27 @@ from .logstore import LogStore, strip_scheme
 from .segment import LogSegment
 
 _SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
-_SCHEME_AUTHORITY = _SCHEME + r"[^/]*"
+_FILE_AUTHORITY = r"(?i)^file://[^/]*"
 _BAD_ESCAPE = re.compile(r"%(?![0-9a-fA-F]{2})")
 
 
 def canonical_path(p: str, table_path: str) -> str:
-    """Physical absolute path for a log ``path`` value: URI-decoded,
-    scheme and authority dropped, a relative path resolved against the
-    table root (SnapshotImpl.canonicalizePath, SnapshotImpl.scala:349-362).
-    A value that is not valid percent-encoding is left undecoded, as
-    Spark's ``try_url_decode`` leaves it in :func:`canonical_path_col`."""
+    """Physical absolute path for a log ``path`` value: URI-decoded, a
+    ``file:`` scheme and authority dropped, a relative path resolved
+    against the table root (SnapshotImpl.canonicalizePath,
+    SnapshotImpl.scala:349-362). A URI of any other scheme (``s3://``,
+    ``memory://``) keeps its scheme and authority: a relative path under
+    such a root resolves to the same URI. A value that is not valid
+    percent-encoding is left undecoded, as Spark's ``try_url_decode``
+    leaves it in :func:`canonical_path_col`."""
     d = p
     if "%" in p and not _BAD_ESCAPE.search(p):
         d = urllib.parse.unquote(p)
     if ":" in d:
+        if re.match(_FILE_AUTHORITY, d):
+            return re.sub(_FILE_AUTHORITY, "", d, count=1)
         if re.match(_SCHEME, d):
-            return re.sub(_SCHEME_AUTHORITY, "", d, count=1)
+            return d
         if d.startswith("file:"):
             return d[len("file:"):]
     if d.startswith("/"):
@@ -113,7 +118,9 @@ def canonical_path_col(col, table_path: str):
     # each DML target scan). The file: branch therefore strips from the
     # coalesced decode.
     return (
-        F.when(d.rlike(_SCHEME), F.regexp_replace(d, _SCHEME_AUTHORITY, ""))
+        F.when(d.rlike(_FILE_AUTHORITY),
+               F.regexp_replace(d, _FILE_AUTHORITY, ""))
+        .when(d.rlike(_SCHEME), d)
         .when(d.startswith("file:"), F.substring(d, 6, 2147483647))
         .when(d.startswith("/"), d)
         .otherwise(F.concat(F.lit(table_path.rstrip("/") + "/"), d))

@@ -21,10 +21,11 @@ from pyspark.sql import functions as F
 from .config import TableConfig
 from .errors import DeltaError, DeltaProtocolError
 from .expressions import Expression, bind
-from .localrel import local_rows_df
-from .log.actions import AddFile, DomainMetadata
+from .localrel import fan_out, local_rows_df
+from .log import filenames as fn
+from .log.actions import AddFile, CommitInfo, DomainMetadata, RemoveFile
 from .log.snapshot import (Snapshot, addfiles_from_rows, canonical_path,
-                           canonical_path_col)
+                           read_commit)
 from .scan import DeltaScan
 
 if TYPE_CHECKING:
@@ -89,70 +90,10 @@ def _zorder_code(df: DataFrame, cols: List[str]) -> F.Column:
     return code
 
 
-def _hilbert_index_col(bucket_cols: List[F.Column],
-                       bits: int) -> F.Column:
-    """Hilbert index (long) of d bucket-id Columns, ``bits`` bits each —
-    Skilling's AxesToTranspose (AIP Conf. Proc. 707, 2004) as a pure
-    Column expression, entirely JVM-side.
-
-    The per-level rotation loop runs inside F.aggregate over the
-    descending Q-value array: each level's state is an array<long>
-    bound to a lambda variable, so re-referencing X[0] d times per
-    level costs a NamedLambdaVariable leaf, not a copy of the whole
-    subtree (an unrolled withColumn chain would re-inline and grow the
-    tree exponentially after CollapseProject). Gray encode + the final
-    bit interleave run in the aggregate's finish lambda for the same
-    reason."""
-    d = len(bucket_cols)
-
-    def merge(acc, q):
-        X = [F.element_at(acc, i + 1) for i in range(d)]
-        P = q - F.lit(1).cast("long")
-        for i in range(d):
-            cond = X[i].bitwiseAND(q) != F.lit(0)
-            if i == 0:
-                # t = (X[0]^X[0]) & P == 0: the else branch is a no-op
-                X[0] = F.when(cond, X[0].bitwiseXOR(P)).otherwise(X[0])
-                continue
-            t = X[0].bitwiseXOR(X[i]).bitwiseAND(P)
-            x0 = F.when(cond, X[0].bitwiseXOR(P)) \
-                .otherwise(X[0].bitwiseXOR(t))
-            xi = F.when(cond, X[i]).otherwise(X[i].bitwiseXOR(t))
-            X[0], X[i] = x0, xi
-        return F.array(*X)
-
-    def finish(acc):
-        X = [F.element_at(acc, i + 1) for i in range(d)]
-        for i in range(1, d):                  # Gray encode (prefix ^)
-            X[i] = X[i].bitwiseXOR(X[i - 1])
-        # t = XOR over e>0 of (2^e - 1 when bit e of X[d-1] is set).
-        # Closed form per output bit j: parity of X[d-1] >> (j+1) —
-        # expressed with bit_count so the tree is LINEAR in bits (the
-        # literal when-chain re-embeds t twice per level → 2^bits
-        # nodes; it OOMed analysis at 16 bits).
-        t = F.lit(0).cast("long")
-        for j in range(bits - 1):
-            par = F.bit_count(F.shiftright(X[d - 1], j + 1)) \
-                .cast("long").bitwiseAND(F.lit(1))
-            t = t + F.shiftleft(par, j)
-        X = [x.bitwiseXOR(t) for x in X]
-        h = F.lit(0).cast("long")
-        for p in range(bits - 1, -1, -1):      # transpose → index
-            for i in range(d):
-                h = F.shiftleft(h, 1) \
-                    + F.shiftright(X[i], p).bitwiseAND(F.lit(1))
-        return h
-
-    init = F.array(*[b.cast("long") for b in bucket_cols])
-    qs = F.array(*[F.lit(1 << e).cast("long")
-                   for e in range(bits - 1, 0, -1)])
-    return F.aggregate(qs, init, merge, finish)
-
-
 def _hilbert_index_np(X, bits: int):
-    """Vectorized Skilling AxesToTranspose over a (d, n) int64 bucket
-    array → (n,) int64 Hilbert indices. Identical ints to
-    _hilbert_index_col / the tests' Python reference — the loops here
+    """Skilling's AxesToTranspose (AIP Conf. Proc. 707, 2004),
+    vectorized over a (d, n) int64 bucket array → (n,) int64 Hilbert
+    indices, identical to the tests' Python reference. The loops here
     run over LEVELS and DIMENSIONS only; every per-row operation is a
     whole-array numpy bit op."""
     import numpy as np
@@ -201,15 +142,11 @@ def _hilbert_code(df: DataFrame, cols: List[str]) -> F.Column:
     Databricks liquid clustering walks Hilbert, not Morton. Bits per
     dimension shrink with d so the index stays in a signed long.
 
-    Hot path is an Arrow-batched pandas_udf over the vectorized
-    Skilling transform (_hilbert_index_np): the pure-Column form
-    (_hilbert_index_col, kept for parity tests) expresses the level
-    loop as a higher-order F.aggregate, which Spark evaluates
-    INTERPRETED per row — the sf1 sweep measured the Hilbert rewrite
-    at 339 s vs <12 s for the codegen'd Morton interleave. The numpy
-    form computes identical ints (equality pinned against both the
-    Column form and the Skilling reference) with level/dimension loops
-    only — every per-row op is a whole-batch bit op."""
+    The index is an Arrow-batched pandas_udf over the vectorized
+    Skilling transform (_hilbert_index_np). A pure-Column form needs
+    the level loop as a higher-order F.aggregate, which Spark evaluates
+    INTERPRETED per row: the sf1 sweep measured that Hilbert rewrite at
+    339 s vs <12 s for the codegen'd Morton interleave."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -228,13 +165,12 @@ def _hilbert_code(df: DataFrame, cols: List[str]) -> F.Column:
     return hidx(*_bucket_ids(df, cols, bits))
 
 
-def _protected_paths(snap: Snapshot, horizon: int) -> DataFrame:
-    """The paths VACUUM must keep, as one local relation of one ``__p``
-    column: active files, their deletion-vector sidecars, and the
-    tombstones still inside the retention window with their sidecars.
-    The tombstone legs are the contract VACUUM must honour
-    (InMemoryLogReplay.scala:90-92, DeltaConfig.scala:219-225): a file
-    DELETE'd yesterday has an OLD mtime but its tombstone is young —
+def _protected_set(snap: Snapshot, horizon: int) -> set:
+    """The paths VACUUM must keep: active files, their deletion-vector
+    sidecars, and the tombstones still inside the retention window with
+    their sidecars. The tombstone legs are the contract VACUUM must
+    honour (InMemoryLogReplay.scala:90-92, DeltaConfig.scala:219-225): a
+    file DELETE'd yesterday has an OLD mtime but its tombstone is young —
     reclaiming it would strand time travel to every version of the
     retention window. Protection keys on deletionTimestamp, never
     mtime."""
@@ -246,12 +182,48 @@ def _protected_paths(snap: Snapshot, horizon: int) -> DataFrame:
             dv = (r["tags"] or {}).get(DV_TAG)
             if dv:
                 keep.add(canonical_path(dv, snap.table_path))
+    return keep
+
+
+def _protected_paths(snap: Snapshot, horizon: int) -> DataFrame:
+    """:func:`_protected_set` as one local relation of one ``__p``
+    column, the right side of full VACUUM's anti-join."""
+    keep = _protected_set(snap, horizon)
     rel = local_rows_df(snap.spark, [(p,) for p in keep], "__p string")
     # Spark cannot size a driver-built relation, so it would shuffle both
     # join sides; its own broadcast threshold applies to the known size
     limit = snap.spark._jsparkSession.sessionState().conf() \
         .autoBroadcastJoinThreshold()
     return F.broadcast(rel) if sum(map(len, keep)) <= limit else rel
+
+
+def _missing_paths(store):
+    """``mapInPandas`` body (for ``fan_out``): the ``path`` values whose
+    file does not exist in ``store``."""
+    def body(batches):
+        import pandas as pd
+        for pdf in batches:
+            yield pd.DataFrame({"path": [p for p in pdf["path"]
+                                         if not store.exists(p)]})
+    return body
+
+
+def _delete_paths(store):
+    """``mapInPandas`` body: delete each ``path`` from ``store`` and
+    yield the ones deleted. A file already gone (a task retry, a
+    concurrent VACUUM, an earlier LITE window) is not reported."""
+    def body(batches):
+        import pandas as pd
+        for pdf in batches:
+            done = []
+            for p in pdf["path"]:
+                try:
+                    store.delete(p)
+                except FileNotFoundError:
+                    continue
+                done.append(p)
+            yield pd.DataFrame({"path": done})
+    return body
 
 
 def _rewrite_files(table: DeltaTable, txn, operation: str,
@@ -534,29 +506,14 @@ class TableMaintenance:
         remove_rows = [r for p, r in cur.items()
                        if p not in want or dv(want[p]) != dv(r)]
 
-        root = t.path
-        local_root = root[len("file:"):] if root.startswith("file:") else root
         # Existence check for every file (and DV sidecar) the target
         # needs, distributed through the store — the driver sees only
         # the missing list (the error report).
-        import pandas as pd
-        from .shipping import ensure_shipped_by_value
-        ensure_shipped_by_value()
-        store = t.log.store
         needed = list(want) + [canonical_path(dv(r), snap.table_path)
                                for r in want.values() if dv(r)]
-
-        def find_missing(batches):
-            for pdf in batches:
-                gone = [p for p in pdf["path"]
-                        if not store.exists(os.path.join(local_root, p))]
-                yield pd.DataFrame({"path": gone})
-
-        missing = [r["path"] for r in
-                   local_rows_df(t.spark, [(p,) for p in needed],
-                                 "path string")
-                   .mapInPandas(find_missing, "path string")
-                   .limit(100).collect()] if needed else []
+        missing = [r["path"] for r in fan_out(
+            t.spark, [(p,) for p in needed], "path string",
+            _missing_paths(t.log.store), "path string").collect()]
         if missing:
             raise DeltaError(
                 f"cannot restore to version {target.version}: "
@@ -596,12 +553,8 @@ class TableMaintenance:
         collects only the action fields; commit is one transaction that
         conflict-checks like any other writer. Returns
         {filesUpdated, version} (version -1 when nothing lacked stats)."""
-        import pandas as pd
-
-        from .shipping import ensure_shipped_by_value
         from .writer import file_stats_json
         t = self.table
-        spark = t.log.spark
         txn = t.log.start_transaction()
         snap = txn.snapshot
         if snap is None:
@@ -609,9 +562,9 @@ class TableMaintenance:
         missing = [f for f in snap.all_files() if not f.stats]
         if not missing:
             return {"filesUpdated": 0, "version": -1}
-        ensure_shipped_by_value()
 
         def footer_pass(batches):
+            import pandas as pd
             for pdf in batches:
                 rows = []
                 for path in pdf["path"]:
@@ -620,15 +573,9 @@ class TableMaintenance:
                 yield pd.DataFrame(rows,
                                    columns=["path", "stats", "size"])
 
-        par = min(len(missing),
-                  spark.sparkContext.defaultParallelism) or 1
-        stat_rows = {r["path"]: r for r in
-                     (local_rows_df(
-                         spark, [(f.path,) for f in missing],
-                         "path string", parts=par)
-                      .mapInPandas(footer_pass,
-                                   "path string, stats string, size long")
-                      .collect())}
+        stat_rows = {r["path"]: r for r in fan_out(
+            t.log.spark, [(f.path,) for f in missing], "path string",
+            footer_pass, "path string, stats string, size long").collect()}
         import dataclasses
         now = int(time.time() * 1000)
         adds = [dataclasses.replace(
@@ -769,37 +716,15 @@ class TableMaintenance:
         through the same distributed publish machinery as a write
         (mapInPandas over paths; the driver only collects the MISSING
         subset, normally empty or tiny)."""
-        import pandas as pd
-        from pyspark.sql import types as T2
-
-        from .shipping import ensure_shipped_by_value
         t = self.table
-        spark = t.log.spark
-        store = t.log.store
         txn = t.log.start_transaction()
         snap = txn.snapshot
         if snap is None:
             raise FileNotFoundError("table does not exist")
-        files = [(f.path,) for f in snap.all_files()]
-        if not files:
-            return []
-        ensure_shipped_by_value()
-
-        def probe(batches):
-            for pdf in batches:
-                missing = [(p,) for p in pdf["path"]
-                           if not store.exists(p)]
-                yield pd.DataFrame(missing or None,
-                                   columns=["path"])
-
-        n_parts = min(len(files),
-                      spark.sparkContext.defaultParallelism) or 1
-        missing = [r["path"] for r in
-                   local_rows_df(spark, files, "path string",
-                                 parts=n_parts)
-                   .mapInPandas(probe, T2.StructType(
-                       [T2.StructField("path", T2.StringType())]))
-                   .collect()]
+        missing = [r["path"] for r in fan_out(
+            t.log.spark, [(f.path,) for f in snap.all_files()],
+            "path string", _missing_paths(t.log.store),
+            "path string").collect()]
         if dry_run or not missing:
             return sorted(missing)
         by_path = {f.path: f for f in snap.all_files()}
@@ -849,7 +774,6 @@ class TableMaintenance:
         if lite:
             return self._vacuum_lite(snap, horizon, dry_run)
         root = t.path
-        local_root = root[len("file:"):] if root.startswith("file:") else root
 
         # Distributed reclaim (the reference-Spark VACUUM shape): the
         # table subtree is LISTED in parallel (one task per top-level
@@ -857,21 +781,20 @@ class TableMaintenance:
         # active file inventory as DataFrames (never a driver-side set
         # of all files), and deletes run on executors. The driver holds
         # only the doomed list — the report the API returns.
-        import pandas as pd
-        from .shipping import ensure_shipped_by_value
-        ensure_shipped_by_value()
 
         # every child subtree except the log itself — _change_data /
         # _deletion_vectors dirs hold reclaimable files. Concurrent
         # writers' in-flight _staging_* dirs are excluded entirely:
         # staged files are seconds old, never past the retention
         # horizon, and their publish rename would race the listing.
-        seeds = [""] + [n for n in store.list_dir(local_root)
+        seeds = [""] + [n for n in store.list_dir(root)
                         if n != "_delta_log" and not n.startswith(".")
                         and not n.startswith("_staging")
-                        and store.is_dir(os.path.join(local_root, n))]
+                        and store.is_dir(os.path.join(root, n))]
 
         def list_subtree(batches):
+            import pandas as pd
+
             def stat_or_skip(path):
                 # A file can vanish between listing and stat (a
                 # concurrent commit publishing/renaming staged files);
@@ -884,8 +807,8 @@ class TableMaintenance:
                 rels, mts = [], []
                 for seed in pdf["seed"]:
                     if seed == "":
-                        for n in store.list_dir(local_root):
-                            full = os.path.join(local_root, n)
+                        for n in store.list_dir(root):
+                            full = os.path.join(root, n)
                             if n.startswith(("_", ".")) or store.is_dir(full):
                                 continue
                             st = stat_or_skip(full)
@@ -894,7 +817,7 @@ class TableMaintenance:
                             rels.append(n)
                             mts.append(st[1])
                     else:
-                        base = os.path.join(local_root, seed)
+                        base = os.path.join(root, seed)
                         for rel in store.list_files_recursive(base):
                             if os.path.basename(rel).startswith(("_", ".")):
                                 continue
@@ -905,47 +828,32 @@ class TableMaintenance:
                             mts.append(st[1])
                 yield pd.DataFrame({"rel": rels, "mtime": mts})
 
-        n_seed_parts = min(len(seeds),
-                           spark.sparkContext.defaultParallelism) or 1
-        listing = (local_rows_df(spark, [(s,) for s in seeds],
-                                 "seed string", parts=n_seed_parts)
-                   .mapInPandas(list_subtree, "rel string, mtime long"))
-
-        active = _protected_paths(snap, horizon)
+        listing = fan_out(spark, [(s,) for s in seeds], "seed string",
+                          list_subtree, "rel string, mtime long")
 
         # The anti-join broadcasts the protected set under Spark's
         # threshold (_protected_paths); a multi-million-file inventory
         # takes a shuffled anti-join instead — both sides are
         # metadata-sized, so that is fine at the tail.
+        prefix = root + "/"
         cand = (listing
-                .withColumn("__p", F.concat(F.lit(local_root + "/"),
-                                            F.col("rel")))
+                .withColumn("__p", F.concat(F.lit(prefix), F.col("rel")))
                 .where(F.col("mtime") <= F.lit(horizon))
-                .join(active, "__p", "left_anti"))
+                .join(_protected_paths(snap, horizon), "__p", "left_anti"))
 
         if dry_run:
             doomed = [r["rel"] for r in cand.select("rel").collect()]
         else:
-            def delete_files(batches):
-                for pdf in batches:
-                    done = []
-                    for rel in pdf["rel"]:
-                        try:
-                            store.delete(os.path.join(local_root, rel))
-                        except FileNotFoundError:
-                            pass      # task retry: already deleted
-                        done.append(rel)
-                    yield pd.DataFrame({"rel": done})
-
-            doomed = [r["rel"] for r in
-                      cand.select("rel").mapInPandas(
-                          delete_files, "rel string").collect()]
+            doomed = [r["path"][len(prefix):] for r in
+                      cand.select(F.col("__p").alias("path"))
+                      .mapInPandas(_delete_paths(store), "path string")
+                      .collect()]
             # prune now-empty partition dirs (bounded by dir count); a
             # concurrent writer's _staging_* tree is skipped, as in the
             # listing: its empty task dirs are still in use
-            for dirpath, dirs, files in os.walk(local_root, topdown=False):
-                if "_delta_log" in dirpath or dirpath == local_root \
-                        or os.path.relpath(dirpath, local_root) \
+            for dirpath, dirs, files in os.walk(root, topdown=False):
+                if "_delta_log" in dirpath or dirpath == root \
+                        or os.path.relpath(dirpath, root) \
                         .startswith("_staging"):
                     continue
                 if not dirs and not files:
@@ -960,131 +868,91 @@ class TableMaintenance:
         """Log-inventory vacuum: the doomed set is the RemoveFile
         tombstones in the commit window since the last LITE run (or
         version 0), aged past ``horizon`` and not re-added since —
-        ZERO listing of the data tree. Coverage is proven before
-        anything is deleted: every delta file in the window must still
-        exist; a cleaned window (W8 log cleanup passed through it)
-        raises instead of silently missing tombstones. Deletes run
-        executor-side (mapInPandas over the candidate paths, vanished
-        files skipped); a marker commit (operation VACUUM LITE END,
-        lastVacuumedVersion) bounds the NEXT run's window to the new
-        tail, so steady-state cost is O(commits between vacuums)
-        regardless of table size."""
-        import pandas as pd
-
-        from .log import filenames as fn2
-        from .log.actions import SINGLE_ACTION_SCHEMA
-        from .shipping import ensure_shipped_by_value
-        ensure_shipped_by_value()
-        t = self.table
-        spark = t.log.spark
-        store = t.log.store
-        log_path = t.log.log_path
-        head = snap.version
-        root = t.path
-        local_root = root[len("file:"):] if root.startswith("file:") \
-            else root
-
-        marker = None
-        for h in t.history():               # newest-first
-            if h["operation"] == "VACUUM LITE END":
-                marker = int((h["operationParameters"] or {})
-                             .get("lastVacuumedVersion", h["version"]))
-                break
-        start = marker + 1 if marker is not None else 0
-        have = sorted(fn2.delta_version(n)
-                      for n in store.list_from(log_path)
-                      if fn2.is_delta_file(n))
-        window = [v for v in have if start <= v <= head]
-        if window != list(range(start, head + 1)):
-            missing = sorted(set(range(start, head + 1)) - set(window))
-            raise DeltaError(
-                f"VACUUM LITE cannot prove coverage: log versions "
-                f"{missing[:5]}{'...' if len(missing) > 5 else ''} in "
-                f"window [{start}, {head}] were cleaned; run a full "
-                f"vacuum (lite=False) instead")
-        if not window:
-            return []
-
+        ZERO listing of the data tree. The window is read on the driver
+        through the LogStore, newest commit first, each commit once:
+        the walk ends at the newest marker commit's window start, so
+        finding the marker and reading the window are one pass.
+        Coverage is proven before anything is deleted: a missing delta
+        file in the window (W8 log cleanup passed through it) raises
+        instead of silently missing tombstones. Deletes run
+        executor-side (vanished files skipped); a marker commit
+        (operation VACUUM LITE END, lastVacuumedVersion) bounds the
+        NEXT run's window to the new tail, so steady-state cost is
+        O(commits between vacuums) regardless of table size."""
         from .dv import DV_TAG
-        acts = spark.read.json(
-            [fn2.delta_file(log_path, v) for v in window],
-            schema=SINGLE_ACTION_SCHEMA)
-        removes = (acts.where(F.col("remove.path").isNotNull())
-                   .select(canonical_path_col("remove.path",
-                                              snap.table_path)
-                           .alias("__p"),
-                           F.coalesce(F.col("remove.deletionTimestamp"),
-                                      F.lit(0)).alias("__ts"),
-                           F.col("remove.tags").getItem(DV_TAG)
-                           .alias("__dv"),
-                           F.regexp_extract(F.input_file_name(),
-                                            r"(\d+)\.json$", 1)
-                           .cast("long").alias("__v")))
+        t = self.table
+        store = t.log.store
+        head = snap.version
+        removes: List[Tuple[int, RemoveFile]] = []
+        start, v = 0, head
+        marker = None
+        while v >= start:
+            try:
+                acts = read_commit(store, fn.delta_file(t.log.log_path, v))
+            except FileNotFoundError:
+                raise DeltaError(
+                    f"VACUUM LITE cannot prove coverage: log version {v} "
+                    f"in window [{start}, {head}] was cleaned; run a full "
+                    f"vacuum (lite=False) instead")
+            for a in acts:
+                if isinstance(a, RemoveFile):
+                    removes.append((v, a))
+                elif marker is None and isinstance(a, CommitInfo) \
+                        and a.operation == "VACUUM LITE END":
+                    marker = int((a.operationParameters or {})
+                                 .get("lastVacuumedVersion", v))
+                    start = marker + 1
+            v -= 1
+
         # Retention is decided per PATH on the YOUNGEST tombstone, not
-        # per remove row: a path removed, RESTORE-re-added and removed
+        # per remove: a path removed, RESTORE-re-added and removed
         # again has two tombstones, and the young one guards the file
         # for time travel even when the old one is past the horizon
-        # (InMemoryLogReplay.scala:90-92 keeps latest-per-path).
-        doomed_paths = (removes.groupBy("__p")
-                        .agg(F.max("__ts").alias("__max_ts"))
-                        .where(F.col("__max_ts") <= F.lit(horizon))
-                        .select("__p"))
-        # tombstoned DV sidecars ride along (same rule as full vacuum)
-        dvs = (removes.join(doomed_paths, "__p", "semi")
-               .where(F.col("__dv").isNotNull())
-               .select(canonical_path_col("__dv", snap.table_path)
-                       .alias("__p")))
-        cand = doomed_paths.unionByName(dvs).distinct()
+        # (InMemoryLogReplay.scala:90-92 keeps latest-per-path). A
+        # doomed path's DV sidecars go with it.
+        youngest: Dict[str, int] = {}
+        sidecars: Dict[str, set] = {}
+        for _, r in removes:
+            p = canonical_path(r.path, snap.table_path)
+            ts = r.deletionTimestamp or 0
+            youngest[p] = max(ts, youngest.get(p, ts))
+            dv = (r.tags or {}).get(DV_TAG)
+            if dv:
+                sidecars.setdefault(p, set()).add(
+                    canonical_path(dv, snap.table_path))
+        doomed = {p for p, ts in youngest.items() if ts <= horizon}
+        doomed |= {s for p in doomed for s in sidecars.get(p, ())}
         # The snapshot's in-retention tombstones are belt-and-braces
         # here vs a young tombstone living OUTSIDE the window (e.g. a
         # marker written by an engine with a different advance rule).
-        cand = cand.join(_protected_paths(snap, horizon), "__p", "left_anti")
+        prefix = t.path + "/"
+        doomed = sorted(p for p in doomed - _protected_set(snap, horizon)
+                        if p.startswith(prefix))
+        rows = [(p,) for p in doomed]
+
+        if dry_run:
+            # windows can overlap (the marker only advances past fully
+            # aged-out versions) — report only files that still exist
+            gone = {r["path"] for r in fan_out(
+                t.spark, rows, "path string", _missing_paths(store),
+                "path string").collect()}
+            return [p[len(prefix):] for p in doomed if p not in gone]
+        deleted = sorted(r["path"][len(prefix):] for r in fan_out(
+            t.spark, rows, "path string", _delete_paths(store),
+            "path string").collect())
         # Marker advance: a version whose tombstones are all past the
         # horizon is fully handled; the FIRST version still carrying an
         # in-retention tombstone (and everything after it) must stay in
         # the NEXT run's window, or those files would never be
         # reclaimable by a lite run once they age out.
-        skipped = (removes.where(F.col("__ts") > F.lit(horizon))
-                   .agg(F.min("__v")).collect()[0][0])
-        vacuumed_through = head if skipped is None else int(skipped) - 1
-        prefix = local_root.rstrip("/") + "/"
-        cand = (cand.where(F.col("__p").startswith(prefix))
-                .select(F.expr(
-                    f"substring(__p, {len(prefix) + 1})").alias("rel")))
-
-        if dry_run:
-            # windows can overlap (the marker only advances past fully
-            # aged-out versions) — report only files that still exist
-            def exists_filter(batches):
-                for pdf in batches:
-                    keep = [rel for rel in pdf["rel"]
-                            if store.exists(os.path.join(local_root,
-                                                         rel))]
-                    yield pd.DataFrame({"rel": keep})
-            return sorted(r["rel"] for r in
-                          cand.mapInPandas(exists_filter,
-                                           "rel string").collect())
-
-        def delete_files(batches):
-            for pdf in batches:
-                done = []
-                for rel in pdf["rel"]:
-                    try:
-                        store.delete(os.path.join(local_root, rel))
-                    except FileNotFoundError:
-                        continue      # already reclaimed / task retry
-                    done.append(rel)
-                yield pd.DataFrame({"rel": done})
-
-        doomed = sorted(r["rel"] for r in
-                        cand.mapInPandas(delete_files,
-                                         "rel string").collect())
-        txn = t.log.start_transaction()
-        txn.commit([], "VACUUM LITE END",
-                   {"lastVacuumedVersion": str(vacuumed_through),
-                    "retentionCheckEnabled": "true",
-                    "numDeletedFiles": str(len(doomed))})
-        return doomed
+        young = [v for v, r in removes
+                 if (r.deletionTimestamp or 0) > horizon]
+        t.log.start_transaction().commit(
+            [], "VACUUM LITE END",
+            {"lastVacuumedVersion": str(min(young) - 1 if young else head),
+             "retentionCheckEnabled": "true",
+             "numDeletedFiles": str(len(deleted))})
+        return deleted
 
     def generate_manifest(self) -> List[str]:
         """Write a ``_symlink_format_manifest`` for the current
@@ -1109,19 +977,13 @@ class TableMaintenance:
         the inherent report size).
         """
         t = self.table
-        spark = t.log.spark
         store = t.log.store
         snap = t.log.update() or t.snapshot()
         root = t.path
-        local_root = root[len("file:"):] if root.startswith("file:") else root
-        man_root = os.path.join(local_root, "_symlink_format_manifest")
+        man_root = os.path.join(root, "_symlink_format_manifest")
         store.remove_tree(man_root)
 
-        import pandas as pd
-        from .shipping import ensure_shipped_by_value
-        ensure_shipped_by_value()
-
-        prefix = local_root.rstrip("/") + "/"
+        prefix = root + "/"
         # group by the file's PHYSICAL directory so the manifest tree
         # mirrors the on-disk partition layout even for escaped
         # partition values; files outside the table root (absolute-path
@@ -1134,6 +996,7 @@ class TableMaintenance:
             groups.setdefault(sub, []).append("file:" + p)
 
         def write_manifests(batches):
+            import pandas as pd
             for pdf in batches:
                 out = []
                 for s, uris in zip(pdf["__sub"], pdf["__uris"]):
@@ -1144,10 +1007,8 @@ class TableMaintenance:
                     out.append(path)
                 yield pd.DataFrame({"path": out})
 
-        grouped = local_rows_df(
-            spark, [(sub, sorted(uris)) for sub, uris in groups.items()],
-            "__sub string, __uris array<string>")
-        written = [r["path"] for r in
-                   grouped.mapInPandas(write_manifests,
-                                       "path string").collect()]
-        return sorted(written)
+        return sorted(r["path"] for r in fan_out(
+            t.log.spark,
+            [(sub, sorted(uris)) for sub, uris in groups.items()],
+            "__sub string, __uris array<string>", write_manifests,
+            "path string").collect())

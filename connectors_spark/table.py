@@ -1,12 +1,14 @@
 """DeltaLog + DeltaTable: the engine's user-facing API.
 
 Read lifecycle (SURVEY §3.1): ``DeltaTable.for_path(spark, path)`` →
-driver-side LogSegment listing → snapshot (distributed state
-reconstruction) → ``scan(pred)`` → ``to_df()`` → Catalyst/Tungsten.
+driver-side LogSegment listing → snapshot (the driver fold of
+checkpoint plus commits, ``log/snapshot.py``) → ``scan(pred)`` →
+``to_df()`` → Catalyst/Tungsten.
 
 Write lifecycle (§3.2): ``write()``/``delete()``/``update()``/``merge()``
 stage Parquet distributed, then commit through the optimistic transaction
-protocol.
+protocol. Maintenance commands live in ``maintenance.py``;
+``TableMaintenance`` is re-exported here.
 
 Reference entry points re-expressed: DeltaLog.forTable
 (``DeltaLog.java:163-177``, ``DeltaLogImpl.scala:256-264``), update
@@ -40,10 +42,10 @@ from .bloom import bloom_config
 from .log.actions import (AddFile, CommitInfo, DomainMetadata, Metadata,
                           Protocol, RemoveFile, SetTransaction, as_parsed)
 from .log.logstore import LogStore, default_log_store, strip_scheme
-from .log.segment import LogSegment, get_log_segment
+from .log.segment import get_log_segment
 from .log.snapshot import (Snapshot, addfiles_from_rows, canonical_path,
                             materialized_rt_cols, read_commit, relativize)
-from .localrel import local_rows_df
+from .localrel import fan_out, local_rows_df
 from .maintenance import TableMaintenance
 from .log import history as hist
 from .scan import DeltaScan
@@ -1772,12 +1774,10 @@ class DeltaTable:
                 modificationTime=now))
 
         if deep and n_files:
-            import pandas as pd
-            from .shipping import ensure_shipped_by_value
-            ensure_shipped_by_value()
             store = tgt_log.store
 
             def copy_files(batches):
+                import pandas as pd
                 for pdf in batches:
                     for p, is_sidecar in zip(pdf["path"], pdf["sidecar"]):
                         if is_sidecar:
@@ -1789,13 +1789,10 @@ class DeltaTable:
             # data files and the DV sidecars they reference (a sidecar
             # may serve several files: copied once, its rows re-pointed
             # at the copies)
-            n_parts = min(len(copies),
-                          self.spark.sparkContext.defaultParallelism)
-            copied = (local_rows_df(self.spark, list(copies.items()),
-                                    "path string, sidecar boolean",
-                                    parts=n_parts)
-                      .mapInPandas(copy_files, "n long")
-                      .agg(F.sum("n")).collect()[0][0])
+            copied = sum(r["n"] for r in fan_out(
+                self.spark, list(copies.items()),
+                "path string, sidecar boolean", copy_files,
+                "n long").collect())
             assert copied == len(copies), (copied, len(copies))
         head: List[Any] = []
         if (src.protocol.minReaderVersion,
@@ -2093,11 +2090,7 @@ def _compact_log_range(log, table_path: str, start: int,
     Best-effort publish: two racing compactors of the same range write
     identical content, so losing the put-if-absent race is a no-op; any
     other failure propagates."""
-    from .log import filenames as fn
-    from .log.actions import (AddCDCFile, AddFile, CommitInfo,
-                              DomainMetadata, Metadata, Protocol,
-                              RemoveFile, SetTransaction, from_json_line,
-                              to_json_line)
+    from .log.actions import AddCDCFile, to_json_line
     from .log.logstore import FileAlreadyExistsError
     per_path: Dict[str, Any] = {}
     meta = proto = None
@@ -2105,12 +2098,11 @@ def _compact_log_range(log, table_path: str, start: int,
     domains: Dict[str, Any] = {}
     n_in = 0
     for v in range(start, end + 1):
-        for line in log.store.read(fn.delta_file(log.log_path, v)):
-            a = from_json_line(line)
-            if a is None or isinstance(a, (CommitInfo, AddCDCFile)):
+        for a in read_commit(log.store, fn.delta_file(log.log_path, v)):
+            if isinstance(a, (CommitInfo, AddCDCFile)):
                 continue
             n_in += 1
-            if isinstance(a, AddFile) or isinstance(a, RemoveFile):
+            if isinstance(a, (AddFile, RemoveFile)):
                 per_path[canonical_path(a.path, table_path)] = a
             elif isinstance(a, Metadata):
                 meta = a

@@ -8,8 +8,9 @@ Prints one JSON line per op run. Two parts:
   copy of the table whose Snapshot and file rows are loaded before the
   timing starts: RESTORE three versions back, a whole-table overwrite,
   a shallow ``clone_to``, ``compute_checksum``, ``verify_checksum``,
-  ``generate_manifest``, ``vacuum(dry_run=True)`` and
-  ``state_summary()``.
+  ``generate_manifest``, ``vacuum(dry_run=True)``, the same dry run
+  with ``lite=True`` (a walk of all 35 commits: the table has no
+  marker), ``fsck_repair(dry_run=True)`` and ``state_summary()``.
 - ``wide``: writes a table whose state is one synthetic checkpoint of
   ``--n`` AddFiles (no data files: neither op reads data), classic
   single-part or, with ``--parts N``, N-part, then runs
@@ -131,6 +132,10 @@ def run_small(passes: int, work: str) -> None:
         .generate_manifest(),
         "vacuum_dry_run": lambda t, d: TableMaintenance(t)
         .vacuum(dry_run=True),
+        "vacuum_lite_dry_run": lambda t, d: TableMaintenance(t)
+        .vacuum(dry_run=True, lite=True),
+        "fsck_dry_run": lambda t, d: TableMaintenance(t)
+        .fsck_repair(dry_run=True),
         "state_summary": lambda t, d: t.snapshot().state_summary(),
     }
     for i in range(passes):

@@ -711,25 +711,36 @@ def test_canonical_path_col_twin_parity_and_nonnull(spark):
     target scan (measured 2x on the merge matched scan)."""
     from connectors_spark.log.snapshot import (canonical_path,
                                                canonical_path_col)
-    tp, paths = _PATH_ROOT, _LOG_PATHS
     import pyspark.sql.types as T
+    roots = [_PATH_ROOT, "s3://bucket/t1", "memory://ns/t1"]
+    paths = _LOG_PATHS + [r + "/part%3Da/f1.parquet" for r in roots[1:]]
     df = spark.createDataFrame(
         [(p,) for p in paths],
         T.StructType([T.StructField("p", T.StringType(), False)]))
-    out = df.select(F.col("p"), canonical_path_col("p", tp).alias("c"))
-    assert not out.schema["c"].nullable, \
-        "canonical_path_col must be non-nullable for non-null input"
-    got = {r["p"]: r["c"] for r in out.collect()}
-    for p in paths:
-        assert got[p] == canonical_path(p, tp), \
-            f"column/twin divergence for {p!r}: " \
-            f"{got[p]!r} != {canonical_path(p, tp)!r}"
+    for tp in roots:
+        out = df.select(F.col("p"), canonical_path_col("p", tp).alias("c"))
+        assert not out.schema["c"].nullable, \
+            "canonical_path_col must be non-nullable for non-null input"
+        got = {r["p"]: r["c"] for r in out.collect()}
+        for p in paths:
+            assert got[p] == canonical_path(p, tp), \
+                f"column/twin divergence for {p!r} under {tp!r}: " \
+                f"{got[p]!r} != {canonical_path(p, tp)!r}"
     # decoded exactly once, with the reference's URI semantics
+    tp = _PATH_ROOT
     assert canonical_path("/abs/sp%20ace.parquet", tp) \
         == "/abs/sp ace.parquet"
     assert canonical_path("/abs/part%3Dx%253Dy/f.parquet", tp) \
         == "/abs/part=x%3Dy/f.parquet"
-    assert canonical_path("s3a://b/k%20x.parquet", tp) == "/k x.parquet"
+    assert canonical_path("file://host/abs/f.parquet", tp) \
+        == "/abs/f.parquet"
+    # a scheme other than file: keeps its scheme and authority, so an
+    # absolute and a relative spelling of one file are one path
+    assert canonical_path("s3a://b/k%20x.parquet", tp) == "s3a://b/k x.parquet"
+    for root in roots[1:]:
+        assert canonical_path(root + "/part%3Da/f1.parquet", root) \
+            == canonical_path("part%3Da/f1.parquet", root) \
+            == root + "/part=a/f1.parquet"
 
 
 @pytest.mark.pin

@@ -165,3 +165,26 @@ def assert_state_survives_checkpoint(spark, table_path):
 
 def test_state_survives_checkpoint_on_memory_store(spark):
     assert_state_survives_checkpoint(spark, "memory://ckpt/tbl")
+
+
+@pytest.mark.pin
+def test_absolute_add_and_relative_remove_are_one_path(spark):
+    """A foreign writer may spell one file as an absolute URI in its add
+    and table-relative in its remove. Under a root with a scheme other
+    than file: both spellings canonicalize to one path, so the remove
+    deletes the file."""
+    from connectors_spark.log.actions import RemoveFile, to_json_line
+    root = "memory://canon/t1"
+    log = DeltaLog.for_table(spark, root)
+    txn = log.start_transaction()
+    txn.update_metadata(_metadata())
+    txn.commit([Protocol(), _add("part=a/f2.parquet", "a")], "WRITE")
+    # versions 1 and 2 as a foreign writer spells them
+    log.store.write(fn.delta_file(log.log_path, 1), [to_json_line(
+        _add(root + "/part=a/f1.parquet", "a"))])
+    log.store.write(fn.delta_file(log.log_path, 2), [to_json_line(
+        RemoveFile(path="part%3Da/f1.parquet", deletionTimestamp=1))])
+    snap = log.update()
+    assert snap.version == 2
+    assert [r["path"] for r in snap._files_rows] \
+        == [root + "/part=a/f2.parquet"]

@@ -230,7 +230,7 @@ def test_fsck_repair_drops_missing_files(spark, tmp_path):
 
 def _hilbert_index_py(coords, b):
     """Skilling AxesToTranspose reference (AIP Conf. Proc. 707, 2004) —
-    the oracle the Column expression must match bit-for-bit."""
+    the oracle _hilbert_index_np must match bit-for-bit."""
     X = list(coords)
     d = len(X)
     Q = 1 << (b - 1)
@@ -257,49 +257,6 @@ def _hilbert_index_py(coords, b):
         for i in range(d):
             h = (h << 1) | ((X[i] >> p) & 1)
     return h
-
-
-def test_hilbert_index_column_matches_reference(spark):
-    """The JVM-expression Hilbert index equals the Skilling reference,
-    and small grids walk a true Hilbert curve: the index is a
-    bijection and consecutive indices are grid neighbors (unit step in
-    exactly one coordinate) — the locality property Morton lacks."""
-    import itertools
-    import random
-
-    from pyspark.sql import functions as F
-
-    from connectors_spark.maintenance import _hilbert_index_col
-
-    # exhaustive small grids: bijection + adjacency
-    for d, b in [(2, 4), (3, 3)]:
-        coords = list(itertools.product(range(1 << b), repeat=d))
-        df = spark.createDataFrame(
-            [(i,) + c for i, c in enumerate(coords)],
-            ", ".join(["i: long"] + [f"x{j}: long" for j in range(d)]))
-        col = _hilbert_index_col([F.col(f"x{j}") for j in range(d)], b)
-        got = {r.i: r.h for r in df.select("i", col.alias("h"))
-               .collect()}
-        assert got == {i: _hilbert_index_py(c, b)
-                       for i, c in enumerate(coords)}
-        by_h = {got[i]: coords[i] for i in got}
-        assert len(by_h) == len(coords)          # bijection
-        assert all(sum(abs(a - bb) for a, bb in
-                       zip(by_h[i], by_h[i + 1])) == 1
-                   for i in range(len(coords) - 1))
-    # random spot-check at production width
-    random.seed(11)
-    for d, b in [(2, 16), (3, 16), (4, 15)]:
-        coords = [tuple(random.randrange(1 << b) for _ in range(d))
-                  for _ in range(300)]
-        df = spark.createDataFrame(
-            [(i,) + c for i, c in enumerate(coords)],
-            ", ".join(["i: long"] + [f"x{j}: long" for j in range(d)]))
-        col = _hilbert_index_col([F.col(f"x{j}") for j in range(d)], b)
-        got = {r.i: r.h for r in df.select("i", col.alias("h"))
-               .collect()}
-        assert got == {i: _hilbert_index_py(c, b)
-                       for i, c in enumerate(coords)}
 
 
 def test_optimize_hilbert_improves_stats_skipping(spark, tmp_path):
@@ -897,16 +854,29 @@ def test_optimize_where_scopes_to_partition(spark, tmp_path):
 
 def test_hilbert_numpy_batch_matches_column_and_reference():
     """The vectorized numpy Skilling transform (the OPTIMIZE hot path)
-    must equal the Python reference bit-for-bit at production widths —
-    the Column form is pinned against the same reference above."""
+    equals the Python reference bit-for-bit, and small grids walk a true
+    Hilbert curve: on exhaustive grids the index is a bijection and
+    consecutive indices are grid neighbors (unit step in exactly one
+    coordinate) — the locality property Morton lacks. Random
+    spot-checks cover the production widths."""
+    import itertools
     import random
 
     import numpy as np
 
     from connectors_spark.maintenance import _hilbert_index_np
 
+    for d, b in [(2, 4), (3, 3)]:
+        coords = list(itertools.product(range(1 << b), repeat=d))
+        got = _hilbert_index_np(np.array(coords, dtype=np.int64).T, b)
+        assert got.tolist() == [_hilbert_index_py(c, b) for c in coords]
+        by_h = dict(zip(got.tolist(), coords))
+        assert len(by_h) == len(coords)          # bijection
+        assert all(sum(abs(a - bb) for a, bb in
+                       zip(by_h[i], by_h[i + 1])) == 1
+                   for i in range(len(coords) - 1))
     random.seed(23)
-    for d, b in [(2, 4), (3, 3), (2, 16), (3, 16), (4, 15)]:
+    for d, b in [(2, 16), (3, 16), (4, 15)]:
         coords = [tuple(random.randrange(1 << b) for _ in range(d))
                   for _ in range(500)]
         X = np.array(coords, dtype=np.int64).T
@@ -975,6 +945,69 @@ def test_vacuum_lite_parity_and_no_tree_listing(spark, tmp_path):
     assert maint.vacuum(retention_ms=0, dry_run=True, lite=True) == []
     h = t.history()[0]
     assert h["operation"] == "VACUUM LITE END"
+
+
+@pytest.mark.pin
+def test_vacuum_lite_on_memory_store_commits_marker(spark):
+    """LITE reads the log through the LogStore, so it runs on a non-POSIX
+    store. Executors cannot see an in-memory store, so the pin is the
+    marker: the first in-retention tombstone (version 2) keeps its
+    version in the next window."""
+    import time as _time
+
+    from connectors_spark.log.actions import (AddFile, Metadata, Protocol,
+                                              RemoveFile)
+    from connectors_spark.table import DeltaLog
+    root = "memory://lite/t1"
+    log = DeltaLog.for_table(spark, root)
+    txn = log.start_transaction()
+    txn.update_metadata(Metadata(schemaString=(
+        '{"type":"struct","fields":[{"name":"id","type":"long",'
+        '"nullable":true,"metadata":{}}]}')))
+    txn.commit([Protocol()] + [
+        AddFile(path=f"f{i}.parquet", partitionValues={}, size=1,
+                modificationTime=0, dataChange=True) for i in range(3)],
+        "WRITE")
+    now = int(_time.time() * 1000)
+    for i, ts in enumerate([1, now, 1]):            # v1, v2 (young), v3
+        log.start_transaction().commit(
+            [RemoveFile(path=f"f{i}.parquet", deletionTimestamp=ts)],
+            "DELETE")
+    t = DeltaTable.for_path(spark, root)
+    TableMaintenance(t).vacuum(retention_ms=3600 * 1000, lite=True)
+    h = t.history()[0]
+    assert h["version"] == 4 and h["operation"] == "VACUUM LITE END"
+    assert h["operationParameters"]["lastVacuumedVersion"] == "1"
+
+
+@pytest.mark.pin
+def test_vacuum_lite_dry_run_reads_window_once_in_one_job(spark, tmp_path):
+    """A LITE dry run reads each window commit once through the
+    LogStore, runs at most one Spark job (the existence probe) and lists
+    what a full dry run lists."""
+    t = _small_appends(spark, tmp_path / "t", n=8)
+    maint = TableMaintenance(t)
+    maint.optimize()                            # v8 tombstones 8 files
+    full = maint.vacuum(retention_ms=0, dry_run=True)
+    store, sc = t.log.store, spark.sparkContext
+    reads = []
+    orig = store.read
+
+    def spy(path):
+        reads.append(path)
+        return orig(path)
+    store.read = spy
+    sc.setJobGroup("lite-dry-run-pin", "vacuum lite dry run")
+    try:
+        lite = maint.vacuum(retention_ms=0, dry_run=True, lite=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        del store.read
+    jobs = sc.statusTracker().getJobIdsForGroup("lite-dry-run-pin")
+    assert lite == full and len(lite) == 8
+    assert len(jobs) <= 1, jobs
+    assert sorted(map(os.path.basename, reads)) \
+        == [f"{v:020d}.json" for v in range(9)]
 
 
 def test_vacuum_lite_refuses_on_cleaned_window(spark, tmp_path):

@@ -98,19 +98,6 @@ def test_dedup_jaccard_no_cartesian(plans):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_hilbert_code_is_pure_jvm_expression(spark):
-    # the Hilbert index must never fall back to Python: no
-    # ArrowEval/BatchEval nodes — it's aggregate/bit expressions only
-    from pyspark.sql import functions as F
-
-    from connectors_spark.maintenance import _hilbert_index_col
-    df = spark.range(100).select(
-        (F.col("id") % 10).alias("x"), (F.col("id") % 7).alias("y"))
-    p = plan_of(df.select(_hilbert_index_col(
-        [F.col("x"), F.col("y")], 16).alias("h")))
-    assert "Python" not in p and "ArrowEval" not in p
-
-
 def _loaded_pruning_table(spark, path):
     # 8 range-partitioned files per partition value, with a bloom
     # column; the returned Snapshot holds its inventory
