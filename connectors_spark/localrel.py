@@ -90,12 +90,10 @@ def local_rows_df(spark, rows: Sequence, schema,
 
 
 def fan_out(spark, rows: Sequence, schema, body, out_schema):
-    """``body``, a ``mapInPandas`` function, run on executors over the
-    driver-built ``rows`` in at most ``defaultParallelism`` tasks: the
-    per-file work of maintenance commands (existence probes, deletes,
-    footer reads, copies, listings, manifest writes). The package's code
-    ships by value, so workers need no install. No rows: an empty
-    relation, which collects without a job."""
+    """``body``, a ``mapInPandas`` function, run over the driver-built
+    ``rows`` in at most ``defaultParallelism`` tasks, with the package's
+    code shipped by value: the per-file work of maintenance commands.
+    No rows: an empty relation, which collects without a job."""
     if not rows:
         return local_rows_df(spark, [], out_schema)
     from .shipping import ensure_shipped_by_value

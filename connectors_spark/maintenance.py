@@ -263,6 +263,14 @@ class TableMaintenance:
     def __init__(self, table: DeltaTable):
         self.table = table
 
+    def _begin(self):
+        """A transaction on the table and its read snapshot; raises
+        FileNotFoundError when the table does not exist."""
+        txn = self.table.log.start_transaction()
+        if txn.snapshot is None:
+            raise FileNotFoundError("table does not exist")
+        return txn, txn.snapshot
+
     def optimize(self, target_file_size: int = 128 * 1024 * 1024,
                  min_files_per_group: int = 2,
                  zorder_by: Optional[List[str]] = None,
@@ -297,13 +305,10 @@ class TableMaintenance:
         if zorder_by and hilbert_by:
             raise DeltaError("zorder_by and hilbert_by are mutually "
                              "exclusive")
-        from .table import _small_files
+        from .table import _scan_rows, _small_files
         cluster_by = zorder_by or hilbert_by
         t = self.table
-        txn = t.log.start_transaction()
-        snap = txn.snapshot
-        if snap is None:
-            raise FileNotFoundError("table does not exist")
+        txn, snap = self._begin()
         pcols = snap.metadata.partitionColumns
         if where is not None:
             # OPTIMIZE ... WHERE (delta-spark OptimizeTableCommand's
@@ -380,25 +385,20 @@ class TableMaintenance:
                 # the current state like an independent OPTIMIZE
                 txn = t.log.start_transaction()
                 snap = txn.snapshot
+            # victims were computed from the FIRST snapshot; a
+            # concurrent commit that removed one BEFORE a later batch's
+            # fresh txn started is not a "winning commit", so the J4
+            # delete/delete check would never fire and we'd commit a
+            # duplicate RemoveFile (double-decrementing the incremental
+            # .crc chain). Each batch takes the txn snapshot's live rows
+            # of its victims, bounded by the batch width.
             cand_paths = {f.path for f in victims}
             subset = [r for r in snap._files_rows
                       if r["path"] in cand_paths]
-            if bi > 0:
-                # victims were computed from the ORIGINAL snapshot; a
-                # concurrent commit that removed one BEFORE this batch's
-                # fresh txn started is not a "winning commit", so the
-                # J4 delete/delete check would never fire and we'd
-                # commit a duplicate RemoveFile (double-decrementing the
-                # incremental .crc chain). Intersect with the fresh
-                # snapshot's live files — `subset` rows ARE that
-                # intersection, bounded by the batch width.
-                live = {r["path"] for r in subset}
-                victims = [f for f in victims if f.path in live]
-                if not victims:
-                    continue
-            rt = TableConfig(
-                snap.metadata.configuration).enable_row_tracking
-            df = snap.to_df(files=subset, with_row_ids=rt)
+            if not subset:
+                continue
+            victims = addfiles_from_rows(subset)
+            df = _scan_rows(snap, subset)
             total = sum(f.size for f in victims)
             n_out = max(1, -(-total // target_file_size))
             if cluster_by:
@@ -445,24 +445,18 @@ class TableMaintenance:
         commit is one transaction that conflict-checks like any other
         writer. Returns {filesPurged, filesAdded, version}."""
         from .dv import DV_TAG
+        from .table import _scan_rows
         t = self.table
-        txn = t.log.start_transaction()
-        snap = txn.snapshot
-        if snap is None:
-            raise FileNotFoundError("table does not exist")
-        victims = [f for f in snap.all_files()
-                   if (f.tags or {}).get(DV_TAG)]
-        if not victims:
+        txn, snap = self._begin()
+        rows = [r for r in snap._files_rows if (r["tags"] or {}).get(DV_TAG)]
+        if not rows:
             return {"filesPurged": 0, "filesAdded": 0,
                     "version": snap.version}
-        cand_paths = {f.path for f in victims}
-        subset = [r for r in snap._files_rows
-                  if r["path"] in cand_paths]
+        victims = addfiles_from_rows(rows)
         # the DV anti-join applies here
-        df = snap.to_df(files=subset, with_row_ids=TableConfig(
-            snap.metadata.configuration).enable_row_tracking)
         version, added = _rewrite_files(
-            t, txn, "REORG", {"applyPurge": "true"}, victims, df)
+            t, txn, "REORG", {"applyPurge": "true"}, victims,
+            _scan_rows(snap, rows))
         return {"filesPurged": len(victims), "filesAdded": added,
                 "version": version}
 
@@ -480,10 +474,7 @@ class TableMaintenance:
         Returns {filesAdded, filesRemoved, version}.
         """
         t = self.table
-        txn = t.log.start_transaction()
-        snap = txn.snapshot
-        if snap is None:
-            raise FileNotFoundError("table does not exist")
+        txn, snap = self._begin()
         target = t._resolve(version, timestamp_ms)
         if target.version == snap.version:
             return {"filesAdded": 0, "filesRemoved": 0,
@@ -518,13 +509,11 @@ class TableMaintenance:
             raise DeltaError(
                 f"cannot restore to version {target.version}: "
                 f"data file(s) were removed by VACUUM "
-                f"(first: {sorted(missing)[0]})")
+                f"(first: {min(missing)})")
 
-        if target.metadata.schemaString != snap.metadata.schemaString \
-                or target.metadata.configuration \
-                != snap.metadata.configuration \
-                or target.metadata.partitionColumns \
-                != snap.metadata.partitionColumns:
+        if any(getattr(target.metadata, k) != getattr(snap.metadata, k)
+               for k in ("schemaString", "configuration",
+                         "partitionColumns")):
             txn.update_metadata(target.metadata, overwrite_schema=True)
         # Re-added files are a data change even if their original
         # commit was a dataChange=false layout rewrite (OPTIMIZE).
@@ -555,10 +544,7 @@ class TableMaintenance:
         {filesUpdated, version} (version -1 when nothing lacked stats)."""
         from .writer import file_stats_json
         t = self.table
-        txn = t.log.start_transaction()
-        snap = txn.snapshot
-        if snap is None:
-            raise FileNotFoundError("table does not exist")
+        txn, snap = self._begin()
         missing = [f for f in snap.all_files() if not f.stats]
         if not missing:
             return {"filesUpdated": 0, "version": -1}
@@ -712,22 +698,17 @@ class TableMaintenance:
         repaired (or would-repair, under dry_run) table-relative
         paths — delta-spark's FSCK REPAIR TABLE semantics.
 
-        Scale shape: the existence probe fans the file inventory out
-        through the same distributed publish machinery as a write
-        (mapInPandas over paths; the driver only collects the MISSING
-        subset, normally empty or tiny)."""
+        Scale shape: the existence probe is one executor fan-out over
+        the file inventory; the driver collects only the MISSING subset,
+        normally empty or tiny."""
         t = self.table
-        txn = t.log.start_transaction()
-        snap = txn.snapshot
-        if snap is None:
-            raise FileNotFoundError("table does not exist")
+        txn, snap = self._begin()
+        by_path = {f.path: f for f in snap.all_files()}
         missing = [r["path"] for r in fan_out(
-            t.log.spark, [(f.path,) for f in snap.all_files()],
-            "path string", _missing_paths(t.log.store),
-            "path string").collect()]
+            t.log.spark, [(p,) for p in by_path], "path string",
+            _missing_paths(t.log.store), "path string").collect()]
         if dry_run or not missing:
             return sorted(missing)
-        by_path = {f.path: f for f in snap.all_files()}
         now = int(time.time() * 1000)
         removes = [by_path[p].remove(now) for p in missing]
         txn.commit(removes, "FSCK",
@@ -794,38 +775,25 @@ class TableMaintenance:
 
         def list_subtree(batches):
             import pandas as pd
-
-            def stat_or_skip(path):
-                # A file can vanish between listing and stat (a
-                # concurrent commit publishing/renaming staged files);
-                # a vanished file is by definition not vacuumable.
-                try:
-                    return store.stat(path)
-                except FileNotFoundError:
-                    return None
             for pdf in batches:
                 rels, mts = [], []
                 for seed in pdf["seed"]:
-                    if seed == "":
-                        for n in store.list_dir(root):
-                            full = os.path.join(root, n)
-                            if n.startswith(("_", ".")) or store.is_dir(full):
-                                continue
-                            st = stat_or_skip(full)
-                            if st is None:
-                                continue
-                            rels.append(n)
-                            mts.append(st[1])
-                    else:
-                        base = os.path.join(root, seed)
-                        for rel in store.list_files_recursive(base):
-                            if os.path.basename(rel).startswith(("_", ".")):
-                                continue
-                            st = stat_or_skip(os.path.join(base, rel))
-                            if st is None:
-                                continue
-                            rels.append(os.path.join(seed, rel))
-                            mts.append(st[1])
+                    names = ([n for n in store.list_dir(root)
+                              if not store.is_dir(os.path.join(root, n))]
+                             if seed == "" else
+                             [os.path.join(seed, r) for r in
+                              store.list_files_recursive(
+                                  os.path.join(root, seed))])
+                    for rel in names:
+                        if os.path.basename(rel).startswith(("_", ".")):
+                            continue
+                        try:
+                            mts.append(store.stat(os.path.join(root, rel))[1])
+                        except FileNotFoundError:
+                            # vanished between listing and stat (a
+                            # concurrent publish): not vacuumable
+                            continue
+                        rels.append(rel)
                 yield pd.DataFrame({"rel": rels, "mtime": mts})
 
         listing = fan_out(spark, [(s,) for s in seeds], "seed string",
@@ -868,16 +836,13 @@ class TableMaintenance:
         """Log-inventory vacuum: the doomed set is the RemoveFile
         tombstones in the commit window since the last LITE run (or
         version 0), aged past ``horizon`` and not re-added since —
-        ZERO listing of the data tree. The window is read on the driver
-        through the LogStore, newest commit first, each commit once:
-        the walk ends at the newest marker commit's window start, so
-        finding the marker and reading the window are one pass.
-        Coverage is proven before anything is deleted: a missing delta
-        file in the window (W8 log cleanup passed through it) raises
-        instead of silently missing tombstones. Deletes run
-        executor-side (vanished files skipped); a marker commit
-        (operation VACUUM LITE END, lastVacuumedVersion) bounds the
-        NEXT run's window to the new tail, so steady-state cost is
+        ZERO listing of the data tree. One driver pass reads the window
+        through the LogStore, newest commit first, each commit once,
+        and ends at the window start the newest marker commit (VACUUM
+        LITE END, lastVacuumedVersion) names. A missing delta file in
+        the window (log cleanup passed through it) raises before
+        anything is deleted. Deletes run executor-side; the new marker
+        bounds the NEXT window to the new tail, so steady-state cost is
         O(commits between vacuums) regardless of table size."""
         from .dv import DV_TAG
         t = self.table
@@ -1002,7 +967,6 @@ class TableMaintenance:
                 for s, uris in zip(pdf["__sub"], pdf["__uris"]):
                     d = os.path.join(man_root, s) if s else man_root
                     path = os.path.join(d, "manifest")
-                    os.makedirs(d, exist_ok=True)
                     store.write(path, list(uris), overwrite=True)
                     out.append(path)
                 yield pd.DataFrame({"path": out})
