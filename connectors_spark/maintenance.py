@@ -779,7 +779,8 @@ class TableMaintenance:
                 rels, mts = [], []
                 for seed in pdf["seed"]:
                     names = ([n for n in store.list_dir(root)
-                              if not store.is_dir(os.path.join(root, n))]
+                              if not n.startswith(("_", "."))
+                              and not store.is_dir(os.path.join(root, n))]
                              if seed == "" else
                              [os.path.join(seed, r) for r in
                               store.list_files_recursive(
